@@ -7,11 +7,12 @@ import org.apache.spark.sql.{Dataset, SparkSession}
   * `mapPartitions` operators behind small traits.
   *
   * Shape mirrors the reference's per-source clients but distributed:
-  * one client per PARTITION (heavy init amortized — the Vosk-model
-  * pattern at reference inputs/system_audio_collector.py:32), bounded
-  * retries per CALL (reference inputs/youtube_audio_extractor.py:35-36),
-  * and errors as data (tagged rows), never exceptions across the plan
-  * (reference main.py:70-75 try/except becomes the T11 ok/err union).
+  * one client per non-empty PARTITION (heavy init amortized — the
+  * Vosk-model pattern at reference inputs/system_audio_collector.py:32),
+  * bounded retries per CALL (reference
+  * inputs/youtube_audio_extractor.py:35-36), and errors as data, never
+  * exceptions across the plan (reference main.py:70-75 try/except
+  * becomes a per-row branch inside the same pass).
   *
   * The offline build ships deterministic stubs; production swaps the
   * trait implementation — the Spark plumbing (partitioning, client
@@ -84,52 +85,34 @@ object Connectors {
       parallelism: Option[Int] = None): Dataset[FetchResult] = {
     import videoIds.sparkSession.implicits._
     val parted = parallelism.map(videoIds.repartition(_)).getOrElse(videoIds)
-    parted.mapPartitions { ids =>
-      val fetcher = newFetcher() // once per partition
-      ids.map { vid =>
-        withRetry(retries)(fetcher.fetch(vid)) match {
-          case Right(segs) => FetchResult(vid, "ok", None, Some(segs))
-          case Left(err) => FetchResult(vid, "err", Some(err), None)
-        }
-      }
-    }
+    parted.mapPartitions(routeFetches(_, newFetcher, retries) {
+      case (vid, Right(segs)) => FetchResult(vid, "ok", None, Some(segs))
+      case (vid, Left(err)) => FetchResult(vid, "err", Some(err), None)
+    })
   }
 
-  /** Audio row for ASR: id + bytes (from a binaryFile scan or a
-    * path-reference join). */
-  case class AudioRow(id: String, audio: Array[Byte])
-
-  case class AsrResult(
-      id: String,
-      status: String,
-      error: Option[String],
-      text: Option[String],
-      segments: Option[Seq[Segment]])
-
-  /** T3/T4 — distributed ASR: model loaded once per partition,
-    * frames streamed through the iterator (never materializes the
-    * partition — the reference's bounded-memory chunk loop at
-    * inputs/system_audio_collector.py:38-44, distributed). */
-  def transcribeAudio(
-      audio: Dataset[AudioRow],
-      newEngine: () => AsrEngine,
-      retries: Int = 3): Dataset[AsrResult] = {
-    import audio.sparkSession.implicits._
-    audio.mapPartitions { rows =>
-      val engine = newEngine()
-      rows.map { row =>
-        withRetry(retries)(engine.transcribe(row.audio)) match {
-          case Right((text, segs)) => AsrResult(row.id, "ok", None, Some(text), Some(segs))
-          case Left(err) => AsrResult(row.id, "err", Some(err), None, None)
-        }
-      }
-    }
+  /** The one per-row fetch site: each id fetched with bounded retry and
+    * handed to `route` with its outcome. The fetcher is built on the
+    * partition's first row, so an empty partition builds none. */
+  private def routeFetches[A](
+      ids: Iterator[String],
+      newFetcher: () => TranscriptFetcher,
+      retries: Int)(route: (String, Either[String, Seq[RawSegment]]) => A): Iterator[A] = {
+    lazy val fetcher = newFetcher()
+    ids.map(vid => route(vid, withRetry(retries)(fetcher.fetch(vid))))
   }
 
-  /** The reference's full fallback DAG (main.py stages 2-4), batch
-    * form: transcript attempt; err rows reroute through ASR; union.
-    * Both branches are mapPartitions connectors — the only shuffle in
-    * the whole pipeline is the caller's optional repartition. */
+  /** The reference's full fallback DAG (main.py stages 2-4) as one
+    * `mapPartitions` pass, per id as main.py does it: try the
+    * transcript; only on failure fetch the audio and run ASR. A
+    * partition builds one fetcher and, on its first failed id, one ASR
+    * engine. An ASR failure is data: `text = None`,
+    * `meta.status = "err"`.
+    *
+    * The result is a plain lazy Dataset: nothing runs until an action,
+    * and one action fetches each id once. A caller that runs more than
+    * one action over it (a global sort's range sampler included)
+    * repeats the fetch and should persist it. */
   def ingestWithFallback(
       spark: SparkSession,
       videoIds: Dataset[String],
@@ -138,33 +121,30 @@ object Connectors {
       audioFor: String => Array[Byte],
       languages: Seq[String] = Seq("en")): Dataset[IngestRecord] = {
     import spark.implicits._
-    // localCheckpoint(eager) instead of cache(): the fetch runs exactly
-    // once (both branches read the checkpointed blocks), and the blocks
-    // are released when the Dataset is GC'd — cache() here would leak
-    // into executor storage for the session lifetime on repeated calls.
-    val fetched = fetchTranscripts(videoIds, fetcher).localCheckpoint(eager = true)
-    val ok = fetched.filter(_.status == "ok").map { r =>
-      val segs = r.segments.get.map(s => Segment(s.start, s.duration, s.text))
-      IngestRecord(
-        id = "yt_" + r.video_id,
-        source_type = graft.model.Schema.SourceYoutubeTranscript,
-        text = Some(segs.map(_.text).mkString("\n").trim),
-        segments = Some(segs),
-        binary_path = None,
-        meta = Map("video_id" -> r.video_id, "languages" -> languages.mkString(",")))
+    val langs = languages.mkString(",")
+    videoIds.mapPartitions { ids =>
+      lazy val engine = asr()
+      routeFetches(ids, fetcher, retries = 3) {
+        case (vid, Right(raw)) =>
+          val segs = raw.map(s => Segment(s.start, s.duration, s.text))
+          IngestRecord(
+            id = "yt_" + vid,
+            source_type = graft.model.Schema.SourceYoutubeTranscript,
+            text = Some(segs.map(_.text).mkString("\n").trim),
+            segments = Some(segs),
+            binary_path = None,
+            meta = Map("video_id" -> vid, "languages" -> langs))
+        case (vid, Left(_)) =>
+          val audio = audioFor(vid) // once, not once per ASR attempt
+          val stt = withRetry(3)(engine.transcribe(audio))
+          IngestRecord(
+            id = "yt_" + vid,
+            source_type = graft.model.Schema.SourceYoutubeStt,
+            text = stt.toOption.map(_._1),
+            segments = None, // STT path carries no timing (speech_to_text.py:94)
+            binary_path = Some(s"audio/$vid.wav"),
+            meta = Map("provider" -> "stub", "status" -> (if (stt.isRight) "ok" else "err")))
+      }
     }
-    val fallback = transcribeAudio(
-      fetched.filter(_.status == "err").map(r => AudioRow(r.video_id, audioFor(r.video_id))),
-      asr)
-    val err = fallback.map { r =>
-      IngestRecord(
-        id = "yt_" + r.id,
-        source_type = graft.model.Schema.SourceYoutubeStt,
-        text = r.text,
-        segments = None, // STT path carries no timing (speech_to_text.py:94)
-        binary_path = Some(s"audio/${r.id}.wav"),
-        meta = Map("provider" -> "stub", "status" -> r.status))
-    }
-    ok.union(err)
   }
 }

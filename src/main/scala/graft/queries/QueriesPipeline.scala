@@ -17,7 +17,7 @@ object QueriesPipeline {
 
     // ---- q64: the reference's full fallback DAG, batch form ---------
     // (main.py stages 2-4 over stub connectors: transcript attempt,
-    // err rows rerouted through ASR, union — SURVEY §3.1.)
+    // ASR for the ids that fail, in one pass — SURVEY §3.1.)
     QueryDef("q64_ingest_fallback",
       (s, _) => {
         import s.implicits._

@@ -328,8 +328,8 @@ object QueriesQuality {
       }),
 
     // ---- q115: the reference's fallback DAG, fully oracle-verified --
-    // The q64 pipeline (transcript attempt → err rows reroute through
-    // ASR → union; main.py stages 2-4) driven from the documents
+    // The q64 pipeline (transcript attempt → ASR for the ids that
+    // fail, in one pass; main.py stages 2-4) driven from the documents
     // table with ids that are a pure function of doc_id. The stub
     // connectors are deterministic, so every output field — routing
     // decision included — is SQL-computable and the whole DAG is

@@ -1,13 +1,48 @@
 package graft
 
+import java.util.concurrent.atomic.AtomicInteger
+
 import graft.ingest.Connectors
 import graft.ingest.Connectors._
-import graft.model.Schema
+import graft.model.{IngestRecord, Schema, Segment}
 import graft.ops.Multimodal
+import org.apache.spark.sql.Dataset
 import org.apache.spark.sql.functions._
+
+/** Counting stub factories for the fused fallback pass. Held HERE, not
+  * on the suite: a suite-method closure would drag the non-serializable
+  * ScalaTest engine into the task closure (as in `Chaos`). */
+object ConnectorCalls {
+  val fetches = new AtomicInteger
+  val transcribes = new AtomicInteger
+  val fetchers = new AtomicInteger
+  val engines = new AtomicInteger
+  def reset(): Unit = Seq(fetches, transcribes, fetchers, engines).foreach(_.set(0))
+
+  val newFetcher: () => TranscriptFetcher = () => {
+    fetchers.incrementAndGet()
+    new TranscriptFetcher {
+      private val stub = new StubTranscriptFetcher
+      override def fetch(videoId: String) = { fetches.incrementAndGet(); stub.fetch(videoId) }
+    }
+  }
+  val newEngine: () => AsrEngine = () => {
+    engines.incrementAndGet()
+    new AsrEngine {
+      private val stub = new StubAsrEngine
+      override def transcribe(audio: Array[Byte]) = { transcribes.incrementAndGet(); stub.transcribe(audio) }
+    }
+  }
+  /** Ids ending in "silent" have empty audio, which the stub ASR rejects. */
+  def audioFor(id: String): Array[Byte] =
+    if (id.endsWith("silent")) Array.emptyByteArray else Array.fill(3200)(id.length.toByte)
+}
 
 class ConnectorsSpec extends SparkSpec {
   import spark.implicits._
+
+  private def idsIn(ids: Seq[String], partitions: Int): Dataset[String] =
+    spark.createDataset(spark.sparkContext.parallelize(ids, partitions))
 
   test("fetchTranscripts routes ok/err per row with per-partition clients") {
     val ids = Seq("vid000000001", "bad00000001", "vid000000002").toDS()
@@ -42,6 +77,57 @@ class ConnectorsSpec extends SparkSpec {
     val stt = recs.find(_.source_type == Schema.SourceYoutubeStt).get
     assert(stt.segments.isEmpty && stt.binary_path.contains("audio/bad00000001.wav"))
     assert(stt.text.exists(_.startsWith("stub transcript")))
+  }
+
+  test("ingestWithFallback: one fetch per good id, retries per bad id, lazy clients, nothing pinned") {
+    // 6 ids over 8 partitions: some partitions are empty
+    val ids = Seq("vid_a", "vid_b", "bad_c", "vid_d", "bad_e", "vid_f")
+    val parts = idsIn(ids, 8)
+    val nonEmpty = parts.rdd.mapPartitions(it => Iterator(it.nonEmpty)).collect().count(identity)
+    val pinned = spark.sparkContext.getPersistentRDDs.keySet
+    ConnectorCalls.reset()
+    val recs = Connectors.ingestWithFallback(spark, parts,
+      ConnectorCalls.newFetcher, ConnectorCalls.newEngine, ConnectorCalls.audioFor).collect()
+    assert(recs.length == ids.length)
+    assert(ConnectorCalls.fetches.get == 4 + 2 * 3) // withRetry(3) per failing id
+    assert(ConnectorCalls.transcribes.get == 2)
+    assert(ConnectorCalls.fetchers.get == nonEmpty)
+    assert(ConnectorCalls.engines.get == 2) // "bad_c" and "bad_e" sit in different slices
+    assert(spark.sparkContext.getPersistentRDDs.keySet == pinned)
+
+    ConnectorCalls.reset()
+    Connectors.ingestWithFallback(spark, idsIn(ids.filterNot(_.startsWith("bad")), 3),
+      ConnectorCalls.newFetcher, ConnectorCalls.newEngine, ConnectorCalls.audioFor).collect()
+    assert(ConnectorCalls.fetchers.get == 3 && ConnectorCalls.engines.get == 0)
+    assert(ConnectorCalls.transcribes.get == 0)
+  }
+
+  test("ingestWithFallback equals its two-pass slow path, STT failure included") {
+    val ids = (0 until 40).map(i =>
+      if (i % 9 == 0) s"bad_${i}_silent" else if (i % 4 == 0) s"bad_$i" else s"vid_$i")
+    val fused = Connectors.ingestWithFallback(spark, idsIn(ids, 5),
+      () => new StubTranscriptFetcher, () => new StubAsrEngine, ConnectorCalls.audioFor)
+      .collect().toSet
+    // slow path: pass 1 fetches every id, pass 2 runs STT on the error rows
+    val fetched = Connectors.fetchTranscripts(idsIn(ids, 5), () => new StubTranscriptFetcher)
+      .collect()
+    val asr = new StubAsrEngine
+    val slow = fetched.map { r =>
+      if (r.status == "ok") {
+        val segs = r.segments.get.map(s => Segment(s.start, s.duration, s.text))
+        IngestRecord("yt_" + r.video_id, Schema.SourceYoutubeTranscript,
+          Some(segs.map(_.text).mkString("\n")), Some(segs), None,
+          Map("video_id" -> r.video_id, "languages" -> "en"))
+      } else {
+        val stt = Connectors.withRetry(3)(asr.transcribe(ConnectorCalls.audioFor(r.video_id)))
+        IngestRecord("yt_" + r.video_id, Schema.SourceYoutubeStt, stt.toOption.map(_._1),
+          None, Some(s"audio/${r.video_id}.wav"),
+          Map("provider" -> "stub", "status" -> (if (stt.isRight) "ok" else "err")))
+      }
+    }.toSet
+    assert(fused == slow && fused.size == ids.size)
+    val silent = fused.filter(_.id.endsWith("silent"))
+    assert(silent.size == 5 && silent.forall(r => r.text.isEmpty && r.meta("status") == "err"))
   }
 
   test("IngestRecord round-trips through JSONL with the declared schema") {

@@ -123,6 +123,8 @@ class PlanSpec extends SparkSpec {
   test("q115: the fallback DAG is a pure pipeline — no join, no aggregate") {
     val p = planOf("q115_fallback_oracle")
     assert(!p.contains("Join") && !p.contains("HashAggregate"), p)
+    // one pass: no union of branches, no scan of a fetch checkpoint
+    assert(!p.contains("Union") && !p.contains("ExistingRDD"), p)
   }
 
   test("q125: doc_id filter is pushed to the scan; unused columns pruned") {
