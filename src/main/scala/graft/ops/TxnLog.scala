@@ -36,6 +36,13 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * - Contiguity rule: versions start at 1 and must be gap-free; a
   *   reader stops at the first gap (a gap can only be a not-yet-
   *   visible in-flight publish on an eventually-listing store).
+  * - **One physical schema per unmapped table**: a table without a
+  *   column mapping has one physical schema, inferred ONCE per read —
+  *   one job over the multi-path relation of the segments read — and
+  *   handed to every segment and dv sidecar read, as the Delta design
+  *   keeps the schema in the log instead of re-inferring it from data
+  *   files per read. Only a column-mapped table, whose segments may
+  *   differ physically, infers each file's schema ([[VisibleRows]]).
   *
   * At 100 TB the log is O(commits), not O(data): resolving it is a
   * driver-side listing of tiny files (checkpoint/compaction of the log
@@ -354,6 +361,18 @@ object TxnLog {
     }.toSeq
   }
 
+  /** Every commit a fold at the head needs, from one listing: the
+    * whole log, or on a truncated log the floor checkpoint plus every
+    * commit above it (all of them survive by the truncation rule, so a
+    * fold anchored at the floor sees every remove since). */
+  private def headFold(s: SparkSession, table: String,
+                       st: LogState): Seq[Commit] =
+    if (st.floor == 0L) commitsFrom(s, table, st, None, 0L)
+    else latestCheckpointFrom(s, table, st.ckpts, st.floor).getOrElse(
+        throw new IllegalStateException(
+          s"history floor ${st.floor} of $table has no readable checkpoint")) +:
+      commitsFrom(s, table, st, None, st.floor)
+
   /** One commit-body ACTION line → [[Action]] — the single parser
     * under the batch log reader and the streaming manifest tail (the
     * streamed lines are the same bytes the batch reader opens). */
@@ -396,39 +415,57 @@ object TxnLog {
     * insertion order — deterministic read plans). */
   def liveFiles(cs: Seq[Commit]): Seq[String] = liveState(cs).map(_._1)
 
-  /** Distributed scan of a resolved live state: segments without a dv
-    * read as ONE multi-path parquet relation (bit-identical plan to
-    * the pre-dv read — the common case pays nothing); each dv'd
-    * segment subtracts its sidecar with a multiset exceptAll (the
-    * merge-on-READ: no segment is ever rewritten) and unions in. */
-  private def readLive(s: SparkSession,
-                       state: Seq[(String, Option[String])],
-                       evolved: Boolean = false): DataFrame = {
-    // `evolved` = a column mapping is active, so segments written
-    // under different schema versions may carry DIFFERENT physical
-    // column sets: the multi-path relation must union schemas
-    // (mergeSchema) and parts align by NAME with null-fill. Tables
-    // with no mapping keep the original plan bit-for-bit — evolution
-    // never taxes the common path.
-    def rd(paths: String*): DataFrame =
+  /** The one reader of VISIBLE rows: each of `segs` minus its active
+    * dv sidecar (the merge-on-READ — no segment is ever rewritten; a
+    * sidecar is subtracted with a multiset exceptAll). Snapshot reads,
+    * the change feed, compaction, clustering and the MoR delete's
+    * probe all read through it.
+    *
+    * Schema rule: a table WITHOUT a column mapping has one physical
+    * schema, so the schema is inferred ONCE per reader — one job over
+    * the multi-path relation of every segment — and handed to each
+    * later segment or sidecar read (`s.read.schema`), which then
+    * starts no inference job of its own. With no dv at all, [[all]]
+    * IS that multi-path relation: the plan of the pre-dv read, bit for
+    * bit. `evolved` = a column mapping is active, so segments written
+    * under different schema versions may carry DIFFERENT physical
+    * column sets: every read infers its own files' schema
+    * (mergeSchema) and parts align by NAME with null-fill. A dv
+    * sidecar holds rows of its segment, so it has the segment file's
+    * own schema and the per-segment subtraction needs no alignment. */
+  private final class VisibleRows(s: SparkSession,
+                                  segs: Seq[(String, Option[String])],
+                                  evolved: Boolean) {
+    private lazy val multiPath = s.read.parquet(segs.map(_._1): _*)
+
+    def read(paths: String*): DataFrame =
       if (evolved) s.read.option("mergeSchema", "true").parquet(paths: _*)
-      else s.read.parquet(paths: _*)
-    if (state.forall(_._2.isEmpty)) rd(state.map(_._1): _*)
-    else {
-      val plain = state.collect { case (p, None) => p }
-      val parts =
-        (if (plain.nonEmpty) Seq(rd(plain: _*)) else Seq.empty) ++
-          state.collect { case (p, Some(dv)) =>
-            // a dv sidecar freezes the segment's schema at delete
-            // time == the segment file's own schema, so the per-
-            // segment subtraction needs no alignment even when the
-            // TABLE schema has since evolved
-            rd(p).exceptAll(s.read.parquet(dv))
-          }
-      if (evolved) parts.reduce(_.unionByName(_, allowMissingColumns = true))
-      else parts.reduce(_ unionAll _)
-    }
+      else s.read.schema(multiPath.schema).parquet(paths: _*)
+
+    /** One segment's visible rows. */
+    def segment(seg: String, dv: Option[String]): DataFrame =
+      dv.fold(read(seg))(d => read(seg).exceptAll(read(d)))
+
+    /** Every segment's visible rows: the segments without a dv as ONE
+      * multi-path relation, each dv'd segment's subtraction unioned
+      * in. */
+    def all: DataFrame =
+      if (segs.forall(_._2.isEmpty))
+        if (evolved) read(segs.map(_._1): _*) else multiPath
+      else {
+        val plain = segs.collect { case (p, None) => p }
+        val parts = (if (plain.nonEmpty) Seq(read(plain: _*)) else Seq.empty) ++
+          segs.collect { case (p, dv @ Some(_)) => segment(p, dv) }
+        if (evolved) parts.reduce(_.unionByName(_, allowMissingColumns = true))
+        else parts.reduce(_ unionAll _)
+      }
   }
+
+  /** Visible rows of `segs` under the column mapping `mapping`, with
+    * LOGICAL column names. */
+  private def readVisible(s: SparkSession, segs: Seq[(String, Option[String])],
+                          mapping: Option[Seq[(String, String)]]): DataFrame =
+    applyMapping(new VisibleRows(s, segs, mapping.isDefined).all, mapping)
 
   /** Apply a column mapping to a physically-read frame: each logical
     * name selects its physical column; a physical name present in NO
@@ -768,9 +805,8 @@ object TxnLog {
     if (v < st.vacHorizon)
       throw new VersionVacuumedException(table, v, st.vacHorizon)
     val state = liveState(cs)
-    val mapping = columnMapping(cs) // versioned: the mapping AT v
-    (applyMapping(readLive(s, state, mapping.isDefined), mapping),
-      v, state.size)
+    // versioned: the mapping AT v
+    (readVisible(s, state, columnMapping(cs)), v, state.size)
   }
 
   /** Write a log CHECKPOINT at `upTo`: the resolved live-segment set
@@ -781,18 +817,22 @@ object TxnLog {
     * summarize), so plain overwrite is safe: concurrent checkpointers
     * at the same version write identical bytes, and a torn checkpoint
     * is detected by its trailer line and ignored. */
-  def writeCheckpoint(s: SparkSession, table: String, upTo: Long): Unit = {
+  def writeCheckpoint(s: SparkSession, table: String, upTo: Long): Unit =
+    writeCheckpointFrom(s, table, logState(s, table), upTo)
+
+  private def writeCheckpointFrom(s: SparkSession, table: String, st: LogState,
+                                  upTo: Long): Unit = {
     // ALWAYS fold from the newest usable checkpoint at or below
     // `upTo`, not just on truncated logs: the every-N policy otherwise
     // re-opens all N commit bodies at the Nth checkpoint — O(head)
     // per checkpoint, O(head²/every) cumulative, the exact cost
     // checkpoints exist to remove. The ckpt-fold ≡ full-fold identity
     // is the property TxnLogConcurrencySpec pins at every version.
-    val floor = logFloor(s, table)
+    val floor = st.floor
     if (upTo < floor) throw new LogTruncatedException(table, upTo, floor)
-    val folded = latestCheckpoint(s, table, upTo) match {
+    val folded = latestCheckpointFrom(s, table, st.ckpts, upTo) match {
       case Some(base) =>
-        val suffix = commits(s, table, Some(upTo), fromVersion = base.version)
+        val suffix = commitsFrom(s, table, st, Some(upTo), base.version)
         require(suffix.lastOption.map(_.version).getOrElse(base.version) == upTo,
           s"cannot checkpoint at $upTo: log only reaches " +
             s"${suffix.lastOption.map(_.version).getOrElse(base.version)}")
@@ -800,7 +840,7 @@ object TxnLog {
       case None =>
         if (floor > 0L) throw new IllegalStateException(
           s"history floor $floor of $table has no readable checkpoint")
-        val cs = commits(s, table, Some(upTo))
+        val cs = commitsFrom(s, table, st, Some(upTo), 0L)
         require(cs.nonEmpty && cs.last.version == upTo,
           s"cannot checkpoint at $upTo: log only reaches ${cs.lastOption.map(_.version)}")
         cs
@@ -843,15 +883,10 @@ object TxnLog {
   }
 
   /** Greatest complete checkpoint at or below `asOf`, as a synthetic
-    * base commit (version, add-actions), or None. */
-  private def latestCheckpoint(s: SparkSession, table: String,
-                               asOf: Long): Option[Commit] =
-    latestCheckpointFrom(s, table, logState(s, table).ckpts, asOf)
-
-  /** [[latestCheckpoint]] against candidate versions from an
-    * already-taken listing (checkpoint BODIES still open fresh — they
-    * are immutable once complete, so that read needs no coordination
-    * with the listing). */
+    * base commit (version, add-actions), or None — against candidate
+    * versions from an already-taken listing (checkpoint BODIES still
+    * open fresh — they are immutable once complete, so that read needs
+    * no coordination with the listing). */
   private def latestCheckpointFrom(s: SparkSession, table: String,
                                    ckpts: Seq[Long],
                                    asOf: Long): Option[Commit] = {
@@ -916,9 +951,7 @@ object TxnLog {
         if (v < st.vacHorizon)
           throw new VersionVacuumedException(table, v, st.vacHorizon)
         val state = liveState(cs)
-        val mapping = columnMapping(cs)
-        (applyMapping(readLive(s, state, mapping.isDefined), mapping),
-          v, state.size, 0L)
+        (readVisible(s, state, columnMapping(cs)), v, state.size, 0L)
       case Some(base) =>
         // fromVersion = the checkpoint: bodies at or below it are never
         // opened — this path reads O(suffix) commit files, full stop
@@ -928,9 +961,8 @@ object TxnLog {
         val v = suffix.lastOption.map(_.version).getOrElse(base.version)
         if (v < st.vacHorizon)
           throw new VersionVacuumedException(table, v, st.vacHorizon)
-        val mapping = columnMapping(base +: suffix)
-        (applyMapping(readLive(s, state, mapping.isDefined), mapping),
-          v, state.size, base.version)
+        (readVisible(s, state, columnMapping(base +: suffix)), v, state.size,
+          base.version)
     }
   }
 
@@ -1017,14 +1049,7 @@ object TxnLog {
     // (and let a later truncate delete their only remove records).
     // All commit bodies above the floor exist by the truncation rule,
     // so the floor anchor loses nothing.
-    val floor = logFloor(s, table)
-    val cs = if (floor == 0L) commits(s, table)
-      else {
-        val base = latestCheckpoint(s, table, floor).getOrElse(
-          throw new IllegalStateException(
-            s"history floor $floor of $table has no readable checkpoint"))
-        base +: commits(s, table, fromVersion = floor)
-      }
+    val cs = headFold(s, table, logState(s, table))
     require(cs.nonEmpty && horizon >= 1 && horizon <= cs.last.version,
       s"vacuum horizon $horizon outside committed range 1..${cs.lastOption.map(_.version).getOrElse(0L)}")
     val dir = logDir(table)
@@ -1051,15 +1076,7 @@ object TxnLog {
   def compactionPlan(s: SparkSession, table: String,
                      maxPerBin: Int = 8): Seq[Seq[String]] = {
     require(maxPerBin >= 2, s"a compaction bin needs >= 2 members, got $maxPerBin")
-    val floor = logFloor(s, table)
-    val cs = if (floor == 0L) commits(s, table)
-      else {
-        val base = latestCheckpoint(s, table, Long.MaxValue).getOrElse(
-          throw new IllegalStateException(
-            s"history floor $floor of $table has no readable checkpoint"))
-        base +: commits(s, table, fromVersion = base.version)
-      }
-    val live = liveFiles(cs)
+    val live = liveFiles(headFold(s, table, logState(s, table)))
     if (live.isEmpty) return Seq.empty
     val fs = hfs(s, new Path(table))
     val sizes = live.map { p =>
@@ -1094,25 +1111,37 @@ object TxnLog {
   def compactBin(s: SparkSession, table: String, writer: String,
                  bin: Seq[String], mergedPath: String): CommitResult = {
     require(bin.nonEmpty, "empty compaction bin")
-    val dvState = dvStateAt(s, table, currentVersion(s, table))
-    val parts = bin.map { p =>
-      val seg = s.read.parquet(p)
-      dvState.get(p)
-        .map(dv => seg.exceptAll(s.read.parquet(dv))).getOrElse(seg)
-    }
-    // members written under different schema versions (column mapping
-    // evolved between their ingests) carry different physical column
-    // sets — a positional unionAll would mis-align or drop columns and
-    // bake the corruption into the merged segment forever. Align by
-    // NAME with null-fill in that case; identical schemas (the common
-    // case) keep the plain union plan.
-    val merged =
-      if (parts.map(_.schema).distinct.size == 1) parts.reduce(_ unionAll _)
-      else parts.reduce(_.unionByName(_, allowMissingColumns = true))
+    val (merged, head) = binRows(s, table, bin)
     merged.coalesce(1).write.parquet(mergedPath)
     commitWithRetry(s, table, writer,
-      bin.map(Action("remove", _)) :+ Action("add", mergedPath))
+      bin.map(Action("remove", _)) :+ Action("add", mergedPath),
+      baseVersion = Some(head))
   }
+
+  /** Visible rows of a rewrite bin at the head, resolved from ONE
+    * listing, and that head — the rewrite's OCC base, so a dv that
+    * lands on a member after this read conflicts at commit instead of
+    * being dropped by the rewrite. Members written under different
+    * schema versions carry different physical column sets, and a
+    * positional union would bake a mis-aligned read into the rewritten
+    * segment forever: so a table that was ever mapped ([[everMapped]])
+    * aligns by name; a never-mapped table has one physical schema (see
+    * [[VisibleRows]]). */
+  private def binRows(s: SparkSession, table: String,
+                      bin: Seq[String]): (DataFrame, Long) = {
+    val st = logState(s, table)
+    val cs = headFold(s, table, st)
+    val dvs = liveState(cs).toMap
+    (new VisibleRows(s, bin.map(p => p -> dvs.get(p).flatten), everMapped(cs)).all,
+      st.head)
+  }
+
+  /** Whether the log EVER carried a column mapping (even one since
+    * reset to physical reads): then its segments may differ in
+    * physical schema. */
+  private def everMapped(cs: Seq[Commit]): Boolean =
+    cs.exists(_.actions.exists(a =>
+      a.kind == "meta" && a.path.startsWith("colmap=")))
 
   /** OPTIMIZE … CLUSTER BY: rewrite `bin`'s VISIBLE rows (dv-aware,
     * like [[compactBin]]) into up to `nOut` key-range segments with
@@ -1134,16 +1163,8 @@ object TxnLog {
     require(bin.nonEmpty, "empty cluster bin")
     require(nOut >= 1, s"nOut must be >= 1, got $nOut")
     import org.apache.spark.sql.functions.{col, max, min}
-    val dvState = dvStateAt(s, table, currentVersion(s, table))
-    val parts = bin.map { p =>
-      val seg = s.read.parquet(p)
-      dvState.get(p)
-        .map(dv => seg.exceptAll(s.read.parquet(dv))).getOrElse(seg)
-    }
-    val all =
-      (if (parts.map(_.schema).distinct.size == 1) parts.reduce(_ unionAll _)
-       else parts.reduce(_.unionByName(_, allowMissingColumns = true)))
-        .localCheckpoint() // scanned once per output range below
+    val (rows, head) = binRows(s, table, bin)
+    val all = rows.localCheckpoint() // scanned once per output range below
     val mm = all.agg(min(col(keyCol)).cast("long"),
       max(col(keyCol)).cast("long")).head()
     require(!mm.isNullAt(0), s"cluster bin has no rows with $keyCol")
@@ -1167,7 +1188,7 @@ object TxnLog {
       }
     }
     commitWithRetry(s, table, writer,
-      bin.map(Action("remove", _)) ++ adds)
+      bin.map(Action("remove", _)) ++ adds, baseVersion = Some(head))
   }
 
   case class TruncateResult(floor: Long, deletedCommits: Int)
@@ -1191,7 +1212,8 @@ object TxnLog {
     * Time travel below the floor is the price of retention — exactly
     * the trade public table formats document for log cleanup. */
   def truncateLog(s: SparkSession, table: String): TruncateResult = {
-    val anchor = latestCheckpoint(s, table, Long.MaxValue).getOrElse(
+    val st = logState(s, table)
+    val anchor = latestCheckpointFrom(s, table, st.ckpts, Long.MaxValue).getOrElse(
       throw new IllegalStateException(
         s"cannot truncate $table: no complete checkpoint to anchor the floor"))
     val dir = logDir(table)
@@ -1210,21 +1232,13 @@ object TxnLog {
     // new floor — then delete their only remove records, permanently
     // orphaning the files and silently breaking the hard-purge (q580)
     // guarantee
-    val floor = logFloor(s, table)
-    val cs = if (floor == 0L) commits(s, table)
-      else {
-        val base = latestCheckpoint(s, table, floor).getOrElse(
-          throw new IllegalStateException(
-            s"history floor $floor of $table has no readable checkpoint"))
-        base +: commits(s, table, fromVersion = floor)
-      }
-    val pending = vacuumPlan(cs, anchor.version)
+    val pending = vacuumPlan(headFold(s, table, st), anchor.version)
       .filter(p => fs.exists(new Path(p)))
     require(pending.isEmpty,
       s"cannot truncate $table: ${pending.size} removed segments below " +
         s"the anchor are not yet vacuumed (vacuum(horizon = " +
         s"${anchor.version}) first): ${pending.take(3).mkString(", ")}")
-    val doomed = logState(s, table).txns.filter(_._1 <= anchor.version)
+    val doomed = st.txns.filter(_._1 <= anchor.version)
     // delete NEWEST-first: a reader listing mid-truncation then sees a
     // contiguous prefix 1..k (a valid HISTORICAL snapshot — the same
     // graceful degradation an eventually-consistent listing gives),
@@ -1243,16 +1257,12 @@ object TxnLog {
   def checkpointIfDue(s: SparkSession, table: String,
                       every: Int): Option[Long] = {
     require(every >= 1, s"checkpoint interval must be >= 1, got $every")
-    val head = currentVersion(s, table)
-    if (head == 0L) return None
-    val dir = logDir(table)
-    val fs = hfs(s, dir)
-    val newest = fs.listStatus(dir).map(_.getPath.getName)
-      .filter(_.matches("\\d{20}\\.ckpt"))
-      .map(_.stripSuffix(".ckpt").toLong)
-      .foldLeft(0L)(math.max)
-    if (head - newest >= every) { writeCheckpoint(s, table, head); Some(head) }
-    else None
+    // one listing decides head, the newest checkpoint and the fold
+    val st = logState(s, table)
+    val newest = st.ckpts.lastOption.getOrElse(0L)
+    if (st.head > 0L && st.head - newest >= every) {
+      writeCheckpointFrom(s, table, st, st.head); Some(st.head)
+    } else None
   }
 
   /** Change-data-feed between versions (`fromV`, `toV`]: row-level
@@ -1388,38 +1398,15 @@ object TxnLog {
     val adds = c.actions.filter(_.kind == "add").map(_.path)
     val removes = c.actions.filter(_.kind == "remove").map(_.path)
     val dvActs = c.actions.filter(_.kind == "dv")
-    var opened = adds.size + removes.size
+    var opened = adds.size + removes.size + removes.count(dvState.contains)
     def tag(df: DataFrame, t: String) = df
       .withColumn("_change_type", lit(t))
       .withColumn("_commit_version", lit(c.version))
-    // under an active column mapping, segments may carry different
-    // physical column sets (written before/after an evolution), so
-    // multi-path reads must union schemas and every emitted frame
-    // projects to LOGICAL names — unmapped tables keep the original
-    // plans bit-for-bit
-    def rdm(paths: Seq[String]): DataFrame =
-      if (mapping.isDefined)
-        s.read.option("mergeSchema", "true").parquet(paths: _*)
-      else s.read.parquet(paths: _*)
-    def logical(df: DataFrame): DataFrame = applyMapping(df, mapping)
-    // a removed segment's rows MINUS its active dv: rows the dv had
-    // already deleted must not surface as deletes twice
-    def readRemoved(): DataFrame = {
-      if (removes.forall(p => !dvState.contains(p)))
-        rdm(removes) // pre-dv plan, bit-identical
-      else {
-        val parts = removes.map { p =>
-          val seg = s.read.parquet(p)
-          dvState.get(p) match {
-            case Some(dv) => opened += 1; seg.exceptAll(s.read.parquet(dv))
-            case None => seg
-          }
-        }
-        if (mapping.isDefined)
-          parts.reduce(_.unionByName(_, allowMissingColumns = true))
-        else parts.reduce(_ unionAll _)
-      }
-    }
+    // an added segment reads whole, a removed one MINUS its active dv
+    // (rows the dv had already deleted must not surface as deletes twice)
+    def readAdded(): DataFrame = readVisible(s, adds.map(_ -> None), mapping)
+    def readRemoved(): DataFrame =
+      readVisible(s, removes.map(p => p -> dvState.get(p)), mapping)
     // a logical column may read as untyped nulls on one side of a
     // rewrite (no file on that side carries its physical column yet) —
     // borrow the other side's concrete type so the diff can align
@@ -1434,12 +1421,12 @@ object TxnLog {
         else org.apache.spark.sql.functions.col(f.name)
       }.toSeq: _*)
     val addRemove = (adds.nonEmpty, removes.nonEmpty) match {
-      case (true, false) => Seq(tag(logical(rdm(adds)), "insert"))
-      case (false, true) => Seq(tag(logical(readRemoved()), "delete"))
+      case (true, false) => Seq(tag(readAdded(), "insert"))
+      case (false, true) => Seq(tag(readRemoved(), "delete"))
       case (true, true) =>
         import org.apache.spark.sql.functions.{col, when}
-        val a0 = logical(rdm(adds))
-        val r0 = logical(readRemoved())
+        val a0 = readAdded()
+        val r0 = readRemoved()
         val a = alignTo(a0, r0)
         val r = alignTo(r0, a0)
         // classify each surviving diff row by identity persistence:
@@ -1460,20 +1447,14 @@ object TxnLog {
           .unionAll(classify(r.exceptAll(a), a, "update_pre", "delete")))
       case (false, false) => Seq.empty
     }
-    // dv actions: the commit's row-level deletes are the DELTA —
-    // new sidecar minus the superseded one (each dv is cumulative)
+    // dv actions: the commit's row-level deletes are the DELTA — each
+    // dv is cumulative, so the new sidecar is read like a segment minus
+    // the one it supersedes
     val dvDeletes = dvActs.map { a =>
-      val newRows = s.read.parquet(a.path)
-      opened += 1
-      val delta = dvState.get(a.ref) match {
-        case Some(prev) =>
-          opened += 1; newRows.exceptAll(s.read.parquet(prev))
-        case None => newRows
-      }
+      val prev = dvState.get(a.ref)
+      opened += 1 + prev.size
       dvState += (a.ref -> a.path)
-      // dv sidecars share their base segment's physical schema, so the
-      // delta computes physically and maps to logical names at the end
-      tag(logical(delta), "delete")
+      tag(readVisible(s, Seq(a.path -> prev), mapping), "delete")
     }
     dvState --= removes // retired segments drop their association
     (addRemove ++ dvDeletes, dvState, opened)
@@ -1554,9 +1535,10 @@ object TxnLog {
     * O(deleted rows), not O(segment): the trade against copy-on-write
     * ([[changeFeed]]'s rewrite path) is deferred to readers, which
     * subtract the sidecar per scan until OPTIMIZE rewrites — the
-    * public deletion-vector design. The per-segment probe loop is a
-    * driver-side loop over O(live segments) with one bounded job
-    * each, the same documented class as [[compactionPlan]] execution.
+    * public deletion-vector design. ONE probe job over every live
+    * segment finds the segments with matching visible rows; each of
+    * those then writes its sidecar in one bounded job, the same
+    * documented class as [[compactionPlan]] execution.
     *
     * Returns the commit result, or None when nothing matched (a no-op
     * delete publishes no commit).
@@ -1571,38 +1553,34 @@ object TxnLog {
   def deleteWhereMoR(s: SparkSession, table: String, writer: String,
                      cond: org.apache.spark.sql.Column)
       : Option[CommitResult] = {
-    val st = logState(s, table)
-    val (cs, head) =
-      if (st.floor == 0L) {
-        val c = commitsFrom(s, table, st, None, 0L)
-        require(c.nonEmpty, s"cannot delete from empty table $table")
-        (c, c.last.version)
-      } else {
-        val base = latestCheckpointFrom(s, table, st.ckpts, st.floor)
-          .getOrElse(throw new IllegalStateException(
-            s"history floor ${st.floor} of $table has no readable checkpoint"))
-        val suf = commitsFrom(s, table, st, None, st.floor)
-        (base +: suf, suf.lastOption.map(_.version).getOrElse(st.floor))
-      }
-    val actions = liveState(cs).flatMap { case (seg, dvo) =>
-      val segDf = s.read.parquet(seg)
-      val visible = dvo
-        .map(dv => segDf.exceptAll(s.read.parquet(dv)))
-        .getOrElse(segDf)
-      val hits = visible.filter(cond)
-      if (hits.isEmpty) None
-      else {
-        val newDv = dvo
-          .map(dv => s.read.parquet(dv).unionAll(hits)).getOrElse(hits)
-        val dvPath = s"$table/_dv/${new Path(seg).getName}" +
-          s"_dv${stagingSeq.incrementAndGet()}"
-        newDv.coalesce(1).write.parquet(dvPath)
-        Some(Action("dv", dvPath, ref = seg))
-      }
+    import org.apache.spark.sql.functions.lit
+    val cs = headFold(s, table, logState(s, table))
+    require(cs.nonEmpty, s"cannot delete from empty table $table")
+    val live = liveState(cs)
+    // a sidecar holds rows of its own segment file: per-file schemas
+    // wherever segments may differ physically
+    val rows = new VisibleRows(s, live, everMapped(cs))
+    def hits(seg: String, dvo: Option[String]) = rows.segment(seg, dvo).filter(cond)
+    // the probe: each segment's hits tagged with its index, distinct
+    // per partition on the executors — one job, no shuffle of its own
+    val hit: Set[Int] =
+      if (live.isEmpty) Set.empty
+      else live.zipWithIndex
+        .map { case ((seg, dvo), i) => hits(seg, dvo).select(lit(i)) }
+        .reduce(_ unionAll _)
+        .rdd.mapPartitions(_.map(_.getInt(0)).toSet.iterator)
+        .collect().toSet
+    val actions = live.zipWithIndex.collect { case ((seg, dvo), i) if hit(i) =>
+      val newDv = dvo.map(dv => rows.read(dv).unionAll(hits(seg, dvo)))
+        .getOrElse(hits(seg, dvo))
+      val dvPath = s"$table/_dv/${new Path(seg).getName}" +
+        s"_dv${stagingSeq.incrementAndGet()}"
+      newDv.coalesce(1).write.parquet(dvPath)
+      Action("dv", dvPath, ref = seg)
     }
     if (actions.isEmpty) None
     else Some(commitWithRetry(s, table, writer, actions,
-      baseVersion = Some(head)))
+      baseVersion = Some(cs.last.version)))
   }
 
   // ---- RESTORE (rollback as a forward commit) ---------------------------
@@ -1647,18 +1625,9 @@ object TxnLog {
     // the floor checkpoint); anything below it is not
     if (toVersion < st.floor)
       throw new LogTruncatedException(table, toVersion, st.floor)
-    val (baseCs, headV) =
-      if (st.floor == 0L) {
-        val cs = commitsFrom(s, table, st, None, 0L)
-        require(cs.nonEmpty, s"cannot restore empty table $table")
-        (cs, cs.last.version)
-      } else {
-        val base = latestCheckpointFrom(s, table, st.ckpts, st.floor)
-          .getOrElse(throw new IllegalStateException(
-            s"history floor ${st.floor} of $table has no readable checkpoint"))
-        val suf = commitsFrom(s, table, st, None, st.floor)
-        (base +: suf, suf.lastOption.map(_.version).getOrElse(st.floor))
-      }
+    val baseCs = headFold(s, table, st)
+    require(baseCs.nonEmpty, s"cannot restore empty table $table")
+    val headV = baseCs.last.version
     require(toVersion >= 1L && toVersion <= headV,
       s"restore target $toVersion outside [1, $headV] of $table")
     val csTo = baseCs.filter(_.version <= toVersion)

@@ -33,7 +33,9 @@ object QueriesPipeline {
           .select(col("id"), col("source_type"), col("text"),
             size(coalesce(col("segments"), array())).cast("bigint").as("n_segments"),
             col("binary_path"))
-          .orderBy("id")
+          // a global orderBy would run a range-sampling job over the lazy
+          // connector pass and so call every connector twice per id
+          .repartition(1).sortWithinPartitions("id")
       },
       // oracle = the stub semantics recomputed in SQL over the same
       // inline id list: ok ids get the two stub segments flattened

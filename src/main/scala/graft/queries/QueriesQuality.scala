@@ -351,7 +351,9 @@ object QueriesQuality {
           .select(col("id"), col("source_type"), col("text"),
             size(coalesce(col("segments"), array())).cast("bigint").as("n_segments"),
             col("binary_path"))
-          .orderBy("id")
+          // a global orderBy would run a range-sampling job over the lazy
+          // connector pass and so call every connector twice per id
+          .repartition(1).sortWithinPartitions("id")
       },
       Some("""WITH v AS (SELECT doc_id,
         |  CASE WHEN doc_id % 7 = 0 THEN 'bad' || CAST(doc_id AS VARCHAR)

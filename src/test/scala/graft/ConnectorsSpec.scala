@@ -102,6 +102,25 @@ class ConnectorsSpec extends SparkSpec {
     assert(ConnectorCalls.transcribes.get == 0)
   }
 
+  test("q64/q115 sort shape: one action fetches each good id once") {
+    val ids = Seq("vid_a", "vid_b", "bad_c", "vid_d", "bad_e", "vid_f")
+    ConnectorCalls.reset()
+    val out = Connectors.ingestWithFallback(spark, idsIn(ids, 3),
+        ConnectorCalls.newFetcher, ConnectorCalls.newEngine, ConnectorCalls.audioFor)
+      .toDF().select("id").repartition(1).sortWithinPartitions("id")
+      .collect().map(_.getString(0)).toSeq
+    assert(out == ids.map("yt_" + _).sorted)
+    assert(ConnectorCalls.fetches.get == 4 + 2 * 3) // withRetry(3) per failing id
+    assert(ConnectorCalls.transcribes.get == 2)
+    // both queries sort that way: no range-partitioned global sort,
+    // whose sampling job would run the connector pass a second time
+    Seq("q64_ingest_fallback", "q115_fallback_oracle").foreach { q =>
+      val p = graft.queries.Registry.byName(q).fn(spark, sf)
+        .queryExecution.executedPlan.toString
+      assert(!p.toLowerCase.contains("rangepartitioning"), s"$q: $p")
+    }
+  }
+
   test("ingestWithFallback equals its two-pass slow path, STT failure included") {
     val ids = (0 until 40).map(i =>
       if (i % 9 == 0) s"bad_${i}_silent" else if (i % 4 == 0) s"bad_$i" else s"vid_$i")
