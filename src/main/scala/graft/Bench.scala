@@ -3,50 +3,10 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // warm the session before timing: whole-stage codegen compilation,
-    // shuffle machinery, the parquet reader, AND the interpreted
-    // higher-order-function/hash expression paths all JIT on first use
-    // (measured ~10 s billed to whichever heavy query runs first
-    // otherwise). Warmup runs on ~1k synthetic rows — the work is the
-    // class-loading/JIT, not the data volume.
-    try {
-      val w = spark.range(1000).selectExpr("id", "id % 7 AS k")
-      w.join(w.groupBy("k").count(), "k").count()
-      // hash + string + higher-order lambda paths (dedup/text family)
-      spark.range(1000)
-        .selectExpr("cast(id as string) AS s", "id % 7 AS k")
-        .selectExpr(
-          "md5(s) AS h",
-          "transform(sequence(1, 8), i -> md5(concat(s, i))) AS a",
-          "filter(split(s, '0'), x -> length(x) > 0) AS t",
-          "aggregate(sequence(1, 4), 0L, (acc, x) -> acc + x) AS g",
-          "k")
-        .selectExpr("array_min(a) AS mn", "size(t) AS n", "g", "k", "h")
-        .groupBy("k").agg(org.apache.spark.sql.functions.min("mn"),
-          org.apache.spark.sql.functions.count("*")).count()
-      // window machinery
-      spark.range(1000).selectExpr("id", "id % 7 AS k")
-        .selectExpr("k", "row_number() OVER (PARTITION BY k ORDER BY id) AS rn")
-        .count()
-      // generator (explode) + string-keyed hash aggregate + sort
-      spark.range(1000)
-        .selectExpr("explode(split(cast(id as string), '')) AS t")
-        .groupBy("t").count().orderBy("t").count()
-      // every bench table: file listing + footer decode + column decode
-      Seq("region", "nation", "customer", "supplier", "part", "orders",
-          "lineitem", "events", "documents", "embeddings").foreach { t =>
-        try spark.read.parquet(s"$sfDir/$t.parquet").count()
-        catch { case _: Throwable => () }
-      }
-    } catch { case _: Throwable => () }
+    val spark = Harness.session()
+    // warm the session before timing (see Harness.warmup); its failed
+    // steps are named on stderr
+    Harness.warmup(spark, sfDir)
     // A crashed query must be visible in the bench output, not blend in
     // as a normal-looking timing: record it as -1 in `queries` plus a
     // `failed` list, and print the exception to stderr.
@@ -58,18 +18,6 @@ object Bench {
       case Some(f) => SparkEntry.queries.filter { case (n, _) => f.exists(n.startsWith) }
       case None => SparkEntry.queries
     }
-    // steady-state warmup: run a few representative queries untimed
-    // (join+agg, text explode, LSH hashing, vector similarity,
-    // windowing). Per-query cold cost is dominated by JVM-wide JIT —
-    // measured 0.6 s warm vs 5.3 s cold for the SAME query — so timed
-    // numbers without this mostly measure where the JIT tax happened
-    // to land, not the queries.
-    Seq("q03_top_customers", "q31_term_freq", "q42_lsh_pairs",
-        "q50_cosine_topk", "q23_tumbling_window").foreach { n =>
-      SparkEntry.queries.get(n).foreach { fn =>
-        try fn(spark, sfDir).count() catch { case _: Throwable => () }
-      }
-    }
     // fixed name order: Map iteration order is effectively random, and
     // a stable order keeps per-query timings comparable across rounds.
     // min-of-2 timing: JVM-wide JIT/GC attribution lands on whichever
@@ -79,35 +27,13 @@ object Bench {
     // min(t1, t2) measures the query, not where the JIT tax happened
     // to fall. SPARK_GRAFT_RUNS=1 restores single-shot timing.
     val runs = sys.env.getOrElse("SPARK_GRAFT_RUNS", "2").toInt.max(1)
-    // block hygiene between QUERIES: iterative operators localCheckpoint
-    // / persist working frames and the final results stay pinned in the
-    // block manager for as long as the DataFrames are reachable. Across
-    // 150+ queries x min-of-2 runs the leaked blocks accumulate until
-    // memory pressure taxes every subsequent query (r5's suite-wide
-    // 8-26x regression on UNCHANGED queries). Dropping them is cheap
-    // (async) and runs outside the timed section. Deliberately NOT
-    // between the two runs of one query: a query's second run legally
-    // reuses the first run's persisted frames via CacheManager plan
-    // matching — the same warm-cache behavior a production session
-    // gets — and clearing mid-query would put cold parquet-decode +
-    // full persist cost in BOTH runs (measured +26 s suite-wide).
-    // blocking sweep: async unpersist posts executor block-removal that
-    // would otherwise land inside the NEXT query's timed window
-    def clearBlocks(): Unit = {
-      graft.ops.Checkpoints.muteWarnings()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(true))
-      spark.catalog.clearCache()
-      // ContextCleaner only reaps dead broadcast/RDD/shuffle state when
-      // their weak references are GC'd (its own periodic System.gc()
-      // fires every 30 MINUTES by default) — across 187 queries the
-      // stale refs otherwise accumulate until heap pressure turns into
-      // multi-second GC stalls INSIDE later queries' timed runs
-      // (measured: the same 5 queries cost 18.4 s late in-suite vs
-      // 3.8 s isolated). An explicit GC here runs outside every timed
-      // window and keeps each query's starting heap flat.
-      System.gc()
-    }
-    clearBlocks() // the steady-state warmup queries above leak too
+    // block hygiene between QUERIES (Harness.clearBlocks), outside the
+    // timed section. Deliberately NOT between the two runs of one
+    // query: a query's second run legally reuses the first run's
+    // persisted frames via CacheManager plan matching — the same
+    // warm-cache behavior a production session gets — and clearing
+    // mid-query would put cold parquet-decode + full persist cost in
+    // BOTH runs (measured +26 s suite-wide).
     def timeQueryN(name: String, nRuns: Int,
         fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
       def once(): Double = {
@@ -120,7 +46,7 @@ object Bench {
           System.err.println(s"[bench] $name FAILED: ${t.getClass.getName}: ${t.getMessage}")
           failed += name; None
       }
-      clearBlocks()
+      Harness.clearBlocks(spark)
       t.getOrElse(-1.0)
     }
     def timeQuery(name: String,

@@ -1,7 +1,7 @@
 package graft
 
 import graft.ops.Similarity
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Regenerates RECALL.md: measured recall@10 for every ANN variant vs
@@ -16,13 +16,7 @@ import org.apache.spark.sql.functions._
 object RecallReport {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Harness.session()
     import spark.implicits._
 
     val emb = Tables.embeddings(spark, sfDir)

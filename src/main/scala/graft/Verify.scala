@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -13,26 +12,21 @@ object Verify {
       case Some(f) => SparkEntry.queries.filter { case (n, _) => f.exists(n.startsWith) }
       case None => SparkEntry.queries
     }
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session()
     new java.io.File(outDir).mkdirs()
-    selected.foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
+    val failed = selected.toSeq.flatMap { case (name, fn) =>
+      val err = try {
+        fn(spark, sfDir).coalesce(1).write.mode("overwrite")
+          .parquet(s"$outDir/$name")
+        None
+      } catch { case e: Throwable =>
+        System.err.println(s"[verify] $name failed: ${e.getClass.getName}: ${e.getMessage}")
+        Some(name)
       }
       // block hygiene (the Bench discipline): drop checkpoint/persist
-      // blocks a query leaves pinned so 150+ dumps don't accumulate
-      graft.ops.Checkpoints.muteWarnings()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
-      spark.catalog.clearCache()
+      // blocks a query leaves pinned so hundreds of dumps don't accumulate
+      Harness.clearBlocks(spark)
+      err
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the
@@ -54,5 +48,7 @@ object Verify {
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()
+    System.err.println(
+      s"[verify] failed ${failed.size}/${selected.size}: ${failed.mkString(",")}")
   }
 }

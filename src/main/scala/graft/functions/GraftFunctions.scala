@@ -1,16 +1,17 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession, SparkSessionExtensions}
+import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.functions.call_function
 
-/** Registration for graft's native expressions.
+/** Registration for graft's native expressions and optimizer rules.
   *
-  * Preferred wiring: `spark.sql.extensions=graft.functions.GraftExtensions`
-  * (injectFunction). `register(spark)` is the programmatic equivalent
-  * for sessions created without the conf — idempotent, called by the
-  * ops that use the functions.
+  * `register(spark)` is the one install. `graft.Harness.session` calls
+  * it on every session it builds, and `graft.SparkEntry` calls it on
+  * whatever session the driver hands in, before each query.
   */
 object GraftFunctions {
 
@@ -74,6 +75,20 @@ object GraftFunctions {
         args(2).eval().asInstanceOf[Number].intValue())
         .toAggregateExpression()))
 
+  /** The optimizer rules, in the order they join
+    * `experimental.extraOptimizations`: the blocklist fusion
+    * (plans/FuseMultiContains), the two greedy-thinning pushdowns, and
+    * stats-fed broadcast planning (plans/StatsBroadcast; a no-op until
+    * Relational.analyzeForCbo fills the ledger). */
+  val rules: Seq[Rule[LogicalPlan]] = Seq(
+    graft.plans.FuseMultiContains,
+    graft.plans.PushFilterThroughGreedyThin,
+    graft.plans.PruneColumnsThroughGreedyThin,
+    graft.plans.StatsBroadcastJoin)
+
+  /** Install the functions, the rules and the greedy-thinning planner
+    * strategy (plans/GreedyThin) on `spark`. Idempotent: anything
+    * already present is left as it is. */
   def register(spark: SparkSession): Unit = {
     val registry = spark.sessionState.functionRegistry
     functions.foreach { case (ident, info, builder) =>
@@ -81,37 +96,12 @@ object GraftFunctions {
         registry.registerFunction(ident, info, builder)
       }
     }
-    // the blocklist-fusion optimizer rule (plans/FuseMultiContains);
-    // extraOptimizations is the post-hoc equivalent of
-    // injectOptimizerRule for sessions built without the conf
-    val extra = spark.experimental.extraOptimizations
-    if (!extra.contains(graft.plans.FuseMultiContains)) {
-      spark.experimental.extraOptimizations =
-        extra :+ graft.plans.FuseMultiContains
+    val exp = spark.experimental
+    exp.extraOptimizations = rules.foldLeft(exp.extraOptimizations) {
+      (acc, r) => if (acc.contains(r)) acc else acc :+ r
     }
-    val extra2 = spark.experimental.extraOptimizations
-    if (!extra2.contains(graft.plans.PushFilterThroughGreedyThin)) {
-      spark.experimental.extraOptimizations =
-        extra2 :+ graft.plans.PushFilterThroughGreedyThin
-    }
-    val extra3 = spark.experimental.extraOptimizations
-    if (!extra3.contains(graft.plans.PruneColumnsThroughGreedyThin)) {
-      spark.experimental.extraOptimizations =
-        extra3 :+ graft.plans.PruneColumnsThroughGreedyThin
-    }
-    // stats-fed broadcast planning (plans/StatsBroadcast): a no-op
-    // until Relational.analyzeForCbo fills the ledger
-    val extra4 = spark.experimental.extraOptimizations
-    if (!extra4.contains(graft.plans.StatsBroadcastJoin)) {
-      spark.experimental.extraOptimizations =
-        extra4 :+ graft.plans.StatsBroadcastJoin
-    }
-    // the greedy-thinning planner strategy (plans/GreedyThin) — the
-    // extraStrategies twin of injectPlannerStrategy
-    val strats = spark.experimental.extraStrategies
-    if (!strats.contains(graft.plans.GreedyThinStrategy)) {
-      spark.experimental.extraStrategies =
-        strats :+ graft.plans.GreedyThinStrategy
+    if (!exp.extraStrategies.contains(graft.plans.GreedyThinStrategy)) {
+      exp.extraStrategies = exp.extraStrategies :+ graft.plans.GreedyThinStrategy
     }
   }
 
@@ -128,8 +118,7 @@ object GraftFunctions {
       org.apache.spark.sql.functions.lit(k))
 
   /** Column-level dot product backed by the codegen'd expression.
-    * Callers must have registered the functions on the session first
-    * (any graft.ops.Similarity entry point does this). */
+    * Register the functions first. */
   def dotNative(a: Column, b: Column): Column = call_function("graft_dot", a, b)
 
   /** Column-level accent fold (NFD + strip combining marks) backed by
@@ -146,17 +135,4 @@ object GraftFunctions {
     call_function("graft_multi_contains", text,
       org.apache.spark.sql.functions.array(
         patterns.map(org.apache.spark.sql.functions.lit): _*))
-}
-
-/** SparkSessionExtensions hook: enables
-  * `--conf spark.sql.extensions=graft.functions.GraftExtensions`. */
-class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(ext: SparkSessionExtensions): Unit = {
-    GraftFunctions.functions.foreach(ext.injectFunction)
-    ext.injectOptimizerRule(_ => graft.plans.FuseMultiContains)
-    ext.injectOptimizerRule(_ => graft.plans.PushFilterThroughGreedyThin)
-    ext.injectOptimizerRule(_ => graft.plans.PruneColumnsThroughGreedyThin)
-    ext.injectOptimizerRule(_ => graft.plans.StatsBroadcastJoin)
-    ext.injectPlannerStrategy(_ => graft.plans.GreedyThinStrategy)
-  }
 }

@@ -31,8 +31,8 @@ object Similarity {
   def cosine(a: Column, b: Column): Column =
     dot(a, b) / (norm(a) * norm(b))
 
-  /** Codegen'd variants (require GraftFunctions.register — every
-    * DataFrame entry point below does it). */
+  /** Codegen'd variants: the session needs graft's functions, which
+    * `graft.Harness.session` and `graft.SparkEntry` install. */
   def dotNative(a: Column, b: Column): Column = GraftFunctions.dotNative(a, b)
   def normNative(a: Column): Column = sqrt(dotNative(a, a))
   def cosineNative(a: Column, b: Column): Column =
@@ -44,7 +44,6 @@ object Similarity {
     * for a bounded query batch. */
   def bruteForceTopK(corpus: DataFrame, queries: DataFrame, k: Int,
                      idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    GraftFunctions.register(corpus.sparkSession)
     val q = broadcast(queries.select(col(idCol).as("query_id"), col(vecCol).as("__qv"),
       normNative(col(vecCol)).as("__qn")))
     val c = corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("__cv"),
@@ -71,7 +70,6 @@ object Similarity {
   def hardNegatives(corpus: DataFrame, probes: DataFrame, k: Int,
                     idCol: String = "vec_id", vecCol: String = "embedding",
                     labelCol: String = "label"): DataFrame = {
-    GraftFunctions.register(corpus.sparkSession)
     val q = broadcast(probes.select(col(idCol).as("query_id"),
       col(labelCol).as("__ql"), col(vecCol).as("__qv"),
       normNative(col(vecCol)).as("__qn")))
@@ -152,7 +150,6 @@ object Similarity {
   def lshTopK(corpus: DataFrame, queries: DataFrame, k: Int,
               nPlanes: Int = 8, seed: Long = 42, dim: Int = 64,
               idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    GraftFunctions.register(corpus.sparkSession)
     require(dim > 0, "dim must match the embedding dimension — hyperplanes " +
       "shorter than the vectors silently ignore the remaining components")
     val planes = hyperplanes(nPlanes, dim, seed)
@@ -185,7 +182,6 @@ object Similarity {
                    nPlanes: Int = 8, nTables: Int = 4, seed: Long = 42,
                    dim: Int = 64, idCol: String = "vec_id",
                    vecCol: String = "embedding"): DataFrame = {
-    GraftFunctions.register(corpus.sparkSession)
     require(nTables >= 1, "nTables must be >= 1")
     val buckets: Column = array((0 until nTables).map { t =>
       srpBucket(col(vecCol), hyperplanes(nPlanes, dim, seed + t))
@@ -228,7 +224,6 @@ object Similarity {
                         nPlanes: Int = 8, seed: Long = 42, dim: Int = 64,
                         idCol: String = "vec_id",
                         vecCol: String = "embedding"): DataFrame = {
-    GraftFunctions.register(corpus.sparkSession)
     val planes = hyperplanes(nPlanes, dim, seed)
     val c = corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("__cv"),
       normNative(col(vecCol)).as("__cn"),
@@ -311,7 +306,6 @@ object Similarity {
                      idCol: String = "vec_id", vecCol: String = "embedding",
                      exactMeans: Boolean = true,
                      maxIter: Int = 1): Array[(Int, Array[Float])] = {
-    GraftFunctions.register(corpusIn.sparkSession)
     // consumed by count, seed collect, and the Lloyd collect — persist
     // so direct callers don't re-scan the corpus three times (when the
     // caller already persisted the same plan, the cache manager
@@ -411,7 +405,6 @@ object Similarity {
   def pqAdcTopK(corpus: DataFrame, queries: DataFrame,
                 books: Seq[Array[(Int, Array[Float])]], width: Int, k: Int,
                 idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    GraftFunctions.register(corpus.sparkSession)
     val spark = corpus.sparkSession
     import spark.implicits._
     val nSub = books.size
@@ -450,7 +443,6 @@ object Similarity {
     * O(candidates), never corpus × queries. */
   def rerankExact(corpus: DataFrame, candidates: DataFrame, k: Int,
                   idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    GraftFunctions.register(corpus.sparkSession)
     val v = corpus.select(col(idCol), col(vecCol),
       normNative(col(vecCol)).as("__n"))
     val scored = candidates
@@ -495,7 +487,6 @@ object Similarity {
   def ivfTopKFromIndex(corpus: DataFrame, queries: DataFrame, k: Int,
                        index: DataFrame, nProbe: Int = 4,
                        idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    GraftFunctions.register(corpus.sparkSession)
     val centArr = index
       .select(struct(col("cell").cast("int").as("cell"), col("centroid"),
         normNative(col("centroid")).as("cn")).as("__c"))
@@ -537,7 +528,6 @@ object Similarity {
   def ivfTopKWith(corpus: DataFrame, queries: DataFrame, k: Int,
                   refined: Array[(Int, Array[Float])], nProbe: Int = 4,
                   idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    GraftFunctions.register(corpus.sparkSession)
     val c = corpus
       .select(col(idCol).as("neighbor_id"), col(vecCol).as("__cv"),
         normNative(col(vecCol)).as("__cn"))
@@ -570,7 +560,6 @@ object Similarity {
     * (At scale prefer cosineNearDupPairsLsh.) */
   def cosineNearDupPairsExact(df: DataFrame, threshold: Double,
                               idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    GraftFunctions.register(df.sparkSession)
     // repartition the streamed side: the nested-loop join inherits the
     // scan's partitioning, and a single-file parquet table scans as
     // ONE partition — the whole O(n²) dot-product loop would run on
@@ -598,7 +587,6 @@ object Similarity {
   def cosineNearDupPairs(df: DataFrame, threshold: Double,
                          nPlanes: Int = 6, seed: Long = 42, dim: Int = 64,
                          idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    GraftFunctions.register(df.sparkSession)
     val planes = hyperplanes(nPlanes, dim, seed)
     val h = df.select(col(idCol), col(vecCol),
       normNative(col(vecCol)).as("__n"), srpBucket(col(vecCol), planes).as("__bucket"))
@@ -643,7 +631,6 @@ object Similarity {
     * quantization lambda and recompute it dim times per row (the
     * lambda-CSE hazard, DESIGN.md). */
   def sq8Quantize(df: DataFrame, idCol: String, vecCol: String): DataFrame = {
-    GraftFunctions.register(df.sparkSession)
     val scale = greatest(
       array_max(transform(col(vecCol), x => abs(x.cast("double")))),
       lit(1e-30))
@@ -670,7 +657,6 @@ object Similarity {
     * recall vs exact cosine is measured in SimilaritySpec. */
   def sq8TopK(corpus: DataFrame, queries: DataFrame, k: Int,
               idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    GraftFunctions.register(corpus.sparkSession)
     val c = sq8Quantize(corpus, idCol, vecCol)
       .withColumnsRenamed(Map(idCol -> "neighbor_id", "__q" -> "__cq", "__qn2" -> "__cn2"))
     val q = broadcast(sq8Quantize(queries, idCol, vecCol)

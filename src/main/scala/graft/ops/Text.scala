@@ -312,7 +312,6 @@ object Text {
     * pick) — the linear-time counterpart of minShingleFingerprint. */
   def rollingFingerprint(df: org.apache.spark.sql.DataFrame, idCol: String,
                          textCol: String, n: Int): org.apache.spark.sql.DataFrame = {
-    graft.functions.GraftFunctions.register(df.sparkSession)
     df.select(col(idCol),
       array_min(rollingShingleHashes(tokens(col(textCol)), n)).as("rolling_fp"))
   }

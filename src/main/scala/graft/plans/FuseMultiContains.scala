@@ -29,9 +29,8 @@ import org.apache.spark.unsafe.types.UTF8String
   * rewrites maximal pure sub-trees, and only at ≥3 terms, below which
   * the automaton buys nothing.
   *
-  * Wired via `GraftExtensions` (spark.sql.extensions) for conf-built
-  * sessions and appended to `spark.experimental.extraOptimizations` by
-  * `GraftFunctions.register` for programmatic ones.
+  * Appended to `spark.experimental.extraOptimizations` by
+  * `GraftFunctions.register`, the one install (see graft.Harness).
   */
 object FuseMultiContains extends Rule[LogicalPlan] {
 

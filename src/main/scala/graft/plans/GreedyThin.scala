@@ -60,10 +60,8 @@ case class GreedyThin(
 }
 
 /** Planner strategy mapping the logical node 1:1 onto the physical
-  * operator — registered via `GraftExtensions`
-  * (injectPlannerStrategy) and `GraftFunctions.register`
-  * (experimental.extraStrategies), same dual wiring as the
-  * FuseMultiContains optimizer rule. */
+  * operator — installed by `GraftFunctions.register`
+  * (experimental.extraStrategies), next to the optimizer rules. */
 object GreedyThinStrategy extends SparkStrategy {
   override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
     case GreedyThin(keys, ts, tie, gap, child) =>

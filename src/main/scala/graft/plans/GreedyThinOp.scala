@@ -1,6 +1,5 @@
 package graft.plans
 
-import graft.functions.GraftFunctions
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.expressions.Attribute
 
@@ -41,7 +40,6 @@ object GreedyThinOp {
                        tieCols: Seq[String],
                        gap: org.apache.spark.sql.catalyst.expressions.Expression): DataFrame = {
     val spark = df.sparkSession
-    GraftFunctions.register(spark)
     val child = df.queryExecution.analyzed
     val resolver = spark.sessionState.conf.resolver
     def attr(n: String): Attribute =

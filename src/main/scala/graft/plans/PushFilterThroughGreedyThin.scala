@@ -19,11 +19,10 @@ import org.apache.spark.sql.catalyst.rules.Rule
   *
   * Mixed conjunctions split: key-only conjuncts move below, the rest
   * stay above. Idempotent — a second application finds nothing
-  * key-only left above. Wired via `GraftExtensions`
-  * (injectOptimizerRule, inside the operator-optimization fixed
-  * point) and `GraftFunctions.register` (extraOptimizations; runs
-  * late, but FileSourceStrategy's PhysicalOperation still collects
-  * the pushed filter at physical planning).
+  * key-only left above. Installed by `GraftFunctions.register`
+  * (extraOptimizations; runs late, but FileSourceStrategy's
+  * PhysicalOperation still collects the pushed filter at physical
+  * planning).
   */
 object PushFilterThroughGreedyThin extends Rule[LogicalPlan] with PredicateHelper {
 

@@ -213,7 +213,6 @@ object QueriesRound10 {
     // ndv_brand ride as columns).
     QueryDef("q549_stats_fed_join",
       (s, d) => {
-        graft.functions.GraftFunctions.register(s)
         val dim = part(s, d)
         val key = graft.plans.StatsBroadcastJoin.pathKeyOf(dim)
           .getOrElse(s"$d/part.parquet")

@@ -68,7 +68,6 @@ object QueriesRound10i {
     // exactly (MATERIALIZED chained CTEs, the q532 lesson).
     QueryDef("q568_graph_ann_beam",
       (s, d) => {
-        GraftFunctions.register(s)
         // one count() gate: p = planes sized to THIS corpus
         val n = embeddings(s, d).count()
         val nPlanes = Similarity.planesForCorpus(n, TargetOcc,

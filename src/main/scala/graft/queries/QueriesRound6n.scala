@@ -110,7 +110,6 @@ object QueriesRound6n {
     // exact-dedup stage would group on.
     QueryDef("q264_unicode_fold",
       (s, d) => {
-        GraftFunctions.register(s)
         val accented = concat(
           lit("Caf"), expr("char(233)"), lit(" "),
           expr("char(192)"), lit("propos "), col("source"), lit(" "),

@@ -225,7 +225,6 @@ object QueriesRound6o {
     // makes vector scoring affordable.
     QueryDef("q273_retrieval_cascade",
       (s, d) => {
-        graft.functions.GraftFunctions.register(s)
         val qTerms = Seq("spark", "join", "window", "data")
         val lex = documents(s, d)
           .select(col("doc_id"), explode(Text.tokens(col("text"))).as("tok"))

@@ -23,7 +23,6 @@ object QueriesRound6s {
     // normalization lane.
     QueryDef("q284_streaming_normalize",
       (s, d) => {
-        GraftFunctions.register(s)
         import org.apache.spark.sql.types._
         val sch = StructType(Seq(
           StructField("doc_id", LongType), StructField("text", StringType),

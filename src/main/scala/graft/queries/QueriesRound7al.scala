@@ -23,7 +23,6 @@ object QueriesRound7al {
     // and now that claim sits under the gate instead of in prose.
     QueryDef("q414_streaming_kmv",
       (s, d) => {
-        graft.functions.GraftFunctions.register(s)
         val batch = documents(s, d)
         graft.streaming.Sessions.runStreamToBatch(s, d, batch.schema,
             globFilter = Some("documents.parquet"),

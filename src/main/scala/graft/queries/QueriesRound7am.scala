@@ -33,7 +33,6 @@ object QueriesRound7am {
     // hash-verified against the naive semantics it must equal.
     QueryDef("q415_multi_pattern_scan",
       (s, d) => {
-        GraftFunctions.register(s)
         documents(s, d)
           .select(col("doc_id"),
             explode(GraftFunctions.multiContains(col("text"), pats))

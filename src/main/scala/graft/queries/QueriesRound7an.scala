@@ -76,7 +76,6 @@ object QueriesRound7an {
     // hash gate.
     QueryDef("q417_streaming_blocklist",
       (s, d) => {
-        GraftFunctions.register(s)
         val pats = Seq("table", "able", "spark", "park", "row scan",
           "merge batch", "windowpane")
         val batch = documents(s, d)

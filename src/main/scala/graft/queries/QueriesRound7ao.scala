@@ -1,7 +1,6 @@
 package graft.queries
 
 import graft.Tables._
-import graft.functions.GraftFunctions
 import org.apache.spark.sql.functions._
 
 /** Round-7 forty-first batch: the blocklist-fusion optimizer rule
@@ -23,7 +22,6 @@ object QueriesRound7ao {
     // the q94-style quality-gate readout.
     QueryDef("q418_fused_blocklist",
       (s, d) => {
-        GraftFunctions.register(s)
         val terms = Seq("merge batch", "row scan", "windowpane",
           "slow filter", "big vector", "stream sort")
         val gate = terms.map(col("text").contains(_)).reduce(_ || _)

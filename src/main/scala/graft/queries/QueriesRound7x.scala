@@ -243,7 +243,6 @@ object QueriesRound7x {
     // hash-verified cell-free. Driver DP replay pinned in Round7xSpec.
     QueryDef("q382_rouge_l",
       (s, d) => {
-        graft.functions.GraftFunctions.register(s)
         val base = documents(s, d).select(col("doc_id"), col("source"),
           col("lang"), slice(Text.tokens(col("text")), 1, 32).as("t"))
         val w = Window.partitionBy("source", "lang").orderBy("doc_id")

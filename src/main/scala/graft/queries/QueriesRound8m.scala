@@ -31,7 +31,6 @@ object QueriesRound8m {
     // persists.
     QueryDef("q471_hll_aggregate",
       (s, d) => {
-        GraftFunctions.register(s)
         val toks = documents(s, d)
           .select(col("source"), explode(Text.tokens(col("text"))).as("__t"))
         val viaAgg = toks

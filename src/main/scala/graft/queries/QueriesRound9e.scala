@@ -25,7 +25,6 @@ object QueriesRound9e {
     // aggregate's (key DESC, id ASC) semantics exactly.
     QueryDef("q502_topk_aggregate",
       (s, d) => {
-        GraftFunctions.register(s)
         documents(s, d)
           .groupBy("source")
           .agg(GraftFunctions.topK(col("n_chars"), col("doc_id"), 5)

@@ -22,7 +22,6 @@ object QueriesRound9f {
     // row_number()<=k, all under one gate.
     QueryDef("q504_streaming_topk",
       (s, d) => {
-        GraftFunctions.register(s)
         val batch = documents(s, d)
         graft.streaming.Sessions.runStreamToBatch(s, d, batch.schema,
             globFilter = Some("documents.parquet"),

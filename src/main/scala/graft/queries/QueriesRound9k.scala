@@ -24,7 +24,6 @@ object QueriesRound9k {
     // (count) interleaved between them.
     QueryDef("q512_aggregate_coresidence",
       (s, d) => {
-        GraftFunctions.register(s)
         // deterministic pre-dedup: one row per (source, hash), carrying
         // the MIN-doc_id owner (arbitrary-survivor dropDuplicates would
         // make the top-k input nondeterministic); a doc appears once

@@ -1,7 +1,6 @@
 package graft.queries
 
 import graft.Tables._
-import graft.functions.GraftFunctions
 import graft.ops.Sampling
 import org.apache.spark.sql.functions._
 
@@ -29,7 +28,6 @@ object QueriesRound9o {
     // `graft_topk` (O(k) state per source), never a corpus sort.
     QueryDef("q518_team_draft_interleave",
       (s, d) => {
-        GraftFunctions.register(s)
         val base = documents(s, d).groupBy("source").agg(
           expr("transform(graft_topk(n_chars, doc_id, 10), t -> t.id)")
             .as("ra"),

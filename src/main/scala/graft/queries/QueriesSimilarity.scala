@@ -70,7 +70,6 @@ object QueriesSimilarity {
     // ---- q52: per-label embedding norm statistics -------------------
     QueryDef("q52_embedding_stats",
       (s, d) => {
-        graft.functions.GraftFunctions.register(s)
         embeddings(s, d)
           .withColumn("nrm", Similarity.normNative(col("embedding")))
         .groupBy(col("label").cast("bigint").as("label"))

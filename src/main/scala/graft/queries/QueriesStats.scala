@@ -135,7 +135,6 @@ object QueriesStats {
     // path that CAN be verified end to end.
     QueryDef("q74_approx_distinct",
       (s, d) => {
-        graft.functions.GraftFunctions.register(s)
         lineitem(s, d)
           .select(col("l_returnflag"), col("l_partkey"),
             graft.ops.Sampling.hashLong(col("l_partkey")).as("h"))

@@ -2,7 +2,6 @@ package graft.tools
 
 import graft.ops.TxnLog
 import graft.ops.TxnLog.Action
-import org.apache.spark.sql.SparkSession
 
 /** OCC throughput under contention (r10 verdict #8 stretch): the
   * 8-writer race spec proves SAFETY; this probe MEASURES the protocol
@@ -25,12 +24,7 @@ object OccProbe {
 
   def main(args: Array[String]): Unit = {
     val perWriter = if (args.nonEmpty) args(0).toInt else 20
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Harness.session()
 
     def run(writers: Int, conflicting: Boolean): Unit = {
       val t = java.nio.file.Files

@@ -1,7 +1,6 @@
 package graft.tools
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
-import org.apache.spark.sql.SparkSession
 
 /** Scratch per-query profiling main (not part of the library surface):
   * runs named SparkEntry queries one at a time and, for each, prints
@@ -18,14 +17,7 @@ object QueryProbe {
     val outDir = args(1)
     val tag = args(2)
     val names = args(3).split(",").map(_.trim).filter(_.nonEmpty)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .appName("query-probe").master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Harness.session()
     new java.io.File(outDir).mkdirs()
 
     // job ledger: (jobId, description, millis)
@@ -45,22 +37,7 @@ object QueryProbe {
       }
     })
 
-    def clearBlocks(): Unit = {
-      graft.ops.Checkpoints.muteWarnings()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(true))
-      spark.catalog.clearCache()
-      System.gc()
-    }
-
-    // session warmup (same shape as Bench)
-    try {
-      val w = spark.range(1000).selectExpr("id", "id % 7 AS k")
-      w.join(w.groupBy("k").count(), "k").count()
-      spark.range(1000).selectExpr("cast(id as string) AS s", "id % 7 AS k")
-        .selectExpr("md5(s) AS h", "k")
-        .groupBy("k").agg(org.apache.spark.sql.functions.min("h")).count()
-    } catch { case _: Throwable => () }
-    clearBlocks()
+    graft.Harness.warmup(spark, sfDir)
 
     names.foreach { prefix =>
       graft.SparkEntry.queries.filter(_._1.startsWith(prefix)).foreach {
@@ -70,7 +47,7 @@ object QueryProbe {
             case t: Throwable =>
               println(s"[probe] $name FAILED: ${t.getMessage}")
           }
-          clearBlocks()
+          graft.Harness.clearBlocks(spark)
           done.clear()
           val t0 = System.nanoTime()
           val df = fn(spark, sfDir)
@@ -93,7 +70,7 @@ object QueryProbe {
           val short = { val i = name.indexOf('_'); if (i > 0) name.substring(0, i) else name }
           val f = new java.io.PrintWriter(s"$outDir/${short}_$tag.txt")
           try f.write(plan) finally f.close()
-          clearBlocks()
+          graft.Harness.clearBlocks(spark)
       }
     }
     spark.stop()

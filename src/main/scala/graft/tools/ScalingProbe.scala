@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 
 /** Scaling-slope audit (SCALING.md): times a query set at two scale
   * factors and reports each query's scaling exponent
@@ -39,29 +38,9 @@ object ScalingProbe {
     val names =
       if (args.length > 3) args(3).split(",").map(_.trim).filter(_.nonEmpty).toSeq
       else Default
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    def clearBlocks(): Unit = {
-      graft.ops.Checkpoints.muteWarnings()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(true))
-      spark.catalog.clearCache()
-      System.gc()
-    }
-    // JIT/codegen warmup (the Bench discipline): run a few
-    // representative queries untimed at the SMALL sf
-    Seq("q03_top_customers", "q31_term_freq", "q42_lsh_pairs",
-        "q50_cosine_topk", "q23_tumbling_window").foreach { n =>
-      graft.SparkEntry.queries.get(n).foreach { fn =>
-        try fn(spark, small).count() catch { case _: Throwable => () }
-      }
-    }
-    clearBlocks()
+    val spark = graft.Harness.session()
+    // JIT/codegen warmup (the Bench discipline) at the SMALL sf
+    graft.Harness.warmup(spark, small)
     def time(name: String, dir: String): Double = {
       val fn = graft.SparkEntry.queries(name)
       def once(): Double = {
@@ -74,7 +53,7 @@ object ScalingProbe {
           System.err.println(s"[scaling] $name@$dir FAILED: ${e.getMessage}")
           -1.0
       }
-      clearBlocks()
+      graft.Harness.clearBlocks(spark)
       t
     }
     def f(v: Double): String =

@@ -2,7 +2,6 @@ package graft.tools
 
 import graft.ops.TxnLog
 import graft.ops.TxnLog.Action
-import org.apache.spark.sql.SparkSession
 
 /** Log-length scaling probe for the transaction log (r10 verdict #2):
   * a table's txn lanes are corpus-size-flat because protocol costs
@@ -28,12 +27,7 @@ object TxnProbe {
   def main(args: Array[String]): Unit = {
     val counts = if (args.nonEmpty) args.map(_.toInt).toSeq
                  else Seq(100, 400, 1600)
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Harness.session()
 
     def minOf3(body: => Unit): Double = {
       (1 to 3).map { _ =>

@@ -89,7 +89,6 @@ class StatsSpec extends SparkSpec {
   import spark.implicits._
 
   test("KMV sketch: exact below k, within 15% above k, merges across partitions") {
-    graft.functions.GraftFunctions.register(spark)
     Tables.lineitem(spark, sf).repartition(8).createOrReplaceTempView("li_kmv")
     val r = spark.sql(
       """SELECT l_returnflag,

@@ -12,7 +12,6 @@ import org.apache.spark.sql.functions._
 class HllSpec extends SparkSpec {
 
   private def estimate(df: org.apache.spark.sql.DataFrame): Long = {
-    GraftFunctions.register(spark)
     df.select(Sampling.hashLong(col("v")).as("__h"))
       .agg(GraftFunctions.hllDistinct(col("__h")))
       .collect().head.getLong(0)
@@ -32,7 +31,6 @@ class HllSpec extends SparkSpec {
 
   test("hllDistinct agrees exactly with Sketches.hllEstimate") {
     import spark.implicits._
-    GraftFunctions.register(spark)
     val df = (1 to 900).map(i => (s"g${i % 3}", s"tok${i % 407}"))
       .toDF("grp", "v").repartition(5)
     val agg = df.select(col("grp"), Sampling.hashLong(col("v")).as("__h"))
@@ -50,7 +48,6 @@ class HllSpec extends SparkSpec {
     // >= 2^32 values must land in a valid register (errors-as-data),
     // and a masked value must behave exactly like its low 32 bits
     import spark.implicits._
-    GraftFunctions.register(spark)
     val raw = Seq(-1L, -987654321L, Long.MinValue, Long.MaxValue,
       (1L << 40) + 12345L, 0L, 42L)
     val est = raw.toDF("v").repartition(3)

@@ -160,7 +160,6 @@ class TextSpec extends SparkSpec {
   }
 
   test("rolling-hash shingles equal brute-force recomputation; fingerprint shifts locally") {
-    graft.functions.GraftFunctions.register(spark)
     val txt = "one two three four five six seven"
     val toksSeq = txt.split(" ").toSeq
     val B = 1000003L
@@ -326,7 +325,6 @@ class SimilaritySpec extends SparkSpec {
   test("dot/cosine: native expression matches HOF reference bit-for-bit") {
     val df = Tables.embeddings(spark, sf).limit(50)
       .select(col("embedding").as("a"), col("embedding").as("b"))
-    graft.functions.GraftFunctions.register(spark)
     val diffs = df.select(
       (Similarity.dot(col("a"), col("b")) - Similarity.dotNative(col("a"), col("b"))).as("d"))
       .agg(max(abs(col("d")))).as[Double].head()

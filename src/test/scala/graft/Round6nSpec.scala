@@ -11,7 +11,6 @@ class Round6nSpec extends SparkSpec {
   import spark.implicits._
 
   test("foldAccents strips Latin accents, passes through non-decomposables") {
-    GraftFunctions.register(spark)
     val got = Seq("Café Àpropos", "über ñand",
       "plain ascii", "ßøæ stay", "")
       .toDF("s").select(GraftFunctions.foldAccents(col("s")))
@@ -21,7 +20,6 @@ class Round6nSpec extends SparkSpec {
   }
 
   test("foldAccents is idempotent and null-propagating") {
-    GraftFunctions.register(spark)
     val src = Seq(Some("résumé ćwik"), None).toDF("s")
     val once = src.select(GraftFunctions.foldAccents(col("s")).as("f"))
     val twice = once.select(GraftFunctions.foldAccents(col("f")))
@@ -30,7 +28,6 @@ class Round6nSpec extends SparkSpec {
   }
 
   test("foldAccents stays inside whole-stage codegen") {
-    GraftFunctions.register(spark)
     val df = Tables.documents(spark, sf)
       .select(GraftFunctions.foldAccents(col("text")).as("f"))
       .where(length(col("f")) > 0)

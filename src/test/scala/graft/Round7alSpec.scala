@@ -7,7 +7,6 @@ import org.apache.spark.sql.functions._
 class Round7alSpec extends SparkSpec {
 
   test("streaming: q414 KMV sketch matches the batch twin row-for-row") {
-    graft.functions.GraftFunctions.register(spark)
     val batch = Tables.documents(spark, sf)
       .select(col("lang"),
         explode(graft.ops.Text.tokens(col("text"))).as("tok"))

@@ -43,7 +43,6 @@ class Round7amSpec extends SparkSpec {
   }
 
   test("q415: codegen expression matches a contains-based Spark plan") {
-    GraftFunctions.register(spark)
     val pats = Seq("abc", "bc", "c", "ca b", "zz", "é語", "語")
     val texts = samples(Gen.chooseNum(0, 30).flatMap(n =>
       Gen.listOfN(n, Gen.oneOf('a', 'b', 'c', 'é', '語', ' ')).map(_.mkString)), 200)

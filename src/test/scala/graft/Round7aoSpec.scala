@@ -1,6 +1,5 @@
 package graft
 
-import graft.functions.GraftFunctions
 import org.apache.spark.sql.functions._
 
 /** Round-7ao pins: the FuseMultiContains optimizer rule fires on
@@ -15,7 +14,6 @@ class Round7aoSpec extends SparkSpec {
     df.queryExecution.optimizedPlan.toString
 
   test("q418: the OR-chain optimizes into one graft_multi_contains scan") {
-    GraftFunctions.register(spark)
     val df = graft.queries.Registry.byName("q418_fused_blocklist").fn(spark, sf)
     val plan = optimized(df)
     assert(plan.contains("graft_multi_contains"),
@@ -24,7 +22,6 @@ class Round7aoSpec extends SparkSpec {
   }
 
   test("fusion preserves results and null semantics exactly") {
-    GraftFunctions.register(spark)
     val rows = Seq((1L, "xx merge batch yy"), (2L, "row scan"),
       (3L, "nothing here"), (4L, null.asInstanceOf[String]), (5L, ""))
     // RDD-backed, NOT a LocalRelation: ConvertToLocalRelation would
@@ -45,7 +42,6 @@ class Round7aoSpec extends SparkSpec {
   }
 
   test("mixed disjunctions are left untouched") {
-    GraftFunctions.register(spark)
     val df = Seq((1L, "a", "b")).toDF("id", "s", "t")
     // different columns — must NOT fuse
     val mixed = df.where(col("s").contains("a") || col("t").contains("b")

@@ -83,7 +83,6 @@ class Round7xSpec extends SparkSpec {
 
   test("property: graft_lcs equals the classic LCS DP on randomized token arrays") {
     import spark.implicits._
-    graft.functions.GraftFunctions.register(spark)
     def classicLcs(a: Vector[String], b: Vector[String]): Long = {
       val dp = Array.ofDim[Int](a.length + 1, b.length + 1)
       for (i <- 1 to a.length; j <- 1 to b.length)

@@ -114,7 +114,6 @@ class Round8Spec extends SparkSpec {
     // text including '', but the Aho–Corasick scan reports only after
     // consuming a byte — so an empty literal must poison fusion, and
     // the naive OR plan must keep the empty-text row.
-    graft.functions.GraftFunctions.register(spark)
     val schema = StructType(Seq(StructField("id", LongType),
       StructField("t", StringType)))
     val df = spark.createDataFrame(
@@ -143,7 +142,6 @@ class Round8Spec extends SparkSpec {
     // public API only builds attribute keys; construct the logical
     // node directly to pin the rule's guard.
     import org.apache.spark.sql.catalyst.expressions.{Literal, Pmod}
-    graft.functions.GraftFunctions.register(spark)
     val schema = StructType(Seq(StructField("k", LongType),
       StructField("t", LongType), StructField("id", LongType)))
     // k=5 and k=15 share thin group (k%10=5); gap 100 drops the later

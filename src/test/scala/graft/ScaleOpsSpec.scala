@@ -405,7 +405,7 @@ class GraphShapeSpec extends SparkSpec {
   }
 
   test("hinted PageRank round over the dst layout runs with zero shuffle exchanges") {
-    // mirrors one loop round (tools/PlanProbe): edges laid out on dst,
+    // mirrors one Graph.pageRank loop round: edges laid out on dst,
     // the O(V) frames broadcast-hinted. The executed plan must contain
     // BroadcastExchange only — an 'Exchange hashpartitioning' means
     // the O(E) frame re-shuffled and the layout stopped paying

@@ -6,19 +6,14 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Shared local session for all suites (one JVM-wide session keeps
   * `sbt test` fast). */
 object TestSpark {
+  // local[4, 2]: 4 threads, TWO task attempts — local mode defaults
+  // to maxFailures=1 (first task failure kills the job), which would
+  // make the ChaosSpec retry/exactly-once scenarios untestable; a
+  // second attempt only changes behavior when a task actually fails
+  val master = "local[4, 2]"
+
   lazy val spark: SparkSession = {
-    // local[4, 2]: 4 threads, TWO task attempts — local mode defaults
-    // to maxFailures=1 (first task failure kills the job), which would
-    // make the ChaosSpec retry/exactly-once scenarios untestable; a
-    // second attempt only changes behavior when a task actually fails
-    val s = SparkSession.builder()
-      .master("local[4, 2]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("wh").toString)
-      .getOrCreate()
+    val s = Harness.session(master)
     s.sparkContext.setLogLevel("ERROR")
     s
   }

@@ -1,6 +1,5 @@
 package graft
 
-import graft.functions.GraftFunctions
 import graft.ops.Relational
 import graft.plans.{StatsBroadcastJoin, StatsLedger}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
@@ -51,7 +50,6 @@ class StatsBroadcastSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     fact.join(slicedDim, "k").queryExecution.executedPlan
 
   test("empty ledger: over-threshold filtered dim stays sort-merge") {
-    GraftFunctions.register(spark)
     StatsLedger.clear()
     withConfs {
       val p = plan()
@@ -61,7 +59,6 @@ class StatsBroadcastSpec extends SparkSpec with AdaptiveSparkPlanHelper {
   }
 
   test("ANALYZE stats flip the join to broadcast and drop the fact exchange") {
-    GraftFunctions.register(spark)
     StatsLedger.clear()
     withConfs {
       val key = StatsBroadcastJoin.pathKeyOf(spark.read.parquet(dimPath))
@@ -84,7 +81,6 @@ class StatsBroadcastSpec extends SparkSpec with AdaptiveSparkPlanHelper {
   }
 
   test("conservative paths: big estimate and user hints stay untouched") {
-    GraftFunctions.register(spark)
     StatsLedger.clear()
     withConfs {
       val key = StatsBroadcastJoin.pathKeyOf(spark.read.parquet(dimPath)).get
@@ -105,7 +101,6 @@ class StatsBroadcastSpec extends SparkSpec with AdaptiveSparkPlanHelper {
   }
 
   test("staleness gate: stats from before a table grew are not trusted") {
-    GraftFunctions.register(spark)
     StatsLedger.clear()
     withConfs {
       val dir = java.nio.file.Files

@@ -19,7 +19,6 @@ class TopKSpec extends SparkSpec {
   import spark.implicits._
 
   test("graft_topk equals row_number()<=k on random data, any partitioning") {
-    GraftFunctions.register(spark)
     val rnd = new scala.util.Random(502)
     val rows = (1L to 3000L).map(id =>
       (s"g${rnd.nextInt(7)}", rnd.nextInt(40).toLong, id))
@@ -43,7 +42,6 @@ class TopKSpec extends SparkSpec {
   }
 
   test("graft_topk: nulls skipped, k larger than group, duplicate keys") {
-    GraftFunctions.register(spark)
     val df = Seq[(String, java.lang.Long, java.lang.Long)](
       ("a", 5L, 1L), ("a", 5L, 2L), ("a", null, 3L), ("a", 7L, 4L),
       ("b", 1L, 9L)).toDF("g", "key", "id")
@@ -59,7 +57,6 @@ class TopKSpec extends SparkSpec {
   }
 
   test("graft_topk map-side combine: partial + final aggregate stages") {
-    GraftFunctions.register(spark)
     val df = spark.range(1000)
       .selectExpr("id % 7 AS g", "id * 13 % 101 AS key", "id")
       .repartition(5)
@@ -75,7 +72,6 @@ class TopKSpec extends SparkSpec {
   }
 
   test("graft_topk survives a task kill mid-partition (retry = clean run)") {
-    GraftFunctions.register(spark)
     TopKChaos.fired.set(false)
     val chaosKey = udf { (k: Long) =>
       if (!TopKChaos.fired.getAndSet(true))
@@ -99,7 +95,6 @@ class TopKSpec extends SparkSpec {
   }
 
   test("graft_topk in SQL and the q503 drift ledger sanity") {
-    GraftFunctions.register(spark)
     spark.range(100).selectExpr("id % 5 AS g", "id * 7 % 31 AS key", "id")
       .createOrReplaceTempView("tk")
     val viaSql = spark.sql(
