@@ -11,7 +11,9 @@ import org.apache.spark.sql.functions._
   * data — rerunning reproduces the table bit-for-bit, which is what
   * makes the quality claims reviewable per round.
   *
-  * Usage: sbt "runMain graft.RecallReport"   (writes ./RECALL.md)
+  * Usage: sbt "runMain graft.RecallReport"   (rewrites the generated
+  * table at the top of ./RECALL.md; the hand-written sections from the
+  * file's first `## ` heading on are kept as they are)
   */
 object RecallReport {
   def main(args: Array[String]): Unit = {
@@ -92,8 +94,15 @@ object RecallReport {
     md ++= "\nSpec pins (sbt test): LSH multi >= 0.95, IVF >= 0.85 (OpsSpec\n"
     md ++= "\"measured ANN recall@10\"), SQ8 recall@5 >= 0.8 + per-pair cosine\n"
     md ++= "drift <= 0.02 (Sq8Spec).\n"
-    java.nio.file.Files.writeString(java.nio.file.Paths.get("RECALL.md"),
-      md.toString)
+    val path = java.nio.file.Paths.get("RECALL.md")
+    val handWritten =
+      if (!java.nio.file.Files.exists(path)) ""
+      else {
+        val old = java.nio.file.Files.readString(path)
+        val i = old.indexOf("\n## ")
+        if (i < 0) "" else old.substring(i)
+      }
+    java.nio.file.Files.writeString(path, md.toString + handWritten)
     println(md.toString)
     spark.stop()
   }

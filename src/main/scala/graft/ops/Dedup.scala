@@ -627,35 +627,26 @@ object Dedup {
     val edges = p
       .union(p.select(col("id_b").as("id_a"), col("id_a").as("id_b")))
       .localCheckpoint(false)
-    var labels = edges.select(col("id_a").as("id")).distinct()
-      .withColumn("label", col("id"))
-      .localCheckpoint(false)
     // labels only ever decrease, so an unchanged sum(label) proves a
     // fixpoint — one cheap agg action per round instead of a
     // self-join + isEmpty
-    var prevSum = labels.agg(coalesce(sum(col("label")), lit(0L))).head.getLong(0)
+    def labelSum(l: DataFrame): Long =
+      l.agg(coalesce(sum(col("label")), lit(0L))).head.getLong(0)
+    val (labels0, sum0) = Checkpoints.ckptCount(
+      edges.select(col("id_a").as("id")).distinct()
+        .withColumn("label", col("id")), labelSum)
     // edges and labels are materialized by the sum action above, so
     // the input checkpoint's blocks are already dead — free them now
     Checkpoints.free(p)
-    var converged = false
-    var iter = 0
-    while (!converged && iter < maxIter) {
+    val (labels, _) = Checkpoints.iterate(labels0, sum0, maxIter,
+        measure = labelSum, exitWhen = _ == _) { (labels, _) =>
       val neighborMin = edges
         .join(labels.select(col("id").as("id_b"), col("label")), Seq("id_b"))
         .groupBy(col("id_a").as("id"))
         .agg(min(col("label")).as("nmin"))
-      // lazy checkpoint: the sum action below materializes AND
-      // checkpoints in one job (eager + agg would run two per round)
-      val next = labels.join(neighborMin, Seq("id"), "left")
+      labels.join(neighborMin, Seq("id"), "left")
         .select(col("id"), least(col("label"), coalesce(col("nmin"), col("label")))
           .as("label"))
-        .localCheckpoint(false)
-      val nextSum = next.agg(coalesce(sum(col("label")), lit(0L))).head.getLong(0)
-      converged = nextSum == prevSum
-      prevSum = nextSum
-      Checkpoints.free(labels)
-      labels = next
-      iter += 1
     }
     Checkpoints.free(edges)
     labels.withColumnRenamed("label", "group_id")
@@ -716,8 +707,8 @@ object Dedup {
     *
     * The fixpoint is a star forest whose centers are the component
     * minima, so labels read directly off the final edges. Convergence
-    * is detected by edge-set equality (count + except), one cheap
-    * action per round. Output matches [[duplicateGroups]] exactly:
+    * is detected by edge-set equality, counted in the round's own
+    * materializing job. Output matches [[duplicateGroups]] exactly:
     * (id, group_id = component-min id), one row per node in `pairs`.
     *
     * Small-graph fast path: when the canonical edge count (already an
@@ -754,27 +745,33 @@ object Dedup {
     // canonical orientation a > b ("points down"), no self-loops;
     // localCheckpoint each round truncates the iterative lineage
     // (same rationale as duplicateGroups)
-    var edges = p
+    val (edges0, edgeCount) = Checkpoints.ckptCount(p
       .select(greatest(col("id_a"), col("id_b")).as("a"),
         least(col("id_a"), col("id_b")).as("b"))
       .where(col("a") =!= col("b")).distinct()
-      .localCheckpoint(false)
-    var prevCount = edges.count()
-    if (prevCount <= smallGraph) {
+      .withColumn("__new", lit(true)))
+    if (edgeCount <= smallGraph) {
       // labels are unique per id; nodes absent from the canonical edge
       // set (self-loop-only inputs) label themselves via the coalesce
       val out = nodes
-        .join(singleTaskComponents(edges), Seq("id"), "left")
+        .join(singleTaskComponents(edges0), Seq("id"), "left")
         .select(col("id"), coalesce(col("label"), col("id")).as("group_id"))
         .localCheckpoint()
       Checkpoints.free(p)
       Checkpoints.free(nodes)
-      Checkpoints.free(edges)
+      Checkpoints.free(edges0)
       return out
     }
-    var converged = false
-    var iter = 0
-    while (!converged && iter < maxIter) {
+    // The round frame is the new canonical edge set OUTER-joined with
+    // the previous one, a flag per side: its measure — edges on one
+    // side only — is 0 exactly when the edge set stopped changing, the
+    // star-forest fixpoint (stable under both phases). Only `__new`
+    // rows feed the next round.
+    val (edges, _) = Checkpoints.iterate(edges0, edgeCount, maxIter,
+        measure = e => Checkpoints.rows(e.where(col("__new").isNull ||
+          col("__old").isNull)),
+        exitWhen = (_, n) => n == 0) { (cur, _) =>
+      val edges = cur.where(col("__new")).select("a", "b")
       // one symmetric adjacency per round, reused by both phases of
       // the round's neighborhood mins
       def neighborhoodMin(e: DataFrame): DataFrame = e
@@ -795,7 +792,6 @@ object Dedup {
           lsMin.where(col("u") =!= col("m"))
             .select(col("u").as("a"), col("m").as("b")))
         .distinct()
-        .localCheckpoint(false)
       // small-star over the canonical orientation: per larger endpoint
       // u, m = min of its down-neighbors; link every down-neighbor and
       // u itself to m
@@ -808,27 +804,15 @@ object Dedup {
         .union(ssMin.where(col("u") =!= col("m"))
           .select(col("u").as("a"), col("m").as("b")))
         .distinct()
-        .localCheckpoint(false)
-      val newCount = smallEdges.count()
-      // equality of canonical edge sets = fixpoint (the star forest is
-      // stable under both phases); count first — except only when the
-      // counts already agree
-      converged = newCount == prevCount &&
-        smallEdges.except(edges).isEmpty
-      prevCount = newCount
-      // the count/except actions above materialized smallEdges, so the
-      // round's intermediate and the superseded edge set are both dead
-      Checkpoints.free(large)
-      Checkpoints.free(edges)
-      edges = smallEdges
-      iter += 1
+      smallEdges.withColumn("__new", lit(true))
+        .join(edges.withColumn("__old", lit(true)), Seq("a", "b"), "full_outer")
     }
     // star forest: child -> center (component min); centers and any
     // node not appearing as a child label themselves. Checkpointed so
     // the loop's final edge blocks can be freed before return (the
     // label table is O(nodes-in-pairs) — the dedup working set).
-    val out = nodes.join(edges.select(col("a").as("id"), col("b").as("label")),
-        Seq("id"), "left")
+    val out = nodes.join(edges.where(col("__new"))
+        .select(col("a").as("id"), col("b").as("label")), Seq("id"), "left")
       .groupBy("id").agg(min(coalesce(col("label"), col("id"))).as("group_id"))
       .localCheckpoint()
     Checkpoints.free(p)
@@ -1395,16 +1379,20 @@ object Dedup {
       .select(col("doc_id"), col("pos").cast("long").as("pos"),
         baseKey.as("__key"))
       .localCheckpoint()
-    var ranks = twoLevelDenseRank(based, "__key", "r", 1L << 44)
-      .select("doc_id", "pos", "r").localCheckpoint()
-    Checkpoints.free(based)
+    // each round's measure is its distinct-rank count (== max: ranks
+    // are dense, 1-based) — the partial-agg job that materializes the
+    // round also picks the next round's ARITY and pair-rank
+    // representation. `h` is the prefix length the ranks cover; the
+    // loop ends once it reaches maxLen.
+    def rankCount(r: DataFrame): Long = r.agg(max(col("r"))).head.getLong(0)
     var h = 8L
-    while (h < maxLen) {
-      val old = ranks
-      // distinct-rank count this round (== max: ranks are dense,
-      // 1-based) — a cheap partial-agg job over the checkpointed frame
-      // that picks the round's ARITY and pair-rank representation
-      val nRanks = ranks.agg(max(col("r"))).head.getLong(0)
+    val (ranks0, n0) = Checkpoints.ckptCount(
+      twoLevelDenseRank(based, "__key", "r", 1L << 44).select("doc_id", "pos", "r"),
+      if (h < maxLen) rankCount else Checkpoints.rows)
+    Checkpoints.free(based)
+    val (ranks, _) = Checkpoints.iterate(ranks0, n0,
+        if (h < maxLen) Int.MaxValue else 0, rankCount,
+        exitWhen = (_, _) => h >= maxLen) { (ranks, nRanks) =>
       // (n+1)² < 2^63 ⇔ n ≤ 3 037 000 498: the exact-width pack is
       // collision-free and order-preserving up to ~3.0e9 distinct
       // ranks per round; past it the composite two-column rank packs
@@ -1428,7 +1416,7 @@ object Dedup {
       val w = nRanks + 1L
       def shift(k: Long, as: String) = ranks.select(col("doc_id"),
         (col("pos") - k).as("pos"), col("r").as(as))
-      ranks = (if (quad) {
+      val next = (if (quad) {
         // 3 shifted joins, all on (doc_id, pos): the first join fixes
         // the partitioning and the later two reuse it, so the extra
         // shifts cost one exchange each, not a re-shuffle of the frame
@@ -1468,9 +1456,8 @@ object Dedup {
             aWidth = 1L << 13, bWidth = 1L << 13)
         }
       }).select(col("doc_id"), col("pos"), col("__nr").as("r"))
-        .localCheckpoint()
-      Checkpoints.free(old)
       h *= (if (quad) 4 else 2)
+      next
     }
     ranks.select(col("doc_id"), col("pos"), col("r").as("suffix_rank"))
   }

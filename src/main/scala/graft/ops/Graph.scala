@@ -31,9 +31,10 @@ import org.apache.spark.sql.functions._
   * degree/node setup pays a single O(|E|) shuffle on the other key —
   * amortized across rounds.
   *
-  * The PER-ROUND eager localCheckpoint of the rank/frontier frame is
-  * load-bearing for plan quality, not just lineage hygiene: each
-  * checkpoint hands the next round's planner an exact materialized
+  * Rounds run under `Checkpoints.iterate`, which materializes each
+  * round's rank/frontier frame in one job and frees the frame it
+  * supersedes. The PER-ROUND checkpoint is load-bearing for plan
+  * quality, not just lineage hygiene: each checkpoint hands the next round's planner an exact materialized
   * size (LogicalRDD stats), so the O(|V|)-side joins plan as
   * broadcasts. Batching rounds between checkpoints was measured
   * SLOWER (q145 4.9 -> 6.8 s at sf0.1): the deep un-materialized plan
@@ -110,6 +111,30 @@ object Graph {
       .groupBy("id").agg(sum("__o").as("__sumo"))
       .select(col("id"), when(col("__sumo") > 0, col("__sumo")).as("__deg"))
 
+  /** The PageRank family's per-round edge frame. In the fallback
+    * regime per-round joins are src-keyed shuffle joins, so the edges
+    * are re-laid on src ONCE (amortized) instead of paying an O(|E|)
+    * exchange every round; a caller-laid frame is kept as it is. */
+  private def rankEdges(e0: DataFrame, useBroadcast: Boolean,
+                        assumeLaidOut: Boolean): DataFrame =
+    if (useBroadcast || assumeLaidOut) e0
+    else {
+      val relaid = layoutEdges(e0, "src", "dst", layoutKey = "src")
+      Checkpoints.free(e0)
+      relaid
+    }
+
+  /** One PageRank-family round's contribution sums: every source's
+    * rank div out-degree, summed per destination (`__s`). */
+  private def contributions(e: DataFrame, ranks: DataFrame,
+                            hint: DataFrame => DataFrame): DataFrame = {
+    val perSrc = ranks.where(col("__deg").isNotNull)
+      .select(col("id").as("src"), expr("rank_micro div __deg").as("__c"))
+    e.join(hint(perSrc), "src")
+      .select(col("dst").as("id"), col("__c"))
+      .groupBy("id").agg(sum(col("__c")).as("__s"))
+  }
+
   /** PageRank with INTEGER-EXACT arithmetic: scores live in micro-units
     * (a node starts at 1,000,000) and every step is BIGINT math —
     * contribution = r div outDegree (floor), next = base +
@@ -166,33 +191,16 @@ object Graph {
     val useBroadcast = nodeRows <= broadcastRankRows
     val hint: DataFrame => DataFrame =
       if (useBroadcast) df => broadcast(df) else df => df
-    // fallback regime: per-round joins are src-keyed shuffle joins, so
-    // re-lay the edges on src once (amortized) instead of paying an
-    // O(|E|) exchange every round; a caller-laid frame is kept as-is
-    val e =
-      if (useBroadcast || assumeLaidOut) e0
-      else {
-        val relaid = layoutEdges(e0, "src", "dst", layoutKey = "src")
-        Checkpoints.free(e0)
-        relaid
-      }
+    val e = rankEdges(e0, useBroadcast, assumeLaidOut)
 
-    var ranks = nodes.withColumn("rank_micro", lit(1000000L))
-    for (_ <- 1 to iters) {
-      val perSrc = ranks.where(col("__deg").isNotNull)
-        .select(col("id").as("src"), expr("rank_micro div __deg").as("__c"))
-      val contrib = e.join(hint(perSrc), "src")
-        .select(col("dst").as("id"), col("__c"))
-      val sums = contrib.groupBy("id").agg(sum(col("__c")).as("__s"))
-      val old = ranks
-      ranks = nodes
-        .join(hint(sums), Seq("id"), "left")
-        .select(col("id"), col("__deg"),
-          (lit(base) + expr(s"($dampNum * coalesce(__s, 0L)) div 100"))
-            .as("rank_micro"))
-        .localCheckpoint()
-      // round r+1's checkpoint no longer references round r's blocks
-      Checkpoints.free(old)
+    val (ranks, _) = Checkpoints.iterate(
+        nodes.withColumn("rank_micro", lit(1000000L)), nodeRows, iters) {
+      (ranks, _) =>
+        nodes
+          .join(hint(contributions(e, ranks, hint)), Seq("id"), "left")
+          .select(col("id"), col("__deg"),
+            (lit(base) + expr(s"($dampNum * coalesce(__s, 0L)) div 100"))
+              .as("rank_micro"))
     }
     // the returned frame is a self-contained checkpoint: the loop
     // scaffolding's blocks are dead and must not outlive the call
@@ -238,35 +246,22 @@ object Graph {
     val useBroadcast = nodeRows <= broadcastRankRows
     val hint: DataFrame => DataFrame =
       if (useBroadcast) df => broadcast(df) else df => df
-    val e =
-      if (useBroadcast || assumeLaidOut) e0
-      else {
-        val relaid = layoutEdges(e0, "src", "dst", layoutKey = "src")
-        Checkpoints.free(e0)
-        relaid
-      }
+    val e = rankEdges(e0, useBroadcast, assumeLaidOut)
     val nCnt = nodes.agg(count(lit(1)).as("__n")).localCheckpoint()
 
-    var ranks = nodes.withColumn("rank_micro", lit(1000000L))
-    for (_ <- 1 to iters) {
-      val perSrc = ranks.where(col("__deg").isNotNull)
-        .select(col("id").as("src"), expr("rank_micro div __deg").as("__c"))
-      val contrib = e.join(hint(perSrc), "src")
-        .select(col("dst").as("id"), col("__c"))
-      val sums = contrib.groupBy("id").agg(sum(col("__c")).as("__s"))
-      val dsum = ranks.where(col("__deg").isNull)
-        .agg(coalesce(sum("rank_micro"), lit(0L)).as("__d"))
-      val old = ranks
-      ranks = nodes
-        .join(hint(sums), Seq("id"), "left")
-        .crossJoin(broadcast(dsum))
-        .crossJoin(broadcast(nCnt))
-        .select(col("id"), col("__deg"),
-          (lit(base) +
-            expr(s"($dampNum * (coalesce(__s, 0L) + (__d div __n))) div 100"))
-            .as("rank_micro"))
-        .localCheckpoint()
-      Checkpoints.free(old)
+    val (ranks, _) = Checkpoints.iterate(
+        nodes.withColumn("rank_micro", lit(1000000L)), nodeRows, iters) {
+      (ranks, _) =>
+        val dsum = ranks.where(col("__deg").isNull)
+          .agg(coalesce(sum("rank_micro"), lit(0L)).as("__d"))
+        nodes
+          .join(hint(contributions(e, ranks, hint)), Seq("id"), "left")
+          .crossJoin(broadcast(dsum))
+          .crossJoin(broadcast(nCnt))
+          .select(col("id"), col("__deg"),
+            (lit(base) +
+              expr(s"($dampNum * (coalesce(__s, 0L) + (__d div __n))) div 100"))
+              .as("rank_micro"))
     }
     Checkpoints.free(nodes)
     Checkpoints.free(nCnt)
@@ -301,43 +296,53 @@ object Graph {
     // seed flag AND out-degree both ride in the node frame (fused
     // nodeFrame agg + one small seed join) — rounds project
     // contributions instead of joining deg
-    val nodes = nodeFrame(e0)
+    val (nodes, nodeRows) = Checkpoints.ckptCount(nodeFrame(e0)
       .join(seedIds.withColumn("__seed", lit(1L)), Seq("id"), "left")
       .select(col("id"), coalesce(col("__seed"), lit(0L)).as("__seed"),
-        col("__deg"))
-      .localCheckpoint()
-    val useBroadcast = nodes.count() <= broadcastRankRows
+        col("__deg")))
+    val useBroadcast = nodeRows <= broadcastRankRows
     val hint: DataFrame => DataFrame =
       if (useBroadcast) df => broadcast(df) else df => df
-    val e =
-      if (useBroadcast || assumeLaidOut) e0
-      else {
-        val relaid = layoutEdges(e0, "src", "dst", layoutKey = "src")
-        Checkpoints.free(e0)
-        relaid
-      }
+    val e = rankEdges(e0, useBroadcast, assumeLaidOut)
 
-    var ranks = nodes.withColumn("rank_micro",
-      when(col("__seed") === 1L, lit(1000000L)).otherwise(lit(0L)))
-    for (_ <- 1 to iters) {
-      val perSrc = ranks.where(col("__deg").isNotNull)
-        .select(col("id").as("src"), expr("rank_micro div __deg").as("__c"))
-      val contrib = e.join(hint(perSrc), "src")
-        .select(col("dst").as("id"), col("__c"))
-      val sums = contrib.groupBy("id").agg(sum(col("__c")).as("__s"))
-      val old = ranks
-      ranks = nodes
-        .join(hint(sums), Seq("id"), "left")
+    val (ranks, _) = Checkpoints.iterate(nodes.withColumn("rank_micro",
+        when(col("__seed") === 1L, lit(1000000L)).otherwise(lit(0L))),
+        nodeRows, iters) { (ranks, _) =>
+      nodes
+        .join(hint(contributions(e, ranks, hint)), Seq("id"), "left")
         .select(col("id"), col("__seed"), col("__deg"),
           (when(col("__seed") === 1L, lit(base)).otherwise(lit(0L)) +
             expr(s"($dampNum * coalesce(__s, 0L)) div 100"))
             .as("rank_micro"))
-        .localCheckpoint()
-      Checkpoints.free(old)
     }
     Checkpoints.free(nodes)
     if (!assumeLaidOut) Checkpoints.free(e)
     ranks.select("id", "rank_micro")
+  }
+
+  /** The edge list as an UNDIRECTED src-laid frame: self-loops
+    * dropped, both orientations present (see [[layoutEdges]]). */
+  private def undirectedLayout(edges: DataFrame, srcCol: String,
+                               dstCol: String): DataFrame = {
+    val directed = edges
+      .select(col(srcCol).cast("long").as("src"), col(dstCol).cast("long").as("dst"))
+      .where(col("src").isNotNull && col("dst").isNotNull && col("src") =!= col("dst"))
+    layoutEdges(
+      directed.union(directed.select(col("dst").as("src"), col("src").as("dst"))),
+      "src", "dst")
+  }
+
+  /** (src, __deg): every node's degree in the subgraph of the
+    * symmetric edge frame `e` induced by the `alive` ids — the peel
+    * round of [[kCore]] and [[coreDecomposition]]. The survivor set
+    * is broadcast only while its `aliveRows` fit under the gate. */
+  private def inducedDegrees(e: DataFrame, alive: DataFrame, aliveRows: Long,
+                             broadcastAliveRows: Long): DataFrame = {
+    def hint(df: DataFrame): DataFrame =
+      if (aliveRows <= broadcastAliveRows) broadcast(df) else df
+    e.join(hint(alive.select(col("id").as("src"))), Seq("src"), "left_semi")
+      .join(hint(alive.select(col("id").as("dst"))), Seq("dst"), "left_semi")
+      .groupBy("src").agg(count(lit(1)).as("__deg"))
   }
 
   /** Bounded-round k-core peeling: iteratively remove nodes whose
@@ -376,43 +381,24 @@ object Graph {
             broadcastAliveRows: Long = 5000000L): DataFrame = {
     require(k >= 1, "kCore needs k >= 1")
     require(rounds >= 1, "kCore needs at least one round")
-    val directed = edges
-      .select(col(srcCol).cast("long").as("src"), col(dstCol).cast("long").as("dst"))
-      .where(col("src").isNotNull && col("dst").isNotNull && col("src") =!= col("dst"))
-    val e = layoutEdges(
-      directed.union(directed.select(col("dst").as("src"), col("src").as("dst"))),
-      "src", "dst")
-    var (alive, aliveRows) = Checkpoints.ckptCount(
+    val e = undirectedLayout(edges, srcCol, dstCol)
+    val (alive0, nodeRows) = Checkpoints.ckptCount(
       e.select(col("src").as("id")).distinct())
-    def hint(df: DataFrame): DataFrame =
-      if (aliveRows <= broadcastAliveRows) broadcast(df) else df
     // fixpoint early-exit: a peel only REMOVES nodes (alive' ⊆ alive),
     // so an unchanged row count proves an unchanged set — every further
     // round is the identity and can be skipped with a bit-identical
     // result (the oracle's extra CTE rounds replay the same identity)
-    var stable = false
-    for (_ <- 1 to rounds if !stable) {
-      val deg = e
-        .join(hint(alive.withColumnRenamed("id", "src")), Seq("src"), "left_semi")
-        .join(hint(alive.withColumnRenamed("id", "dst")), Seq("dst"), "left_semi")
-        .groupBy("src").agg(count(lit(1)).as("__deg"))
-      val old = alive
-      val (a2, n) = Checkpoints.ckptCount(
-        deg.where(col("__deg") >= k).select(col("src").as("id")))
-      alive = a2
-      stable = n == aliveRows
-      aliveRows = n
-      Checkpoints.free(old)
+    val (alive, aliveRows) = Checkpoints.iterate(alive0, nodeRows, rounds,
+        exitWhen = _ == _) { (alive, n) =>
+      inducedDegrees(e, alive, n, broadcastAliveRows)
+        .where(col("__deg") >= k).select(col("src").as("id"))
     }
     // final degree within the survivor-induced subgraph; the left join
     // keeps survivors whose last peel removed every neighbor (degree 0)
     // — the output is "the survivors", not "the survivors that still
     // have an edge". Checkpointed so the O(|E|) scaffolding can be
     // freed before return (the result is O(survivors) small).
-    val deg = e
-      .join(hint(alive.withColumnRenamed("id", "src")), Seq("src"), "left_semi")
-      .join(hint(alive.withColumnRenamed("id", "dst")), Seq("dst"), "left_semi")
-      .groupBy("src").agg(count(lit(1)).as("__deg"))
+    val deg = inducedDegrees(e, alive, aliveRows, broadcastAliveRows)
     val out = alive
       .join(deg.select(col("src").as("id"), col("__deg")), Seq("id"), "left")
       .select(col("id"), coalesce(col("__deg"), lit(0L)).as("degree"))
@@ -433,72 +419,45 @@ object Graph {
     *
     * Scale posture: the symmetric edge frame is laid out ONCE;
     * each peel round is two size-gated semi-joins + one combining
-    * hash-agg (the kCore shape); shell assignment is one union of the
-    * O(|V|) per-k survivor frames + a max-agg — maxK·roundsPerK
-    * bounded rounds total, no windows, no driver loops. */
+    * hash-agg (the kCore shape) over the survivors, folded back into
+    * ONE O(|V|) (id, shell) frame: a node alive for k carries
+    * shell = maxK until a k-round peels it, which sets its shell to
+    * k − 1 for good — so the frame is the answer, with no per-k
+    * snapshots to keep. maxK·roundsPerK bounded rounds total, no
+    * windows, no driver loops. */
   def coreDecomposition(edges: DataFrame, srcCol: String, dstCol: String,
                         maxK: Int, roundsPerK: Int = 2,
                         broadcastAliveRows: Long = 5000000L): DataFrame = {
     require(maxK >= 1 && roundsPerK >= 1, "coreDecomposition bounds must be >= 1")
-    val directed = edges
-      .select(col(srcCol).cast("long").as("src"), col(dstCol).cast("long").as("dst"))
-      .where(col("src").isNotNull && col("dst").isNotNull && col("src") =!= col("dst"))
-    val e = layoutEdges(
-      directed.union(directed.select(col("dst").as("src"), col("src").as("dst"))),
-      "src", "dst")
-    var (alive, aliveRows) = Checkpoints.ckptCount(
-      e.select(col("src").as("id")).distinct())
-    def hint(df: DataFrame): DataFrame =
-      if (aliveRows <= broadcastAliveRows) broadcast(df) else df
-    val all = alive
-    // per-k FINAL survivor frames, unioned once at the end (was: an
-    // (id, k) ledger re-checkpointed per k — maxK O(|V|·k) re-
-    // materializations). The frames stay checkpointed until `out`
-    // materializes, so the lazy union never reads a freed block.
-    val snaps = scala.collection.mutable.ListBuffer.empty[(Int, DataFrame)]
+    val e = undirectedLayout(edges, srcCol, dstCol)
+    var (shells, aliveRows) = Checkpoints.ckptCount(
+      e.select(col("src").as("id")).distinct()
+        .withColumn("shell", lit(maxK.toLong)))
     // fixpoint early-exits, both bit-identical to the full peel (the
     // oracle replays the skipped CTE rounds as identities):
-    //  - within one k, a peel only REMOVES nodes, so an unchanged row
-    //    count proves an unchanged set — the k's remaining rounds are
-    //    the identity and are skipped;
+    //  - within one k, a peel only REMOVES nodes, so an unchanged
+    //    survivor count proves an unchanged set — the k's remaining
+    //    rounds are the identity and are skipped;
     //  - an EMPTY survivor set stays empty under every later peel
-    //    (deg of nothing is nothing), so all later k snapshots are
-    //    empty and the whole outer loop can stop.
+    //    (deg of nothing is nothing), so the outer loop stops.
     for (k <- 1 to maxK if aliveRows > 0) {
-      var stable = false
-      for (_ <- 1 to roundsPerK if !stable) {
-        val deg = e
-          .join(hint(alive.withColumnRenamed("id", "src")), Seq("src"), "left_semi")
-          .join(hint(alive.withColumnRenamed("id", "dst")), Seq("dst"), "left_semi")
-          .groupBy("src").agg(count(lit(1)).as("__deg"))
-        val old = alive
-        val (a2, n) = Checkpoints.ckptCount(
-          deg.where(col("__deg") >= k).select(col("src").as("id")))
-        alive = a2
-        stable = n == aliveRows
-        aliveRows = n
-        if (!(old eq all) && !snaps.exists(_._2 eq old)) Checkpoints.free(old)
+      val alive = col("shell") >= k
+      val (s2, n) = Checkpoints.iterate(shells, aliveRows, roundsPerK,
+          measure = s => Checkpoints.rows(s.where(alive)),
+          exitWhen = _ == _) { (s, n) =>
+        val deg = inducedDegrees(e, s.where(alive), n, broadcastAliveRows)
+        val hinted = deg.select(col("src").as("id"), col("__deg"))
+        s.join(if (n <= broadcastAliveRows) broadcast(hinted) else hinted,
+            Seq("id"), "left")
+          .select(col("id"),
+            when(alive && coalesce(col("__deg"), lit(0L)) < k, lit(k - 1L))
+              .otherwise(col("shell")).as("shell"))
       }
-      snaps += ((k, alive))
+      shells = s2
+      aliveRows = n
     }
-    // shell(v) = max k whose survivor set contains v; nodes peeled in
-    // the k=1 rounds (never survivors) get shell 0 via the left join.
-    // Snapshot sets are NESTED (cores shrink with k), so max k = the
-    // last snapshot containing v — but the union+max form is one agg
-    // over O(Σ survivors) rows and needs no nesting argument.
-    val shellAcc = snaps.map { case (k, df) =>
-      df.select(col("id"), lit(k.toLong).as("__k"))
-    }.reduceOption(_.unionAll(_))
-      .getOrElse(all.select(col("id"), lit(0L).as("__k")).limit(0))
-    val out = all
-      .join(shellAcc.groupBy("id").agg(max("__k").as("__s")), Seq("id"), "left")
-      .select(col("id"), coalesce(col("__s"), lit(0L)).as("shell"))
-      .localCheckpoint()
-    snaps.foreach { case (_, df) => if (!(df eq all)) Checkpoints.free(df) }
-    if (!snaps.exists(_._2 eq alive)) Checkpoints.free(alive)
-    Checkpoints.free(all)
     Checkpoints.free(e)
-    out
+    shells
   }
 
   /** Bounded-round synchronous label propagation (community
@@ -524,34 +483,26 @@ object Graph {
                        rounds: Int = 2,
                        broadcastLabelRows: Long = 5000000L): DataFrame = {
     require(rounds >= 1, "labelPropagation needs at least one round")
-    val directed = edges
-      .select(col(srcCol).cast("long").as("src"), col(dstCol).cast("long").as("dst"))
-      .where(col("src").isNotNull && col("dst").isNotNull && col("src") =!= col("dst"))
-    val e = layoutEdges(
-      directed.union(directed.select(col("dst").as("src"), col("src").as("dst"))),
-      "src", "dst")
+    val e = undirectedLayout(edges, srcCol, dstCol)
     val (labels0, labelRows) = Checkpoints.ckptCount(
       e.select(col("src").as("id")).distinct()
         .withColumn("label", col("id")))
-    var labels = labels0
     val hint: DataFrame => DataFrame =
       if (labelRows <= broadcastLabelRows) df => broadcast(df)
       else df => df
-    for (_ <- 1 to rounds) {
-      val cnt = e
-        .join(hint(labels.select(col("id").as("src"), col("label"))), Seq("src"))
-        .groupBy(col("dst").as("id"), col("label"))
-        .agg(count(lit(1)).as("__c"))
-      // argmax by (count desc, label asc) via struct max: negate the
-      // label so the lexicographic max breaks count ties downward
-      val best = cnt.groupBy("id")
-        .agg(max(struct(col("__c"), (-col("label")).as("__nl"))).as("__b"))
-        .select(col("id"), (-col("__b.__nl")).as("__new"))
-      val old = labels
-      labels = labels.join(best, Seq("id"), "left")
-        .select(col("id"), coalesce(col("__new"), col("label")).as("label"))
-        .localCheckpoint()
-      Checkpoints.free(old)
+    val (labels, _) = Checkpoints.iterate(labels0, labelRows, rounds) {
+      (labels, _) =>
+        val cnt = e
+          .join(hint(labels.select(col("id").as("src"), col("label"))), Seq("src"))
+          .groupBy(col("dst").as("id"), col("label"))
+          .agg(count(lit(1)).as("__c"))
+        // argmax by (count desc, label asc) via struct max: negate the
+        // label so the lexicographic max breaks count ties downward
+        val best = cnt.groupBy("id")
+          .agg(max(struct(col("__c"), (-col("label")).as("__nl"))).as("__b"))
+          .select(col("id"), (-col("__b.__nl")).as("__new"))
+        labels.join(best, Seq("id"), "left")
+          .select(col("id"), coalesce(col("__new"), col("label")).as("label"))
     }
     Checkpoints.free(e)
     labels
@@ -596,59 +547,42 @@ object Graph {
     require(hops >= 0, "boundedBfs needs a non-negative hop bound")
     val e = edgeFrame(edges, srcCol, dstCol, assumeLaidOut,
       layoutKey = "dst")
-    var (dist, seedRows) = Checkpoints.ckptCount(
-      seeds.select(col(seeds.columns.head).cast("long").as("id"))
-        .distinct()
-        .withColumn("dist", lit(0L)))
-    if (frontierOnly) {
-      var frontier = dist
-      var frontierRows = seedRows
-      // an empty frontier discovers nothing forever after — every
+    val seedIds = seeds.select(col(seeds.columns.head).cast("long").as("id"))
+      .distinct()
+    def expand(from: DataFrame, rows: Long): DataFrame = {
+      val f = from.select(col("id").as("src"), col("dist"))
+      (if (rows <= broadcastFrontierRows) e.join(broadcast(f), "src")
+       else e.join(f, "src"))
+        .select(col("dst").as("id"), (col("dist") + 1).as("dist"))
+    }
+    val dist = if (frontierOnly) {
+      // the frontier rides in the dist frame as the `__f` flag (the ids
+      // first reached last round); the round's measure is its size. An
+      // empty frontier discovers nothing forever after — every
       // remaining round is the identity on `dist`, so stop early
       // (bit-identical; the oracle's extra rounds replay the identity)
-      for (_ <- 1 to hops if frontierRows > 0) {
-        val f = frontier.withColumnRenamed("id", "src")
-        val joined =
-          if (frontierRows <= broadcastFrontierRows) e.join(broadcast(f), "src")
-          else e.join(f, "src")
-        val (fresh, freshRows) = Checkpoints.ckptCount(joined
-          .select(col("dst").as("id"), (col("dist") + 1).as("dist"))
+      val (init, seedRows) = Checkpoints.ckptCount(
+        seedIds.select(col("id"), lit(0L).as("dist"), lit(true).as("__f")))
+      Checkpoints.iterate(init, seedRows, hops,
+          measure = d => Checkpoints.rows(d.where(col("__f"))),
+          exitWhen = (_, n) => n == 0) { (d, frontierRows) =>
+        val fresh = expand(d.where(col("__f")), frontierRows)
           .groupBy("id").agg(min("dist").as("dist"))
-          .join(dist, Seq("id"), "left_anti"))
-        frontierRows = freshRows
-        val oldDist = dist
-        val oldFrontier = frontier
-        dist = dist.union(fresh).localCheckpoint()
-        frontier = fresh
-        Checkpoints.free(oldDist)
-        // round 1's frontier IS the seed dist frame (already freed);
-        // unpersist is idempotent so the double call is harmless
-        Checkpoints.free(oldFrontier)
-      }
-      // hops = 0 leaves frontier aliased to the returned seed frame
-      if (!(frontier eq dist)) Checkpoints.free(frontier)
+          .join(d, Seq("id"), "left_anti")
+        d.select(col("id"), col("dist"), lit(false).as("__f"))
+          .union(fresh.withColumn("__f", lit(true)))
+      }._1.select("id", "dist")
     } else {
-      var distRows = seedRows
       // fixpoint early-exit: ids only accumulate, and a present id's
       // dist is already its true ≤-round hop distance (the full dist
       // frame expands every round), so an unchanged id count proves
       // the frame is a fixpoint — remaining rounds are the identity
-      var stable = false
-      for (_ <- 1 to hops if !stable) {
-        val ds = dist.withColumnRenamed("id", "src")
-        val joined =
-          if (distRows <= broadcastFrontierRows) e.join(broadcast(ds), "src")
-          else e.join(ds, "src")
-        val next = joined
-          .select(col("dst").as("id"), (col("dist") + 1).as("dist"))
-        val old = dist
-        val (d2, n) = Checkpoints.ckptCount(dist.union(next)
-          .groupBy("id").agg(min("dist").as("dist")))
-        dist = d2
-        stable = n == distRows
-        distRows = n
-        Checkpoints.free(old)
-      }
+      val (init, seedRows) = Checkpoints.ckptCount(
+        seedIds.withColumn("dist", lit(0L)))
+      Checkpoints.iterate(init, seedRows, hops, exitWhen = _ == _) {
+        (d, distRows) =>
+          d.union(expand(d, distRows)).groupBy("id").agg(min("dist").as("dist"))
+      }._1
     }
     if (!assumeLaidOut) Checkpoints.free(e)
     dist
@@ -680,33 +614,30 @@ object Graph {
                 broadcastFrontierRows: Long = 5000000L): DataFrame = {
     require(hops >= 0, "seededBfs needs a non-negative hop bound")
     val e = edgeFrame(edges, srcCol, dstCol, assumeLaidOut, layoutKey = "src")
-    val (dist0, seedRows) = Checkpoints.ckptCount(
+    // the frontier rides in the dist frame as the `__f` flag (the
+    // pairs first reached last round), the boundedBfs frontier shape
+    val (init, seedRows) = Checkpoints.ckptCount(
       seeds.select(col(seeds.columns.head).cast("long").as("seed"))
         .distinct()
-        .select(col("seed"), col("seed").as("id"), lit(0L).as("dist")))
-    var dist = dist0
-    var frontier = dist
-    var frontierRows = seedRows
-    for (_ <- 1 to hops if frontierRows > 0) {
-      val f = frontier.withColumnRenamed("id", "src")
+        .select(col("seed"), col("seed").as("id"), lit(0L).as("dist"),
+          lit(true).as("__f")))
+    val (dist, _) = Checkpoints.iterate(init, seedRows, hops,
+        measure = d => Checkpoints.rows(d.where(col("__f"))),
+        exitWhen = (_, n) => n == 0) { (d, frontierRows) =>
+      val f = d.where(col("__f"))
+        .select(col("seed"), col("id").as("src"), col("dist"))
       val joined =
         if (frontierRows <= broadcastFrontierRows) e.join(broadcast(f), "src")
         else e.join(f, "src")
-      val (fresh, freshRows) = Checkpoints.ckptCount(joined
+      val fresh = joined
         .select(col("seed"), col("dst").as("id"), (col("dist") + 1).as("dist"))
         .groupBy("seed", "id").agg(min("dist").as("dist"))
-        .join(dist, Seq("seed", "id"), "left_anti"))
-      frontierRows = freshRows
-      val oldDist = dist
-      val oldFrontier = frontier
-      dist = dist.union(fresh).localCheckpoint()
-      frontier = fresh
-      Checkpoints.free(oldDist)
-      if (!(oldFrontier eq oldDist)) Checkpoints.free(oldFrontier)
+        .join(d, Seq("seed", "id"), "left_anti")
+      d.select(col("seed"), col("id"), col("dist"), lit(false).as("__f"))
+        .union(fresh.withColumn("__f", lit(true)))
     }
-    if (!(frontier eq dist)) Checkpoints.free(frontier)
     if (!assumeLaidOut) Checkpoints.free(e)
-    dist
+    dist.select("seed", "id", "dist")
   }
 
   /** Bounded-round multi-source BFS over a BITMASK — the MS-BFS idea
@@ -727,65 +658,60 @@ object Graph {
     *
     * Scale posture: the edge frame is laid out once; each round is
     * one equi-join of the O(|V|) mask frame (broadcast under the
-    * seededBfs-style row gate) plus one bit_or hash-agg; superseded
-    * mask frames free as the next materializes. */
+    * seededBfs-style row gate) plus one bit_or hash-agg. The masks and
+    * the output rows share ONE round frame (id, round, mask): a row
+    * with round = -1 is a node's accumulated mask, every other row an
+    * output row — so one materialization per round carries both. */
   def seededBfsBitmask(edges: DataFrame, srcCol: String, dstCol: String,
                        seeds: DataFrame, hops: Int,
                        assumeLaidOut: Boolean = false,
                        broadcastMaskRows: Long = 5000000L): DataFrame = {
     require(hops >= 0, "seededBfsBitmask needs a non-negative hop bound")
     val e = edgeFrame(edges, srcCol, dstCol, assumeLaidOut, layoutKey = "dst")
-    // `store` is the round's CHECKPOINTED frame (freed when the next
-    // round's store materializes — Checkpoints.free matches checkpoint
-    // roots only, so projections of it are never passed to free)
-    val (store0, storeRows) = Checkpoints.ckptCount(seeds
+    val seedMasks = seeds
       .select(col(seeds.columns.head).cast("long").as("id"),
         col(seeds.columns(1)).cast("int").as("bit"))
       .groupBy("id")
-      .agg(expr("bit_or(shiftleft(CAST(1 AS BIGINT), bit))").as("mask")))
-    var store = store0
-    var cur = store
-    var out = store.select(col("id"), lit(0).cast("int").as("round"),
-      col("mask").as("new_mask")).localCheckpoint()
-    var curRows = storeRows
-    // zero new discoveries makes `merged` a fixpoint (the next round's
-    // contrib re-derives the same masks), so every remaining round adds
-    // nothing to `out` — stop early, bit-identical to running them
-    var newly0 = false
-    for (r <- 1 to hops if !newly0) {
+      .agg(expr("bit_or(shiftleft(CAST(1 AS BIGINT), bit))").as("mask"))
+    val (init, initRows) = Checkpoints.ckptCount(
+      seedMasks.select(col("id"), lit(-1), col("mask"))
+        .union(seedMasks.select(col("id"), lit(0), col("mask")))
+        .toDF("id", "round", "mask"))
+    var r = 0
+    // the frame only grows: a round adds one output row per node with
+    // new bits and one mask row per newly reached node. An unchanged
+    // row count therefore means zero new discoveries, which makes the
+    // masks a fixpoint (the next round's contrib re-derives the same
+    // masks) — stop early, bit-identical to running the rest. The
+    // broadcast gate reads the whole frame's rows, an upper bound on
+    // the mask rows it broadcasts.
+    val (out, _) = Checkpoints.iterate(init, initRows, hops,
+        exitWhen = _ == _) { (s, rows) =>
+      r += 1
+      val cur = s.where(col("round") === -1).select("id", "mask")
       val cs = cur.select(col("id").as("src"), col("mask"))
       val joined =
-        if (curRows <= broadcastMaskRows) e.join(broadcast(cs), "src")
+        if (rows <= broadcastMaskRows) e.join(broadcast(cs), "src")
         else e.join(cs, "src")
       val contrib = joined
         .groupBy(col("dst").as("id"))
         .agg(expr("bit_or(mask)").as("cmask"))
-      // lazy checkpoint: the stats agg below is the materializing
-      // action (one job instead of checkpoint-job + agg-job)
       val merged = cur.join(contrib, Seq("id"), "full_outer")
         .select(col("id"),
-          expr("coalesce(mask, 0L) | coalesce(cmask, 0L)").as("mask"),
-          expr("coalesce(cmask, 0L) & ~coalesce(mask, 0L)").as("new_mask"))
-        .localCheckpoint(eager = false)
-      val newly = merged.where(col("new_mask") =!= 0L)
-        .select(col("id"), lit(r).cast("int").as("round"), col("new_mask"))
-      val oldOut = out
-      out = out.union(newly).localCheckpoint()
-      val oldStore = store
-      store = merged
-      cur = merged.select("id", "mask")
-      // ONE agg job materializes the lazy checkpoint AND reads both
-      // the next round's broadcast-gate count and the early-exit signal
-      val stats = merged.agg(count(lit(1)),
-        sum((col("new_mask") =!= 0L).cast("long"))).head
-      curRows = stats.getLong(0)
-      newly0 = stats.isNullAt(1) || stats.getLong(1) == 0L
-      Checkpoints.free(oldStore)
-      Checkpoints.free(oldOut)
+          expr("coalesce(mask, 0L) | coalesce(cmask, 0L)").as("__m"),
+          expr("coalesce(cmask, 0L) & ~coalesce(mask, 0L)").as("__n"))
+        .select(col("id"), explode(
+          when(col("__n") =!= 0L, array(
+            struct(lit(-1).as("round"), col("__m").as("mask")),
+            struct(lit(r).as("round"), col("__n").as("mask"))))
+            .otherwise(array(
+              struct(lit(-1).as("round"), col("__m").as("mask"))))).as("__o"))
+        .select(col("id"), col("__o.round"), col("__o.mask"))
+      s.where(col("round") >= 0).union(merged)
     }
     if (!assumeLaidOut) Checkpoints.free(e)
-    Checkpoints.free(store)
-    out
+    out.where(col("round") >= 0)
+      .select(col("id"), col("round"), col("mask").as("new_mask"))
   }
 
   /** Bounded-round single-source shortest paths over WEIGHTED edges
@@ -829,26 +755,23 @@ object Graph {
       .groupBy("src", "dst").agg(min("w").as("w"))
       .sortWithinPartitions("dst")
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    require(laid.where(col("w") < 0).isEmpty,
-      "weightedSssp needs non-negative weights")
-    var dist = seeds.select(col(seeds.columns.head).cast("long").as("id"))
-      .distinct()
-      .withColumn("dist", lit(0L))
-      .localCheckpoint()
-    var distRows = dist.count()
-    for (_ <- 1 to rounds) {
-      val ds = dist.withColumnRenamed("id", "src")
-      val joined =
-        if (distRows <= broadcastDistRows) laid.join(broadcast(ds), "src")
-        else laid.join(ds, "src")
-      val relaxed = joined
-        .select(col("dst").as("id"), (col("dist") + col("w")).as("dist"))
-      val old = dist
-      dist = dist.union(relaxed)
-        .groupBy("id").agg(min("dist").as("dist"))
-        .localCheckpoint()
-      distRows = dist.count()
-      Checkpoints.free(old)
+    val negative = !laid.where(col("w") < 0).isEmpty
+    // the failure path must not leave the layout pinned either
+    if (negative) Checkpoints.free(laid)
+    require(!negative, "weightedSssp needs non-negative weights")
+    val (init, seedRows) = Checkpoints.ckptCount(
+      seeds.select(col(seeds.columns.head).cast("long").as("id"))
+        .distinct()
+        .withColumn("dist", lit(0L)))
+    val (dist, _) = Checkpoints.iterate(init, seedRows, rounds) {
+      (dist, distRows) =>
+        val ds = dist.withColumnRenamed("id", "src")
+        val joined =
+          if (distRows <= broadcastDistRows) laid.join(broadcast(ds), "src")
+          else laid.join(ds, "src")
+        val relaxed = joined
+          .select(col("dst").as("id"), (col("dist") + col("w")).as("dist"))
+        dist.union(relaxed).groupBy("id").agg(min("dist").as("dist"))
     }
     Checkpoints.free(laid)
     dist
@@ -875,70 +798,53 @@ object Graph {
     * above `broadcastRankRows` every half-step runs as a shuffle
     * join) — a round moves only O(|V|) rows. The per-round max is ONE
     * scalar row cross-joined broadcast (the `pageRankRedistributed`
-    * discipline). Superseded score frames unpersist as soon as the
-    * next round materializes. */
+    * discipline). Each half-step is ONE round of [[Checkpoints.iterate]]
+    * over a single (id, __has_out, __raw, __other) frame: `__raw` is
+    * the half-step's UNSCALED sum, materialized once, and the next
+    * half-step rescales it by its max as it reads it — so the O(|E|)
+    * edge fold runs exactly once per half-step. Each half-step must
+    * be materialized: an unmaterialized chain replicates 2^rounds
+    * sub-plans (measured 3.7 s → 9.9 s at iters = 2). */
   def hits(edges: DataFrame, srcCol: String, dstCol: String,
            iters: Int = 2, scale: Long = 1000000L,
            assumeLaidOut: Boolean = false,
            broadcastRankRows: Long = 5000000L): DataFrame = {
     require(iters >= 1, "hits needs at least one iteration")
     val e = edgeFrame(edges, srcCol, dstCol, assumeLaidOut, layoutKey = "dst")
-    val nodes = nodeFrame(e)
-      .select(col("id"), col("__deg").isNotNull.as("__has_out"))
-      .localCheckpoint()
+    // the initial hub score rides as an already-"raw" column whose max
+    // is `scale`, so every half-step reads its input the same way
+    val (init, nodeRows) = Checkpoints.ckptCount(nodeFrame(e)
+      .select(col("id"), col("__deg").isNotNull.as("__has_out"),
+        when(col("__deg").isNotNull, lit(scale)).otherwise(lit(0L)).as("__raw"),
+        lit(0L).as("__other")))
     val hint: DataFrame => DataFrame =
-      if (nodes.count() <= broadcastRankRows) df => broadcast(df)
+      if (nodeRows <= broadcastRankRows) df => broadcast(df)
       else df => df
-    // half-step: sum a broadcast score frame over one edge side,
-    // rescale to max `scale`, left-join back onto the node frame
-    // the O(|V|) edge-fold `sums` feeds BOTH the max-scalar and the
-    // node join; materializing IT (not the joined result) makes the
-    // expensive O(|E|) join+aggregate run exactly once per half-step —
-    // the max and the rescale join then read the checkpointed O(|V|)
-    // blocks. (The earlier shape checkpointed the joined result
-    // instead, which still evaluated the edge fold twice inside that
-    // one job: q211 3.6 s → 3.3 s at sf0.1 — the edge-graph build
-    // dominates that query, so the per-round win is bounded. An
-    // unmaterialized chain
-    // is far worse still — 2^rounds sub-plan replication, measured
-    // 3.7 s → 9.9 s at iters = 2.)
-    def halfStep(scores: DataFrame, scoreCol: String, joinSide: String,
-                 aggSide: String, outCol: String): DataFrame = {
-      val perSide = scores.where(col(scoreCol) > 0)
-        .select(col("id").as(joinSide), col(scoreCol).as("__c"))
+    // the last half-step's raw sums rescaled to max `scale` (the max is
+    // ONE row — size-independent, always hinted)
+    def rescaled(s: DataFrame): DataFrame =
+      s.crossJoin(broadcast(s.agg(max("__raw").as("__mx"))))
+        .select(col("id"), col("__has_out"), col("__other"),
+          coalesce(expr(s"(__raw * ${scale}L) div __mx"), lit(0L)).as("__v"))
+    // odd half-steps fold hub scores src → dst into authorities, even
+    // ones fold authorities dst → src into hubs
+    var half = 0
+    val (last, _) = Checkpoints.iterate(init, nodeRows, 2 * iters) { (s, _) =>
+      half += 1
+      val (joinSide, aggSide) = if (half % 2 == 1) ("src", "dst") else ("dst", "src")
+      val scores = rescaled(s)
+      val perSide = scores.where(col("__v") > 0)
+        .select(col("id").as(joinSide), col("__v").as("__c"))
       val sums = e.join(hint(perSide), joinSide)
         .select(col(aggSide).as("id"), col("__c"))
-        .groupBy("id").agg(sum("__c").as("__s"))
-        .localCheckpoint()
-      val mx = sums.agg(max("__s").as("__mx"))
-      val out = nodes.join(hint(sums), Seq("id"), "left")
-        .crossJoin(broadcast(mx)) // ONE row — size-independent, always hinted
-        .select(col("id"), col("__has_out"),
-          coalesce(expr(s"(__s * ${scale}L) div __mx"), lit(0L)).as(outCol))
-        .localCheckpoint() // eager — sums' blocks are consumed here
-      Checkpoints.free(sums)
-      out
+        .groupBy("id").agg(sum("__c").as("__raw"))
+      scores.join(hint(sums), Seq("id"), "left")
+        .select(col("id"), col("__has_out"), col("__raw"),
+          col("__v").as("__other"))
     }
-    def freeIf(df: DataFrame): Unit = if (df != null) Checkpoints.free(df)
-    var hubs = nodes.select(col("id"), col("__has_out"),
-      when(col("__has_out"), lit(scale)).otherwise(lit(0L)).as("hub_micro"))
-    var auths: DataFrame = null
-    for (_ <- 1 to iters) {
-      val newAuths = halfStep(hubs.withColumnRenamed("hub_micro", "__v"),
-        "__v", "src", "dst", "auth_micro")
-      freeIf(auths)
-      auths = newAuths
-      val oldHubs = hubs
-      hubs = halfStep(auths.withColumnRenamed("auth_micro", "__v"),
-        "__v", "dst", "src", "hub_micro")
-      freeIf(oldHubs)
-    }
-    val out = hubs.select(col("id"), col("hub_micro"))
-      .join(auths.select(col("id"), col("auth_micro")), "id")
-      .localCheckpoint()
-    freeIf(hubs); freeIf(auths); Checkpoints.free(nodes)
     if (!assumeLaidOut) Checkpoints.free(e)
-    out
+    rescaled(last)
+      .select(col("id"), col("__v").as("hub_micro"), col("__other").as("auth_micro"))
   }
 
   /** Bounded k-truss peel over an UNDIRECTED canonical edge list
@@ -982,18 +888,16 @@ object Graph {
     // double-count support, so least/greatest + distinct removes the
     // precondition for one cheap projection. Self-loops drop (a = b
     // can't be part of a triangle under strict orientation).
-    var e = pairs.select(
+    val (e0, edgeRows) = Checkpoints.ckptCount(pairs.select(
       least(col("id_a"), col("id_b")).cast("long").as("id_a"),
       greatest(col("id_a"), col("id_b")).cast("long").as("id_b"))
-      .where(col("id_a") < col("id_b")).distinct().localCheckpoint()
-    for (_ <- 1 to rounds) {
-      // inner join drops support-0 edges for free (no row, threshold
-      // k-2 >= 1 can't hold); survivors re-checkpoint, old frame frees
-      val old = e
-      e = e.join(support(e), Seq("id_a", "id_b"))
+      .where(col("id_a") < col("id_b")).distinct())
+    // inner join drops support-0 edges for free (no row, threshold
+    // k-2 >= 1 can't hold)
+    val (e, _) = Checkpoints.iterate(e0, edgeRows, rounds) { (e, _) =>
+      e.join(support(e), Seq("id_a", "id_b"))
         .where(col("support") >= k - 2)
-        .select("id_a", "id_b").localCheckpoint()
-      Checkpoints.free(old)
+        .select("id_a", "id_b")
     }
     val out = e.join(support(e), Seq("id_a", "id_b"))
       .select(col("id_a"), col("id_b"), col("support"))
@@ -1017,47 +921,40 @@ object Graph {
     * Shape per round: one semi-join to restrict edges to alive
     * endpoints, one distinct-dst projection (the blocked set), one
     * anti-join (alive minus blocked = this wave). All joins on node
-    * ids; the alive frame is O(V) and re-checkpoints per round with
-    * the superseded frame freed. */
+    * ids. The round frame is ONE O(V) (id, layer) frame: -1 while a
+    * node is still alive, its wave once peeled — so it is the answer
+    * after the last round. */
   def topoLayers(edges: DataFrame, srcCol: String, dstCol: String,
                  rounds: Int = 4): DataFrame = {
     require(rounds >= 1, "topoLayers needs at least one round")
     val e0 = edges.select(col(srcCol).cast("long").as("src"),
       col(dstCol).cast("long").as("dst")).distinct()
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    var alive = e0.select(col("src").as("id"))
-      .union(e0.select(col("dst").as("id"))).distinct().localCheckpoint()
-    // ONE materialization per round: the blocked set (nodes with an
-    // unfinished dependency) joins back as a FLAG, and the round
-    // checkpoints the flagged frame once — the wave (flag null) and
-    // the next alive (flag set) are then filters over the same
-    // materialized blocks, so `blocked` is computed exactly once per
-    // round and wave frames never need their own checkpoint
-    // (constant-depth lineage off the flagged frame; measured
-    // 2.9 s -> 1.7 s at 4 rounds on the q276 graph, sf0.1).
-    val alive0 = alive
-    val marked = scala.collection.mutable.ListBuffer.empty[DataFrame]
-    for (r <- 1 to rounds) {
+    val (init, nodeRows) = Checkpoints.ckptCount(e0.select(col("src").as("id"))
+      .union(e0.select(col("dst").as("id"))).distinct()
+      .withColumn("layer", lit(-1)))
+    // ONE materialization per round: the blocked set (alive nodes with
+    // an unfinished dependency) joins back as a FLAG, and every alive
+    // node without it takes this round's layer — `blocked` is computed
+    // exactly once per round (measured 2.9 s -> 1.7 s at 4 rounds on
+    // the q276 graph, sf0.1, against materializing wave and alive
+    // frames separately).
+    var r = 0
+    val (layers, _) = Checkpoints.iterate(init, nodeRows, rounds) { (s, _) =>
+      r += 1
+      val alive = s.where(col("layer") === -1)
       val eAlive = e0
         .join(alive.select(col("id").as("src")), Seq("src"), "left_semi")
         .join(alive.select(col("id").as("dst")), Seq("dst"), "left_semi")
       val blocked = eAlive.select(col("dst").as("id")).distinct()
         .withColumn("__b", lit(1))
-      marked += alive.join(blocked, Seq("id"), "left")
-        .select(col("id"), col("__b"), lit(r).cast("int").as("__r"))
-        .localCheckpoint()
-      alive = marked.last.where(col("__b").isNotNull).select("id")
+      s.join(blocked, Seq("id"), "left")
+        .select(col("id"),
+          when(col("layer") === -1 && col("__b").isNull, lit(r))
+            .otherwise(col("layer")).as("layer"))
     }
-    val result = marked
-      .map(m => m.where(col("__b").isNull)
-        .select(col("id"), col("__r").as("layer")))
-      .reduce(_ unionByName _)
-      .unionByName(alive.select(col("id"), lit(-1).cast("int").as("layer")))
-      .localCheckpoint()
-    marked.foreach(Checkpoints.free)
-    Checkpoints.free(alive0)
     e0.unpersist(false)
-    result
+    layers
   }
 
   /** Per-node triangle count and local clustering coefficient over an
@@ -1104,37 +1001,6 @@ object Graph {
     out
   }
 
-  /** Borůvka minimum-spanning-forest over UNIQUE-keyed undirected
-    * edges, bounded rounds — the contraction-based graph primitive
-    * (the others here are propagation-based): each round every
-    * component selects its minimum-key incident edge, the selected
-    * edges join the forest, and the touched components CONTRACT into
-    * one. With a totally-ordered `key` (callers fold weight + src +
-    * dst into one BIGINT, so ties cannot exist) the forest is unique
-    * and every step is a min-fold — the whole run replays as chained
-    * CTEs (the q149/q319 oracle discipline).
-    *
-    * Contraction is a FIXED `labelIters` of min-label iterations over
-    * the per-round merge graph (a frame of O(components) edges, not
-    * O(E)) — fixed, not converge-early, so an engine replaying the
-    * same iteration count produces bit-identical intermediate labels
-    * even on a pathological merge chain that has not fully collapsed;
-    * an uncollapsed pair simply re-selects its connecting edge next
-    * round (the forest set dedups by key). Classic Borůvka converges
-    * in O(log V) rounds; `rounds` bounds the work honestly, like
-    * boundedBfs's hops.
-    *
-    * Scale posture: per round, two keyed joins attach component
-    * labels to the laid-out edge frame (the O(V) component frame is
-    * the small side — AQE broadcasts while it fits, the
-    * pageRank-style fallback being a shuffle join), one min-agg over
-    * 2·|cross-edges| rows, then `labelIters` folds over the
-    * O(components) merge frame. Superseded component frames free as
-    * each round materializes.
-    *
-    * Input `edges`: (src, dst, key) with src < dst canonical and key
-    * globally unique. Returns the selected edge keys.
-    */
   /** Exactly `iters` synchronous min-label iterations over a (both-
     * orientation) merge graph, in one in-memory task — the bounded
     * twin of the shuffled loop in boruvkaMsf, used under the same
@@ -1171,6 +1037,45 @@ object Graph {
       .toDF("c", "l")
   }
 
+  /** Borůvka minimum-spanning-forest over UNIQUE-keyed undirected
+    * edges, bounded rounds — the contraction-based graph primitive
+    * (the others here are propagation-based): each round every
+    * component selects its minimum-key incident edge, the selected
+    * edges join the forest, and the touched components CONTRACT into
+    * one. With a totally-ordered `key` (callers fold weight + src +
+    * dst into one BIGINT, so ties cannot exist) the forest is unique
+    * and every step is a min-fold — the whole run replays as chained
+    * CTEs (the q149/q319 oracle discipline).
+    *
+    * Contraction is a FIXED `labelIters` of min-label iterations over
+    * the per-round merge graph (a frame of O(components) edges, not
+    * O(E)) — fixed, not converge-early, so an engine replaying the
+    * same iteration count produces bit-identical intermediate labels
+    * even on a pathological merge chain that has not fully collapsed;
+    * an uncollapsed pair simply re-selects its connecting edge next
+    * round (the forest set dedups by key). Classic Borůvka converges
+    * in O(log V) rounds; `rounds` bounds the work honestly, like
+    * boundedBfs's hops.
+    *
+    * Scale posture: per round, two keyed joins attach component
+    * labels to the laid-out edge frame (the O(V) component frame is
+    * the small side — AQE broadcasts while it fits, the
+    * pageRank-style fallback being a shuffle join), one min-agg over
+    * 2·|cross-edges| rows, then `labelIters` folds over the
+    * O(components) merge frame.
+    *
+    * Each Borůvka round is TWO rounds of [[Checkpoints.iterate]] over
+    * one frame of (id, comp) component rows and (key, __ca, __cb)
+    * edge rows: the select round adds the round's selected edges as
+    * PENDING rows (__ca set) and measures their count, so an empty
+    * selection ends the loop — every later round would select nothing
+    * too; the contract round relabels the component rows and turns
+    * pending rows into forest rows (key only), measuring the component
+    * rows for the next round's broadcast gate.
+    *
+    * Input `edges`: (src, dst, key) with src < dst canonical and key
+    * globally unique. Returns the selected edge keys.
+    */
   def boruvkaMsf(edges: DataFrame, rounds: Int = 4,
                  labelIters: Int = 4,
                  singleTaskLabelEdges: Long = 2000000L,
@@ -1180,55 +1085,49 @@ object Graph {
     val e = edges.select(col("src").cast("long").as("src"),
         col("dst").cast("long").as("dst"), col("key").cast("long").as("key"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    e.count()
-    var comp = e.select(col("src").as("id")).union(e.select(col("dst").as("id")))
-      .distinct().select(col("id"), col("id").as("comp"))
-      .localCheckpoint()
-    // O(V) frame: broadcast only while it provably fits (row-count
-    // gate, same discipline as the singleTaskLabelEdges bound below) —
-    // an unconditional broadcast() hint would force BroadcastHashJoin
-    // past driver memory instead of falling back to a shuffle join.
-    var compRows = comp.count()
-    var msf = e.sparkSession.emptyDataFrame
-    var msfInit = false
-    val roundFrames = scala.collection.mutable.ListBuffer.empty[DataFrame]
-    // Result-preserving shortcuts the oracle need not mirror: the
-    // cross-edge frame stays LAZY — it is two size-gated broadcast
-    // joins of the O(V) component frame against the persisted edge
-    // blocks (narrow, no shuffle, no exchange while the gate holds;
-    // shuffle joins above it), so re-deriving it per consumer is
-    // cheaper than materializing O(E) checkpoint blocks every round;
-    // and an empty selection means every later round selects nothing
-    // too, so the loop breaks.
-    var exhausted = false
-    for (_ <- 1 to rounds if !exhausted) {
-      val ca = comp.select(col("id").as("src"), col("comp").as("__ca"))
-      val cb = comp.select(col("id").as("dst"), col("comp").as("__cb"))
-      val small = compRows <= broadcastCompRows
-      val ec = e
-        .join(if (small) broadcast(ca) else ca, "src")
-        .join(if (small) broadcast(cb) else cb, "dst")
-        .where(col("__ca") =!= col("__cb"))
-      // min incident edge per component, both endpoint roles
-      val sel = ec.select(col("__ca").as("__c"), col("key"))
-        .union(ec.select(col("__cb").as("__c"), col("key")))
-        .groupBy("__c").agg(min("key").as("key"))
-        .select("key").distinct()
-      val se = ec.join(sel, Seq("key"), "left_semi")
-        .select(col("key"), col("__ca"), col("__cb"))
-        .localCheckpoint()
-      val seCnt = se.count()
-      if (seCnt == 0) {
-        Checkpoints.free(se)
-        exhausted = true
+    val none = lit(null).cast("long")
+    // O(V) component rows: broadcast only while they provably fit
+    // (row-count gate, same discipline as the singleTaskLabelEdges
+    // bound below) — an unconditional broadcast() hint would force
+    // BroadcastHashJoin past driver memory instead of falling back to
+    // a shuffle join.
+    val (init, compRows) = Checkpoints.ckptCount(
+      e.select(col("src").as("id")).union(e.select(col("dst").as("id")))
+        .distinct()
+        .select(col("id"), col("id").as("comp"), none.as("key"),
+          none.as("__ca"), none.as("__cb")))
+    val isComp = col("id").isNotNull
+    val isPending = col("__ca").isNotNull
+    var half = 0
+    val (forest, _) = Checkpoints.iterate(init, compRows, 2 * rounds,
+        measure = s => Checkpoints.rows(s.where(
+          if (half % 2 == 1) isPending else isComp)),
+        exitWhen = (_, n) => n == 0) { (s, n) =>
+      half += 1
+      val comp = s.where(isComp)
+      if (half % 2 == 1) {
+        // SELECT. The cross-edge frame stays LAZY — two size-gated
+        // broadcast joins of the O(V) component rows against the
+        // persisted edge blocks (narrow, no exchange while the gate
+        // holds; shuffle joins above it), cheaper to re-derive per
+        // consumer than to checkpoint O(E) blocks every round.
+        val ca = comp.select(col("id").as("src"), col("comp").as("__ca"))
+        val cb = comp.select(col("id").as("dst"), col("comp").as("__cb"))
+        val small = n <= broadcastCompRows
+        val ec = e
+          .join(if (small) broadcast(ca) else ca, "src")
+          .join(if (small) broadcast(cb) else cb, "dst")
+          .where(col("__ca") =!= col("__cb"))
+        // min incident edge per component, both endpoint roles
+        val sel = ec.select(col("__ca").as("__c"), col("key"))
+          .union(ec.select(col("__cb").as("__c"), col("key")))
+          .groupBy("__c").agg(min("key").as("key"))
+          .select("key").distinct()
+        s.unionByName(ec.join(sel, Seq("key"), "left_semi")
+          .select(none.as("id"), none.as("comp"), col("key"),
+            col("__ca"), col("__cb")))
       } else {
-        // se frames are O(components) — keep their blocks until `out`
-        // materializes (msf reads them), then free in one sweep
-        roundFrames += se
-        msf = if (msfInit) msf.union(se.select("key"))
-          else se.select("key")
-        msfInit = true
-        // contract: fixed-iteration min-label over the merge graph.
+        // CONTRACT: fixed-iteration min-label over the merge graph.
         // Labels are computed for TOUCHED components only (both
         // orientations are in `mer`, so propagation can neither reach
         // nor be influenced by an untouched component — its label is
@@ -1239,10 +1138,11 @@ object Graph {
         // result-identical by construction (same recurrence, same
         // iteration count); above the bound the shuffled loop runs,
         // so the 100 TB path never funnels through one task.
+        val se = s.where(isPending)
         val mer = se.select(col("__ca").as("a"), col("__cb").as("b"))
           .union(se.select(col("__cb").as("a"), col("__ca").as("b")))
-        var lab =
-          if (seCnt <= singleTaskLabelEdges) {
+        val lab =
+          if (n <= singleTaskLabelEdges) {
             boundedMinLabels(mer, labelIters)
           } else {
             var l = mer.select(col("a").as("c")).distinct()
@@ -1255,21 +1155,18 @@ object Graph {
             }
             l
           }
-        val oldComp = comp
-        comp = comp.join(
-            lab.select(col("c").as("comp"), col("l")), Seq("comp"), "left")
-          .select(col("id"),
-            coalesce(col("l"), col("comp")).as("comp"))
-          .localCheckpoint()
-        Checkpoints.free(oldComp)
+        comp.join(lab.select(col("c").as("comp"), col("l")), Seq("comp"), "left")
+          .select(col("id"), coalesce(col("l"), col("comp")).as("comp"),
+            none.as("key"), none.as("__ca"), none.as("__cb"))
+          .unionByName(s.where(col("key").isNotNull)
+            .select(none.as("id"), none.as("comp"), col("key"),
+              none.as("__ca"), none.as("__cb")))
       }
     }
-    val out =
-      (if (msfInit) msf.distinct() else e.select("key").limit(0))
-        .localCheckpoint()
-    Checkpoints.free(comp)
+    val (out, _) = Checkpoints.ckptCount(
+      forest.where(col("key").isNotNull).select("key").distinct())
+    Checkpoints.free(forest)
     Checkpoints.free(e)
-    roundFrames.foreach(Checkpoints.free)
     out
   }
 }

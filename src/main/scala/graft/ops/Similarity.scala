@@ -714,22 +714,19 @@ object Similarity {
       .groupBy(col("e.i").as("i"), col("e.j").as("j"))
       .agg(sum("e.p").as("g"))
       .localCheckpoint()
-    var v = gram.select(col("j").as("pos")).distinct()
-      .withColumn("v", lit(1000L)).localCheckpoint()
-    for (_ <- 1 to rounds) {
+    val (v0, dimRows) = Checkpoints.ckptCount(
+      gram.select(col("j").as("pos")).distinct().withColumn("v", lit(1000L)))
+    val (v, _) = Checkpoints.iterate(v0, dimRows, rounds) { (v, _) =>
       val w = gram.join(broadcast(v.withColumnRenamed("pos", "j")), "j")
         .groupBy(col("i").as("pos"))
         .agg(sum(col("g") * col("v")).as("w"))
       val m = w.agg(greatest(max(abs(col("w"))), lit(1L)).as("m"))
-      val old = v
-      v = w.crossJoin(broadcast(m))
+      w.crossJoin(broadcast(m))
         .withColumn("__wm", col("w") * 1000)
         // BIGINT floor division for signed x, positive m: subtract the
         // non-negative remainder, then `div` (exact-multiple quotient)
         .select(col("pos"),
           expr("(__wm - pmod(__wm, m)) div m").cast("long").as("v"))
-        .localCheckpoint()
-      Checkpoints.free(old)
     }
     Checkpoints.free(gram)
     v

@@ -167,19 +167,18 @@ object QueriesRound10i {
         // the O(|E|) edge frame once and the O(queries × beam)
         // frontier per hop; free superseded rounds.
         val edgesCk = edges.localCheckpoint()
-        var frontier: DataFrame = probes
+        val (start, startRows) = graft.ops.Checkpoints.ckptCount(probes
           .select(col("query_id"), lit(Entry).as("node"))
-          .unionAll(seeds).distinct().localCheckpoint()
-        for (_ <- 1 to Hops) {
+          .unionAll(seeds).distinct())
+        val (frontier, _) = graft.ops.Checkpoints.iterate(start, startRows,
+            Hops) { (frontier, _) =>
           val expanded = frontier.select("query_id", "node")
             .unionAll(frontier
               .join(edgesCk, frontier("node") === edgesCk("src"))
               .select(col("query_id"), col("dst").as("node")))
             .where(col("node") =!= col("query_id"))
             .distinct()
-          val old = frontier
-          frontier = scoreTop(expanded, nBeam).localCheckpoint()
-          graft.ops.Checkpoints.free(old)
+          scoreTop(expanded, nBeam)
         }
         graft.ops.Checkpoints.free(edgesCk)
         val beam = frontier.withColumn("__rk", row_number().over(

@@ -39,24 +39,21 @@ object QueriesRound7j {
           .distinct()
         // layoutEdges drops payload columns, so lay out inline: one
         // src-keyed shuffle + in-partition sort, persisted across the
-        // three rounds (Verify/Bench sweep persisted blocks between
-        // queries — the q149 discipline)
+        // three rounds and released once they are done
         val eL = e.repartition(col("src")).sortWithinPartitions("src")
           .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        var arr = eL.select(col("src").as("id")).distinct()
-          .where(col("id") < 1000000L && col("id") % 97 === 0)
-          .withColumn("arr", lit(0L))
-          .localCheckpoint()
-        for (_ <- 1 to 3) {
-          val next = eL.join(arr.withColumnRenamed("id", "src"), "src")
-            .where(col("t") >= col("arr"))
-            .select(col("dst").as("id"), col("t").as("arr"))
-          val old = arr
-          arr = arr.union(next)
-            .groupBy("id").agg(min("arr").as("arr"))
-            .localCheckpoint()
-          graft.ops.Checkpoints.free(old)
+        val (seeds, seedRows) = graft.ops.Checkpoints.ckptCount(
+          eL.select(col("src").as("id")).distinct()
+            .where(col("id") < 1000000L && col("id") % 97 === 0)
+            .withColumn("arr", lit(0L)))
+        val (arr, _) = graft.ops.Checkpoints.iterate(seeds, seedRows, 3) {
+          (arr, _) =>
+            val next = eL.join(arr.withColumnRenamed("id", "src"), "src")
+              .where(col("t") >= col("arr"))
+              .select(col("dst").as("id"), col("t").as("arr"))
+            arr.union(next).groupBy("id").agg(min("arr").as("arr"))
         }
+        eL.unpersist(false)
         arr.select(col("id"), col("arr")).orderBy("id")
       },
       Some {

@@ -103,29 +103,18 @@ object QueriesRound7m {
             .join(li.withColumnRenamed("l_partkey", "dst"), "l_orderkey")
             .where(col("src") =!= col("dst")),
           "src", "dst")
-        def bfs(seed: org.apache.spark.sql.DataFrame) = {
-          var dist = seed.select(col("id"), lit(0L).as("dist"))
-            .localCheckpoint()
-          for (_ <- 1 to 4) {
-            val next = e.join(dist.withColumnRenamed("id", "src"), "src")
-              .select(col("dst").as("id"), (col("dist") + 1).as("dist"))
-            val old = dist
-            dist = dist.union(next)
-              .groupBy("id").agg(min("dist").as("dist"))
-              .localCheckpoint()
-            graft.ops.Checkpoints.free(old)
-          }
-          dist
-        }
+        def bfs(seed: org.apache.spark.sql.DataFrame) =
+          Graph.boundedBfs(e, "src", "dst", seed, 4, assumeLaidOut = true)
         val s0 = e.agg(min("src").as("id"))
         val d1 = bfs(s0)
         // farthest from seed: max dist, min id — one struct argmax row
-        val far = broadcast(d1.agg(
+        val far = d1.agg(
           max(struct(col("dist"), (-col("id")).as("__ni"))).as("__f"))
-          .select((-col("__f.__ni")).as("id")))
+          .select((-col("__f.__ni")).as("id"))
         val d2 = bfs(far)
+        graft.ops.Checkpoints.free(e)
         d2.agg(max(struct(col("dist"), (-col("id")).as("__ni"))).as("__f"))
-          .crossJoin(far.select(col("id").as("sweep2_root")))
+          .crossJoin(broadcast(far.select(col("id").as("sweep2_root"))))
           .select(col("sweep2_root"),
             (-col("__f.__ni")).as("far_node"),
             col("__f.dist").as("diameter_lb"))
@@ -191,8 +180,8 @@ object QueriesRound7m {
             col("p_partkey"))) % 97 === 0)
           .select(col("p_partkey").as("key"))
           .orderBy("key").limit(20)
-        val probe = broadcast(keys.select(col("key") +:
-          (0 until 4).map(j => pos(col("key"), j).as(s"__q$j")): _*))
+        val probe = keys.select(col("key") +:
+          (0 until 4).map(j => pos(col("key"), j).as(s"__q$j")): _*)
         // a file is read iff ALL the key's DISTINCT positions are set
         // (two of the 4 hashes can collide — comparing against a
         // hard-coded 4 would turn that collision into a false

@@ -194,47 +194,49 @@ object QueriesRound7o {
           expr("transform(embedding, x ->" +
             " cast(round(x * 1000, 0) as bigint))").as("__q"))
           .localCheckpoint() // quantize ONCE, scanned by all 7 rounds
-        var chosen = emb.agg(min("vec_id").as("vec_id"))
-          .select(col("vec_id"), lit(0L).as("pick"),
-            lit(null).cast("long").as("sel_dist"))
-          .localCheckpoint()
-        // Incremental farthest-point: carry each survivor's nearest-
-        // chosen distance and fold in ONLY the newest center per round
-        // (min over all chosen = min(carried, dist-to-newest)) — round
-        // r costs 1 center×corpus pass, not r, with identical integers
-        // to the full recompute the oracle replays.
-        var mind: org.apache.spark.sql.DataFrame = null
-        for (r <- 1 to 7) {
+        // Incremental farthest-point over ONE row per vector: `pick` is
+        // the round a vector was chosen in (null while unchosen) and
+        // `__mind` its distance to the nearest chosen center — carried
+        // and folded with ONLY the newest center per round (min over
+        // all chosen = min(carried, dist-to-newest)), so round r costs
+        // 1 center×corpus pass, not r, with identical integers to the
+        // full recompute the oracle replays. A chosen row keeps the
+        // `__mind` it was picked at: its sel_dist.
+        val first = emb.agg(min("vec_id").as("__first"))
+        val (start, n) = graft.ops.Checkpoints.ckptCount(emb
+          .crossJoin(broadcast(first))
+          .select(col("vec_id"),
+            when(col("vec_id") === col("__first"), lit(0L)).as("pick"),
+            lit(null).cast("long").as("__mind")))
+        var r = 0L
+        val (picked, _) = graft.ops.Checkpoints.iterate(start, n, 7) {
+          (st, _) =>
+          r += 1
           val newest = broadcast(emb
-            .join(chosen.where(col("pick") === (r - 1).toLong)
-              .select("vec_id"), Seq("vec_id"))
+            .join(st.where(col("pick") === r - 1).select("vec_id"),
+              Seq("vec_id"))
             .select(col("__q").as("__cq")))
           val dNew = emb.crossJoin(newest)
             .select(col("vec_id"), expr("aggregate(zip_with(__q, __cq," +
               " (x, y) -> (x - y) * (x - y)), 0L, (a, v) -> a + v)")
               .as("__d"))
-          val merged = (if (mind == null) {
-            dNew.withColumnRenamed("__d", "__mind")
-          } else {
-            mind.join(dNew, Seq("vec_id"))
-              .select(col("vec_id"),
-                least(col("__mind"), col("__d")).as("__mind"))
-          }).join(chosen.select("vec_id"), Seq("vec_id"), "left_anti")
-            .localCheckpoint()
-          if (mind != null) graft.ops.Checkpoints.free(mind)
-          mind = merged
-          val next = mind
+          val merged = st.where(col("pick").isNull).join(dNew, Seq("vec_id"))
+            .select(col("vec_id"),
+              least(col("__mind"), col("__d")).as("__mind"))
+          val far = merged
             .agg(max(struct(col("__mind"), (-col("vec_id")).as("__nv")))
               .as("__f"))
-            .select((-col("__f.__nv")).as("vec_id"),
-              lit(r.toLong).as("pick"), col("__f.__mind").as("sel_dist"))
-          val old = chosen
-          chosen = chosen.unionByName(next).localCheckpoint()
-          graft.ops.Checkpoints.free(old)
+            .select((-col("__f.__nv")).as("__far"))
+          st.where(col("pick").isNotNull).unionByName(merged
+            .crossJoin(broadcast(far))
+            .select(col("vec_id"),
+              when(col("vec_id") === col("__far"), lit(r)).as("pick"),
+              col("__mind")))
         }
-        graft.ops.Checkpoints.free(mind)
         graft.ops.Checkpoints.free(emb)
-        chosen.orderBy("pick")
+        picked.where(col("pick").isNotNull)
+          .select(col("vec_id"), col("pick"), col("__mind").as("sel_dist"))
+          .orderBy("pick")
       },
       Some {
         val dist = "list_sum(list_transform(generate_series(1, 64)," +

@@ -257,23 +257,19 @@ object QueriesRound7u {
     // synthetic redirect chains (doc i points at i−1 except every
     // 16th, which is a terminal). Each round is ONE equi-join of the
     // O(n) pointer frame with itself (never frontier×frontier), the
-    // superseded round frame is freed (Checkpoints.free), and the
+    // rounds run under Checkpoints.iterate, and the
     // oracle replays all four compositions as chained CTEs. Readout:
     // per-terminal chain size and span.
     QueryDef("q370_pointer_doubling",
       (s, d) => {
-        var p = documents(s, d).select(col("doc_id").as("id"),
+        val (p0, n) = graft.ops.Checkpoints.ckptCount(
+          documents(s, d).select(col("doc_id").as("id"),
             when(col("doc_id") % 16 === 0, col("doc_id"))
-              .otherwise(col("doc_id") - 1).as("p"))
-          .localCheckpoint()
-        for (_ <- 1 to 4) {
-          val next = p.join(
-            p.select(col("id").as("__pid"), col("p").as("__pp")),
-            col("p") === col("__pid"))
+              .otherwise(col("doc_id") - 1).as("p")))
+        val (p, _) = graft.ops.Checkpoints.iterate(p0, n, 4) { (p, _) =>
+          p.join(p.select(col("id").as("__pid"), col("p").as("__pp")),
+              col("p") === col("__pid"))
             .select(col("id"), col("__pp").as("p"))
-            .localCheckpoint()
-          graft.ops.Checkpoints.free(p)
-          p = next
         }
         p.groupBy(col("p").as("root"))
           .agg(count(lit(1)).as("n_nodes"),

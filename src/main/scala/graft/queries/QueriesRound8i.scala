@@ -173,10 +173,10 @@ object QueriesRound8i {
           .select(Text.tokens(col("text")).as("toks"))
           .where(size(col("toks")) > 0)
           .persist()
-        var bounds = s.range(1)
-          .select(lit(1).as("lo"), lit(128).as("hi")).localCheckpoint()
-        val oldBounds = scala.collection.mutable.ListBuffer(bounds)
-        for (_ <- 1 to 7) {
+        val (bounds0, one) = graft.ops.Checkpoints.ckptCount(s.range(1)
+          .select(lit(1).as("lo"), lit(128).as("hi")))
+        val (bounds, _) = graft.ops.Checkpoints.iterate(bounds0, one, 7) {
+          (bounds, _) =>
           val m = bounds.select(col("lo"), col("hi"),
             expr("(lo + hi) div 2").as("mid"))
           val ex = toks.crossJoin(broadcast(m.select("mid")))
@@ -187,19 +187,17 @@ object QueriesRound8i {
               "array())")).as("fp"))
             .groupBy("fp").agg(count(lit(1)).as("c"))
             .agg(coalesce(max("c"), lit(0L)).as("mx"))
-          bounds = m.crossJoin(ex)
+          m.crossJoin(ex)
             .select(when(col("mx") >= 2, col("mid")).otherwise(col("lo"))
               .as("lo"),
               when(col("mx") >= 2, col("hi")).otherwise(col("mid"))
                 .as("hi"))
-            .localCheckpoint()
-          oldBounds += bounds
         }
         val fin = broadcast(bounds.select(col("lo").as("ll")))
         // materialize the (tiny, one-group) final readout so the cached
-        // token frame and the per-round bounds frames can be freed NOW
+        // token frame and the last bounds frame can be freed NOW
         // instead of lingering in executor storage for the rest of the
-        // suite (the Checkpoints.free discipline of the graph loops)
+        // suite
         val out = toks.crossJoin(fin)
           .select(col("ll"), explode(expr("IF(size(toks) >= ll, transform(" +
             "sequence(1, size(toks) - ll + 1), " +
@@ -213,7 +211,7 @@ object QueriesRound8i {
             col("n_repeated"), col("n_occurrences"), col("witness"))
           .localCheckpoint()
         toks.unpersist()
-        oldBounds.foreach(graft.ops.Checkpoints.free)
+        graft.ops.Checkpoints.free(bounds)
         out
       },
       Some {

@@ -49,12 +49,12 @@ object QueriesRound9aa {
         val states = tm.select(col("src").as("state"))
           .unionByName(tm.select(col("dst").as("state"))).distinct()
         // v0: purchase = 1e6, everything else 0
-        var v = variants.crossJoin(states)
-          .select(col("variant"), col("state"),
-            when(col("state") === "purchase", 1000000L).otherwise(0L)
-              .as("v"))
-          .localCheckpoint()
-        for (_ <- 1 to 8) {
+        val (v0, n) = graft.ops.Checkpoints.ckptCount(
+          variants.crossJoin(states)
+            .select(col("variant"), col("state"),
+              when(col("state") === "purchase", 1000000L).otherwise(0L)
+                .as("v")))
+        val (v, _) = graft.ops.Checkpoints.iterate(v0, n, 8) { (v, _) =>
           val stepped = tm
             .join(v.select(col("variant"), col("state").as("dst"),
               col("v").as("vd")), Seq("dst"))
@@ -62,14 +62,11 @@ object QueriesRound9aa {
               (col("dst") =!= col("variant") && col("src") =!= col("variant")))
             .groupBy(col("variant"), col("src").as("state"))
             .agg(expr("sum(cnt * vd) div min(out)").as("nv"))
-          val nextV = v.join(stepped, Seq("variant", "state"), "left")
+          v.join(stepped, Seq("variant", "state"), "left")
             .select(col("variant"), col("state"),
               when(col("state") === "purchase", 1000000L)
                 .when(col("state") === "END", 0L)
                 .otherwise(coalesce(col("nv"), lit(0L))).as("v"))
-            .localCheckpoint()
-          graft.ops.Checkpoints.free(v)
-          v = nextV
         }
         val conv = v.where(col("state") === "START")
           .select(col("variant"), col("v").as("conv_micro"))

@@ -41,12 +41,17 @@ object QueriesRound9h {
           .localCheckpoint() // ≤ 31 rows; every round folds over it
         val vFull = hist.agg(sum("cnt").as("v_full")).localCheckpoint()
         val srcs = s.range(n).select(col("id").cast("long").as("grp"))
-        var state = s.range(1).select(lit(0L).as("smask"),
-          lit(0L).as("covered")).localCheckpoint()
-        val oldStates = scala.collection.mutable.ListBuffer(state)
-        val rounds = scala.collection.mutable.ListBuffer
-          .empty[org.apache.spark.sql.DataFrame]
-        for (r <- 1 to n) {
+        // the round frame is every pick so far, one row per round; the
+        // round-0 row is the empty cover. A round reads its state off
+        // the last row, so the frame's row count is the next round.
+        val none = lit(null).cast("long")
+        val (start, one) = graft.ops.Checkpoints.ckptCount(s.range(1)
+          .select(lit(0L).as("round"), none.as("grp"), none.as("gain"),
+            lit(0L).as("covered_after"), lit(0L).as("smask")))
+        val (picks, _) = graft.ops.Checkpoints.iterate(start, one, n) {
+          (picks, r) =>
+          val state = picks.where(col("round") === r - 1)
+            .select(col("smask"), col("covered_after").as("covered"))
           val gains = srcs.crossJoin(broadcast(state))
             .where(expr("(smask & shiftleft(1, grp)) = 0"))
             .join(hist, expr(
@@ -59,17 +64,12 @@ object QueriesRound9h {
           val best = gains
             .agg(max(struct(col("gain"), (-col("grp")).as("ng"))).as("b"))
             .select(col("b.gain").as("gain"), (-col("b.ng")).as("grp"))
-          val picked = gains.join(broadcast(best), Seq("grp", "gain"))
-            .select(lit(r.toLong).as("round"), col("grp"), col("gain"),
+          picks.unionByName(gains.join(broadcast(best), Seq("grp", "gain"))
+            .select(lit(r).as("round"), col("grp"), col("gain"),
               col("v_next").as("covered_after"),
-              expr("smask | shiftleft(1, grp)").as("smask"))
-            .localCheckpoint()
-          rounds += picked
-          state = picked.select(col("smask"),
-            col("covered_after").as("covered")).localCheckpoint()
-          oldStates += state
+              expr("smask | shiftleft(1, grp)").as("smask")))
         }
-        val out = rounds.reduce(_ unionByName _)
+        val out = picks.where(col("round") > 0)
           .crossJoin(broadcast(vFull))
           .select(col("round"), col("grp").as("grp_chosen"), col("gain"),
             col("covered_after"),
@@ -77,8 +77,7 @@ object QueriesRound9h {
               .as("coverage_ppm"))
           .orderBy("round")
           .localCheckpoint()
-        rounds.foreach(graft.ops.Checkpoints.free)
-        oldStates.foreach(graft.ops.Checkpoints.free)
+        graft.ops.Checkpoints.free(picks)
         graft.ops.Checkpoints.free(vFull)
         graft.ops.Checkpoints.free(hist)
         out

@@ -1,11 +1,7 @@
 package graft
 
-import java.util.concurrent.atomic.AtomicInteger
-
 import graft.ops.TxnLog
 import graft.ops.TxnLog.Action
-import org.apache.spark.TestListenerBus
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -46,31 +42,7 @@ class TxnReaderSpec extends SparkSpec {
   private def ids(df: DataFrame): Seq[Long] =
     df.select("id").collect().map(_.getLong(0)).sorted.toSeq
 
-  private val jobTag = "graft.test.jobs"
-  private val jobSeq = new AtomicInteger
-
-  /** `body`'s result and the Spark jobs it started on this thread,
-    * counted once the listener bus has delivered every event. */
-  private def jobsOf[T](body: => T): (T, Int) = {
-    val sc = spark.sparkContext
-    val tag = s"jobs-${jobSeq.incrementAndGet()}"
-    val n = new AtomicInteger
-    val l = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (e.properties != null && e.properties.getProperty(jobTag) == tag)
-          n.incrementAndGet()
-    }
-    sc.addSparkListener(l)
-    sc.setLocalProperty(jobTag, tag)
-    try {
-      val r = body
-      TestListenerBus.drain(sc)
-      (r, n.get)
-    } finally {
-      sc.setLocalProperty(jobTag, null)
-      sc.removeSparkListener(l)
-    }
-  }
+  private def jobsOf[T](body: => T): (T, Int) = JobCount.of(spark)(body)
 
   test("deleteWhereMoR on plain segments runs <= 3 jobs, whatever their number") {
     val counts = Seq(2, 6).map { n =>
