@@ -1,7 +1,9 @@
 package graft.ops
 
 import org.apache.hadoop.fs.{FileContext, FileSystem, Options, Path}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.functions.{col, udf}
+import org.roaringbitmap.longlong.Roaring64NavigableMap
 
 /** Mini-lakehouse transaction log: ACID table commits as an ordered
   * sequence of atomically-published log files, the protocol behind
@@ -36,13 +38,17 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * - Contiguity rule: versions start at 1 and must be gap-free; a
   *   reader stops at the first gap (a gap can only be a not-yet-
   *   visible in-flight publish on an eventually-listing store).
-  * - **One physical schema per unmapped table**: a table without a
-  *   column mapping has one physical schema, inferred ONCE per read —
-  *   one job over the multi-path relation of the segments read — and
-  *   handed to every segment and dv sidecar read, as the Delta design
-  *   keeps the schema in the log instead of re-inferring it from data
-  *   files per read. Only a column-mapped table, whose segments may
-  *   differ physically, infers each file's schema ([[VisibleRows]]).
+  * - **One scan per read**: the segments of a read are ONE multi-path
+  *   parquet relation, so a table's schema is inferred once per read
+  *   (one job); a column-mapped table, whose segments may differ
+  *   physically, merges their schemas by name instead.
+  * - **Positional deletion vectors**: a merge-on-read delete records
+  *   the deleted rows' parquet positions (`_metadata.row_index`) per
+  *   part file in one small sidecar per segment ([[DeletionVector]]),
+  *   the Delta deletion-vector / Iceberg position-delete design. The
+  *   driver reads the active sidecars, and the scan drops those
+  *   positions with one row filter: no value comparison, no shuffle,
+  *   no second relation ([[VisibleRows]]).
   *
   * At 100 TB the log is O(commits), not O(data): resolving it is a
   * driver-side listing of tiny files (checkpoint/compaction of the log
@@ -62,12 +68,13 @@ object TxnLog {
     * Iceberg/Delta stats-in-metadata design).
     *
     * `dv` is the MERGE-ON-READ delete (the public deletion-vector
-    * design): `path` is a parquet sidecar holding the CUMULATIVE
-    * deleted rows of the base segment named by `ref` — the segment is
-    * NOT rewritten; readers subtract the sidecar at scan time. A newer
-    * dv on the same segment SUPERSEDES the older one (each dv carries
-    * the full deleted-row set, so the active state is one sidecar per
-    * segment, never a chain). Zone-map stats on the base add remain
+    * design): `path` is a [[DeletionVector]] sidecar holding the
+    * CUMULATIVE deleted row positions of the base segment named by
+    * `ref` — the segment is NOT rewritten; readers drop those
+    * positions at scan time. A newer dv on the same segment SUPERSEDES
+    * the older one (each dv carries the full deleted-position set, so
+    * the active state is one sidecar per segment, never a chain).
+    * Zone-map stats on the base add remain
     * valid BOUNDS under row deletes (deletes only shrink a segment's
     * min/max range, never widen it). */
   case class Action(kind: String, path: String,
@@ -108,9 +115,14 @@ object TxnLog {
   private def hfs(s: SparkSession, p: Path): FileSystem =
     p.getFileSystem(s.sparkContext.hadoopConfiguration)
 
-  /** Process-unique staging counter — see the tmp-file naming note in
-    * [[tryCommit]]. */
-  private val stagingSeq = new java.util.concurrent.atomic.AtomicLong(0L)
+  /** Every byte of the file at `p`. */
+  private def readBytes(fs: FileSystem, p: Path): Array[Byte] = {
+    val in = fs.open(p)
+    try in.readAllBytes() finally in.close()
+  }
+
+  private def readUtf8(fs: FileSystem, p: Path): String =
+    new String(readBytes(fs, p), java.nio.charset.StandardCharsets.UTF_8)
 
   /** Attempt to publish `actions` as exactly `version`. Returns true
     * iff this writer won the version. Never throws on contention —
@@ -152,13 +164,15 @@ object TxnLog {
     if (fs.exists(target)) return false // fast-path: already owned
     // stage the full commit body in an INVOCATION-private temp file so
     // a crash mid-write can never leave a torn <v>.txn visible. The
-    // name carries a process-unique counter, not just (writer,
-    // version): two concurrent commits under the SAME writer id
-    // otherwise share a staging path — one deletes it while the other
-    // links, and the publish dies on NoSuchFile instead of losing the
-    // race cleanly (found by the 8-overlapping-writers spec).
+    // name carries a random UUID, not just (writer, version): two
+    // concurrent commits under the SAME writer id otherwise share a
+    // staging path — one deletes it while the other links, and the
+    // publish dies on NoSuchFile instead of losing the race cleanly
+    // (found by the 8-overlapping-writers spec). A per-process counter
+    // is not enough: it restarts with every process, so two processes
+    // committing under one writer id would still share the path.
     val tmp = new Path(dir,
-      s"_tmp_${writer}_${version}_${stagingSeq.incrementAndGet()}.txn")
+      s"_tmp_${writer}_${version}_${java.util.UUID.randomUUID()}.txn")
     val out = fs.create(tmp, true)
     try {
       // header field 4 is the optional in-commit timestamp — absent
@@ -343,16 +357,7 @@ object TxnLog {
       .map(_._1)
       .filter(_._1 > fromVersion) // bodies below the bound never open
     contiguous.map { case (v, p) =>
-      val in = fs.open(p)
-      val text =
-        try {
-          val buf = new java.io.ByteArrayOutputStream()
-          val chunk = new Array[Byte](8192)
-          Iterator.continually(in.read(chunk)).takeWhile(_ > 0)
-            .foreach(n => buf.write(chunk, 0, n))
-          new String(buf.toByteArray, java.nio.charset.StandardCharsets.UTF_8)
-        } finally in.close()
-      val lines = text.split("\n").toSeq.filter(_.nonEmpty)
+      val lines = readUtf8(fs, p).split("\n").toSeq.filter(_.nonEmpty)
       val head = lines.head.split("\t")
       require(head(0) == "commit" && head(1).toLong == v,
         s"malformed commit file ${p.getName}")
@@ -415,50 +420,137 @@ object TxnLog {
     * insertion order — deterministic read plans). */
   def liveFiles(cs: Seq[Commit]): Seq[String] = liveState(cs).map(_._1)
 
-  /** The one reader of VISIBLE rows: each of `segs` minus its active
-    * dv sidecar (the merge-on-READ — no segment is ever rewritten; a
-    * sidecar is subtracted with a multiset exceptAll). Snapshot reads,
-    * the change feed, compaction, clustering and the MoR delete's
-    * probe all read through it.
+  /** Positional deletion vector sidecars: the CUMULATIVE deleted row
+    * positions of ONE segment. For each part file of the segment, keyed
+    * by the file's path within the segment, a Roaring bitmap of parquet
+    * `_metadata.row_index` values — 64-bit, so no file is too long for
+    * it. A sidecar is one small driver-written file: a magic number,
+    * the entry count, then each (key, bitmap) with the bitmap in the
+    * portable 64-bit Roaring format. Writing and reading it start no
+    * Spark job. */
+  object DeletionVector {
+    /** Deleted row positions per part file. */
+    type Positions = Map[String, Roaring64NavigableMap]
+
+    private val Magic = 0x47445631 // "GDV1"
+
+    def encode(ps: Positions): Array[Byte] = {
+      val buf = new java.io.ByteArrayOutputStream()
+      val out = new java.io.DataOutputStream(buf)
+      out.writeInt(Magic)
+      out.writeInt(ps.size)
+      ps.toSeq.sortBy(_._1).foreach { case (file, rows) =>
+        out.writeUTF(file)
+        rows.runOptimize() // a contiguous range costs a few bytes
+        rows.serializePortable(out)
+      }
+      out.close()
+      buf.toByteArray
+    }
+
+    /** `bytes` of the sidecar `name` as positions, or the named error
+      * for a file that is not a sidecar. */
+    def decode(bytes: Array[Byte], name: String): Positions = {
+      val in = new java.io.DataInputStream(new java.io.ByteArrayInputStream(bytes))
+      if (bytes.length < 8 || in.readInt() != Magic)
+        throw new IllegalArgumentException(
+          s"$name is not a positional deletion vector sidecar")
+      Seq.fill(in.readInt()) {
+        val file = in.readUTF()
+        val rows = new Roaring64NavigableMap()
+        rows.deserializePortable(in)
+        file -> rows
+      }.toMap
+    }
+
+    /** Write `ps` as a new sidecar of `seg` under `table/_dv` and return
+      * its path. The name carries a random UUID, so no two deletes —
+      * in one process or across process lifetimes — ever pick the same
+      * name, and the create refuses to overwrite. */
+    def write(s: SparkSession, table: String, seg: String, ps: Positions): String = {
+      val p = new Path(s"$table/_dv/${new Path(seg).getName}_${java.util.UUID.randomUUID()}.dv")
+      val out = hfs(s, p).create(p, false)
+      try out.write(encode(ps)) finally out.close()
+      p.toString
+    }
+
+    def read(s: SparkSession, path: String): Positions = {
+      val p = new Path(path)
+      decode(readBytes(hfs(s, p), p), path)
+    }
+  }
+
+  /** The absolute path of `p` as a scan reports it in
+    * `_metadata.file_path`, decoded: the key positions are matched by. */
+  private def absolute(s: SparkSession, p: String): String = {
+    val path = new Path(p)
+    hfs(s, path).makeQualified(path).toUri.getPath
+  }
+
+  private def fileKey(metadataFilePath: String): String =
+    new java.net.URI(metadataFilePath).getPath
+
+  /** `ps` of segment `seg` keyed by absolute file path. */
+  private def byFile(s: SparkSession, seg: String,
+                     ps: DeletionVector.Positions): Map[String, Roaring64NavigableMap] = {
+    val dir = absolute(s, seg)
+    ps.map { case (f, rows) => s"$dir/$f" -> rows }
+  }
+
+  /** Keeps a row iff its position is (`in`) or is not (`!in`) among
+    * `deleted`, keyed by absolute file path. A task reads its rows file
+    * by file, so the path decodes once per file, not once per row. */
+  private final class AtPositions(deleted: Map[String, Roaring64NavigableMap],
+                                  in: Boolean)
+      extends ((String, Long) => Boolean) with Serializable {
+    @transient private var file: String = _
+    @transient private var rows: Roaring64NavigableMap = _
+
+    def apply(f: String, row: Long): Boolean = {
+      if (f != file) {
+        file = f
+        rows = deleted.getOrElse(fileKey(f), null)
+      }
+      (rows != null && rows.contains(row)) == in
+    }
+  }
+
+  private def atPositions(deleted: Map[String, Roaring64NavigableMap],
+                          in: Boolean): Column =
+    udf(new AtPositions(deleted, in))
+      .apply(col("_metadata.file_path"), col("_metadata.row_index"))
+
+  /** The one reader of VISIBLE rows: `segs` as ONE multi-path parquet
+    * relation, minus the positions their active dv sidecars delete
+    * (the merge-on-READ — no segment is ever rewritten). Snapshot
+    * reads, the change feed, compaction, clustering and the MoR
+    * delete's probe all read through it.
     *
-    * Schema rule: a table WITHOUT a column mapping has one physical
-    * schema, so the schema is inferred ONCE per reader — one job over
-    * the multi-path relation of every segment — and handed to each
-    * later segment or sidecar read (`s.read.schema`), which then
-    * starts no inference job of its own. With no dv at all, [[all]]
-    * IS that multi-path relation: the plan of the pre-dv read, bit for
-    * bit. `evolved` = a column mapping is active, so segments written
-    * under different schema versions may carry DIFFERENT physical
-    * column sets: every read infers its own files' schema
-    * (mergeSchema) and parts align by NAME with null-fill. A dv
-    * sidecar holds rows of its segment, so it has the segment file's
-    * own schema and the per-segment subtraction needs no alignment. */
+    * The relation's schema is inferred once — one job — and a dv adds
+    * one row filter on (`_metadata.file_path`, `_metadata.row_index`)
+    * against the sidecars, which the driver reads before the scan: no
+    * union, no shuffle, no value comparison. With no dv at all, [[all]]
+    * IS the multi-path relation. `evolved` = the segments may have been
+    * written under different schema versions with DIFFERENT physical
+    * column sets: the relation then merges the files' schemas by NAME
+    * with null-fill (mergeSchema). Positions have no schema, so the
+    * filter is the same either way. */
   private final class VisibleRows(s: SparkSession,
                                   segs: Seq[(String, Option[String])],
                                   evolved: Boolean) {
-    private lazy val multiPath = s.read.parquet(segs.map(_._1): _*)
+    lazy val relation: DataFrame =
+      (if (evolved) s.read.option("mergeSchema", "true") else s.read)
+        .parquet(segs.map(_._1): _*)
 
-    def read(paths: String*): DataFrame =
-      if (evolved) s.read.option("mergeSchema", "true").parquet(paths: _*)
-      else s.read.schema(multiPath.schema).parquet(paths: _*)
+    /** Deleted positions of every active sidecar, by absolute file path. */
+    lazy val deleted: Map[String, Roaring64NavigableMap] =
+      segs.flatMap { case (seg, dv) =>
+        dv.toSeq.flatMap(d => byFile(s, seg, DeletionVector.read(s, d)))
+      }.toMap
 
-    /** One segment's visible rows. */
-    def segment(seg: String, dv: Option[String]): DataFrame =
-      dv.fold(read(seg))(d => read(seg).exceptAll(read(d)))
-
-    /** Every segment's visible rows: the segments without a dv as ONE
-      * multi-path relation, each dv'd segment's subtraction unioned
-      * in. */
     def all: DataFrame =
-      if (segs.forall(_._2.isEmpty))
-        if (evolved) read(segs.map(_._1): _*) else multiPath
-      else {
-        val plain = segs.collect { case (p, None) => p }
-        val parts = (if (plain.nonEmpty) Seq(read(plain: _*)) else Seq.empty) ++
-          segs.collect { case (p, dv @ Some(_)) => segment(p, dv) }
-        if (evolved) parts.reduce(_.unionByName(_, allowMissingColumns = true))
-        else parts.reduce(_ unionAll _)
-      }
+      if (segs.forall(_._2.isEmpty)) relation
+      else relation.where(atPositions(deleted, in = false))
   }
 
   /** Visible rows of `segs` under the column mapping `mapping`, with
@@ -897,16 +989,7 @@ object TxnLog {
       .iterator
       .map(v => v -> new Path(logDir(table), f"$v%020d.ckpt"))
       .map { case (v, p) =>
-        val in = fs.open(p)
-        val text =
-          try {
-            val buf = new java.io.ByteArrayOutputStream()
-            val chunk = new Array[Byte](8192)
-            Iterator.continually(in.read(chunk)).takeWhile(_ > 0)
-              .foreach(n => buf.write(chunk, 0, n))
-            new String(buf.toByteArray, java.nio.charset.StandardCharsets.UTF_8)
-          } finally in.close()
-        val lines = text.split("\n").toSeq.filter(_.nonEmpty)
+        val lines = readUtf8(fs, p).split("\n").toSeq.filter(_.nonEmpty)
         if (lines.headOption.exists(_ == s"ckpt\t$v") &&
           lines.lastOption.contains("end"))
           Some(Commit(v, "ckpt",
@@ -1102,7 +1185,7 @@ object TxnLog {
     * read would RESURRECT every MoR-deleted row still sitting in the
     * member's dv sidecar (the compaction-after-delete hazard q588
     * pins; this is also how OPTIMIZE retires the MoR read tax: the
-    * sidecar subtraction is materialized once and the sidecar becomes
+    * position filter is materialized once and the sidecar becomes
     * vacuum food via the segment-removed rule). Commits
     * remove(members) + add(merged) through OCC, so a concurrent
     * writer touching a member — including a NEW dv on it, refs join
@@ -1387,8 +1470,10 @@ object TxnLog {
     * its predecessor — the shared classification under batch
     * [[changeFeed]] and the streaming CDF tail
     * (streaming/Sessions.streamChangeFeedToBatch), so stream ≡ batch
-    * is structural, not coincidental. Returns (change frames, dv
-    * state after the commit, data files opened). */
+    * is structural, not coincidental. A dv commit's deletes are its
+    * base segment's rows at the positions in `new andNot old`: one scan
+    * of that segment with a position filter. Returns (change frames,
+    * dv state after the commit, files opened: segments and sidecars). */
   def commitChanges(s: SparkSession, c: Commit,
                     dvState0: Map[String, String], idCols: Seq[String],
                     mapping: Option[Seq[(String, String)]] = None)
@@ -1448,13 +1533,19 @@ object TxnLog {
       case (false, false) => Seq.empty
     }
     // dv actions: the commit's row-level deletes are the DELTA — each
-    // dv is cumulative, so the new sidecar is read like a segment minus
-    // the one it supersedes
+    // dv is cumulative, so the deleted rows are the base segment's rows
+    // at the new sidecar's positions minus the superseded sidecar's
     val dvDeletes = dvActs.map { a =>
       val prev = dvState.get(a.ref)
-      opened += 1 + prev.size
+      opened += 2 + prev.size // the segment, its new and old sidecar
       dvState += (a.ref -> a.path)
-      tag(readVisible(s, Seq(a.path -> prev), mapping), "delete")
+      val old = prev.map(DeletionVector.read(s, _)).getOrElse(Map.empty)
+      val delta = byFile(s, a.ref, DeletionVector.read(s, a.path).map {
+        case (f, rows) => old.get(f).foreach(rows.andNot); f -> rows
+      })
+      val base = new VisibleRows(s, Seq(a.ref -> None), mapping.isDefined)
+      tag(applyMapping(base.relation.where(atPositions(delta, in = true)),
+        mapping), "delete")
     }
     dvState --= removes // retired segments drop their association
     (addRemove ++ dvDeletes, dvState, opened)
@@ -1528,55 +1619,58 @@ object TxnLog {
   /** MERGE-ON-READ delete: remove every row matching `cond` WITHOUT
     * rewriting a single segment — for each live segment whose
     * still-visible rows match, write a NEW cumulative dv sidecar
-    * (previous sidecar rows + the new matches) and commit one `dv`
+    * (previous positions OR the new matches) and commit one `dv`
     * action per touched segment. Untouched segments get no action at
     * all (per-segment targeting — at 100 TB a point delete touches
     * one segment's sidecar, not the table). The write cost is
-    * O(deleted rows), not O(segment): the trade against copy-on-write
-    * ([[changeFeed]]'s rewrite path) is deferred to readers, which
-    * subtract the sidecar per scan until OPTIMIZE rewrites — the
-    * public deletion-vector design. ONE probe job over every live
-    * segment finds the segments with matching visible rows; each of
-    * those then writes its sidecar in one bounded job, the same
-    * documented class as [[compactionPlan]] execution.
+    * O(deleted positions) — a contiguous range compresses to a few
+    * bytes — not O(segment): the trade against copy-on-write
+    * ([[changeFeed]]'s rewrite path) is one position filter per scan
+    * until OPTIMIZE rewrites — the public deletion-vector design.
+    *
+    * ONE probe job over the [[VisibleRows]] relation: each partition
+    * builds bitmaps of its matching rows' positions per file on the
+    * executors, the driver ORs them into the previous sidecar's and
+    * writes each new sidecar itself (no write job). With schema
+    * inference, a delete runs two jobs however many segments it reads.
     *
     * Returns the commit result, or None when nothing matched (a no-op
     * delete publishes no commit).
     *
     * Column-mapping bound: `cond` evaluates against the segment files'
-    * PHYSICAL column names (dv sidecars must hold physical rows — the
-    * reader subtracts them from the raw segment by value, before the
-    * logical projection). On an evolved table, translate logical →
+    * PHYSICAL column names (the probe reads the raw segments, before
+    * the logical projection). On an evolved table, translate logical →
     * physical via [[mappingAt]] before building the predicate; a
     * logical-surface DELETE API on top of that translation is the
     * extension point. */
   def deleteWhereMoR(s: SparkSession, table: String, writer: String,
-                     cond: org.apache.spark.sql.Column)
-      : Option[CommitResult] = {
-    import org.apache.spark.sql.functions.lit
+                     cond: Column): Option[CommitResult] = {
     val cs = headFold(s, table, logState(s, table))
     require(cs.nonEmpty, s"cannot delete from empty table $table")
     val live = liveState(cs)
-    // a sidecar holds rows of its own segment file: per-file schemas
-    // wherever segments may differ physically
     val rows = new VisibleRows(s, live, everMapped(cs))
-    def hits(seg: String, dvo: Option[String]) = rows.segment(seg, dvo).filter(cond)
-    // the probe: each segment's hits tagged with its index, distinct
-    // per partition on the executors — one job, no shuffle of its own
-    val hit: Set[Int] =
-      if (live.isEmpty) Set.empty
-      else live.zipWithIndex
-        .map { case ((seg, dvo), i) => hits(seg, dvo).select(lit(i)) }
-        .reduce(_ unionAll _)
-        .rdd.mapPartitions(_.map(_.getInt(0)).toSet.iterator)
-        .collect().toSet
-    val actions = live.zipWithIndex.collect { case ((seg, dvo), i) if hit(i) =>
-      val newDv = dvo.map(dv => rows.read(dv).unionAll(hits(seg, dvo)))
-        .getOrElse(hits(seg, dvo))
-      val dvPath = s"$table/_dv/${new Path(seg).getName}" +
-        s"_dv${stagingSeq.incrementAndGet()}"
-      newDv.coalesce(1).write.parquet(dvPath)
-      Action("dv", dvPath, ref = seg)
+    val hits: Map[String, Roaring64NavigableMap] =
+      rows.all.where(cond)
+        .select(col("_metadata.file_path"), col("_metadata.row_index"))
+        .rdd.mapPartitions { it =>
+          val m = scala.collection.mutable.HashMap.empty[String, Roaring64NavigableMap]
+          it.foreach(r => m.getOrElseUpdate(r.getString(0), new Roaring64NavigableMap())
+            .addLong(r.getLong(1)))
+          m.iterator
+        }
+        .collect()
+        .groupMapReduce(h => fileKey(h._1))(_._2) { (a, b) => a.or(b); a }
+    // cumulative: every file's new matches OR its previous positions
+    val deleted = rows.deleted ++ hits.map { case (f, rs) =>
+      rows.deleted.get(f).foreach(rs.or)
+      f -> rs
+    }
+    val actions = live.flatMap { case (seg, _) =>
+      val dir = absolute(s, seg) + "/"
+      if (!hits.keys.exists(_.startsWith(dir))) None
+      else Some(Action("dv", DeletionVector.write(s, table, seg, deleted.collect {
+        case (f, rs) if f.startsWith(dir) => f.stripPrefix(dir) -> rs
+      }), ref = seg))
     }
     if (actions.isEmpty) None
     else Some(commitWithRetry(s, table, writer, actions,

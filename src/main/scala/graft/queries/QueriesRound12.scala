@@ -177,10 +177,10 @@ object QueriesRound12 {
     // table's live segment PATHS are unchanged (0 rewritten) and only
     // the hit segment carries a sidecar (per-segment targeting — the
     // even-keys segment matched nothing and got no action); the MoR
-    // scan reads base segments + sidecar (3 input files vs CoW's 2);
+    // read opens base segments + sidecar (3 files vs CoW's 2);
     // and both CDFs emit the SAME row-level deletes (dv delta ≡
     // rewrite diff). At 100 TB this is the write-amplification story:
-    // a point delete costs O(deleted rows), not O(segment rewrite).
+    // a point delete costs O(deleted positions), not O(segment rewrite).
     QueryDef("q586_txn_merge_on_read",
       (s, d) => {
         val root = Scratch.dir(s, d) + "/txn_q586"
@@ -222,7 +222,9 @@ object QueriesRound12 {
         val nRewritten = morState.map(_._1).count(p => p != ma && p != mb)
         val nSidecars = morState.count(_._2.nonEmpty)
         val dvOnB = morState.toMap.apply(mb).nonEmpty
-        val morInputs = snapMor.inputFiles.length
+        // the files the MoR read opens: the scan's parquet files plus
+        // the active sidecars its reader loaded on the driver
+        val morInputs = snapMor.inputFiles.length + nSidecars
         // CDF equivalence: dv delta ≡ rewrite diff, row for row
         val (cdfCow, _) = TxnLog.changeFeed(s, cow, 2L, 3L, Seq("o_orderkey"))
         val (cdfMor, _) = TxnLog.changeFeed(s, mor, 2L, 3L, Seq("o_orderkey"))
@@ -316,8 +318,8 @@ object QueriesRound12 {
 
     // ---- q588: OPTIMIZE a merge-on-read table — dv-aware compaction ------------------
     // The q577 × q586 interaction: compacting a DV'd segment from its
-    // RAW bytes would resurrect every MoR-deleted row (the sidecar
-    // subtraction lives at read time, and a rewrite that forgets it
+    // RAW bytes would resurrect every MoR-deleted row (the sidecar's
+    // position filter lives at read time, and a rewrite that forgets it
     // bakes the zombies in). TxnLog.compactBin reads each member's
     // VISIBLE rows; the lane pins the whole contract — the snapshot is
     // bit-identical across the rewrite (rows + cents), the compaction
