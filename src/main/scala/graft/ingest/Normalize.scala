@@ -1,8 +1,10 @@
 package graft.ingest
 
+import graft.functions.{SentenceSplit, YoutubeVideoId}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftglue.GraftPlanApi
 
 /** Pure, column-expression normalization transforms — the reference's
   * record-shaping steps (SURVEY §2A T5-T14) re-expressed as
@@ -14,27 +16,27 @@ object Normalize {
 
   // -------------------------------------------------------------------
   // T9 — URL → YouTube video id (reference: inputs/utils.py:11-24).
-  // Bare 11-char id fullmatch first, then the four URL alternates.
-  // A single coalesce of regexp_extract keeps the whole thing inside
-  // whole-stage codegen (no UDF).
+  // Bare 11-char id fullmatch first, then the four URL alternates, each
+  // taking its leftmost match, first non-null wins. The regexes below
+  // are the spec (the DuckDB oracle replays them verbatim); Spark runs
+  // them as one byte scan per URL (functions.YoutubeVideoId), a native
+  // expression that stays inside whole-stage codegen and compiles no
+  // per-row Pattern.
   // -------------------------------------------------------------------
-  private val idCls = "[0-9A-Za-z_-]{11}"
+  val youtubeIdClass = "[0-9A-Za-z_-]{11}"
   val youtubeUrlPatterns: Seq[String] = Seq(
-    s"(?:v=|vi=)($idCls)",
-    s"youtu\\.be/($idCls)",
-    s"/embed/($idCls)",
-    s"/shorts/($idCls)")
+    s"(?:v=|vi=)($youtubeIdClass)",
+    s"youtu\\.be/($youtubeIdClass)",
+    s"/embed/($youtubeIdClass)",
+    s"/shorts/($youtubeIdClass)")
 
   /** Null when no id can be extracted (the reference raises; callers
-    * route null rows to the error branch — T11 tagged-union dataflow). */
-  def videoId(url: Column): Column = {
-    val trimmed = trim(url)
-    val alternates = youtubeUrlPatterns.map { p =>
-      nullif(regexp_extract(trimmed, p, 1), lit(""))
-    }
-    when(trimmed.rlike(s"^$idCls$$"), trimmed)
-      .otherwise(coalesce(alternates: _*))
-  }
+    * route null rows to the error branch — T11 tagged-union dataflow).
+    * The trimmed input is returned when it is a bare id, with Java's
+    * `$` semantics: one final line terminator may follow the id and
+    * stays in the value. */
+  def videoId(url: Column): Column =
+    GraftPlanApi.column(YoutubeVideoId(GraftPlanApi.expression(url)))
 
   // -------------------------------------------------------------------
   // T5 — segment array construction (reference:
@@ -79,10 +81,14 @@ object Normalize {
   // -------------------------------------------------------------------
   // T13 — sentence splitting (reference:
   // inputs/json_to_toxic_label.py:10-12, split on `(?<=[.!?])\s+`,
-  // drop blanks). Java regex supports the lookbehind directly.
+  // drop blanks). One byte scan per text (functions.SentenceSplit)
+  // with Java's split semantics: trailing empty pieces kept, then
+  // every piece of only ASCII spaces dropped. No per-row Pattern and
+  // no higher-order function, so the Generate above it stays in
+  // whole-stage codegen.
   // -------------------------------------------------------------------
   def sentences(text: Column): Column =
-    filter(split(text, "(?<=[.!?])\\s+"), s => length(trim(s)) > 0)
+    GraftPlanApi.column(SentenceSplit(GraftPlanApi.expression(text)))
 
   /** T13 + T14 as a DataFrame transform: one row per sentence with the
     * label column initialized false (inputs/json_to_toxic_label.py:14). */

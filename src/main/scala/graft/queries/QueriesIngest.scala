@@ -16,8 +16,6 @@ object QueriesIngest {
 
   val FixtureDir = "/root/repo/src/test/resources/fixtures"
 
-  private val idCls = "[0-9A-Za-z_-]{11}"
-
   private def readJson(s: SparkSession, schema: StructType, file: String): DataFrame =
     s.read.schema(schema).json(s"$FixtureDir/$file")
 
@@ -26,12 +24,13 @@ object QueriesIngest {
   private val transcriptSchema = StructType(Seq(
     StructField("tid", LongType), StructField("transcript", StringType)))
 
-  /** DuckDB mirror of Normalize.videoId (reference: inputs/utils.py:11-24). */
+  /** DuckDB mirror of Normalize.videoId (reference: inputs/utils.py:11-24),
+    * built from Normalize's id class and URL patterns, the one spec. */
   private def duckVideoId(url: String): String = {
     val alternates = Normalize.youtubeUrlPatterns.map { p =>
       s"nullif(regexp_extract(trim($url), '$p', 1), '')"
     }.mkString(", ")
-    s"(CASE WHEN regexp_full_match(trim($url), '$idCls') THEN trim($url) " +
+    s"(CASE WHEN regexp_full_match(trim($url), '${Normalize.youtubeIdClass}') THEN trim($url) " +
       s"ELSE coalesce($alternates) END)"
   }
 

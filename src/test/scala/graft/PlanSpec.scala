@@ -1,7 +1,12 @@
 package graft
 
+import graft.ingest.Normalize
 import graft.queries.Registry
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.expressions.{ArrayFilter, RLike, RegExpExtract, StringSplit}
+import org.apache.spark.sql.execution.{GenerateExec, InputAdapter, SparkPlan, WholeStageCodegenExec}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
 /** Physical-plan assertions: the properties that make these queries
   * scale (pushdown, pruning, broadcast, top-k operator, map-side
@@ -447,5 +452,60 @@ class PlanSpec extends SparkSpec {
     val overCk = w2.filter(_.contains("__ck"))
     assert(overCk.nonEmpty && overCk.forall(_.contains("__g")),
       w2.mkString("\n"))
+  }
+
+  /** An RDD-backed (tid, t) frame: nothing folds on the driver. */
+  private def texts(rows: (Long, String)*): DataFrame = {
+    import spark.implicits._
+    spark.createDataset(spark.sparkContext.parallelize(rows, 2)).toDF("tid", "t")
+  }
+
+  test("T13: sentenceLabelInit's Generate runs inside whole-stage codegen") {
+    val plan = Normalize.sentenceLabelInit(texts(1L -> "A. B"), "t").queryExecution.executedPlan
+    // the operators one codegen stage fuses: its tree down to its inputs
+    def fused(p: SparkPlan): Seq[SparkPlan] =
+      p +: (p match { case _: InputAdapter => Nil; case _ => p.children.flatMap(fused) })
+    val inStages = plan.collect { case w: WholeStageCodegenExec => fused(w.child) }.flatten
+    assert(inStages.exists(_.isInstanceOf[GenerateExec]), plan)
+  }
+
+  test("T9/T13: videoId and sentences plan no regex, split or higher-order filter") {
+    val t = texts(1L -> "https://youtu.be/dQw4w9WgXcQ. Next")
+    val frames = Seq(
+      t.select(Normalize.videoId(col("t"))),
+      t.select(Normalize.sentences(col("t"))),
+      Normalize.sentenceLabelInit(t, "t")) ++
+      Seq("q60_video_id", "q62_sentence_labels", "q63_status_tally")
+        .map(q => Registry.byName(q).fn(spark, sf))
+    frames.foreach { df =>
+      val qe = df.queryExecution
+      val found = Seq(qe.analyzed, qe.optimizedPlan).flatMap(_.flatMap(_.expressions))
+        .flatMap(_.collect {
+          case e @ (_: RLike | _: RegExpExtract | _: StringSplit | _: ArrayFilter) => e.prettyName
+        })
+      assert(found.isEmpty, qe.optimizedPlan)
+    }
+  }
+
+  test("T9/T13: videoId and sentenceLabelInit keep their output schemas") {
+    val nullable = texts(1L -> "A. B")
+    val notNull = spark.range(1).select(col("id").as("tid"), lit("A. B").as("t"))
+    for (df <- Seq(nullable, notNull)) {
+      val tNull = df.schema("t").nullable
+      assert(Normalize.sentenceLabelInit(df, "t").schema == StructType(Seq(
+        StructField("tid", LongType, nullable = false),
+        StructField("t", StringType, tNull),
+        StructField("sentence_no", IntegerType, nullable = false),
+        StructField("sentence", StringType, nullable = false),
+        StructField("toxic", BooleanType, nullable = false))))
+      assert(Normalize.sentenceLabelInit(df, "t").schema ==
+        IngestTextSlowPath.sentenceLabelInit(df, "t").schema)
+      assert(df.select(Normalize.sentences(col("t")).as("s")).schema ==
+        StructType(Seq(StructField("s", ArrayType(StringType, containsNull = false), tNull))))
+      assert(df.select(Normalize.videoId(col("t")).as("video_id")).schema ==
+        StructType(Seq(StructField("video_id", StringType, nullable = true))))
+      assert(df.select(Normalize.videoId(col("t")).as("video_id")).schema ==
+        df.select(IngestTextSlowPath.videoId(col("t")).as("video_id")).schema)
+    }
   }
 }
