@@ -51,12 +51,13 @@ import org.roaringbitmap.longlong.Roaring64NavigableMap
   *   no second relation ([[VisibleRows]]).
   *
   * At 100 TB the log is O(commits), not O(data): resolving it is a
-  * driver-side listing of tiny files (checkpoint/compaction of the log
-  * itself would follow the same public designs), while the data reads
-  * stay fully distributed over the resolved segment list. On object
-  * stores without atomic rename the publish step swaps to a
-  * conditional PUT / external lock service — same protocol, different
-  * primitive (the Delta paper's LogStore abstraction).
+  * driver-side listing of tiny files, and every state read opens only
+  * the newest checkpoint and the commits after it ([[stateAt]]),
+  * while the data reads stay fully distributed over the resolved
+  * segment list. On object stores without atomic rename the publish
+  * step swaps to a conditional PUT / external lock service — same
+  * protocol, different primitive (the Delta paper's LogStore
+  * abstraction).
   */
 object TxnLog {
 
@@ -180,20 +181,7 @@ object TxnLog {
       // new ones parse through the same reader
       val hdr = s"commit\t$version\t$writer" +
         (if (ts >= 0L) s"\t$ts" else "")
-      val body = (hdr +:
-        actions.map { a =>
-          val st =
-            if (a.stats.isEmpty) ""
-            else a.stats.toSeq.sortBy(_._1)
-              .map { case (c, (lo, hi)) => s"$c:$lo:$hi" }
-              .mkString("\t", ",", "")
-          // ref is field 4 — an empty stats field holds its slot so
-          // old parsers (≤3 fields) and new lines stay one format
-          val rf =
-            if (a.ref.isEmpty) ""
-            else (if (a.stats.isEmpty) "\t\t" else "\t") + a.ref
-          s"${a.kind}\t${a.path}$st$rf"
-        }).mkString("", "\n", "\n")
+      val body = (hdr +: actions.map(actionLine)).mkString("", "\n", "\n")
       out.write(body.getBytes(java.nio.charset.StandardCharsets.UTF_8))
     } finally out.close()
     // the atomic publish: a creation-exclusive primitive per store
@@ -357,30 +345,78 @@ object TxnLog {
       .map(_._1)
       .filter(_._1 > fromVersion) // bodies below the bound never open
     contiguous.map { case (v, p) =>
-      val lines = readUtf8(fs, p).split("\n").toSeq.filter(_.nonEmpty)
-      val head = lines.head.split("\t")
-      require(head(0) == "commit" && head(1).toLong == v,
-        s"malformed commit file ${p.getName}")
-      Commit(v, head(2), lines.tail.map(parseActionLine),
-        ts = if (head.length > 3) head(3).toLong else -1L)
+      parseCommit(v, readUtf8(fs, p).split("\n").toSeq.filter(_.nonEmpty))
     }.toSeq
   }
 
-  /** Every commit a fold at the head needs, from one listing: the
-    * whole log, or on a truncated log the floor checkpoint plus every
-    * commit above it (all of them survive by the truncation rule, so a
-    * fold anchored at the floor sees every remove since). */
+  /** The non-empty lines of commit `v`'s body → [[Commit]]: the header
+    * `commit \t v \t writer [\t ts]`, then one action line each — the
+    * parser under the batch log reader and the streaming change feed. */
+  private[graft] def parseCommit(v: Long, lines: Seq[String]): Commit = {
+    val head = lines.head.split("\t")
+    require(head(0) == "commit" && head(1).toLong == v,
+      s"malformed commit file ${f"$v%020d.txn"}")
+    Commit(v, head(2), lines.tail.map(parseActionLine),
+      ts = if (head.length > 3) head(3).toLong else -1L)
+  }
+
+  private def noCheckpoint(table: String, floor: Long) =
+    new IllegalStateException(
+      s"history floor $floor of $table has no readable checkpoint")
+
+  /** The commits a fold of the table STATE at version `v` opens, from
+    * one listing: the newest complete checkpoint at or below `v` (as a
+    * synthetic base commit), then the commits above it up to `v`. With
+    * no readable checkpoint at or below `v` it is the whole log from
+    * version 1 — unless the log was truncated, where that history is
+    * gone and the named error is the only honest answer. Every read of
+    * table state (snapshots, checkpoints, the change feed's base, the
+    * write paths' constraint, identity, compaction, delete and restore
+    * folds) starts here, so each costs O(commits since the newest
+    * checkpoint) body reads however old the table is. Returns (the
+    * checkpoint version the fold starts at, 0 = none; the commits). */
+  private def stateAt(s: SparkSession, table: String, st: LogState,
+                      v: Long): (Long, Seq[Commit]) = {
+    if (v < st.floor) throw new LogTruncatedException(table, v, st.floor)
+    latestCheckpointFrom(s, table, st.ckpts, v) match {
+      case Some(base) =>
+        (base.version, base +: commitsFrom(s, table, st, Some(v), base.version))
+      case None if st.floor > 0L => throw noCheckpoint(table, st.floor)
+      case None => (0L, commitsFrom(s, table, st, Some(v), 0L))
+    }
+  }
+
+  /** The HISTORY fold at the head, for the two callers whose point is
+    * the removes a checkpoint folds away ([[vacuum]], [[truncateLog]]):
+    * the whole log, or on a truncated log the floor checkpoint plus
+    * every commit above it (all of them survive by the truncation rule,
+    * so a fold anchored at the floor sees every remove since). */
   private def headFold(s: SparkSession, table: String,
                        st: LogState): Seq[Commit] =
     if (st.floor == 0L) commitsFrom(s, table, st, None, 0L)
-    else latestCheckpointFrom(s, table, st.ckpts, st.floor).getOrElse(
-        throw new IllegalStateException(
-          s"history floor ${st.floor} of $table has no readable checkpoint")) +:
+    else latestCheckpointFrom(s, table, st.ckpts, st.floor)
+        .getOrElse(throw noCheckpoint(table, st.floor)) +:
       commitsFrom(s, table, st, None, st.floor)
 
-  /** One commit-body ACTION line → [[Action]] — the single parser
-    * under the batch log reader and the streaming manifest tail (the
-    * streamed lines are the same bytes the batch reader opens). */
+  /** [[Action]] → one ACTION line, the format of commit bodies and
+    * checkpoint bodies alike: `kind \t path [\t stats [\t ref]]`. */
+  private def actionLine(a: Action): String = {
+    val st =
+      if (a.stats.isEmpty) ""
+      else a.stats.toSeq.sortBy(_._1)
+        .map { case (c, (lo, hi)) => s"$c:$lo:$hi" }
+        .mkString("\t", ",", "")
+    // ref is field 4 — an empty stats field holds its slot so old
+    // parsers (≤3 fields) and new lines stay one format
+    val rf =
+      if (a.ref.isEmpty) ""
+      else (if (a.stats.isEmpty) "\t\t" else "\t") + a.ref
+    s"${a.kind}\t${a.path}$st$rf"
+  }
+
+  /** One ACTION line → [[Action]] — the single parser under the batch
+    * log reader, the checkpoint reader and the streaming manifest tail
+    * (the streamed lines are the same bytes the batch reader opens). */
   def parseActionLine(l: String): Action = {
     val a = l.split("\t")
     val stats =
@@ -392,28 +428,40 @@ object TxnLog {
     Action(a(0), a(1), stats, ref = if (a.length > 3) a(3) else "")
   }
 
-  /** Live table state after folding `cs` in version order (stable
-    * insertion order — deterministic read plans): each live segment
-    * path with its ACTIVE deletion-vector sidecar, if any. A `dv`
-    * action requires its base segment live and supersedes any earlier
-    * dv on the same segment; a `remove` retires the segment AND its
-    * dv association. */
-  def liveState(cs: Seq[Commit]): Seq[(String, Option[String])] = {
-    val live = new java.util.LinkedHashMap[String, Option[String]]()
+  /** Live table state after folding `cs` ([[foldLive]]): each live
+    * segment path with its ACTIVE deletion-vector sidecar, if any. */
+  def liveState(cs: Seq[Commit]): Seq[(String, Option[String])] =
+    foldLive(cs).map { case (a, dv) => a.path -> dv }
+
+  /** Live ADD actions (with their stats) after folding `cs`
+    * ([[foldLive]]) — the manifest view a stats-aware reader prunes
+    * from without touching data files. */
+  def liveActions(cs: Seq[Commit]): Seq[Action] = foldLive(cs).map(_._1)
+
+  /** The one fold over file actions, in version order (stable insertion
+    * order — deterministic read plans): each live segment's ADD action
+    * (with its zone maps) and its ACTIVE deletion-vector sidecar, if
+    * any. A `dv` action requires its base segment live and supersedes
+    * any earlier dv on the same segment — the base add and its stats
+    * stay, since row deletes only SHRINK a segment's min/max range; a
+    * `remove` retires the segment AND its dv association. */
+  private def foldLive(cs: Seq[Commit]): Seq[(Action, Option[String])] = {
+    val live = new java.util.LinkedHashMap[String, (Action, Option[String])]()
     cs.foreach(_.actions.foreach { a =>
       a.kind match {
-        case "add" => live.put(a.path, None)
+        case "add" => live.put(a.path, (a, None))
         case "remove" => live.remove(a.path)
         case "dv" =>
-          require(live.containsKey(a.ref),
+          val base = live.get(a.ref)
+          require(base != null,
             s"dv sidecar ${a.path} references non-live segment ${a.ref}")
-          live.put(a.ref, Some(a.path)) // keeps insertion order
+          live.put(a.ref, (base._1, Some(a.path))) // keeps insertion order
         case "meta" => () // table metadata, not a file — see columnMapping
         case k => throw new IllegalArgumentException(s"unknown action $k")
       }
     })
     import scala.jdk.CollectionConverters._
-    live.asScala.toSeq
+    live.values.asScala.toSeq
   }
 
   /** Live segment paths after folding `cs` in version order (stable
@@ -595,28 +643,6 @@ object TxnLog {
       }.toMap
   }
 
-  /** Live ADD actions (with their stats) after folding `cs` — the
-    * manifest view a stats-aware reader prunes from without touching
-    * data files. */
-  def liveActions(cs: Seq[Commit]): Seq[Action] = {
-    val live = new java.util.LinkedHashMap[String, Action]()
-    cs.foreach(_.actions.foreach { a =>
-      a.kind match {
-        case "add" => live.put(a.path, a)
-        case "remove" => live.remove(a.path)
-        case "dv" => // the base add (and its zone maps) stays live:
-          // row deletes only SHRINK a segment's min/max range, so the
-          // stats remain valid pruning bounds under merge-on-read
-          require(live.containsKey(a.ref),
-            s"dv sidecar ${a.path} references non-live segment ${a.ref}")
-        case "meta" => () // table metadata, not a file
-        case k => throw new IllegalArgumentException(s"unknown action $k")
-      }
-    })
-    import scala.jdk.CollectionConverters._
-    live.values.asScala.toSeq
-  }
-
   // ---- column mapping (rename / drop without rewrite) -----------------
 
   /** Build a `meta` action carrying the table's column mapping:
@@ -717,11 +743,7 @@ object TxnLog {
                        df: DataFrame): Unit = {
     import org.apache.spark.sql.functions.{expr, lit, sum, when}
     val st = logState(s, table)
-    val baseCs =
-      if (st.floor == 0L) commitsFrom(s, table, st, None, 0L)
-      else latestCheckpointFrom(s, table, st.ckpts, st.floor).toSeq ++
-        commitsFrom(s, table, st, None, st.floor)
-    val cons = constraints(baseCs)
+    val cons = constraints(stateAt(s, table, st, st.head)._2)
     if (cons.isEmpty) return
     val aggs = cons.zipWithIndex.map { case ((_, e), i) =>
       sum(when(expr(e) === lit(false), 1L).otherwise(0L)).as(s"__c$i")
@@ -775,11 +797,7 @@ object TxnLog {
     while (true) {
       attempt += 1
       val st = logState(s, table)
-      val cs =
-        if (st.floor == 0L) commitsFrom(s, table, st, None, 0L)
-        else latestCheckpointFrom(s, table, st.ckpts, st.floor)
-          .toSeq ++ commitsFrom(s, table, st, None, st.floor)
-      val hwm = identityHighWater(cs, idCol)
+      val hwm = identityHighWater(stateAt(s, table, st, st.head)._2, idCol)
       val withIds = graft.ops.Relational.twoLevelRowNumberBy(
           df.withColumn("__one", lit(1)), "__one", orderCol,
           coarseWidth = 1L << 20, outCol = "__rn")
@@ -790,7 +808,7 @@ object TxnLog {
         val res = commitWithRetry(s, table, writer, Seq(
             Action("add", segPath),
             Action("meta", s"idhwm=$idCol:${hwm + n}")),
-          baseVersion = Some(cs.lastOption.map(_.version).getOrElse(0L)))
+          baseVersion = Some(st.head))
         return (res, hwm + 1L, hwm + n)
       } catch {
         case e: CommitConflictException if attempt < maxAttempts =>
@@ -873,112 +891,91 @@ object TxnLog {
     logState(s, table).head
 
   /** Snapshot-isolation read at `asOf` (None = latest): one log
-    * listing, then a plain distributed parquet scan of the resolved
-    * immutable segments. Returns (frame, versionRead, nLiveSegments). */
+    * listing, a fold from the newest checkpoint at or below the version
+    * ([[stateAt]] — O(commits since it) body reads), then a plain
+    * distributed parquet scan of the resolved immutable segments.
+    * Returns (frame, versionRead, nLiveSegments). */
   def snapshot(s: SparkSession, table: String,
                asOf: Option[Long] = None): (DataFrame, Long, Int) = {
+    val (df, v, n, _) = snapshotViaCheckpoint(s, table, asOf)
+    (df, v, n)
+  }
+
+  /** [[snapshot]], also returning the checkpoint version its fold
+    * started from (0 = none: the fold opened the log from version 1).
+    * Returns (frame, version, nSegments, checkpointVersion). */
+  def snapshotViaCheckpoint(s: SparkSession, table: String,
+                            asOf: Option[Long] = None)
+      : (DataFrame, Long, Int, Long) = {
     // ONE listing decides floor, head, vacuum horizon AND the fold —
-    // the resolution cannot mix two log states (and pays one listing,
-    // not the 4-6 a per-helper re-list would cost on the path the
-    // TxnProbe identified listing as the dominant residue of)
+    // the resolution cannot mix two log states
     val st = logState(s, table)
-    if (st.floor > 0L) {
-      // truncated log: a full-log fold no longer exists. Reads below
-      // the floor get the named error; reads at/above it ride the
-      // checkpoint base transparently.
-      if (asOf.exists(_ < st.floor))
-        throw new LogTruncatedException(table, asOf.get, st.floor)
-      val (df, v, n, _) = snapshotViaCheckpointFrom(s, table, st, asOf)
-      return (df, v, n)
-    }
-    val cs = commitsFrom(s, table, st, asOf, 0L)
+    val (ckptV, cs) = stateAt(s, table, st, asOf.getOrElse(st.head))
     require(cs.nonEmpty, s"no commits at or before $asOf in $table")
     val v = cs.last.version
     if (v < st.vacHorizon)
       throw new VersionVacuumedException(table, v, st.vacHorizon)
     val state = liveState(cs)
     // versioned: the mapping AT v
-    (readVisible(s, state, columnMapping(cs)), v, state.size)
+    (readVisible(s, state, columnMapping(cs)), v, state.size, ckptV)
   }
 
-  /** Write a log CHECKPOINT at `upTo`: the resolved live-segment set
-    * folded into one `<v>.ckpt` file, so readers resolve
-    * O(commits since checkpoint) instead of O(all commits) — how every
-    * public table format keeps a year-old table's log readable.
-    * Checkpoints are DERIVED data (recomputable from the commits they
-    * summarize), so plain overwrite is safe: concurrent checkpointers
-    * at the same version write identical bytes, and a torn checkpoint
-    * is detected by its trailer line and ignored. */
+  /** Write a log CHECKPOINT at `upTo`: the table state at `upTo` as one
+    * `<v>.ckpt` file — a `ckpt \t v` header, the folded metadata and
+    * each live segment's add action (zone maps included) followed by
+    * its active dv, all as commit action lines, and an `end` trailer —
+    * so readers resolve O(commits since checkpoint) instead of O(all
+    * commits), how every public table format keeps a year-old table's
+    * log readable. The fold that builds it starts at the previous
+    * checkpoint ([[stateAt]]), so the every-N policy never re-opens
+    * bodies an older checkpoint already summarizes. Checkpoints are
+    * DERIVED data (recomputable from the commits they summarize), so
+    * plain overwrite is safe: concurrent checkpointers at the same
+    * version write identical bytes, and a torn checkpoint is detected
+    * by its trailer line and ignored. */
   def writeCheckpoint(s: SparkSession, table: String, upTo: Long): Unit =
     writeCheckpointFrom(s, table, logState(s, table), upTo)
 
   private def writeCheckpointFrom(s: SparkSession, table: String, st: LogState,
                                   upTo: Long): Unit = {
-    // ALWAYS fold from the newest usable checkpoint at or below
-    // `upTo`, not just on truncated logs: the every-N policy otherwise
-    // re-opens all N commit bodies at the Nth checkpoint — O(head)
-    // per checkpoint, O(head²/every) cumulative, the exact cost
-    // checkpoints exist to remove. The ckpt-fold ≡ full-fold identity
-    // is the property TxnLogConcurrencySpec pins at every version.
-    val floor = st.floor
-    if (upTo < floor) throw new LogTruncatedException(table, upTo, floor)
-    val folded = latestCheckpointFrom(s, table, st.ckpts, upTo) match {
-      case Some(base) =>
-        val suffix = commitsFrom(s, table, st, Some(upTo), base.version)
-        require(suffix.lastOption.map(_.version).getOrElse(base.version) == upTo,
-          s"cannot checkpoint at $upTo: log only reaches " +
-            s"${suffix.lastOption.map(_.version).getOrElse(base.version)}")
-        base +: suffix
-      case None =>
-        if (floor > 0L) throw new IllegalStateException(
-          s"history floor $floor of $table has no readable checkpoint")
-        val cs = commitsFrom(s, table, st, Some(upTo), 0L)
-        require(cs.nonEmpty && cs.last.version == upTo,
-          s"cannot checkpoint at $upTo: log only reaches ${cs.lastOption.map(_.version)}")
-        cs
-    }
-    val live = liveState(folded)
+    val folded = stateAt(s, table, st, upTo)._2
+    require(folded.lastOption.exists(_.version == upTo),
+      s"cannot checkpoint at $upTo: log only reaches ${folded.lastOption.map(_.version)}")
     // table METADATA is part of the state a checkpoint must carry:
     // log truncation deletes the commits that declared it, and a
     // mapping silently lost would resurface every dropped column, a
     // constraint silently lost would stop validating writes. The
     // checkpoint stores the FOLDED results (latest mapping, surviving
     // constraints) — drops need not persist
-    val mappingLine = folded.flatMap(_.actions.filter(a =>
-        a.kind == "meta" && a.path.startsWith("colmap=")))
-      .lastOption.map(a => s"meta\t${a.path}").toSeq
-    val constraintLines = constraints(folded)
-      .map { case (n, e) => s"meta\tconstraint=$n=$e" }
+    val mapping = folded.flatMap(_.actions.filter(a =>
+        a.kind == "meta" && a.path.startsWith("colmap="))).lastOption
+    val cons = constraints(folded).map { case (n, e) => constraintAction(n, e) }
     // identity high-waters: one folded mark per column (losing one to
     // truncation would hand already-used id ranges out again)
-    val hwmLines = folded.flatMap(_.actions.collect {
+    val hwms = folded.flatMap(_.actions.collect {
         case a if a.kind == "meta" && a.path.startsWith("idhwm=") =>
           a.path.stripPrefix("idhwm=").takeWhile(_ != ':')
       }).distinct.map { c =>
-        s"meta\tidhwm=$c:${identityHighWater(folded, c)}"
+        Action("meta", s"idhwm=$c:${identityHighWater(folded, c)}")
       }
+    // each live add, immediately followed by its active dv (fold order
+    // matters: a dv requires its segment already live in the replay)
+    val live = foldLive(folded).flatMap { case (add, dv) =>
+      add +: dv.map(Action("dv", _, ref = add.path)).toSeq
+    }
+    val lines = (mapping.toSeq ++ cons ++ hwms ++ live).map(actionLine)
     val dir = logDir(table)
-    val fs = hfs(s, dir)
-    val out = fs.create(new Path(dir, f"$upTo%020d.ckpt"), true)
-    try {
-      // each live segment line, immediately followed by its active dv
-      // association (fold order matters: the dv line requires its
-      // segment already live in the synthetic replay)
-      val lines = mappingLine ++ constraintLines ++ hwmLines ++
-        live.flatMap { case (p, dvo) =>
-          s"live\t$p" +: dvo.map(dv => s"dv\t$p\t$dv").toSeq
-        }
-      val body = (s"ckpt\t$upTo" +: lines :+ "end")
-        .mkString("", "\n", "\n")
-      out.write(body.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    } finally out.close()
+    val out = hfs(s, dir).create(new Path(dir, f"$upTo%020d.ckpt"), true)
+    try out.write((s"ckpt\t$upTo" +: lines :+ "end").mkString("", "\n", "\n")
+      .getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    finally out.close()
   }
 
   /** Greatest complete checkpoint at or below `asOf`, as a synthetic
-    * base commit (version, add-actions), or None — against candidate
-    * versions from an already-taken listing (checkpoint BODIES still
-    * open fresh — they are immutable once complete, so that read needs
-    * no coordination with the listing). */
+    * base commit, or None — against candidate versions from an
+    * already-taken listing (checkpoint BODIES still open fresh — they
+    * are immutable once complete, so that read needs no coordination
+    * with the listing). */
   private def latestCheckpointFrom(s: SparkSession, table: String,
                                    ckpts: Seq[Long],
                                    asOf: Long): Option[Commit] = {
@@ -987,66 +984,14 @@ object TxnLog {
       .filter(_ <= asOf)
       .sortBy(-_)
       .iterator
-      .map(v => v -> new Path(logDir(table), f"$v%020d.ckpt"))
-      .map { case (v, p) =>
-        val lines = readUtf8(fs, p).split("\n").toSeq.filter(_.nonEmpty)
-        if (lines.headOption.exists(_ == s"ckpt\t$v") &&
-          lines.lastOption.contains("end"))
-          Some(Commit(v, "ckpt",
-            lines.tail.dropRight(1).map { l =>
-              val f = l.split("\t")
-              f(0) match {
-                case "live" => Action("add", f(1))
-                case "dv" => Action("dv", f(2), ref = f(1))
-                case "meta" => Action("meta", f(1))
-                case k => throw new IllegalArgumentException(
-                  s"unknown checkpoint line kind '$k' in $p")
-              }
-            }))
+      .map { v =>
+        val lines = readUtf8(fs, new Path(logDir(table), f"$v%020d.ckpt"))
+          .split("\n").toSeq.filter(_.nonEmpty)
+        if (lines.headOption.contains(s"ckpt\t$v") && lines.lastOption.contains("end"))
+          Some(Commit(v, "ckpt", lines.tail.dropRight(1).map(parseActionLine)))
         else None // torn checkpoint: skip it, older ones still work
       }
       .collectFirst { case Some(c) => c }
-  }
-
-  /** Snapshot read that starts from the newest usable checkpoint and
-    * applies only the commit suffix — same result as [[snapshot]],
-    * O(suffix) log reads. Returns (frame, version, nSegments,
-    * checkpointVersion: 0 = none used). */
-  def snapshotViaCheckpoint(s: SparkSession, table: String,
-                            asOf: Option[Long] = None)
-      : (DataFrame, Long, Int, Long) =
-    snapshotViaCheckpointFrom(s, table, logState(s, table), asOf)
-
-  private def snapshotViaCheckpointFrom(s: SparkSession, table: String,
-                                        st: LogState, asOf: Option[Long])
-      : (DataFrame, Long, Int, Long) = {
-    val cap = asOf.getOrElse(st.head)
-    if (cap < st.floor) throw new LogTruncatedException(table, cap, st.floor)
-    latestCheckpointFrom(s, table, st.ckpts, cap) match {
-      case None =>
-        // floor > 0 implies the floor checkpoint must be readable — a
-        // torn anchor would otherwise loop back through snapshot()
-        if (st.floor > 0L) throw new IllegalStateException(
-          s"history floor ${st.floor} of $table has no readable checkpoint")
-        val cs = commitsFrom(s, table, st, asOf, 0L)
-        require(cs.nonEmpty, s"no commits at or before $asOf in $table")
-        val v = cs.last.version
-        if (v < st.vacHorizon)
-          throw new VersionVacuumedException(table, v, st.vacHorizon)
-        val state = liveState(cs)
-        (readVisible(s, state, columnMapping(cs)), v, state.size, 0L)
-      case Some(base) =>
-        // fromVersion = the checkpoint: bodies at or below it are never
-        // opened — this path reads O(suffix) commit files, full stop
-        val suffix = commitsFrom(s, table, st, Some(cap),
-          fromVersion = base.version)
-        val state = liveState(base +: suffix)
-        val v = suffix.lastOption.map(_.version).getOrElse(base.version)
-        if (v < st.vacHorizon)
-          throw new VersionVacuumedException(table, v, st.vacHorizon)
-        (readVisible(s, state, columnMapping(base +: suffix)), v, state.size,
-          base.version)
-    }
   }
 
   /** Read at a version below the vacuum horizon: the clean, NAMED
@@ -1159,7 +1104,8 @@ object TxnLog {
   def compactionPlan(s: SparkSession, table: String,
                      maxPerBin: Int = 8): Seq[Seq[String]] = {
     require(maxPerBin >= 2, s"a compaction bin needs >= 2 members, got $maxPerBin")
-    val live = liveFiles(headFold(s, table, logState(s, table)))
+    val st = logState(s, table)
+    val live = liveFiles(stateAt(s, table, st, st.head)._2)
     if (live.isEmpty) return Seq.empty
     val fs = hfs(s, new Path(table))
     val sizes = live.map { p =>
@@ -1213,7 +1159,7 @@ object TxnLog {
   private def binRows(s: SparkSession, table: String,
                       bin: Seq[String]): (DataFrame, Long) = {
     val st = logState(s, table)
-    val cs = headFold(s, table, st)
+    val cs = stateAt(s, table, st, st.head)._2
     val dvs = liveState(cs).toMap
     (new VisibleRows(s, bin.map(p => p -> dvs.get(p).flatten), everMapped(cs)).all,
       st.head)
@@ -1287,11 +1233,12 @@ object TxnLog {
     * Anchors at the NEWEST COMPLETE checkpoint (validated by parsing
     * it — a torn checkpoint must never become the only history
     * anchor), deletes every .txn at or below it, and relies on the
-    * [[logFloorOf]] rule so readers distinguish a truncated log
+    * floor rule of [[LogState]] so readers distinguish a truncated log
     * (first txn's predecessor is a checkpoint → anchor there) from a
     * listing gap (no checkpoint → see an empty log). Reads below the
     * floor fail with [[LogTruncatedException]]; reads at or above it
-    * are unaffected (snapshot() transparently rides the checkpoint).
+    * are unaffected (every state read already starts at the newest
+    * checkpoint — [[stateAt]]).
     * Time travel below the floor is the price of retention — exactly
     * the trade public table formats document for log cleanup. */
   def truncateLog(s: SparkSession, table: String): TruncateResult = {
@@ -1332,11 +1279,13 @@ object TxnLog {
 
   /** Checkpoint-every-N policy: write a checkpoint when the head has
     * advanced `every` commits past the newest existing checkpoint.
-    * Returns the version checkpointed, or None if not due. Keeps
-    * snapshot resolution O(every) log reads regardless of table age —
-    * call it after commits (it is idempotent and safe under races:
-    * checkpoints are derived data, concurrent writers at the same
-    * version write identical bytes). */
+    * Returns the version checkpointed, or None if not due. Since every
+    * state read folds from the newest checkpoint ([[stateAt]]), this
+    * keeps each one — snapshot, write-path fold, the next checkpoint —
+    * at O(every) commit-body reads plus the listing, however old the
+    * table. Call it after commits (it is idempotent and safe under
+    * races: checkpoints are derived data, concurrent writers at the
+    * same version write identical bytes). */
   def checkpointIfDue(s: SparkSession, table: String,
                       every: Int): Option[Long] = {
     require(every >= 1, s"checkpoint interval must be >= 1, got $every")
@@ -1374,7 +1323,6 @@ object TxnLog {
     * segments opened). */
   def changeFeed(s: SparkSession, table: String, fromV: Long, toV: Long,
                  idCols: Seq[String]): (DataFrame, Int) = {
-    import org.apache.spark.sql.functions.lit
     require(fromV < toV, s"empty CDF range ($fromV, $toV]")
     // fromVersion = fromV: bodies at or below the range start are never
     // opened, and a range reaching below a truncated log's floor gets
@@ -1390,30 +1338,50 @@ object TxnLog {
     // against the snapshot surface). One checkpoint-bounded metadata
     // fold at fromV resolves both — O(commits since checkpoint)
     // driver-side manifest reads, never data.
-    var (dvState, mapping) = readStateAt(s, table, st, fromV)
+    var state = readStateAt(s, table, st, fromV)
     var opened = 0
     val perCommit = suffix.map { c =>
-      // the commit is atomic: rows it adds/removes classify under the
-      // mapping it DECLARES (if any), not its predecessor's. A mapping
-      // CHANGE mid-range means the feed has no single schema — rows
-      // before the change carry different logical columns than rows
-      // after, and a positional union would silently misalign them.
-      // The first commit of the range may declare one (its rows and
-      // everything after share it); any later change is the named
-      // split-your-range error, the same contract public CDF readers
-      // enforce across incompatible schema changes.
-      val m1 = mappingAfter(c, mapping)
-      if (m1 != mapping && c.version != fromV + 1L)
-        throw new CdfSchemaChangeException(table, c.version)
-      mapping = m1
-      val (dfs, nd, op) = commitChanges(s, c, dvState, idCols, mapping)
-      dvState = nd
+      val (dfs, next, op) = feedStep(s, table, fromV, idCols, state, c)
+      state = next
       opened += op
       dfs
     }
     val nonEmpty = perCommit.flatten
     require(nonEmpty.nonEmpty, s"no data actions in ($fromV, $toV] of $table")
     (nonEmpty.reduce(_ unionAll _), opened)
+  }
+
+  /** What the change feed threads from commit to commit: the active dv
+    * sidecar per live segment and the column mapping. */
+  private[graft] case class FeedState(dvs: Map[String, String],
+                                      mapping: Option[Seq[(String, String)]])
+
+  /** [[FeedState]] at version `v`: the start of a feed from `v`. */
+  private[graft] def feedStateAt(s: SparkSession, table: String, v: Long): FeedState =
+    readStateAt(s, table, logState(s, table), v)
+
+  /** The change feed's per-commit step, the one the batch [[changeFeed]]
+    * and the streaming feed (streaming/Sessions.streamChangeFeedToBatch)
+    * both run, so stream ≡ batch is structural: commit `c`'s rows
+    * ([[commitChanges]]) under the mapping it leaves, and the state
+    * after it. The commit is atomic: rows it adds/removes classify
+    * under the mapping it DECLARES (if any), not its predecessor's. A
+    * mapping CHANGE mid-range means the feed has no single schema —
+    * rows before the change carry different logical columns than rows
+    * after, and a positional union would silently misalign them. The
+    * first commit of a feed from `fromV` may declare one (its rows and
+    * everything after share it); any later change is the named
+    * split-your-range error, the same contract public CDF readers
+    * enforce across incompatible schema changes. Returns (change
+    * frames, state after `c`, files opened). */
+  private[graft] def feedStep(s: SparkSession, table: String, fromV: Long,
+                              idCols: Seq[String], prev: FeedState, c: Commit)
+      : (Seq[DataFrame], FeedState, Int) = {
+    val mapping = mappingAfter(c, prev.mapping)
+    if (mapping != prev.mapping && c.version != fromV + 1L)
+      throw new CdfSchemaChangeException(table, c.version)
+    val (dfs, dvs, opened) = commitChanges(s, c, prev.dvs, idCols, mapping)
+    (dfs, FeedState(dvs, mapping), opened)
   }
 
   /** A change-feed range crossing a column-mapping change: the rows
@@ -1429,13 +1397,13 @@ object TxnLog {
     * driver-side metadata reads (checkpoint + suffix), never data. */
   def dvStateAt(s: SparkSession, table: String,
                 asOf: Long): Map[String, String] =
-    readStateAt(s, table, logState(s, table), asOf)._1
+    feedStateAt(s, table, asOf).dvs
 
   /** Column mapping active at version `asOf` (None = physical reads) —
     * same O(log) metadata resolution class as [[dvStateAt]]. */
   def mappingAt(s: SparkSession, table: String,
                 asOf: Long): Option[Seq[(String, String)]] =
-    readStateAt(s, table, logState(s, table), asOf)._2
+    feedStateAt(s, table, asOf).mapping
 
   /** The column mapping after folding commit `c` onto `prev` — the
     * incremental step a change-feed consumer applies per commit (a
@@ -1449,21 +1417,14 @@ object TxnLog {
 
   /** (active dv per segment, column mapping) at version `asOf` — ONE
     * checkpoint-bounded metadata fold for both (the change feed needs
-    * them together and must not read the log twice). */
+    * them together and must not read the log twice). Version 0 is the
+    * empty table on any log. */
   private def readStateAt(s: SparkSession, table: String, st: LogState,
-                          asOf: Long)
-      : (Map[String, String], Option[Seq[(String, String)]]) = {
-    if (asOf == 0L) return (Map.empty, None)
-    val baseCs =
-      if (st.floor == 0L) commitsFrom(s, table, st, Some(asOf), 0L)
-      else latestCheckpointFrom(s, table, st.ckpts, asOf) match {
-        case Some(b) =>
-          b +: commitsFrom(s, table, st, Some(asOf), b.version)
-        case None => throw new IllegalStateException(
-          s"history floor ${st.floor} of $table has no readable checkpoint")
-      }
-    (liveState(baseCs).collect { case (p, Some(dv)) => p -> dv }.toMap,
-      columnMapping(baseCs))
+                          asOf: Long): FeedState = {
+    if (asOf == 0L) return FeedState(Map.empty, None)
+    val cs = stateAt(s, table, st, asOf)._2
+    FeedState(liveState(cs).collect { case (p, Some(dv)) => p -> dv }.toMap,
+      columnMapping(cs))
   }
 
   /** Row-level changes of ONE commit, given the active dv state at
@@ -1645,7 +1606,8 @@ object TxnLog {
     * extension point. */
   def deleteWhereMoR(s: SparkSession, table: String, writer: String,
                      cond: Column): Option[CommitResult] = {
-    val cs = headFold(s, table, logState(s, table))
+    val st = logState(s, table)
+    val cs = stateAt(s, table, st, st.head)._2
     require(cs.nonEmpty, s"cannot delete from empty table $table")
     val live = liveState(cs)
     val rows = new VisibleRows(s, live, everMapped(cs))
@@ -1674,7 +1636,7 @@ object TxnLog {
     }
     if (actions.isEmpty) None
     else Some(commitWithRetry(s, table, writer, actions,
-      baseVersion = Some(cs.last.version)))
+      baseVersion = Some(st.head)))
   }
 
   // ---- RESTORE (rollback as a forward commit) ---------------------------
@@ -1715,30 +1677,30 @@ object TxnLog {
   def restore(s: SparkSession, table: String, writer: String,
               toVersion: Long, ts: Long = -1L): CommitResult = {
     val st = logState(s, table)
-    // the floor version itself IS restorable (its state survives as
-    // the floor checkpoint); anything below it is not
-    if (toVersion < st.floor)
-      throw new LogTruncatedException(table, toVersion, st.floor)
-    val baseCs = headFold(s, table, st)
+    // two state folds, each from the newest checkpoint at or below its
+    // version: the floor version itself IS restorable (its state
+    // survives as the floor checkpoint); anything below it is the
+    // truncation error
+    val csTo = stateAt(s, table, st, toVersion)._2
+    val baseCs = stateAt(s, table, st, st.head)._2
     require(baseCs.nonEmpty, s"cannot restore empty table $table")
-    val headV = baseCs.last.version
+    val headV = st.head
     require(toVersion >= 1L && toVersion <= headV,
       s"restore target $toVersion outside [1, $headV] of $table")
-    val csTo = baseCs.filter(_.version <= toVersion)
-    val targetState = liveState(csTo)
+    val target = foldLive(csTo)
+    val targetPaths = target.map(_._1.path).toSet
     val headState = liveState(baseCs)
-    val targetAdds = liveActions(csTo).map(a => a.path -> a).toMap
-    val targetMap = targetState.toMap
     val headMap = headState.toMap
     val removes = headState.collect {
-      case (p, _) if !targetMap.contains(p) => Action("remove", p)
+      case (p, _) if !targetPaths(p) => Action("remove", p)
     }
-    val readds = targetState.flatMap { case (p, dvo) =>
+    val readds = target.flatMap { case (add, dvo) =>
+      val p = add.path
       headMap.get(p) match {
         case None => // not live at head: bring it back as it was
-          targetAdds(p) +: dvo.map(dv => Action("dv", dv, ref = p)).toSeq
+          add +: dvo.map(dv => Action("dv", dv, ref = p)).toSeq
         case Some(headDv) if headDv != dvo => // dv association differs
-          Seq(Action("remove", p), targetAdds(p)) ++
+          Seq(Action("remove", p), add) ++
             dvo.map(dv => Action("dv", dv, ref = p))
         case _ => Seq.empty
       }

@@ -181,15 +181,16 @@ object Sessions {
     * text stream over `_txnlog` is the notification plane (tiny
     * manifest lines, one micro-batch per commit file via
     * maxFilesPerTrigger=1); foreachBatch parses the streamed lines
-    * into commits with [[graft.ops.TxnLog.parseActionLine]] — the same
+    * into commits with [[graft.ops.TxnLog.parseCommit]] — the same
     * parser the batch reader uses — holds them in a CONTIGUITY buffer
     * (a commit's changes apply only once every predecessor's have:
     * file-stream arrival order is mod-time, not version, and dv/remove
     * classification is order-dependent), threads the active dv state
-    * across micro-batches, and appends each commit's change rows
-    * (the shared [[graft.ops.TxnLog.commitChanges]] classification,
-    * so stream ≡ batch is structural) to the sink directory. The
-    * driver-held (nextVersion, dvState) pair is this runner's demo
+    * and column mapping across micro-batches, and appends each
+    * commit's change rows (the batch feed's own per-commit step,
+    * [[graft.ops.TxnLog.feedStep]], so stream ≡ batch is structural)
+    * to the sink directory. The
+    * driver-held (nextVersion, feed state) pair is this runner's demo
     * bound: a production restart rebuilds both from the sink's
     * high-water `_commit_version` plus the log — the standard
     * streaming-checkpoint recovery argument. Returns the accumulated
@@ -199,11 +200,11 @@ object Sessions {
                               idCols: Seq[String],
                               outDir: String): DataFrame = {
     import graft.ops.TxnLog
-    var dvState = TxnLog.dvStateAt(spark, table, fromV)
-    // the column mapping threads across micro-batches exactly like the
-    // dv state: a rename mid-stream must switch the emitted logical
-    // names from that commit on (stream ≡ batch stays structural)
-    var mapping = TxnLog.mappingAt(spark, table, fromV)
+    // the dv state and the column mapping thread across micro-batches
+    // exactly as the batch feed threads them across commits (a rename
+    // mid-stream must switch the emitted logical names from that commit
+    // on): one fold at fromV, then the batch feed's per-commit step
+    var state = TxnLog.feedStateAt(spark, table, fromV)
     var nextV = fromV + 1
     val pending = scala.collection.mutable.Map.empty[Long, TxnLog.Commit]
     val q = spark.readStream
@@ -215,33 +216,20 @@ object Sessions {
       .writeStream
       .foreachBatch { (batch: DataFrame, _: Long) =>
         // manifest lines are tiny — the collect is O(actions in this
-        // micro-batch), never data
+        // micro-batch), never data; a file's lines arrive in file order
         val lines = batch.collect()
           .map(r => (r.getAs[Long]("version"), r.getAs[String]("value")))
         lines.groupBy(_._1).foreach { case (v, ls) =>
-          if (v > fromV) {
-            val body = ls.map(_._2).filter(_.nonEmpty)
-            val head = body.find(_.startsWith("commit\t")).getOrElse(
-              throw new IllegalStateException(
-                s"streamed commit $v has no header line"))
-            pending(v) = TxnLog.Commit(v, head.split("\t")(2),
-              body.filterNot(_.startsWith("commit\t"))
-                .map(TxnLog.parseActionLine).toSeq)
-          }
+          if (v > fromV)
+            pending(v) = TxnLog.parseCommit(v, ls.map(_._2).filter(_.nonEmpty).toSeq)
         }
         while (pending.contains(nextV)) {
-          val c = pending.remove(nextV).get
-          // same split-the-range rule as the batch feed: the sink dir
-          // is one parquet schema, so a mid-stream mapping change must
-          // fail NAMED (restart a new feed from that version), never
-          // append mixed logical schemas
-          val m1 = TxnLog.mappingAfter(c, mapping)
-          if (m1 != mapping && c.version != fromV + 1L)
-            throw new TxnLog.CdfSchemaChangeException(table, c.version)
-          mapping = m1
-          val (dfs, nd, _) =
-            TxnLog.commitChanges(spark, c, dvState, idCols, mapping)
-          dvState = nd
+          // the sink dir is one parquet schema, so a mid-stream mapping
+          // change fails NAMED (restart a new feed from that version),
+          // never appends mixed logical schemas
+          val (dfs, next, _) = TxnLog.feedStep(spark, table, fromV, idCols,
+            state, pending.remove(nextV).get)
+          state = next
           dfs.foreach(_.write.mode("append").parquet(outDir))
           nextV += 1
         }

@@ -15,7 +15,8 @@ import graft.ops.TxnLog.Action
   * file), so the measured time is pure log resolution — listing +
   * commit-body reads — with the data scan held constant. Output: one
   * JSON line per log length with
-  *   full_ms      — full-log snapshot resolution (reads every body)
+  *   full_ms      — snapshot resolution before any checkpoint exists
+  *                  (reads every body)
   *   ckpt_ms      — checkpoint resolution (reads the ckpt + suffix)
   *   head_ms      — currentVersion (listing only, no bodies)
   *   build_ms     — total commit time (protocol write throughput)

@@ -122,7 +122,7 @@ class TxnLogSpec extends SparkSpec {
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     val torn = fs.create(new org.apache.hadoop.fs.Path(
       s"$t/_txnlog/${"%020d".format(3)}.ckpt"), true)
-    torn.write(s"ckpt\t3\nlive\t$a\n".getBytes("UTF-8")); torn.close()
+    torn.write(s"ckpt\t3\nadd\t$a\n".getBytes("UTF-8")); torn.close()
     val (snap2, ver2, _, ckptV2) = TxnLog.snapshotViaCheckpoint(spark, t)
     assert(ckptV2 == 2L && ver2 == 4L, "reader trusted a torn checkpoint")
     assert(snap2.count() == 3L)
@@ -153,9 +153,71 @@ class TxnLogSpec extends SparkSpec {
     val (snap, ver, n, ckptV) = TxnLog.snapshotViaCheckpoint(spark, t)
     assert(ckptV == 2L && ver == 3L && n == 3)
     assert(snap.count() == 3L)
-    // sanity: the full-log path DOES open the bodies and must fail —
-    // proving the corruption was real and the checkpoint path skipped it
-    intercept[Exception] { TxnLog.snapshot(spark, t) }
+    // sanity: the raw full-log reader DOES open the bodies and must
+    // fail — proving the corruption was real and the read skipped it
+    intercept[Exception] { TxnLog.commits(spark, t) }
+    // snapshot is the same checkpoint-anchored read
+    val (snap2, ver2, n2) = TxnLog.snapshot(spark, t)
+    assert(ver2 == 3L && n2 == 3 && snap2.count() == 3L)
+  }
+
+  test("every state read starts at the newest checkpoint: pre-checkpoint bodies never open") {
+    import org.apache.spark.sql.functions.col
+    val t = freshTable()
+    val a = writeSeg(t, "a", Seq(1L, 2L))
+    val b = writeSeg(t, "b", Seq(3L, 4L))
+    // v1-v3 carry every kind of state a fold resolves: segments with
+    // zone maps, a column mapping, a constraint, an identity mark, a dv
+    assert(TxnLog.tryCommit(spark, t, 1L, "w", Seq(
+      Action("add", a, stats = Map("id" -> (1L, 2L))),
+      TxnLog.columnMappingAction(Seq("id" -> "id")),
+      TxnLog.constraintAction("id_pos", "id > 0"))))
+    assert(TxnLog.tryCommit(spark, t, 2L, "w",
+      Seq(Action("add", b), Action("meta", "idhwm=rid:2"))))
+    assert(TxnLog.deleteWhereMoR(spark, t, "w", col("id") === 4L).exists(_.version == 3L))
+    TxnLog.writeCheckpoint(spark, t, 3L)
+    val c = writeSeg(t, "c", Seq(5L))
+    val d = writeSeg(t, "d", Seq(6L))
+    assert(TxnLog.tryCommit(spark, t, 4L, "w", Seq(Action("add", c))))
+    assert(TxnLog.tryCommit(spark, t, 5L, "w", Seq(Action("add", d))))
+    val fs = new org.apache.hadoop.fs.Path(t)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    Seq(1, 2, 3).foreach { v =>
+      val out = fs.create(new org.apache.hadoop.fs.Path(
+        s"$t/_txnlog/${"%020d".format(v)}.txn"), true)
+      out.write("garbage not a commit".getBytes("UTF-8")); out.close()
+    }
+    intercept[Exception] { TxnLog.commits(spark, t) } // the corruption is real
+    def ids(df: org.apache.spark.sql.DataFrame): Seq[Long] =
+      df.select("id").collect().map(_.getLong(0)).sorted.toSeq
+    // each entry point in turn, on the log the previous ones left;
+    // every one that opens a pre-checkpoint body is named at the end
+    val entryPoints: Seq[(String, () => Unit)] = Seq(
+      "snapshot" -> (() => assert(ids(TxnLog.snapshot(spark, t)._1) == Seq(1L, 2L, 3L, 5L, 6L))),
+      "snapshot asOf" -> (() => assert(ids(TxnLog.snapshot(spark, t, Some(3L))._1) == Seq(1L, 2L, 3L))),
+      "snapshotViaCheckpoint" -> (() => assert(TxnLog.snapshotViaCheckpoint(spark, t)._4 == 3L)),
+      "dvStateAt" -> (() => assert(TxnLog.dvStateAt(spark, t, 4L).keySet == Set(b))),
+      "mappingAt" -> (() => assert(TxnLog.mappingAt(spark, t, 4L).contains(Seq("id" -> "id")))),
+      "changeFeed" -> (() => assert(TxnLog.changeFeed(spark, t, 3L, 5L, Seq("id"))._1.count() == 2L)),
+      "checkConstraints" -> (() => intercept[TxnLog.ConstraintViolationException] {
+        TxnLog.checkConstraints(spark, t, spark.createDataFrame(Seq(Tuple1(-1L))).toDF("id"))
+      }),
+      "compactionPlan" -> (() => TxnLog.compactionPlan(spark, t)),
+      "compactBin" -> (() => assert(TxnLog.compactBin(spark, t, "w", Seq(c, d), s"$t/m").version == 6L)),
+      "clusterBin" -> (() => assert(TxnLog.clusterBin(spark, t, "w", Seq(a), s"$t/cl", "id", 1).version == 7L)),
+      "deleteWhereMoR" -> (() => assert(TxnLog.deleteWhereMoR(spark, t, "w", col("id") === 3L).nonEmpty)),
+      "appendWithIdentity" -> (() => assert(TxnLog.appendWithIdentity(spark, t, "w",
+        spark.createDataFrame(Seq(Tuple1(7L))).toDF("id"), s"$t/e", "rid", "id")._2 == 3L)),
+      "restore" -> (() => {
+        TxnLog.restore(spark, t, "w", 3L)
+        assert(ids(TxnLog.snapshot(spark, t)._1) == Seq(1L, 2L, 3L))
+      }),
+      "writeCheckpoint" -> (() => TxnLog.writeCheckpoint(spark, t, TxnLog.currentVersion(spark, t) - 1L)),
+      "checkpointIfDue" -> (() => assert(TxnLog.checkpointIfDue(spark, t, 1).nonEmpty)))
+    val failed = entryPoints.flatMap { case (name, body) =>
+      scala.util.Try(body()).failed.toOption.map(e => s"$name: $e")
+    }
+    assert(failed.isEmpty, s"entry points that opened a pre-checkpoint body:\n${failed.mkString("\n")}")
   }
 
   test("log format rejects delimiter characters at the write boundary") {

@@ -465,4 +465,55 @@ class TxnProtocolSpec extends SparkSpec {
     assert(live.head.stats == Map("id" -> (10L, 20L)),
       "re-add must carry the original stats — segments are immutable")
   }
+
+  test("restore after truncation re-adds a segment with its zone-map stats") {
+    val t = freshTable()
+    val a = writeSeg(t, "a", 1L to 10L)
+    assert(TxnLog.tryCommit(spark, t, 1L, "w",
+      Seq(Action("add", a, stats = Map("id" -> (1L, 10L))))))
+    val b = writeSeg(t, "b", Seq(11L))
+    assert(TxnLog.tryCommit(spark, t, 2L, "w", Seq(Action("add", b))))
+    TxnLog.writeCheckpoint(spark, t, 2L)
+    TxnLog.truncateLog(spark, t)
+    // v1, the add that carried a's stats, survives only in the checkpoint
+    assert(TxnLog.tryCommit(spark, t, 3L, "w", Seq(Action("remove", a))))
+    assert(TxnLog.restore(spark, t, "restorer", 2L).version == 4L)
+    assert(TxnLog.commits(spark, t, fromVersion = 3L).last.actions ==
+      Seq(Action("add", a, stats = Map("id" -> (1L, 10L)))))
+  }
+
+  test("an unreadable floor checkpoint is the named error on every write path") {
+    val t = freshTable()
+    assert(TxnLog.tryCommit(spark, t, 1L, "w",
+      Seq(TxnLog.constraintAction("id_pos", "id > 0"))))
+    def batch(ks: Long*) = spark.createDataFrame(ks.map(Tuple1(_))).toDF("k")
+    val (r2, lo, hi) = TxnLog.appendWithIdentity(spark, t, "w", batch(10L, 20L),
+      s"$t/seg2", "id", "k")
+    assert(r2.version == 2L && lo == 1L && hi == 2L)
+    TxnLog.writeCheckpoint(spark, t, 2L)
+    TxnLog.truncateLog(spark, t)
+    val seg3 = s"$t/seg3"
+    spark.createDataFrame(Seq((30L, 3L))).toDF("k", "id").coalesce(1).write.parquet(seg3)
+    assert(TxnLog.tryCommit(spark, t, 3L, "w", Seq(Action("add", seg3))))
+    // tear the trailer off the floor checkpoint — the state an
+    // in-place checkpoint rewrite leaves if it dies mid-write
+    val fs = new org.apache.hadoop.fs.Path(t)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val ckpt = new org.apache.hadoop.fs.Path(s"$t/_txnlog/${"%020d".format(2)}.ckpt")
+    val in = fs.open(ckpt)
+    val body = try new String(in.readAllBytes(), "UTF-8") finally in.close()
+    assert(body.endsWith("end\n"))
+    val out = fs.create(ckpt, true)
+    out.write(body.stripSuffix("end\n").getBytes("UTF-8")); out.close()
+    def named(op: => Any): Unit = {
+      val e = intercept[IllegalStateException](op)
+      assert(e.getMessage.contains("history floor 2") &&
+        e.getMessage.contains("no readable checkpoint"), e.getMessage)
+    }
+    named(TxnLog.deleteWhereMoR(spark, t, "w", col("id") === 3L))
+    // never a fold of v3 alone: that accepts id = -7 and hands id 1 out again
+    named(TxnLog.checkConstraints(spark, t, spark.createDataFrame(Seq(Tuple1(-7L))).toDF("id")))
+    named(TxnLog.appendWithIdentity(spark, t, "w", batch(40L), s"$t/seg4", "id", "k"))
+    assert(TxnLog.currentVersion(spark, t) == 3L)
+  }
 }
