@@ -15,6 +15,16 @@ object Tables {
   def table(spark: SparkSession, dir: String, name: String): DataFrame =
     spark.read.parquet(s"$dir/$name.parquet")
 
+  /** `query` over temp views of the sf dir's `tables`, named
+    * after the tables. The views are dropped once the frame is
+    * analyzed, so a later query in the session that names a table
+    * never reads this sf dir's view of it. */
+  def sqlOver(s: SparkSession, d: String, tables: String*)(query: String): DataFrame = {
+    tables.foreach(t => table(s, d, t).createOrReplaceTempView(t))
+    try s.sql(query)
+    finally tables.foreach(s.catalog.dropTempView)
+  }
+
   def region(s: SparkSession, d: String): DataFrame = table(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame = table(s, d, "nation")
   def customer(s: SparkSession, d: String): DataFrame = table(s, d, "customer")

@@ -1,9 +1,14 @@
 package graft.ops
 
-import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.execution.LogicalRDD
+import scala.collection.mutable.ArrayBuffer
 
-/** Block hygiene for iterative operators.
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.sql.execution.columnar.InMemoryRelation
+
+/** Block hygiene: who frees what an operator or a query pins.
   *
   * `localCheckpoint()` materializes a frame into block-manager storage
   * and nothing ever frees those blocks automatically — the frame's
@@ -15,6 +20,12 @@ import org.apache.spark.sql.execution.LogicalRDD
   * pressure + GC). Once round r+1's checkpoint is materialized it no
   * longer references round r's blocks, so the superseded frame can be
   * unpersisted immediately — [[iterate]] is the one loop that does so.
+  *
+  * Every other pin — a frame a call materializes because it reads it
+  * more than once — belongs to a [[scoped]] block, which frees it when
+  * the block ends unless the block's result still reads it; a pin the
+  * result reads passes to the caller with the result. No caller frees
+  * by hand.
   */
 private[graft] object Checkpoints {
 
@@ -104,5 +115,116 @@ private[graft] object Checkpoints {
       round += 1
     }
     (cur, m)
+  }
+
+  /** The frames one [[scoped]] block pins. */
+  final class Pins private[Checkpoints] () {
+    private[Checkpoints] val frames = ArrayBuffer.empty[DataFrame]
+    private[Checkpoints] val adopted = ArrayBuffer.empty[DataFrame]
+
+    /** `df` materialized by an eager local checkpoint. */
+    def apply(df: DataFrame): DataFrame = keep(df.localCheckpoint())
+
+    /** [[ckptCount]]: a lazy checkpoint and its measure in one job. */
+    def counted(df: DataFrame,
+                measure: DataFrame => Long = rows): (DataFrame, Long) = {
+      val (c, n) = ckptCount(df, measure)
+      (keep(c), n)
+    }
+
+    /** A frame the block materialized itself — a `persist()`ed layout,
+      * an [[iterate]] result — handed to the scope to free. */
+    def keep(df: DataFrame): DataFrame = { frames += df; df }
+
+    /** The scope takes over every checkpoint and cache entry `df`
+      * reads: for the lazy result of an operator that persists inside,
+      * which the block materializes and then drops. Only for a frame
+      * the block built from tables — adopting a frame that reads a
+      * caller's pins would free them. */
+    def adopt(df: DataFrame): DataFrame = { adopted += df; df }
+  }
+
+  /** Runs `body` with a [[Pins]] that owns every frame it pins. When
+    * the body returns, the pins its result still reads (a frame, or
+    * the frames of a tuple or collection) pass to the caller with the
+    * result, and the rest are freed; when it throws, all are freed.
+    * Only frames pinned through this scope are freed — never the
+    * session's other persisted RDDs, and never an ancestor of a pinned
+    * frame, since [[free]] drops a frame's own blocks only. The one
+    * exception is asked for by name: what an [[Pins.adopt]]ed frame
+    * reads is freed too, unless the result reads it. */
+  def scoped[A](body: Pins => A): A = {
+    val pins = new Pins
+    var out: Option[A] = None
+    try { out = Some(body(pins)); out.get }
+    finally {
+      val read = out.iterator.flatMap(framesOf).flatMap(reads).toSet
+      pins.frames.filterNot(f => blocksOf(f).exists(read)).foreach(free)
+      pins.adopted.foreach { df =>
+        muteUnpersistWarn
+        val sc = df.sparkSession.sparkContext
+        (reads(df) -- read).foreach {
+          case id: Int => sc.getPersistentRDDs.get(id).foreach(_.unpersist(false))
+          case e: Entry => e.m.cacheBuilder.clearCache(false)
+        }
+      }
+    }
+  }
+
+  private def framesOf(a: Any): Iterator[DataFrame] = a match {
+    case d: Dataset[_] => Iterator(d.toDF())
+    case i: Iterable[_] => i.iterator.flatMap(framesOf)
+    case p: Product => p.productIterator.flatMap(framesOf)
+    case _ => Iterator.empty
+  }
+
+  // A frame's blocks are named by the id of the RDD that holds them,
+  // and a cache entry also by its builder (it has no RDD until built),
+  // compared by reference.
+  private final class Entry(val m: InMemoryRelation) {
+    override def equals(o: Any): Boolean = o match {
+      case e: Entry => e.m.cacheBuilder eq m.cacheBuilder
+      case _ => false
+    }
+    override def hashCode: Int = System.identityHashCode(m.cacheBuilder)
+  }
+
+  /** A pinned frame's blocks: its checkpoint leaf, or its cache entry. */
+  private def blocksOf(df: DataFrame): Set[Any] = {
+    val qe = df.queryExecution
+    qe.analyzed match {
+      case lr: LogicalRDD => Set(lr.rdd.id)
+      case plan => qe.sparkSession.sharedState.cacheManager
+        .lookupCachedData(qe.sparkSession, plan)
+        .map(c => cached(c.cachedRepresentation)).getOrElse(Set.empty)
+    }
+  }
+
+  private def cached(m: InMemoryRelation): Set[Any] = {
+    val b = m.cacheBuilder
+    if (b.isCachedColumnBuffersLoaded) Set(new Entry(m), b.cachedColumnBuffers.id)
+    else Set(new Entry(m))
+  }
+
+  /** The blocks a frame still needs to run: its checkpoint leaves (with
+    * the lineage of one not yet materialized) and its cache entries
+    * (with the lineage of their blocks, or the plan of a cache not yet
+    * built). */
+  private def reads(df: DataFrame): Set[Any] = planReads(df.queryExecution.withCachedData)
+
+  private def planReads(p: LogicalPlan): Set[Any] = p.collectWithSubqueries {
+    case lr: LogicalRDD => lineage(lr.rdd)
+    case m: InMemoryRelation =>
+      val b = m.cacheBuilder
+      cached(m) ++ (if (b.isCachedColumnBuffersLoaded) lineage(b.cachedColumnBuffers)
+                    else planReads(b.logicalPlan))
+  }.flatten.toSet
+
+  private def lineage(r: RDD[_]): Set[Any] = {
+    val seen = scala.collection.mutable.Set.empty[Int]
+    def walk(r: RDD[_]): Unit =
+      if (seen.add(r.id) && !r.isCheckpointed) r.dependencies.foreach(d => walk(d.rdd))
+    walk(r)
+    seen.toSet
   }
 }

@@ -126,7 +126,8 @@ object Classify {
     * counts, weights, margins — so training replays bit-identically
     * on any engine (the q449 chained-CTE oracle). */
   def perceptronFit(feats: DataFrame, docs: DataFrame,
-                    rounds: Int): (Seq[DataFrame], Seq[DataFrame]) = {
+                    rounds: Int): (Seq[DataFrame], Seq[DataFrame]) =
+      Checkpoints.scoped { pin =>
     // Materialize the feature frame once and every per-round artifact:
     // each round references feats twice (scores + update) and w_{r-1}
     // twice, so an unmaterialized loop re-tokenizes the corpus
@@ -134,7 +135,7 @@ object Classify {
     // O(64) rows, the miscl frames O(docs); and a consumer embedding
     // the weights in a STREAMING plan (q451) must see a materialized
     // frame, not a training DAG re-run per micro-batch.
-    val f = feats.localCheckpoint()
+    val f = pin(feats)
     def step(w: DataFrame, m: DataFrame): DataFrame = {
       val upd = f.join(m, "doc_id")
         .groupBy("dim").agg(sum(col("y") * col("f")).as("__u"))

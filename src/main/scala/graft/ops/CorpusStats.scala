@@ -32,8 +32,8 @@ object CorpusStats {
     * deterministic. BIGINT headroom: a ≤ c12·N² needs N ≲ 10⁹ tokens
     * per readout; beyond that run per-shard and merge count frames. */
   def pmiCollocations(df: DataFrame, toksCol: String,
-                      minCount: Int = 3, topK: Int = 50): DataFrame = {
-    val tk = df.select(col(toksCol).as("__toks")).localCheckpoint()
+                      minCount: Int = 3, topK: Int = 50): DataFrame = Checkpoints.scoped { pin =>
+    val tk = pin(df.select(col(toksCol).as("__toks")))
     val uni = tk.select(explode(col("__toks")).as("w"))
       .groupBy("w").agg(count(lit(1)).as("c"))
     val tot = broadcast(uni.agg(sum("c").as("nn")))
@@ -89,10 +89,10 @@ object CorpusStats {
     * `idCol :: keep :: doc_sup_micro`. Low surprisal ≈ fluent/common
     * text; high ≈ boilerplate or noise — the LM quality filter. */
   def bigramSurprisal(df: DataFrame, idCol: String, toksCol: String,
-                      keep: Seq[String] = Nil): DataFrame = {
+                      keep: Seq[String] = Nil): DataFrame = Checkpoints.scoped { pin =>
     val keepCols = keep.map(col)
-    val tk = df.select(col(idCol) +: keepCols :+ col(toksCol).as("__toks"): _*)
-      .localCheckpoint() // unigram counts + bigram occurrences
+    // read twice: unigram counts + bigram occurrences
+    val tk = pin(df.select(col(idCol) +: keepCols :+ col(toksCol).as("__toks"): _*))
     val uni = tk.select(explode(col("__toks")).as("w"))
       .groupBy("w").agg(count(lit(1)).as("c1"))
     val vsz = broadcast(uni.agg(count(lit(1)).as("vv")))

@@ -599,7 +599,8 @@ object Dedup {
     * driver-side union-find, no graph library). Diameter of near-dup
     * clusters is small in practice, so `maxIter` rounds suffice; the
     * loop exits early on convergence. */
-  def duplicateGroups(pairs: DataFrame, maxIter: Int = 10): DataFrame = {
+  def duplicateGroups(pairs: DataFrame, maxIter: Int = 10): DataFrame =
+      Checkpoints.scoped { pin =>
     // the sum(label) fixpoint test below needs integral ids — for
     // string/uuid ids, map to a surrogate long id first (sum over
     // strings would null out and fake instant convergence)
@@ -614,19 +615,20 @@ object Dedup {
     // frames still nests each round's InMemoryRelation inside the
     // next, so analysis cost grows quadratically with iterations;
     // checkpointing truncates the lineage to the materialized
-    // partitions each round. Eager, so `pairs` is computed exactly
-    // once (the symmetric-closure union below consumes it twice).
-    // Memory held: ≤ maxIter label tables, each O(docs inside dup
-    // clusters) — tiny relative to the corpus.
-    val p = pairs.select(col("id_a"), col("id_b")).localCheckpoint(true)
-    // id_a < id_b on input, so the two closure branches are disjoint
-    // and duplicate-free — no distinct (and min() over an edge list
-    // is duplicate-insensitive anyway). edges and labels checkpoint
-    // LAZILY: the first sum action below materializes both in one job
-    // (eager would cost a job each).
-    val edges = p
-      .union(p.select(col("id_b").as("id_a"), col("id_a").as("id_b")))
-      .localCheckpoint(false)
+    // partitions each round. Memory held: ≤ maxIter label tables,
+    // each O(docs inside dup clusters) — tiny relative to the corpus.
+    // The symmetric closure is one explode per pair, so `pairs` is
+    // computed exactly once. id_a < id_b on input, so the two
+    // orientations are disjoint and duplicate-free — no distinct (and
+    // min() over an edge list is duplicate-insensitive anyway). edges
+    // and labels checkpoint LAZILY: the first sum action below
+    // materializes both in one job (eager would cost a job each).
+    val edges = pin.keep(pairs
+      .select(explode(array(
+        struct(col("id_a"), col("id_b")),
+        struct(col("id_b").as("id_a"), col("id_a").as("id_b")))).as("__e"))
+      .select("__e.id_a", "__e.id_b")
+      .localCheckpoint(false))
     // labels only ever decrease, so an unchanged sum(label) proves a
     // fixpoint — one cheap agg action per round instead of a
     // self-join + isEmpty
@@ -635,9 +637,6 @@ object Dedup {
     val (labels0, sum0) = Checkpoints.ckptCount(
       edges.select(col("id_a").as("id")).distinct()
         .withColumn("label", col("id")), labelSum)
-    // edges and labels are materialized by the sum action above, so
-    // the input checkpoint's blocks are already dead — free them now
-    Checkpoints.free(p)
     val (labels, _) = Checkpoints.iterate(labels0, sum0, maxIter,
         measure = labelSum, exitWhen = _ == _) { (labels, _) =>
       val neighborMin = edges
@@ -648,7 +647,6 @@ object Dedup {
         .select(col("id"), least(col("label"), coalesce(col("nmin"), col("label")))
           .as("label"))
     }
-    Checkpoints.free(edges)
     labels.withColumnRenamed("label", "group_id")
   }
 
@@ -725,7 +723,7 @@ object Dedup {
     * bound the star-contraction loop runs unchanged as the scale path.
     * `smallGraph = 0` forces the loop (spec-pinned equal results). */
   def duplicateGroupsStar(pairs: DataFrame, maxIter: Int = 20,
-      smallGraph: Long = 1000000L): DataFrame = {
+      smallGraph: Long = 1000000L): DataFrame = Checkpoints.scoped { pin =>
     Seq("id_a", "id_b").foreach { c =>
       val t = pairs.schema(c).dataType
       require(t == org.apache.spark.sql.types.LongType ||
@@ -738,87 +736,82 @@ object Dedup {
     // and without this the caller's whole upstream pipeline (LSH /
     // shingle fingerprinting — the expensive part) re-executes once
     // per consumer (measured 2x the pair-build cost on q172's shape)
-    val p = pairs.select(col("id_a"), col("id_b")).localCheckpoint(true)
-    val nodes = p.select(col("id_a").as("id"))
+    val p = pin(pairs.select(col("id_a"), col("id_b")))
+    val nodes = pin.keep(p.select(col("id_a").as("id"))
       .union(p.select(col("id_b").as("id"))).distinct()
-      .localCheckpoint(false)
+      .localCheckpoint(false))
     // canonical orientation a > b ("points down"), no self-loops;
     // localCheckpoint each round truncates the iterative lineage
     // (same rationale as duplicateGroups)
-    val (edges0, edgeCount) = Checkpoints.ckptCount(p
+    val (edges0, edgeCount) = pin.counted(p
       .select(greatest(col("id_a"), col("id_b")).as("a"),
         least(col("id_a"), col("id_b")).as("b"))
       .where(col("a") =!= col("b")).distinct()
       .withColumn("__new", lit(true)))
+    // checkpointed so the scaffolding's blocks are freed when the call
+    // returns (the label table is O(nodes-in-pairs) — the dedup
+    // working set)
     if (edgeCount <= smallGraph) {
       // labels are unique per id; nodes absent from the canonical edge
       // set (self-loop-only inputs) label themselves via the coalesce
-      val out = nodes
+      nodes
         .join(singleTaskComponents(edges0), Seq("id"), "left")
         .select(col("id"), coalesce(col("label"), col("id")).as("group_id"))
         .localCheckpoint()
-      Checkpoints.free(p)
-      Checkpoints.free(nodes)
-      Checkpoints.free(edges0)
-      return out
-    }
-    // The round frame is the new canonical edge set OUTER-joined with
-    // the previous one, a flag per side: its measure — edges on one
-    // side only — is 0 exactly when the edge set stopped changing, the
-    // star-forest fixpoint (stable under both phases). Only `__new`
-    // rows feed the next round.
-    val (edges, _) = Checkpoints.iterate(edges0, edgeCount, maxIter,
-        measure = e => Checkpoints.rows(e.where(col("__new").isNull ||
-          col("__old").isNull)),
-        exitWhen = (_, n) => n == 0) { (cur, _) =>
-      val edges = cur.where(col("__new")).select("a", "b")
-      // one symmetric adjacency per round, reused by both phases of
-      // the round's neighborhood mins
-      def neighborhoodMin(e: DataFrame): DataFrame = e
-        .select(col("a").as("u"), col("b").as("v"))
-        .union(e.select(col("b").as("u"), col("a").as("v")))
-        .groupBy("u").agg(min(col("v")).as("nmin"))
-        .select(col("u"), least(col("u"), col("nmin")).as("m"))
-      // large-star: (v, m(u)) for v ∈ Γ(u), v > u
-      val lsMin = neighborhoodMin(edges)
-      val large = edges
-        .select(col("a").as("u"), col("b").as("v"))
-        .union(edges.select(col("b").as("u"), col("a").as("v")))
-        .join(lsMin, Seq("u"))
-        .where(col("v") > col("u"))
-        .select(col("v").as("a"), col("m").as("b"))
-        .where(col("a") =!= col("b"))
-        .union( // keep (u, m) so u itself stays attached
-          lsMin.where(col("u") =!= col("m"))
+    } else {
+      // The round frame is the new canonical edge set OUTER-joined with
+      // the previous one, a flag per side: its measure — edges on one
+      // side only — is 0 exactly when the edge set stopped changing, the
+      // star-forest fixpoint (stable under both phases). Only `__new`
+      // rows feed the next round.
+      val (edges, _) = Checkpoints.iterate(edges0, edgeCount, maxIter,
+          measure = e => Checkpoints.rows(e.where(col("__new").isNull ||
+            col("__old").isNull)),
+          exitWhen = (_, n) => n == 0) { (cur, _) =>
+        val edges = cur.where(col("__new")).select("a", "b")
+        // one symmetric adjacency per round, reused by both phases of
+        // the round's neighborhood mins
+        def neighborhoodMin(e: DataFrame): DataFrame = e
+          .select(col("a").as("u"), col("b").as("v"))
+          .union(e.select(col("b").as("u"), col("a").as("v")))
+          .groupBy("u").agg(min(col("v")).as("nmin"))
+          .select(col("u"), least(col("u"), col("nmin")).as("m"))
+        // large-star: (v, m(u)) for v ∈ Γ(u), v > u
+        val lsMin = neighborhoodMin(edges)
+        val large = edges
+          .select(col("a").as("u"), col("b").as("v"))
+          .union(edges.select(col("b").as("u"), col("a").as("v")))
+          .join(lsMin, Seq("u"))
+          .where(col("v") > col("u"))
+          .select(col("v").as("a"), col("m").as("b"))
+          .where(col("a") =!= col("b"))
+          .union( // keep (u, m) so u itself stays attached
+            lsMin.where(col("u") =!= col("m"))
+              .select(col("u").as("a"), col("m").as("b")))
+          .distinct()
+        // small-star over the canonical orientation: per larger endpoint
+        // u, m = min of its down-neighbors; link every down-neighbor and
+        // u itself to m
+        val ssMin = large
+          .groupBy(col("a").as("u")).agg(min(col("b")).as("m"))
+        val smallEdges = large.select(col("a").as("u"), col("b").as("v"))
+          .join(ssMin, Seq("u"))
+          .select(col("v").as("a"), col("m").as("b"))
+          .where(col("a") =!= col("b"))
+          .union(ssMin.where(col("u") =!= col("m"))
             .select(col("u").as("a"), col("m").as("b")))
-        .distinct()
-      // small-star over the canonical orientation: per larger endpoint
-      // u, m = min of its down-neighbors; link every down-neighbor and
-      // u itself to m
-      val ssMin = large
-        .groupBy(col("a").as("u")).agg(min(col("b")).as("m"))
-      val smallEdges = large.select(col("a").as("u"), col("b").as("v"))
-        .join(ssMin, Seq("u"))
-        .select(col("v").as("a"), col("m").as("b"))
-        .where(col("a") =!= col("b"))
-        .union(ssMin.where(col("u") =!= col("m"))
-          .select(col("u").as("a"), col("m").as("b")))
-        .distinct()
-      smallEdges.withColumn("__new", lit(true))
-        .join(edges.withColumn("__old", lit(true)), Seq("a", "b"), "full_outer")
+          .distinct()
+        smallEdges.withColumn("__new", lit(true))
+          .join(edges.withColumn("__old", lit(true)), Seq("a", "b"), "full_outer")
+      }
+      pin.keep(edges)
+      // star forest: child -> center (component min); centers and any
+      // node not appearing as a child label themselves
+      nodes.join(edges.where(col("__new"))
+          .select(col("a").as("id"), col("b").as("label")), Seq("id"), "left")
+        .groupBy("id").agg(min(coalesce(col("label"), col("id"))).as("group_id"))
+        .localCheckpoint()
     }
-    // star forest: child -> center (component min); centers and any
-    // node not appearing as a child label themselves. Checkpointed so
-    // the loop's final edge blocks can be freed before return (the
-    // label table is O(nodes-in-pairs) — the dedup working set).
-    val out = nodes.join(edges.where(col("__new"))
-        .select(col("a").as("id"), col("b").as("label")), Seq("id"), "left")
-      .groupBy("id").agg(min(coalesce(col("label"), col("id"))).as("group_id"))
-      .localCheckpoint()
-    Checkpoints.free(p)
-    Checkpoints.free(nodes)
-    Checkpoints.free(edges)
-    out
   }
 
   /** Near-dup survivor selection: drop every group member except the
@@ -1151,10 +1144,10 @@ object Dedup {
     * (partitioned by id) sort each document's tokens against the
     * broadcast-joined vocabulary counts. Verification joins run only
     * over candidates (never doc x doc), reusing the persisted token
-    * frame; all intermediates unpersist before return. */
+    * frame; all intermediates are freed when the call returns. */
   def prefixFilterJaccardPairs(df: DataFrame, idCol: String, textCol: String,
                                num: Int, den: Int,
-                               shingleN: Int = 0): DataFrame = {
+                               shingleN: Int = 0): DataFrame = Checkpoints.scoped { pin =>
     require(num > 0 && den > 0 && num <= den,
       s"threshold must be a fraction in (0,1], got $num/$den")
     // element universe: distinct words (shingleN <= 0) or distinct
@@ -1162,14 +1155,14 @@ object Dedup {
     // join keys; fingerprint equality == shingle equality, so the
     // exactness claim is unchanged). Word sets barely discriminate on
     // template-heavy corpora — shingle sets are the document setting.
-    val tok = (if (shingleN <= 0)
+    val tok = pin.keep((if (shingleN <= 0)
         df.select(col(idCol).as("id"), Text.tokens(col(textCol)).as("__toks"))
           .repartition(col("id"))
           .select(col("id"), explode(array_distinct(col("__toks"))).as("t"))
       else
         shingleRows(df, idCol, textCol, shingleN)
           .select(col(idCol).as("id"), md5(col("shingle")).as("t")))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
     val vocab = tok.groupBy("t").agg(count(lit(1)).as("__df"))
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy("id").orderBy(col("__df").asc, col("t").asc)
@@ -1183,18 +1176,16 @@ object Dedup {
     // The prefix frame is consumed by BOTH sides of the candidate
     // self-join: checkpoint it once (O(prefix) rows — a (1-t) sliver
     // of the elements) so the rank window isn't computed twice.
-    val prefix = ranked
+    val prefix = pin(ranked
       .where(col("__rn") <=
         col("__sz") - expr(s"(${num}L * __sz + ${den - 1}L) div ${den}L") + 1)
-      .select(col("t"), col("id"))
-      .localCheckpoint()
+      .select(col("t"), col("id")))
     // candidates are consumed twice (id scope + intersection join):
     // materialize once, sized in candidate pairs, not corpus
-    val cand = prefix.select(col("t"), col("id").as("id_a"))
+    val cand = pin(prefix.select(col("t"), col("id").as("id_a"))
       .join(prefix.select(col("t"), col("id").as("id_b")), Seq("t"))
       .where(col("id_a") < col("id_b"))
-      .select("id_a", "id_b").distinct()
-      .localCheckpoint()
+      .select("id_a", "id_b").distinct())
     val sz = tok.groupBy("id").agg(count(lit(1)).as("sz"))
     // verification touches only candidate documents: semi-join the
     // element frame down to ids that appear in a candidate pair before
@@ -1207,7 +1198,7 @@ object Dedup {
       .join(tokC.select(col("id").as("id_a"), col("t")), Seq("id_a"))
       .join(tokC.select(col("id").as("id_b"), col("t")), Seq("id_b", "t"))
       .groupBy("id_a", "id_b").agg(count(lit(1)).as("n_inter"))
-    val out = inter
+    inter
       .join(sz.select(col("id").as("id_a"), col("sz").as("sz_a")), "id_a")
       .join(sz.select(col("id").as("id_b"), col("sz").as("sz_b")), "id_b")
       .where(lit(den.toLong) * col("n_inter") >=
@@ -1216,11 +1207,7 @@ object Dedup {
         col("sz_a"), col("sz_b"),
         round(col("n_inter").cast("double") /
           (col("sz_a") + col("sz_b") - col("n_inter")), 6).as("jaccard"))
-    val materialized = out.localCheckpoint()
-    tok.unpersist(false)
-    Checkpoints.free(prefix)
-    Checkpoints.free(cand)
-    materialized
+      .localCheckpoint()
   }
 
   /** Two-level GLOBAL DENSE RANK over a BIGINT key, computed DIRECTLY
@@ -1368,17 +1355,6 @@ object Dedup {
         ascii(expr(s"substring(__t, pos + $i, 1)")).cast("long") *
           (1L << (8 * (7 - i))))
       .reduce(_ + _)
-    // materialize the keyed frame BEFORE the dense rank: the rank
-    // helper consumes its input twice (distinct pass + join-back), and
-    // without this each pass re-runs the scan + explode + 8-char fold
-    // (measured 3.2 -> 1.4 s at sf0.1 for the base stage; same
-    // discipline per doubling round below)
-    val based = t
-      .select(col("doc_id"), col("__t"),
-        explode(expr("sequence(1, length(__t))")).as("pos"))
-      .select(col("doc_id"), col("pos").cast("long").as("pos"),
-        baseKey.as("__key"))
-      .localCheckpoint()
     // each round's measure is its distinct-rank count (== max: ranks
     // are dense, 1-based) — the partial-agg job that materializes the
     // round also picks the next round's ARITY and pair-rank
@@ -1386,10 +1362,22 @@ object Dedup {
     // loop ends once it reaches maxLen.
     def rankCount(r: DataFrame): Long = r.agg(max(col("r"))).head.getLong(0)
     var h = 8L
-    val (ranks0, n0) = Checkpoints.ckptCount(
-      twoLevelDenseRank(based, "__key", "r", 1L << 44).select("doc_id", "pos", "r"),
-      if (h < maxLen) rankCount else Checkpoints.rows)
-    Checkpoints.free(based)
+    val (ranks0, n0) = Checkpoints.scoped { pin =>
+      // materialize the keyed frame BEFORE the dense rank: the rank
+      // helper consumes its input twice (distinct pass + join-back), and
+      // without this each pass re-runs the scan + explode + 8-char fold
+      // (measured 3.2 -> 1.4 s at sf0.1 for the base stage; same
+      // discipline per doubling round below). Freed once the first
+      // ranks are materialized.
+      val based = pin(t
+        .select(col("doc_id"), col("__t"),
+          explode(expr("sequence(1, length(__t))")).as("pos"))
+        .select(col("doc_id"), col("pos").cast("long").as("pos"),
+          baseKey.as("__key")))
+      Checkpoints.ckptCount(
+        twoLevelDenseRank(based, "__key", "r", 1L << 44).select("doc_id", "pos", "r"),
+        if (h < maxLen) rankCount else Checkpoints.rows)
+    }
     val (ranks, _) = Checkpoints.iterate(ranks0, n0,
         if (h < maxLen) Int.MaxValue else 0, rankCount,
         exitWhen = (_, _) => h >= maxLen) { (ranks, nRanks) =>
@@ -1522,14 +1510,13 @@ object Dedup {
     * Returns one row per non-empty doc: (doc_id, kept_text, n_kept,
     * n_struck). */
   def saStrikeReassemble(df: DataFrame, idCol: String, textCol: String,
-                         maxLen: Int, minRepeat: Int): DataFrame = {
+                         maxLen: Int, minRepeat: Int): DataFrame = Checkpoints.scoped { pin =>
     require(minRepeat >= 2 && minRepeat <= maxLen,
       s"minRepeat $minRepeat outside 2..$maxLen")
-    val docs = df.select(col(idCol).as("doc_id"),
+    val docs = pin(df.select(col(idCol).as("doc_id"), // exploded three ways below
         substring(col(textCol), 1, maxLen).as("__t"))
-      .where(length(col("__t")) > 0) // sequence(1,0)=[1,0] hazard
-      .localCheckpoint() // exploded three ways below
-    val ranks = suffixArrayRanks(df, idCol, textCol, maxLen)
+      .where(length(col("__t")) > 0)) // sequence(1,0)=[1,0] hazard
+    val ranks = pin.keep(suffixArrayRanks(df, idCol, textCol, maxLen))
     val sfx = docs
       .select(col("doc_id"),
         explode(expr("sequence(1, length(__t))")).as("p"), col("__t"))
@@ -1538,11 +1525,11 @@ object Dedup {
         (length(col("__t")) - col("p") + 1).cast("long").as("slen"))
     // materialized: consumed by the reps extraction AND the rep-length
     // join below — without this the sfx explode + join runs twice
-    val rs = ranks.join(sfx, Seq("doc_id", "pos")).localCheckpoint()
+    val rs = pin(ranks.join(sfx, Seq("doc_id", "pos")))
     // one representative string per rank (rank ↔ capped suffix is a
     // bijection), consumed by BOTH sides of the neighbor join
-    val repsFr = rs.select(col("suffix_rank").as("r"), col("sfx"))
-      .dropDuplicates("r").localCheckpoint()
+    val repsFr = pin(rs.select(col("suffix_rank").as("r"), col("sfx"))
+      .dropDuplicates("r"))
     val lcpNext = repsFr.select(col("r"), col("sfx").as("sa"))
       .join(repsFr.select((col("r") - 1).as("r"), col("sfx").as("sb")),
         Seq("r"))

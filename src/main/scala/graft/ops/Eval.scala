@@ -72,17 +72,18 @@ object Eval {
     * bin by construction. */
   def pavPool(df: DataFrame, binCol: String, nCol: String,
               posCol: String, passes: Int): DataFrame = {
-    // localCheckpoint per pass: `cur` feeds BOTH the group agg and the
-    // re-join, so an unmaterialized loop doubles the plan every pass —
+    // a checkpoint per pass (`Checkpoints.iterate`, which frees each
+    // superseded pass): `cur` feeds BOTH the group agg and the re-join,
+    // so an unmaterialized loop doubles the plan every pass —
     // 2^passes corpus scans (measured: 86 s at sf0.1 for 9 passes over
     // TEN rows). Materializing cuts each pass to two O(bins) jobs and
     // evaluates the upstream corpus aggregation exactly once.
-    var cur = df.select(col(binCol).cast("long").as("bin"),
-      col(nCol).cast("long").as("n"), col(posCol).cast("long").as("pos"))
-      .withColumn("__g", col("bin"))
-      .localCheckpoint()
+    val (init, bins) = Checkpoints.ckptCount(
+      df.select(col(binCol).cast("long").as("bin"),
+        col(nCol).cast("long").as("n"), col(posCol).cast("long").as("pos"))
+      .withColumn("__g", col("bin")))
     val wo = Window.orderBy("__g")
-    for (_ <- 1 to passes) {
+    val (cur, _) = Checkpoints.iterate(init, bins, passes) { (cur, _) =>
       val mapped = cur.groupBy("__g")
         .agg(sum("n").as("__w"), sum("pos").as("__sp"))
         .withColumn("__pw", lag("__w", 1).over(wo))
@@ -94,9 +95,8 @@ object Eval {
           .over(wo.rowsBetween(Window.unboundedPreceding, 0)))
         .withColumn("__ng", min("__g").over(Window.partitionBy("__idx")))
         .select(col("__g").as("__og"), col("__ng"))
-      cur = cur.join(mapped, col("__g") === col("__og"))
+      cur.join(mapped, col("__g") === col("__og"))
         .select(col("bin"), col("n"), col("pos"), col("__ng").as("__g"))
-        .localCheckpoint()
     }
     val pooled = cur.groupBy("__g")
       .agg(sum("n").as("__w"), sum("pos").as("__sp"))

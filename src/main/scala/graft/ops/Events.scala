@@ -207,12 +207,11 @@ object Events {
     * the span scan and the grid join both consume it, and without the
     * barrier each branch would re-aggregate the raw events. */
   def resampleLocf(events: DataFrame, key: String, ts: String,
-                   valueCol: String, seconds: Long): DataFrame = {
-    val aggs = events
+                   valueCol: String, seconds: Long): DataFrame = Checkpoints.scoped { pin =>
+    val aggs = pin(events
       .groupBy(col(key), bucketStart(col(ts), seconds).as("bucket"))
       .agg(count(lit(1)).as("n_events"),
-        Relational.sumExact(col(valueCol)).as("sum_value"))
-      .localCheckpoint(true)
+        Relational.sumExact(col(valueCol)).as("sum_value")))
     val spans = aggs.groupBy(col(key))
       .agg(min("bucket").as("__lo"), max("bucket").as("__hi"))
     val grid = spans.select(col(key),

@@ -92,11 +92,14 @@ object Graph {
     }
   }
 
-  private def edgeFrame(edges: DataFrame, srcCol: String, dstCol: String,
+  /** The caller's laid-out edges as they are, or a layout the scope
+    * owns. */
+  private def edgeFrame(pin: Checkpoints.Pins, edges: DataFrame,
+                        srcCol: String, dstCol: String,
                         assumeLaidOut: Boolean,
                         layoutKey: String = "src"): DataFrame =
     if (assumeLaidOut) edges
-    else layoutEdges(edges, srcCol, dstCol, layoutKey = layoutKey)
+    else pin.keep(layoutEdges(edges, srcCol, dstCol, layoutKey = layoutKey))
 
   /** The PageRank family's one-time (id, __deg) node frame in ONE
     * aggregation: symmetrize the laid-out edges as (id, is-src) rows
@@ -115,14 +118,10 @@ object Graph {
     * regime per-round joins are src-keyed shuffle joins, so the edges
     * are re-laid on src ONCE (amortized) instead of paying an O(|E|)
     * exchange every round; a caller-laid frame is kept as it is. */
-  private def rankEdges(e0: DataFrame, useBroadcast: Boolean,
-                        assumeLaidOut: Boolean): DataFrame =
+  private def rankEdges(pin: Checkpoints.Pins, e0: DataFrame,
+                        useBroadcast: Boolean, assumeLaidOut: Boolean): DataFrame =
     if (useBroadcast || assumeLaidOut) e0
-    else {
-      val relaid = layoutEdges(e0, "src", "dst", layoutKey = "src")
-      Checkpoints.free(e0)
-      relaid
-    }
+    else pin.keep(layoutEdges(e0, "src", "dst", layoutKey = "src"))
 
   /** One PageRank-family round's contribution sums: every source's
     * rank div out-degree, summed per destination (`__s`). */
@@ -177,9 +176,9 @@ object Graph {
   def pageRank(edges: DataFrame, srcCol: String, dstCol: String,
                iters: Int = 3, base: Long = 150000L,
                dampNum: Long = 85L, assumeLaidOut: Boolean = false,
-               broadcastRankRows: Long = 5000000L): DataFrame = {
+               broadcastRankRows: Long = 5000000L): DataFrame = Checkpoints.scoped { pin =>
     require(iters >= 1, "pageRank needs at least one iteration")
-    val e0 = edgeFrame(edges, srcCol, dstCol, assumeLaidOut,
+    val e0 = edgeFrame(pin, edges, srcCol, dstCol, assumeLaidOut,
       layoutKey = "dst")
     // out-degree is static, so it RIDES IN the rank frame (computed
     // once here via the fused nodeFrame agg, carried through every
@@ -187,11 +186,11 @@ object Graph {
     // with a projection instead of a ranks-deg join. Sink nodes carry
     // a null degree; they emit no contribution row (no matching src
     // in e), so the null never reaches the arithmetic.
-    val (nodes, nodeRows) = Checkpoints.ckptCount(nodeFrame(e0))
+    val (nodes, nodeRows) = pin.counted(nodeFrame(e0))
     val useBroadcast = nodeRows <= broadcastRankRows
     val hint: DataFrame => DataFrame =
       if (useBroadcast) df => broadcast(df) else df => df
-    val e = rankEdges(e0, useBroadcast, assumeLaidOut)
+    val e = rankEdges(pin, e0, useBroadcast, assumeLaidOut)
 
     val (ranks, _) = Checkpoints.iterate(
         nodes.withColumn("rank_micro", lit(1000000L)), nodeRows, iters) {
@@ -202,10 +201,6 @@ object Graph {
             (lit(base) + expr(s"($dampNum * coalesce(__s, 0L)) div 100"))
               .as("rank_micro"))
     }
-    // the returned frame is a self-contained checkpoint: the loop
-    // scaffolding's blocks are dead and must not outlive the call
-    Checkpoints.free(nodes)
-    if (!assumeLaidOut) Checkpoints.free(e)
     ranks.select("id", "rank_micro")
   }
 
@@ -233,21 +228,21 @@ object Graph {
                             iters: Int = 3, base: Long = 150000L,
                             dampNum: Long = 85L,
                             assumeLaidOut: Boolean = false,
-                            broadcastRankRows: Long = 5000000L): DataFrame = {
+                            broadcastRankRows: Long = 5000000L): DataFrame =
+      Checkpoints.scoped { pin =>
     require(iters >= 1, "pageRankRedistributed needs at least one iteration")
-    val e0 = edgeFrame(edges, srcCol, dstCol, assumeLaidOut,
+    val e0 = edgeFrame(pin, edges, srcCol, dstCol, assumeLaidOut,
       layoutKey = "dst")
     // out-degree rides in the node frame (the pageRank discipline,
     // fused nodeFrame agg) — and doubles as dangling membership:
     // __deg IS NULL ⟺ the node has no out-edges, so the per-round
     // dangling-mass sum is a filter + aggregate, no membership join
     // at all.
-    val (nodes, nodeRows) = Checkpoints.ckptCount(nodeFrame(e0))
+    val (nodes, nodeRows) = pin.counted(nodeFrame(e0))
     val useBroadcast = nodeRows <= broadcastRankRows
     val hint: DataFrame => DataFrame =
       if (useBroadcast) df => broadcast(df) else df => df
-    val e = rankEdges(e0, useBroadcast, assumeLaidOut)
-    val nCnt = nodes.agg(count(lit(1)).as("__n")).localCheckpoint()
+    val e = rankEdges(pin, e0, useBroadcast, assumeLaidOut)
 
     val (ranks, _) = Checkpoints.iterate(
         nodes.withColumn("rank_micro", lit(1000000L)), nodeRows, iters) {
@@ -257,15 +252,11 @@ object Graph {
         nodes
           .join(hint(contributions(e, ranks, hint)), Seq("id"), "left")
           .crossJoin(broadcast(dsum))
-          .crossJoin(broadcast(nCnt))
           .select(col("id"), col("__deg"),
-            (lit(base) +
-              expr(s"($dampNum * (coalesce(__s, 0L) + (__d div __n))) div 100"))
+            (lit(base) + expr(
+              s"($dampNum * (coalesce(__s, 0L) + (__d div ${nodeRows}L))) div 100"))
               .as("rank_micro"))
     }
-    Checkpoints.free(nodes)
-    Checkpoints.free(nCnt)
-    if (!assumeLaidOut) Checkpoints.free(e)
     ranks.select("id", "rank_micro")
   }
 
@@ -287,23 +278,24 @@ object Graph {
                            seeds: DataFrame, iters: Int = 3,
                            base: Long = 150000L, dampNum: Long = 85L,
                            assumeLaidOut: Boolean = false,
-                           broadcastRankRows: Long = 5000000L): DataFrame = {
+                           broadcastRankRows: Long = 5000000L): DataFrame =
+      Checkpoints.scoped { pin =>
     require(iters >= 1, "personalizedPageRank needs at least one iteration")
-    val e0 = edgeFrame(edges, srcCol, dstCol, assumeLaidOut,
+    val e0 = edgeFrame(pin, edges, srcCol, dstCol, assumeLaidOut,
       layoutKey = "dst")
     val seedIds = seeds.select(col(seeds.columns.head).cast("long").as("id"))
       .distinct()
     // seed flag AND out-degree both ride in the node frame (fused
     // nodeFrame agg + one small seed join) — rounds project
     // contributions instead of joining deg
-    val (nodes, nodeRows) = Checkpoints.ckptCount(nodeFrame(e0)
+    val (nodes, nodeRows) = pin.counted(nodeFrame(e0)
       .join(seedIds.withColumn("__seed", lit(1L)), Seq("id"), "left")
       .select(col("id"), coalesce(col("__seed"), lit(0L)).as("__seed"),
         col("__deg")))
     val useBroadcast = nodeRows <= broadcastRankRows
     val hint: DataFrame => DataFrame =
       if (useBroadcast) df => broadcast(df) else df => df
-    val e = rankEdges(e0, useBroadcast, assumeLaidOut)
+    val e = rankEdges(pin, e0, useBroadcast, assumeLaidOut)
 
     val (ranks, _) = Checkpoints.iterate(nodes.withColumn("rank_micro",
         when(col("__seed") === 1L, lit(1000000L)).otherwise(lit(0L))),
@@ -315,8 +307,6 @@ object Graph {
             expr(s"($dampNum * coalesce(__s, 0L)) div 100"))
             .as("rank_micro"))
     }
-    Checkpoints.free(nodes)
-    if (!assumeLaidOut) Checkpoints.free(e)
     ranks.select("id", "rank_micro")
   }
 
@@ -378,10 +368,10 @@ object Graph {
     * driver work. */
   def kCore(edges: DataFrame, srcCol: String, dstCol: String,
             k: Int, rounds: Int = 3,
-            broadcastAliveRows: Long = 5000000L): DataFrame = {
+            broadcastAliveRows: Long = 5000000L): DataFrame = Checkpoints.scoped { pin =>
     require(k >= 1, "kCore needs k >= 1")
     require(rounds >= 1, "kCore needs at least one round")
-    val e = undirectedLayout(edges, srcCol, dstCol)
+    val e = pin.keep(undirectedLayout(edges, srcCol, dstCol))
     val (alive0, nodeRows) = Checkpoints.ckptCount(
       e.select(col("src").as("id")).distinct())
     // fixpoint early-exit: a peel only REMOVES nodes (alive' ⊆ alive),
@@ -393,19 +383,17 @@ object Graph {
       inducedDegrees(e, alive, n, broadcastAliveRows)
         .where(col("__deg") >= k).select(col("src").as("id"))
     }
+    pin.keep(alive)
     // final degree within the survivor-induced subgraph; the left join
     // keeps survivors whose last peel removed every neighbor (degree 0)
     // — the output is "the survivors", not "the survivors that still
-    // have an edge". Checkpointed so the O(|E|) scaffolding can be
-    // freed before return (the result is O(survivors) small).
+    // have an edge". Checkpointed so the O(|E|) scaffolding is freed
+    // when the call returns (the result is O(survivors) small).
     val deg = inducedDegrees(e, alive, aliveRows, broadcastAliveRows)
-    val out = alive
+    alive
       .join(deg.select(col("src").as("id"), col("__deg")), Seq("id"), "left")
       .select(col("id"), coalesce(col("__deg"), lit(0L)).as("degree"))
       .localCheckpoint()
-    Checkpoints.free(alive)
-    Checkpoints.free(e)
-    out
   }
 
   /** Full core DECOMPOSITION (every node's shell index), extending the
@@ -427,9 +415,10 @@ object Graph {
     * windows, no driver loops. */
   def coreDecomposition(edges: DataFrame, srcCol: String, dstCol: String,
                         maxK: Int, roundsPerK: Int = 2,
-                        broadcastAliveRows: Long = 5000000L): DataFrame = {
+                        broadcastAliveRows: Long = 5000000L): DataFrame =
+      Checkpoints.scoped { pin =>
     require(maxK >= 1 && roundsPerK >= 1, "coreDecomposition bounds must be >= 1")
-    val e = undirectedLayout(edges, srcCol, dstCol)
+    val e = pin.keep(undirectedLayout(edges, srcCol, dstCol))
     var (shells, aliveRows) = Checkpoints.ckptCount(
       e.select(col("src").as("id")).distinct()
         .withColumn("shell", lit(maxK.toLong)))
@@ -456,7 +445,6 @@ object Graph {
       shells = s2
       aliveRows = n
     }
-    Checkpoints.free(e)
     shells
   }
 
@@ -481,9 +469,10 @@ object Graph {
     * materializes. */
   def labelPropagation(edges: DataFrame, srcCol: String, dstCol: String,
                        rounds: Int = 2,
-                       broadcastLabelRows: Long = 5000000L): DataFrame = {
+                       broadcastLabelRows: Long = 5000000L): DataFrame =
+      Checkpoints.scoped { pin =>
     require(rounds >= 1, "labelPropagation needs at least one round")
-    val e = undirectedLayout(edges, srcCol, dstCol)
+    val e = pin.keep(undirectedLayout(edges, srcCol, dstCol))
     val (labels0, labelRows) = Checkpoints.ckptCount(
       e.select(col("src").as("id")).distinct()
         .withColumn("label", col("id")))
@@ -504,7 +493,6 @@ object Graph {
         labels.join(best, Seq("id"), "left")
           .select(col("id"), coalesce(col("__new"), col("label")).as("label"))
     }
-    Checkpoints.free(e)
     labels
   }
 
@@ -543,9 +531,10 @@ object Graph {
                  seeds: DataFrame, hops: Int,
                  frontierOnly: Boolean = false,
                  assumeLaidOut: Boolean = false,
-                 broadcastFrontierRows: Long = 5000000L): DataFrame = {
+                 broadcastFrontierRows: Long = 5000000L): DataFrame =
+      Checkpoints.scoped { pin =>
     require(hops >= 0, "boundedBfs needs a non-negative hop bound")
-    val e = edgeFrame(edges, srcCol, dstCol, assumeLaidOut,
+    val e = edgeFrame(pin, edges, srcCol, dstCol, assumeLaidOut,
       layoutKey = "dst")
     val seedIds = seeds.select(col(seeds.columns.head).cast("long").as("id"))
       .distinct()
@@ -555,7 +544,7 @@ object Graph {
        else e.join(f, "src"))
         .select(col("dst").as("id"), (col("dist") + 1).as("dist"))
     }
-    val dist = if (frontierOnly) {
+    if (frontierOnly) {
       // the frontier rides in the dist frame as the `__f` flag (the ids
       // first reached last round); the round's measure is its size. An
       // empty frontier discovers nothing forever after — every
@@ -584,8 +573,6 @@ object Graph {
           d.union(expand(d, distRows)).groupBy("id").agg(min("dist").as("dist"))
       }._1
     }
-    if (!assumeLaidOut) Checkpoints.free(e)
-    dist
   }
 
   /** Bounded-round SEED-KEYED multi-source BFS: per-(seed, node) hop
@@ -611,9 +598,10 @@ object Graph {
   def seededBfs(edges: DataFrame, srcCol: String, dstCol: String,
                 seeds: DataFrame, hops: Int,
                 assumeLaidOut: Boolean = false,
-                broadcastFrontierRows: Long = 5000000L): DataFrame = {
+                broadcastFrontierRows: Long = 5000000L): DataFrame =
+      Checkpoints.scoped { pin =>
     require(hops >= 0, "seededBfs needs a non-negative hop bound")
-    val e = edgeFrame(edges, srcCol, dstCol, assumeLaidOut, layoutKey = "src")
+    val e = edgeFrame(pin, edges, srcCol, dstCol, assumeLaidOut, layoutKey = "src")
     // the frontier rides in the dist frame as the `__f` flag (the
     // pairs first reached last round), the boundedBfs frontier shape
     val (init, seedRows) = Checkpoints.ckptCount(
@@ -636,7 +624,6 @@ object Graph {
       d.select(col("seed"), col("id"), col("dist"), lit(false).as("__f"))
         .union(fresh.withColumn("__f", lit(true)))
     }
-    if (!assumeLaidOut) Checkpoints.free(e)
     dist.select("seed", "id", "dist")
   }
 
@@ -665,9 +652,10 @@ object Graph {
   def seededBfsBitmask(edges: DataFrame, srcCol: String, dstCol: String,
                        seeds: DataFrame, hops: Int,
                        assumeLaidOut: Boolean = false,
-                       broadcastMaskRows: Long = 5000000L): DataFrame = {
+                       broadcastMaskRows: Long = 5000000L): DataFrame =
+      Checkpoints.scoped { pin =>
     require(hops >= 0, "seededBfsBitmask needs a non-negative hop bound")
-    val e = edgeFrame(edges, srcCol, dstCol, assumeLaidOut, layoutKey = "dst")
+    val e = edgeFrame(pin, edges, srcCol, dstCol, assumeLaidOut, layoutKey = "dst")
     val seedMasks = seeds
       .select(col(seeds.columns.head).cast("long").as("id"),
         col(seeds.columns(1)).cast("int").as("bit"))
@@ -709,7 +697,6 @@ object Graph {
         .select(col("id"), col("__o.round"), col("__o.mask"))
       s.where(col("round") >= 0).union(merged)
     }
-    if (!assumeLaidOut) Checkpoints.free(e)
     out.where(col("round") >= 0)
       .select(col("id"), col("round"), col("mask").as("new_mask"))
   }
@@ -743,9 +730,10 @@ object Graph {
     * unpersist as soon as the next round materializes. */
   def weightedSssp(edges: DataFrame, srcCol: String, dstCol: String,
                    weightCol: String, seeds: DataFrame, rounds: Int,
-                   broadcastDistRows: Long = 5000000L): DataFrame = {
+                   broadcastDistRows: Long = 5000000L): DataFrame =
+      Checkpoints.scoped { pin =>
     require(rounds >= 0, "weightedSssp needs a non-negative round bound")
-    val laid = edges
+    val laid = pin.keep(edges
       .select(col(srcCol).cast("long").as("src"),
         col(dstCol).cast("long").as("dst"),
         col(weightCol).cast("long").as("w"))
@@ -754,11 +742,9 @@ object Graph {
       .repartition(col("dst"))
       .groupBy("src", "dst").agg(min("w").as("w"))
       .sortWithinPartitions("dst")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val negative = !laid.where(col("w") < 0).isEmpty
-    // the failure path must not leave the layout pinned either
-    if (negative) Checkpoints.free(laid)
-    require(!negative, "weightedSssp needs non-negative weights")
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+    require(laid.where(col("w") < 0).isEmpty,
+      "weightedSssp needs non-negative weights")
     val (init, seedRows) = Checkpoints.ckptCount(
       seeds.select(col(seeds.columns.head).cast("long").as("id"))
         .distinct()
@@ -773,7 +759,6 @@ object Graph {
           .select(col("dst").as("id"), (col("dist") + col("w")).as("dist"))
         dist.union(relaxed).groupBy("id").agg(min("dist").as("dist"))
     }
-    Checkpoints.free(laid)
     dist
   }
 
@@ -808,9 +793,9 @@ object Graph {
   def hits(edges: DataFrame, srcCol: String, dstCol: String,
            iters: Int = 2, scale: Long = 1000000L,
            assumeLaidOut: Boolean = false,
-           broadcastRankRows: Long = 5000000L): DataFrame = {
+           broadcastRankRows: Long = 5000000L): DataFrame = Checkpoints.scoped { pin =>
     require(iters >= 1, "hits needs at least one iteration")
-    val e = edgeFrame(edges, srcCol, dstCol, assumeLaidOut, layoutKey = "dst")
+    val e = edgeFrame(pin, edges, srcCol, dstCol, assumeLaidOut, layoutKey = "dst")
     // the initial hub score rides as an already-"raw" column whose max
     // is `scale`, so every half-step reads its input the same way
     val (init, nodeRows) = Checkpoints.ckptCount(nodeFrame(e)
@@ -842,7 +827,6 @@ object Graph {
         .select(col("id"), col("__has_out"), col("__raw"),
           col("__v").as("__other"))
     }
-    if (!assumeLaidOut) Checkpoints.free(e)
     rescaled(last)
       .select(col("id"), col("__v").as("hub_micro"), col("__other").as("auth_micro"))
   }
@@ -869,7 +853,8 @@ object Graph {
     * ids; no cross joins; hub-degree skew is the thing to cap
     * upstream (as `lshCandidatePairs` does with maxBucket).
     * Superseded edge frames unpersist as each round materializes. */
-  def kTrussEdges(pairs: DataFrame, k: Int, rounds: Int = 2): DataFrame = {
+  def kTrussEdges(pairs: DataFrame, k: Int, rounds: Int = 2): DataFrame =
+      Checkpoints.scoped { pin =>
     require(k >= 3, "k-truss needs k >= 3 (support threshold k-2 >= 1)")
     require(rounds >= 1, "kTrussEdges needs at least one round")
     def support(e: DataFrame): DataFrame = {
@@ -899,11 +884,10 @@ object Graph {
         .where(col("support") >= k - 2)
         .select("id_a", "id_b")
     }
-    val out = e.join(support(e), Seq("id_a", "id_b"))
+    pin.keep(e)
+    e.join(support(e), Seq("id_a", "id_b"))
       .select(col("id_a"), col("id_b"), col("support"))
       .localCheckpoint()
-    Checkpoints.free(e)
-    out
   }
 
   /** Bounded topological layering of a DAG (Kahn's algorithm as a
@@ -925,11 +909,11 @@ object Graph {
     * node is still alive, its wave once peeled — so it is the answer
     * after the last round. */
   def topoLayers(edges: DataFrame, srcCol: String, dstCol: String,
-                 rounds: Int = 4): DataFrame = {
+                 rounds: Int = 4): DataFrame = Checkpoints.scoped { pin =>
     require(rounds >= 1, "topoLayers needs at least one round")
-    val e0 = edges.select(col(srcCol).cast("long").as("src"),
+    val e0 = pin.keep(edges.select(col(srcCol).cast("long").as("src"),
       col(dstCol).cast("long").as("dst")).distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
     val (init, nodeRows) = Checkpoints.ckptCount(e0.select(col("src").as("id"))
       .union(e0.select(col("dst").as("id"))).distinct()
       .withColumn("layer", lit(-1)))
@@ -953,7 +937,6 @@ object Graph {
           when(col("layer") === -1 && col("__b").isNull, lit(r))
             .otherwise(col("layer")).as("layer"))
     }
-    e0.unpersist(false)
     layers
   }
 
@@ -974,11 +957,11 @@ object Graph {
     * candidate edge list must be hub-capped upstream (the
     * `lshCandidatePairs` maxBucket discipline) — triangle join cost is
     * Σ deg(v)², which the cap bounds. */
-  def clusteringCoefficient(pairs: DataFrame): DataFrame = {
-    val e = pairs.select(
+  def clusteringCoefficient(pairs: DataFrame): DataFrame = Checkpoints.scoped { pin =>
+    val e = pin(pairs.select(
       least(col("id_a"), col("id_b")).cast("long").as("id_a"),
       greatest(col("id_a"), col("id_b")).cast("long").as("id_b"))
-      .where(col("id_a") < col("id_b")).distinct().localCheckpoint()
+      .where(col("id_a") < col("id_b")).distinct())
     val t = e.select(col("id_a").as("x"), col("id_b").as("y"))
       .join(e.select(col("id_a").as("y"), col("id_b").as("z")), "y")
       .join(e.select(col("id_a").as("x"), col("id_b").as("z")), Seq("x", "z"))
@@ -990,15 +973,13 @@ object Graph {
     val deg = e.select(col("id_a").as("id"))
       .union(e.select(col("id_b").as("id")))
       .groupBy("id").agg(count(lit(1)).as("degree"))
-    val out = deg.join(triPerNode, Seq("id"), "left")
+    deg.join(triPerNode, Seq("id"), "left")
       .select(col("id"), col("degree"),
         coalesce(col("n_tri"), lit(0L)).as("n_tri"))
       .withColumn("cc_ppm", when(col("degree") >= 2,
         expr("(n_tri * 2000000) div (degree * (degree - 1))"))
         .otherwise(lit(0L)))
       .localCheckpoint()
-    Checkpoints.free(e)
-    out
   }
 
   /** Exactly `iters` synchronous min-label iterations over a (both-
@@ -1079,12 +1060,13 @@ object Graph {
   def boruvkaMsf(edges: DataFrame, rounds: Int = 4,
                  labelIters: Int = 4,
                  singleTaskLabelEdges: Long = 2000000L,
-                 broadcastCompRows: Long = 5000000L): DataFrame = {
+                 broadcastCompRows: Long = 5000000L): DataFrame =
+      Checkpoints.scoped { pin =>
     require(rounds >= 1 && labelIters >= 1,
       "boruvkaMsf needs at least one round and one label iteration")
-    val e = edges.select(col("src").cast("long").as("src"),
+    val e = pin.keep(edges.select(col("src").cast("long").as("src"),
         col("dst").cast("long").as("dst"), col("key").cast("long").as("key"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
     val none = lit(null).cast("long")
     // O(V) component rows: broadcast only while they provably fit
     // (row-count gate, same discipline as the singleTaskLabelEdges
@@ -1163,10 +1145,8 @@ object Graph {
               none.as("__ca"), none.as("__cb")))
       }
     }
-    val (out, _) = Checkpoints.ckptCount(
-      forest.where(col("key").isNotNull).select("key").distinct())
-    Checkpoints.free(forest)
-    Checkpoints.free(e)
-    out
+    pin.keep(forest)
+    Checkpoints.ckptCount(
+      forest.where(col("key").isNotNull).select("key").distinct())._1
   }
 }

@@ -153,15 +153,15 @@ object Relational {
     * construction) broadcasts into both the split and the dim subset.
     * Results are identical to the direct inner join, in any order. */
   def hybridSkewJoin(big: DataFrame, small: DataFrame, key: String,
-                     threshold: Long): DataFrame = {
-    // materialize the frequency count ONCE (eager localCheckpoint,
+                     threshold: Long): DataFrame = Checkpoints.scoped { pin =>
+    // materialize the frequency count ONCE (eager checkpoint,
     // small by construction) instead of embedding the aggregation
     // subtree in three broadcast branches — correctness never depended
     // on it, but without it avoiding a triple scan of the big side
     // relied on ReuseExchange matching the three copies (the Graph-ops
     // checkpoint discipline, applied here per the r6 advice)
-    val heavyKeys = big.groupBy(key).agg(count(lit(1)).as("__n"))
-      .where(col("__n") > threshold).select(key).localCheckpoint()
+    val heavyKeys = pin(big.groupBy(key).agg(count(lit(1)).as("__n"))
+      .where(col("__n") > threshold).select(key))
     val heavyBig = big.join(broadcast(heavyKeys), Seq(key), "left_semi")
     val lightBig = big.join(broadcast(heavyKeys), Seq(key), "left_anti")
     val heavySmall = small.join(broadcast(heavyKeys), Seq(key), "left_semi")

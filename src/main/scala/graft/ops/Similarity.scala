@@ -305,18 +305,18 @@ object Similarity {
   def trainCentroids(corpusIn: DataFrame, nCells: Int,
                      idCol: String = "vec_id", vecCol: String = "embedding",
                      exactMeans: Boolean = true,
-                     maxIter: Int = 1): Array[(Int, Array[Float])] = {
+                     maxIter: Int = 1): Array[(Int, Array[Float])] =
+      Checkpoints.scoped { pin =>
     // consumed by count, seed collect, and the Lloyd collect — persist
     // so direct callers don't re-scan the corpus three times (when the
     // caller already persisted the same plan, the cache manager
     // dedupes and this is a no-op). Training is self-contained (the
     // result is a driver-side array; no returned plan references this
-    // frame), so the persist is released in the finally below — the
+    // frame), so the scope releases the persist on every path — the
     // q452 lesson: an op that persists must unpersist on every path,
     // not rely on callers remembering to.
-    val corpus = corpusIn.select(col(idCol), col(vecCol))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
+    val corpus = pin.keep(corpusIn.select(col(idCol), col(vecCol))
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
     // seed centroids: deterministic hash-spread pick — a scan + limit,
     // never a global row_number window (which would funnel the whole
     // corpus through one task). Seed quality only affects the Lloyd
@@ -371,7 +371,6 @@ object Similarity {
         .map(r => r.getInt(0) -> r.getSeq[Float](1).toArray)
     }
     (0 until math.max(maxIter, 0)).foldLeft(seeds)((c, _) => lloydStep(c))
-    } finally corpus.unpersist(false)
   }
 
   /** Product-quantization codebooks: one deterministic codebook per
@@ -696,7 +695,8 @@ object Similarity {
     * Returns (pos 1-based, v) — the iterate after `rounds` rounds,
     * scaled to max |v| = 1000. */
   def gramPowerIteration(emb: DataFrame, vecCol: String = "embedding",
-                         dims: Int = 64, rounds: Int = 2): DataFrame = {
+                         dims: Int = 64, rounds: Int = 2): DataFrame =
+      Checkpoints.scoped { pin =>
     require(rounds >= 1, "gramPowerIteration needs at least one round")
     val qv = transform(slice(col(vecCol), 1, dims),
       x => round(x.cast("double") * 1000, 0).cast("long"))
@@ -708,12 +708,11 @@ object Similarity {
     // parquet is ONE partition) while the dims²-per-row expansion is
     // pure CPU — spread it across the session's parallelism first
     val shufflePartitions = emb.sparkSession.sessionState.conf.numShufflePartitions
-    val gram = emb.select(qv.as("__q"))
+    val gram = pin(emb.select(qv.as("__q"))
       .repartition(shufflePartitions)
       .select(explode(pairTerms).as("e"))
       .groupBy(col("e.i").as("i"), col("e.j").as("j"))
-      .agg(sum("e.p").as("g"))
-      .localCheckpoint()
+      .agg(sum("e.p").as("g")))
     val (v0, dimRows) = Checkpoints.ckptCount(
       gram.select(col("j").as("pos")).distinct().withColumn("v", lit(1000L)))
     val (v, _) = Checkpoints.iterate(v0, dimRows, rounds) { (v, _) =>
@@ -728,7 +727,6 @@ object Similarity {
         .select(col("pos"),
           expr("(__wm - pmod(__wm, m)) div m").cast("long").as("v"))
     }
-    Checkpoints.free(gram)
     v
   }
 

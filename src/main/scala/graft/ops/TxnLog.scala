@@ -1188,12 +1188,12 @@ object TxnLog {
     * CDF-invisible like any compaction. */
   def clusterBin(s: SparkSession, table: String, writer: String,
                  bin: Seq[String], outPrefix: String,
-                 keyCol: String, nOut: Int): CommitResult = {
+                 keyCol: String, nOut: Int): CommitResult = Checkpoints.scoped { pin =>
     require(bin.nonEmpty, "empty cluster bin")
     require(nOut >= 1, s"nOut must be >= 1, got $nOut")
     import org.apache.spark.sql.functions.{col, max, min}
     val (rows, head) = binRows(s, table, bin)
-    val all = rows.localCheckpoint() // scanned once per output range below
+    val all = pin(rows) // scanned once per output range below
     val mm = all.agg(min(col(keyCol)).cast("long"),
       max(col(keyCol)).cast("long")).head()
     require(!mm.isNullAt(0), s"cluster bin has no rows with $keyCol")

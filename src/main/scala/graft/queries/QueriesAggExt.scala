@@ -225,11 +225,7 @@ object QueriesAggExt {
         |SELECT 'with_null' AS variant, count(*) AS n FROM customer
         |WHERE c_custkey NOT IN (SELECT nullif(o_custkey, 7) FROM orders)
         |ORDER BY variant""".stripMargin
-      (s, d) => {
-        graft.Tables.table(s, d, "customer").createOrReplaceTempView("customer")
-        graft.Tables.table(s, d, "orders").createOrReplaceTempView("orders")
-        s.sql(sql)
-      }
+      (s, d) => graft.Tables.sqlOver(s, d, "customer", "orders")(sql)
     },
       Some("""SELECT 'no_null' AS variant, count(*) AS n FROM customer
         |WHERE c_custkey NOT IN

@@ -1,7 +1,7 @@
 package graft.queries
 
 import graft.Tables._
-import graft.ops.{Dedup, Sampling, Text}
+import graft.ops.{Checkpoints, Dedup, Sampling, Text}
 import org.apache.spark.sql.functions._
 
 /** Deduplication queries (north-star operators): exact hash dedup,
@@ -94,20 +94,22 @@ object QueriesDedup {
 
     // ---- q45: duplicate groups (connected components over LSH pairs)
     QueryDef("q45_duplicate_groups",
-      (s, d) => Dedup.duplicateGroupsStar(
-          Dedup.lshCandidatePairs(documents(s, d), "doc_id", "text", ShingleN, K, Bands),
-          maxIter = 20)
-        .orderBy("id"),
+      (s, d) => Checkpoints.scoped { pin =>
+        Dedup.duplicateGroupsStar(pin.adopt(
+            Dedup.lshCandidatePairs(documents(s, d), "doc_id", "text", ShingleN, K, Bands)),
+            maxIter = 20)
+          .orderBy("id")
+      },
       Some(s"""${lshCtes().replaceFirst("WITH ", "WITH RECURSIVE ")},
         |$groupCtes
         |SELECT id, group_id FROM grp ORDER BY id""".stripMargin)),
 
     // ---- q46: the end-to-end near-dedup operator: survivors only ----
     QueryDef("q46_dedup_survivors",
-      (s, d) => {
+      (s, d) => Checkpoints.scoped { pin =>
         val docs = documents(s, d)
-        val groups = Dedup.duplicateGroupsStar(
-          Dedup.lshCandidatePairs(docs, "doc_id", "text", ShingleN, K, Bands),
+        val groups = Dedup.duplicateGroupsStar(pin.adopt(
+          Dedup.lshCandidatePairs(docs, "doc_id", "text", ShingleN, K, Bands)),
           maxIter = 20)
         Dedup.dedupSurvivors(docs, "doc_id", groups)
           .select("doc_id", "lang", "n_chars")
@@ -131,12 +133,12 @@ object QueriesDedup {
     // -> deterministic train/val/test split. Every stage is an
     // already-verified operator; this pins their composition.
     QueryDef("q91_training_prep",
-      (s, d) => {
+      (s, d) => Checkpoints.scoped { pin =>
         val base = documents(s, d)
           .where(col("lang").isin("en", "de") &&
             size(Text.tokens(col("text"))) >= 20)
-        val groups = Dedup.duplicateGroupsStar(
-          Dedup.lshCandidatePairs(base, "doc_id", "text", ShingleN, K, Bands),
+        val groups = Dedup.duplicateGroupsStar(pin.adopt(
+          Dedup.lshCandidatePairs(base, "doc_id", "text", ShingleN, K, Bands)),
           maxIter = 20)
         Sampling.hashSplit(Dedup.dedupSurvivors(base, "doc_id", groups),
             "doc_id", 80, 10)

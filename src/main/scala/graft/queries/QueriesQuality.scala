@@ -384,7 +384,6 @@ object QueriesQuality {
         // the file source needs a DIRECTORY; glob-filter to the one table
         graft.streaming.Sessions.runStreamToBatch(s, d, sch,
             globFilter = Some("events.parquet"),
-            shufflePartitions = Some(4),
             transform = st => normalizeEventTs(st)
               .groupBy(window(col("ts"), "30 minutes"), col("event_type"))
               .agg(count(lit(1)).as("n"),
@@ -456,7 +455,6 @@ object QueriesQuality {
         val sch = eventsStreamSchema(s, d)
         graft.streaming.Sessions.runStreamToBatch(s, d, sch,
             globFilter = Some("events.parquet"),
-            shufflePartitions = Some(4),
             transform = st => graft.streaming.Sessions.assembleUtterances(
               normalizeEventTs(st)
                 .select(col("user_id"), col("ts"), col("event_type").as("word")),
@@ -491,7 +489,6 @@ object QueriesQuality {
         graft.streaming.Sessions.runStreamToBatch(s, d, sch,
             globFilter = Some("events.parquet"),
             outputMode = "append",
-            shufflePartitions = Some(4),
             transform = st => {
               val ev = normalizeEventTs(st)
               val clicks = ev.where(col("event_type") === "click")
@@ -534,7 +531,6 @@ object QueriesQuality {
         graft.streaming.Sessions.runStreamToBatch(s, d, sch,
             globFilter = Some("events.parquet"),
             outputMode = "append",
-            shufflePartitions = Some(4),
             transform = st => {
               // watermark on the SOURCE, before the selective filters:
               // the global watermark is the min over watermark nodes,
@@ -582,7 +578,6 @@ object QueriesQuality {
         graft.streaming.Sessions.runStreamToBatch(s, d, sch,
             globFilter = Some("events.parquet"),
             outputMode = "append",
-            shufflePartitions = Some(4),
             transform = st => st.select(col("user_id"), col("event_type"))
               .dropDuplicates("user_id", "event_type"))
           .orderBy("user_id", "event_type")
@@ -599,10 +594,7 @@ object QueriesQuality {
         |WHERE p_retailprice = (SELECT min(p2.p_retailprice) FROM part p2
         |  WHERE p2.p_type = p.p_type)
         |ORDER BY p_type, p_partkey""".stripMargin
-      (s, d) => {
-        graft.Tables.table(s, d, "part").createOrReplaceTempView("part")
-        s.sql(sql)
-      }
+      (s, d) => graft.Tables.sqlOver(s, d, "part")(sql)
     },
       Some("""SELECT p_type, p_partkey, p_retailprice
         |FROM part p
@@ -621,11 +613,7 @@ object QueriesQuality {
         |  AND NOT EXISTS (SELECT 1 FROM orders o WHERE o.o_custkey = c.c_custkey
         |    AND o.o_orderpriority = '1-URGENT')
         |ORDER BY c_custkey""".stripMargin
-      (s, d) => {
-        graft.Tables.table(s, d, "customer").createOrReplaceTempView("customer")
-        graft.Tables.table(s, d, "orders").createOrReplaceTempView("orders")
-        s.sql(sql)
-      }
+      (s, d) => graft.Tables.sqlOver(s, d, "customer", "orders")(sql)
     },
       Some("""SELECT c_custkey, round(c_acctbal, 2) AS bal
         |FROM customer c

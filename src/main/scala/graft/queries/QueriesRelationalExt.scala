@@ -25,11 +25,7 @@ object QueriesRelationalExt {
         |  AND EXISTS (SELECT 1 FROM lineitem
         |    WHERE l_orderkey = o_orderkey AND l_quantity > 40)
         |GROUP BY o_orderpriority ORDER BY o_orderpriority""".stripMargin
-      (s, d) => {
-        Seq("orders", "lineitem").foreach(t =>
-          Tables.table(s, d, t).createOrReplaceTempView(t))
-        s.sql(sql)
-      }
+      (s, d) => Tables.sqlOver(s, d, "orders", "lineitem")(sql)
     },
       Some("""SELECT o_orderpriority, count(*) AS n_orders
         |FROM orders

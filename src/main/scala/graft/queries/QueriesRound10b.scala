@@ -233,7 +233,6 @@ object QueriesRound10b {
         val bkt = graft.streaming.Sessions.runStreamToBatch(s, d,
           eventsStreamSchema(s, d),
           globFilter = Some("events.parquet"),
-          shufflePartitions = Some(4),
           transform = st => normalizeEventTs(st)
             .select(col("event_type"),
               expr("unix_micros(ts) div 3600000000").as("b"),

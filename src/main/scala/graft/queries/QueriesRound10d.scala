@@ -209,7 +209,6 @@ object QueriesRound10d {
         val zm = graft.streaming.Sessions.runStreamToBatch(s, d,
           eventsStreamSchema(s, d),
           globFilter = Some("events.parquet"),
-          shufflePartitions = Some(4),
           transform = st => normalizeEventTs(st)
             .select(col("event_type"),
               expr("unix_micros(ts) div 86400000000").as("dayseg"),

@@ -2,7 +2,7 @@ package graft.queries
 
 import graft.Tables._
 import graft.functions.GraftFunctions
-import graft.ops.Similarity
+import graft.ops.{Checkpoints, Similarity}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -67,7 +67,7 @@ object QueriesRound10i {
     // the oracle replays BUILD, both seeds, and all 6 SEARCH hops
     // exactly (MATERIALIZED chained CTEs, the q532 lesson).
     QueryDef("q568_graph_ann_beam",
-      (s, d) => {
+      (s, d) => Checkpoints.scoped { pin =>
         // one count() gate: p = planes sized to THIS corpus
         val n = embeddings(s, d).count()
         val nPlanes = Similarity.planesForCorpus(n, TargetOcc,
@@ -165,12 +165,12 @@ object QueriesRound10i {
         // build re-executed per hop (measured 25.9 s at sf0.01 before;
         // the q532 chain-blowup hazard on the Spark side). Checkpoint
         // the O(|E|) edge frame once and the O(queries × beam)
-        // frontier per hop; free superseded rounds.
-        val edgesCk = edges.localCheckpoint()
-        val (start, startRows) = graft.ops.Checkpoints.ckptCount(probes
+        // frontier per hop.
+        val edgesCk = pin(edges)
+        val (start, startRows) = Checkpoints.ckptCount(probes
           .select(col("query_id"), lit(Entry).as("node"))
           .unionAll(seeds).distinct())
-        val (frontier, _) = graft.ops.Checkpoints.iterate(start, startRows,
+        val (frontier, _) = Checkpoints.iterate(start, startRows,
             Hops) { (frontier, _) =>
           val expanded = frontier.select("query_id", "node")
             .unionAll(frontier
@@ -180,7 +180,6 @@ object QueriesRound10i {
             .distinct()
           scoreTop(expanded, nBeam)
         }
-        graft.ops.Checkpoints.free(edgesCk)
         val beam = frontier.withColumn("__rk", row_number().over(
           Window.partitionBy("query_id")
             .orderBy(col("__c").desc, col("node").asc)))

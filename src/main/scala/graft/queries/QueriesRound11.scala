@@ -425,7 +425,7 @@ object QueriesRound11 {
             .select(col("version"),
               split(col("value"), "\t").getItem(0).as("kind"),
               split(col("value"), "\t").getItem(1).as("path")),
-          globFilter = Some("*.txn"), shufflePartitions = Some(4))
+          globFilter = Some("*.txn"))
         // fold on the STREAMED frame: last action per path wins
         val w = org.apache.spark.sql.expressions.Window
           .partitionBy("path").orderBy(col("version").desc)

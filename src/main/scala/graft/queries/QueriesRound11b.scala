@@ -1,7 +1,7 @@
 package graft.queries
 
 import graft.Tables._
-import graft.ops.Dedup
+import graft.ops.{Checkpoints, Dedup}
 import org.apache.spark.sql.functions._
 
 /** Round-11 second batch: suffix-array construction — the exact index
@@ -62,7 +62,7 @@ object QueriesRound11b {
     // duplicate suffixes (rank collisions) are counted separately —
     // that column IS the exact-tail duplicate mass.
     QueryDef("q582_suffix_lcp_spectrum",
-      (s, d) => {
+      (s, d) => Checkpoints.scoped { pin =>
         val ranks = Dedup.suffixArrayRanks(documents(s, d), "doc_id",
           "text", MaxLen)
         val sfx = documents(s, d).select(col("doc_id"),
@@ -72,10 +72,10 @@ object QueriesRound11b {
             explode(expr("sequence(1, length(__t))")).as("p"), col("__t"))
           .select(col("doc_id"), col("p").cast("long").as("pos"),
             expr(s"substring(__t, p, $MaxLen)").as("sfx"))
-        val reps = ranks.join(sfx, Seq("doc_id", "pos"))
+        // both sides of the neighbor join consume it
+        val reps = pin(ranks.join(sfx, Seq("doc_id", "pos"))
           .select(col("suffix_rank").as("r"), col("sfx"))
-          .dropDuplicates("r")
-          .localCheckpoint() // both sides of the neighbor join consume it
+          .dropDuplicates("r"))
         val pairs = reps.select(col("r"), col("sfx").as("sa"))
           .join(reps.select((col("r") - 1).as("r"), col("sfx").as("sb")),
             Seq("r"))
@@ -96,10 +96,9 @@ object QueriesRound11b {
         // point), and n_duplicate_suffixes = positions − distinct
         // ranks reuses the already-materialized reps frame instead of
         // a countDistinct re-scan
-        val grouped = pairs.withColumn("lcp_lo", lo)
+        val grouped = pin(pairs.withColumn("lcp_lo", lo)
           .groupBy("lcp_lo").agg(count(lit(1)).as("n_pairs"),
-            max("lcp").as("__gmax"))
-          .localCheckpoint()
+            max("lcp").as("__gmax")))
         val dist = grouped.select("lcp_lo", "n_pairs")
         val audit = grouped.agg(max("__gmax").as("max_lcp"))
           .crossJoin(ranks.agg(count(lit(1)).as("__np"))

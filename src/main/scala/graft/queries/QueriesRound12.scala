@@ -1,7 +1,7 @@
 package graft.queries
 
 import graft.Tables._
-import graft.ops.{Dedup, TxnLog}
+import graft.ops.{Checkpoints, Dedup, TxnLog}
 import graft.ops.TxnLog.Action
 import org.apache.spark.sql.functions._
 
@@ -794,33 +794,34 @@ object QueriesRound12 {
         val q = stream.writeStream
           .option("checkpointLocation", s"$root/_ckpt")
           .foreachBatch { (batch: org.apache.spark.sql.DataFrame, id: Long) =>
-            // the split predicate comes from the LOG, per batch — a
-            // constraint added mid-stream takes effect next batch
-            val cons = TxnLog.constraints(TxnLog.commits(s, main))
-            val viol = cons.foldRight(lit(null).cast("string")) {
-              case ((n, e), acc) =>
-                when(expr(e) === lit(false), lit(n)).otherwise(acc)
-            }
-            val tagged = batch.withColumn("__viol", viol)
-              .localCheckpoint() // one source read for both channels
-            val ok = tagged.where(col("__viol").isNull).drop("__viol")
-            val seg = s"$main/seg_$id"
-            ok.coalesce(1).write.mode("overwrite").parquet(seg)
-            require(TxnLog.tryCommit(s, main, id + 2L, s"streamer_$id",
-              Seq(Action("add", seg))))
-            val bad = tagged.where(col("__viol").isNotNull)
-              .withColumnRenamed("__viol", "violated")
-              .withColumn("batch_id", lit(id))
-            val badActions =
-              if (bad.isEmpty) Seq.empty // empty commit keeps the log contiguous
-              else {
-                val p = s"$dead/dl_$id"
-                bad.coalesce(1).write.mode("overwrite").parquet(p)
-                Seq(Action("add", p))
+            Checkpoints.scoped { pin =>
+              // the split predicate comes from the LOG, per batch — a
+              // constraint added mid-stream takes effect next batch
+              val cons = TxnLog.constraints(TxnLog.commits(s, main))
+              val viol = cons.foldRight(lit(null).cast("string")) {
+                case ((n, e), acc) =>
+                  when(expr(e) === lit(false), lit(n)).otherwise(acc)
               }
-            require(TxnLog.tryCommit(s, dead, id + 1L, s"streamer_$id",
-              badActions))
-            ()
+              // one source read for both channels
+              val tagged = pin(batch.withColumn("__viol", viol))
+              val ok = tagged.where(col("__viol").isNull).drop("__viol")
+              val seg = s"$main/seg_$id"
+              ok.coalesce(1).write.mode("overwrite").parquet(seg)
+              require(TxnLog.tryCommit(s, main, id + 2L, s"streamer_$id",
+                Seq(Action("add", seg))))
+              val bad = tagged.where(col("__viol").isNotNull)
+                .withColumnRenamed("__viol", "violated")
+                .withColumn("batch_id", lit(id))
+              val badActions =
+                if (bad.isEmpty) Seq.empty // empty commit keeps the log contiguous
+                else {
+                  val p = s"$dead/dl_$id"
+                  bad.coalesce(1).write.mode("overwrite").parquet(p)
+                  Seq(Action("add", p))
+                }
+              require(TxnLog.tryCommit(s, dead, id + 1L, s"streamer_$id",
+                badActions))
+            }
           }
           .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
           .start()

@@ -1,7 +1,7 @@
 package graft.queries
 
 import graft.Tables._
-import graft.ops.{Dedup, Graph, Relational, Sampling, Text}
+import graft.ops.{Checkpoints, Dedup, Graph, Relational, Sampling, Text}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -311,14 +311,14 @@ object QueriesRound5 {
     // both rounds as chained CTEs; seed membership is a pure function
     // of the id, replayed identically in SQL.
     QueryDef("q168_personalized_pagerank",
-      (s, d) => {
+      (s, d) => Checkpoints.scoped { pin =>
         val li = lineitem(s, d).where(col("l_orderkey") % 3 === 0)
           .select("l_orderkey", "l_partkey")
-        val e = Graph.layoutEdges(
+        val e = pin.keep(Graph.layoutEdges(
           li.withColumnRenamed("l_partkey", "src")
             .join(li.withColumnRenamed("l_partkey", "dst"), "l_orderkey")
             .where(col("src") =!= col("dst")),
-          "src", "dst", layoutKey = "dst")
+          "src", "dst", layoutKey = "dst"))
         val seeds = e.select(col("src").as("id")).where(col("id") % 89 === 0)
         Relational.topK(
             Graph.personalizedPageRank(e, "src", "dst", seeds, iters = 2,

@@ -1,7 +1,7 @@
 package graft.queries
 
 import graft.Tables._
-import graft.ops.{Dedup, Graph, Layout, Sampling, Text}
+import graft.ops.{Checkpoints, Dedup, Graph, Layout, Sampling, Text}
 import org.apache.spark.sql.functions._
 
 /** Round-6 widening: oracle coverage for the four operators that
@@ -45,9 +45,9 @@ object QueriesRound6 {
     // q46/q91 the engine now runs BOTH dedup families end-to-end —
     // MinHash-probabilistic and exact-substring (Lee et al. 2022).
     QueryDef("q172_exact_substring_dedup",
-      (s, d) => {
+      (s, d) => Checkpoints.scoped { pin =>
         val docs = documents(s, d)
-        val pairs = Dedup.sharedShinglePairs(docs, "doc_id", "text", n = 5)
+        val pairs = pin.adopt(Dedup.sharedShinglePairs(docs, "doc_id", "text", n = 5))
           .select("id_a", "id_b")
         val groups = Dedup.duplicateGroupsStar(pairs, maxIter = 20)
         Dedup.dedupSurvivors(docs, "doc_id", groups)
@@ -200,10 +200,10 @@ object QueriesRound6 {
     // exact-substring pipeline's min-id form; this query's subject is
     // the POLICY, so it rides the cheaper scale-path relation.)
     QueryDef("q177_quality_survivors",
-      (s, d) => {
+      (s, d) => Checkpoints.scoped { pin =>
         val docs = documents(s, d)
-        val pairs = Dedup.lshCandidatePairs(docs, "doc_id", "text",
-            QueriesDedup.ShingleN, QueriesDedup.K, QueriesDedup.Bands)
+        val pairs = pin.adopt(Dedup.lshCandidatePairs(docs, "doc_id", "text",
+            QueriesDedup.ShingleN, QueriesDedup.K, QueriesDedup.Bands))
           .select("id_a", "id_b")
         val groups = Dedup.duplicateGroupsStar(pairs, maxIter = 20)
         Dedup.dedupSurvivorsBy(docs, "doc_id", groups, "n_chars")
@@ -242,7 +242,6 @@ object QueriesRound6 {
         graft.streaming.Sessions.runStreamToBatch(s, d, sch,
             globFilter = Some("documents.parquet"),
             outputMode = "append",
-            shufflePartitions = Some(4),
             transform = st => {
               val t = col("text")
               val nToks = size(Text.tokens(t))
@@ -315,7 +314,6 @@ object QueriesRound6 {
         graft.streaming.Sessions.runStreamToBatch(s, d, sch,
             globFilter = Some("events.parquet"),
             outputMode = "append",
-            shufflePartitions = Some(4),
             transform = st => graft.streaming.Sessions.streamingRunningMax(
               normalizeEventTs(st).select(col("user_id").as("key"),
                 unix_micros(col("ts")).as("ts_us"),
@@ -594,7 +592,6 @@ object QueriesRound6 {
         graft.streaming.Sessions.runStreamToBatch(s, d, sch,
             globFilter = Some("events.parquet"),
             outputMode = "update",
-            shufflePartitions = Some(4),
             transform = st => graft.streaming.Sessions.streamingEwma(
               normalizeEventTs(st).select(col("user_id").as("key"),
                 unix_micros(col("ts")).as("ts_us"),

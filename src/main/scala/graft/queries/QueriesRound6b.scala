@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.ops.{Dedup, Sampling, Text}
+import graft.ops.{Checkpoints, Dedup, Sampling, Text}
 import graft.Tables._
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -69,10 +69,10 @@ object QueriesRound6b {
     // are O(clusters) rows, and a sudden mega-cluster (boilerplate
     // explosion) shows up as a new tail row.
     QueryDef("q194_dup_cluster_audit",
-      (s, d) => {
+      (s, d) => Checkpoints.scoped { pin =>
         val docs = documents(s, d)
-        val pairs = Dedup.lshCandidatePairs(docs, "doc_id", "text",
-            QueriesDedup.ShingleN, QueriesDedup.K, QueriesDedup.Bands)
+        val pairs = pin.adopt(Dedup.lshCandidatePairs(docs, "doc_id", "text",
+            QueriesDedup.ShingleN, QueriesDedup.K, QueriesDedup.Bands))
           .select("id_a", "id_b")
         val groups = Dedup.duplicateGroupsStar(pairs, maxIter = 20)
         val sizes = groups.groupBy("group_id")

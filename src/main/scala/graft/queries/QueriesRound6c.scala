@@ -36,7 +36,6 @@ object QueriesRound6c {
         val dim = nation(s, d).select(col("n_nationkey"), col("n_name"))
         graft.streaming.Sessions.runStreamToBatch(s, d, sch,
             globFilter = Some("events.parquet"),
-            shufflePartitions = Some(4),
             transform = st => st
               .withColumn("n_nationkey", col("user_id") % 25)
               .join(broadcast(dim), "n_nationkey")

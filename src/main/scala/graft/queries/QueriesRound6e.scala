@@ -224,7 +224,6 @@ object QueriesRound6e {
         graft.streaming.Sessions.runStreamToBatch(s, d, sch,
             globFilter = Some("events.parquet"),
             outputMode = "update",
-            shufflePartitions = Some(4),
             transform = st => graft.streaming.Sessions.streamingTopK(
               normalizeEventTs(st).select(col("user_id").as("key"),
                 unix_micros(col("ts")).as("ts_us"),

@@ -91,7 +91,6 @@ object QueriesRound6i {
         Sessions.runStreamToBatch(s, d, sch,
             globFilter = Some("events.parquet"),
             outputMode = "append",
-            shufflePartitions = Some(4),
             transform = st => {
               // watermark on the SOURCE, before the selective filters
               // (the q148 discipline — a post-filter watermark stalls

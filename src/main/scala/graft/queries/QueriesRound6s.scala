@@ -31,7 +31,6 @@ object QueriesRound6s {
         graft.streaming.Sessions.runStreamToBatch(s, d, sch,
           globFilter = Some("documents.parquet"),
           outputMode = "append",
-          shufflePartitions = Some(4),
           transform = st => {
             val url = concat(
               when(col("doc_id") % 2 === 0, lit("HTTPS")).otherwise(lit("https")),

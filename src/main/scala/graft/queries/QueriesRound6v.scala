@@ -1,7 +1,7 @@
 package graft.queries
 
 import graft.Tables._
-import graft.ops.Dedup
+import graft.ops.{Checkpoints, Dedup}
 import org.apache.spark.sql.functions._
 
 /** Round-6 twenty-second batch: auditing the clustering stage of the
@@ -25,10 +25,10 @@ object QueriesRound6v {
     // blow-up (the LSH bucket-cap discipline); sizes over the cap are
     // excluded and would be reported by q194's size audit instead.
     QueryDef("q289_cluster_purity",
-      (s, d) => {
+      (s, d) => Checkpoints.scoped { pin =>
         val docs = documents(s, d)
-        val cand = Dedup.lshCandidatePairs(docs, "doc_id", "text",
-          QueriesDedup.ShingleN, QueriesDedup.K, QueriesDedup.Bands)
+        val cand = pin.adopt(Dedup.lshCandidatePairs(docs, "doc_id", "text",
+          QueriesDedup.ShingleN, QueriesDedup.K, QueriesDedup.Bands))
           .select("id_a", "id_b")
         val grp = Dedup.duplicateGroupsStar(cand, maxIter = 20)
         val sizes = grp.groupBy("group_id").agg(count(lit(1)).as("size"))

@@ -1,7 +1,7 @@
 package graft.queries
 
 import graft.Tables._
-import graft.ops.Sampling
+import graft.ops.{Checkpoints, Sampling}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -28,7 +28,7 @@ object QueriesRound7ae {
     // per (seed, walk) the final node and a position-weighted path
     // checksum so engines must agree on EVERY step, not just the end.
     QueryDef("q401_random_walks",
-      (s, d) => {
+      (s, d) => Checkpoints.scoped { pin =>
         val li = lineitem(s, d).select("l_orderkey", "l_partkey")
         val e = li.withColumnRenamed("l_partkey", "src")
           .join(li.withColumnRenamed("l_partkey", "dst"), "l_orderkey")
@@ -45,17 +45,16 @@ object QueriesRound7ae {
         // graph that slice is a vanishing fraction of E, so the cap
         // never costs a global edge sort. q424 audits the trim.
         val deg = e.groupBy("src").agg(count(lit(1)).as("__deg"))
-        val ed = e.join(deg, Seq("src")).localCheckpoint()
+        val ed = pin(e.join(deg, Seq("src")))
         val capped = ed.where(col("__deg") <= 64).select("src", "dst")
           .unionByName(ed.where(col("__deg") > 64)
             .withColumn("__rn",
               row_number().over(org.apache.spark.sql.expressions.Window
                 .partitionBy("src").orderBy("dst")))
             .where(col("__rn") <= 64).select("src", "dst"))
-        val nbrs = capped.groupBy("src")
-          .agg(sort_array(collect_list("dst")).as("nb"))
-          .localCheckpoint() // consumed once per step
-        graft.ops.Checkpoints.free(ed)
+        // consumed once per step
+        val nbrs = pin(capped.groupBy("src")
+          .agg(sort_array(collect_list("dst")).as("nb")))
         var walk = nbrs.where(col("src") % 25 === 0)
           .select(col("src").as("seed"),
             explode(sequence(lit(0), lit(3))).as("w"))

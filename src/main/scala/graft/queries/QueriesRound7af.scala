@@ -1,7 +1,7 @@
 package graft.queries
 
 import graft.Tables._
-import graft.ops.{Dedup, Sampling, Text}
+import graft.ops.{Checkpoints, Dedup, Sampling, Text}
 import org.apache.spark.sql.functions._
 
 /** Round-7 thirty-second batch: the packed-sequence attention-mask
@@ -95,16 +95,17 @@ object QueriesRound7af {
     // curve says which radius buys which recall at which precision —
     // the number you set before a web-scale near-dup run.
     QueryDef("q405_simhash_radius_curve",
-      (s, d) => {
-        val docs = documents(s, d)
+      (s, d) => Checkpoints.scoped { pin =>
+        // both sides of the pair join
+        val docs = pin(documents(s, d)
           .where(Sampling.hashLong(concat(col("doc_id").cast("string"),
             lit("#sv"))) % 4 === 0)
           .select(col("doc_id"), col("lang"),
             expr("n_chars div 100").as("lb"),
             array_distinct(Text.tokens(col("text"))).as("ts"),
-            Dedup.simhash16(Text.tokens(col("text"))).as("sh"))
-          .localCheckpoint() // both sides of the pair join
-        val pairs = docs.as("a")
+            Dedup.simhash16(Text.tokens(col("text"))).as("sh")))
+        // five radius readouts
+        val pairs = pin(docs.as("a")
           .join(docs.as("b"),
             col("a.lang") === col("b.lang") && col("a.lb") === col("b.lb")
               && col("a.doc_id") < col("b.doc_id"))
@@ -112,8 +113,7 @@ object QueriesRound7af {
             (size(array_intersect(col("a.ts"), col("b.ts"))) * 2 >=
               size(array_union(col("a.ts"), col("b.ts")))).as("dup"),
             expr("bit_count(CAST(a.sh AS BIGINT) ^ CAST(b.sh AS BIGINT))")
-              .cast("long").as("hd"))
-          .localCheckpoint() // five radius readouts
+              .cast("long").as("hd")))
         val tot = broadcast(pairs.agg(count(lit(1)).as("n_pairs"),
           sum(when(col("dup"), 1L).otherwise(0L)).as("n_dup")))
         pairs

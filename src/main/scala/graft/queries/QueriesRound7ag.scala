@@ -1,7 +1,7 @@
 package graft.queries
 
 import graft.Tables._
-import graft.ops.Text
+import graft.ops.{Checkpoints, Text}
 import org.apache.spark.sql.functions._
 
 /** Round-7 thirty-third batch: the Brier-score decomposition and
@@ -23,7 +23,7 @@ object QueriesRound7ag {
     // from the O(bins) frame after one scan; the Brier itself re-joins
     // the broadcast bin means.
     QueryDef("q406_brier_decomposition",
-      (s, d) => {
+      (s, d) => Checkpoints.scoped { pin =>
         val rows = documents(s, d).select(
           least(size(Text.tokens(col("text"))) * 25, lit(1000))
             .cast("long").as("p"),
@@ -31,12 +31,12 @@ object QueriesRound7ag {
           .withColumn("k", least(expr("p div 100"), lit(9L)))
         val tot = broadcast(rows.agg(count(lit(1)).as("nn"),
           sum("o").as("sot")))
-        val bins = rows.groupBy("k")
+        // terms + the per-row re-join
+        val bins = pin(rows.groupBy("k")
           .agg(count(lit(1)).as("nk"), sum("p").as("sp"),
             sum("o").as("so"))
           .select(col("k"), col("nk"),
-            expr("sp div nk").as("pbar"), expr("so div nk").as("obar"))
-          .localCheckpoint() // terms + the per-row re-join
+            expr("sp div nk").as("pbar"), expr("so div nk").as("obar")))
         val obarAll = broadcast(tot.select(col("nn"),
           expr("sot div nn").as("ob")))
         val terms = broadcast(bins.crossJoin(obarAll)

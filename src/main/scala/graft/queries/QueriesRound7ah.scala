@@ -1,7 +1,7 @@
 package graft.queries
 
 import graft.Tables._
-import graft.ops.{Relational, Sampling}
+import graft.ops.{Checkpoints, Relational, Sampling}
 import org.apache.spark.sql.functions._
 
 /** Round-7 thirty-fourth batch: inverse-propensity off-policy
@@ -69,7 +69,7 @@ object QueriesRound7ah {
     // claim. At 100 TB this is the property that makes replayed
     // batches and at-least-once upstreams safe.
     QueryDef("q409_merge_idempotence",
-      (s, d) => {
+      (s, d) => Checkpoints.scoped { pin =>
         val base = customer(s, d)
           .select("c_custkey", "c_name", "c_acctbal")
         val k = col("c_custkey")
@@ -90,8 +90,8 @@ object QueriesRound7ah {
           .agg(count(lit(1)).as("n"), expr("bit_xor(__h)").as("fx"),
             expr("cast(sum(cast(__h as decimal(38,0))) as string)")
               .as("fs"))
-        val once = Relational.applyChangelog(base, changes,
-          "c_custkey", "op", "seq").localCheckpoint()
+        val once = pin(Relational.applyChangelog(base, changes,
+          "c_custkey", "op", "seq"))
         val twice = Relational.applyChangelog(once, changes,
           "c_custkey", "op", "seq")
         fp(once).select(col("n").as("n_once"), col("fx").as("x1"),

@@ -1,7 +1,7 @@
 package graft.queries
 
 import graft.Tables._
-import graft.ops.Relational
+import graft.ops.{Checkpoints, Relational}
 import org.apache.spark.sql.functions._
 
 /** Round-7 thirty-fifth batch: the learned-index error readout. */
@@ -22,16 +22,16 @@ object QueriesRound7ai {
     // segment's max_err vs its key count is the build/probe tradeoff
     // read straight off the data.
     QueryDef("q410_learned_index",
-      (s, d) => {
+      (s, d) => Checkpoints.scoped { pin =>
         val keys = orders(s, d).select(col("o_orderkey").as("k"))
         val ext = broadcast(keys.agg(min("k").as("lo"), max("k").as("hi")))
-        val ranked = Relational.twoLevelRankDesc(
+        // the fit pass and the error pass
+        val ranked = pin(pin.adopt(Relational.twoLevelRankDesc(
             keys.withColumn("__s", -col("k")), "__s", "k",
-            idWidth = 4096L, outCol = "pos")
+            idWidth = 4096L, outCol = "pos"))
           .crossJoin(ext)
           .select(col("k"), col("pos"),
-            expr("((k - lo) * 16) div (hi - lo + 1)").as("seg"))
-          .localCheckpoint() // the fit pass and the error pass
+            expr("((k - lo) * 16) div (hi - lo + 1)").as("seg")))
         val x = col("k").cast("decimal(18,0)")
         val y = col("pos").cast("decimal(18,0)")
         val fits = broadcast(ranked.groupBy("seg").agg(

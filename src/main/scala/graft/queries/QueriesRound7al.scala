@@ -26,7 +26,6 @@ object QueriesRound7al {
         val batch = documents(s, d)
         graft.streaming.Sessions.runStreamToBatch(s, d, batch.schema,
             globFilter = Some("documents.parquet"),
-            shufflePartitions = Some(4),
             // streaming aggs can't COUNT(DISTINCT); the stream dedups
             // (lang, h) first — the q119 streaming-dedup stage feeding
             // the sketch — then counts plainly

@@ -81,7 +81,6 @@ object QueriesRound7an {
         val batch = documents(s, d)
         graft.streaming.Sessions.runStreamToBatch(s, d, batch.schema,
             globFilter = Some("documents.parquet"),
-            shufflePartitions = Some(4),
             transform = st => st
               .select(explode(GraftFunctions.multiContains(col("text"), pats))
                 .as("pat_id"))

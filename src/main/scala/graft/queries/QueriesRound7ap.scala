@@ -1,7 +1,7 @@
 package graft.queries
 
 import graft.Tables._
-import graft.ops.Graph
+import graft.ops.{Checkpoints, Graph}
 import org.apache.spark.sql.functions._
 
 /** Round-7 forty-second batch: Borůvka minimum-spanning-forest — the
@@ -25,7 +25,7 @@ object QueriesRound7ap {
     // equality + acyclicity are spec-pinned driver-side
     // (Round7apSpec), so the oracle is not the only witness.
     QueryDef("q419_boruvka_msf",
-      (s, d) => {
+      (s, d) => Checkpoints.scoped { pin =>
         // distinct BEFORE the self-join (one (order, part) row each),
         // not after: dedups 0.6M rows instead of the 1.2M joined
         // pairs, and the join output is then unique (order, src, dst)
@@ -38,11 +38,10 @@ object QueriesRound7ap {
           .where(col("l_partkey") < col("p2"))
           .select(col("l_orderkey"), col("l_partkey").as("src"),
             col("p2").as("dst"))
-        val e = pr.groupBy("src", "dst").agg(count(lit(1)).as("cnt"))
+        val e = pin(pr.groupBy("src", "dst").agg(count(lit(1)).as("cnt"))
           .select(col("src"), col("dst"), col("cnt"),
             ((lit(1000000L) - col("cnt")) * lit(1L << 40)
-              + col("src") * lit(1L << 20) + col("dst")).as("key"))
-          .localCheckpoint()
+              + col("src") * lit(1L << 20) + col("dst")).as("key")))
         val keys = Graph.boruvkaMsf(e.select("src", "dst", "key"))
         e.join(keys, Seq("key"), "left_semi")
           .select(col("src"), col("dst"), col("cnt"))

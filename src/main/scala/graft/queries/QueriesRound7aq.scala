@@ -74,7 +74,6 @@ object QueriesRound7aq {
         graft.streaming.Sessions.runStreamToBatch(s, d, sch,
             globFilter = Some("events.parquet"),
             outputMode = "append",
-            shufflePartitions = Some(4),
             transform = st => graft.streaming.Sessions.streamingGreedyThin(
               normalizeEventTs(st)
                 .where(col("user_id").isNotNull && col("ts").isNotNull)

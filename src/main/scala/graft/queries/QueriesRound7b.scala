@@ -1,7 +1,7 @@
 package graft.queries
 
 import graft.Tables._
-import graft.ops.{Dedup, Sampling, Text}
+import graft.ops.{Checkpoints, Dedup, Sampling, Text}
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -88,17 +88,17 @@ object QueriesRound7b {
     // the batch oracle, pinning batch/stream identity for the Bloom
     // lane the way q284 did for normalization.
     QueryDef("q295_streaming_bloom_gate",
-      (s, d) => {
+      (s, d) => Checkpoints.scoped { pin =>
         val m = 1 << 15
         val kh = 4
         def pos(f: Column, j: Int): Column =
           Sampling.hashLong(concat(f, lit("#bl"), lit(j.toString))) % m
-        val bits = documents(s, d).where(col("doc_id") % 10 =!= 0)
+        val bits = pin.keep(documents(s, d).where(col("doc_id") % 10 =!= 0)
           .select(md5(Text.normText(col("text"))).as("fp")).distinct()
           .select(explode(array((0 until kh).map(j => pos(col("fp"), j)): _*))
             .as("__p"))
           .distinct()
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
         import org.apache.spark.sql.types._
         val sch = StructType(Seq(
           StructField("doc_id", LongType), StructField("text", StringType),
@@ -107,7 +107,6 @@ object QueriesRound7b {
         graft.streaming.Sessions.runStreamToBatch(s, d, sch,
           globFilter = Some("documents.parquet"),
           outputMode = "append",
-          shufflePartitions = Some(4),
           transform = st => {
             var cur = st.where(col("doc_id") % 10 === 0)
               .select(col("doc_id"), md5(Text.normText(col("text"))).as("fp"))

@@ -1,7 +1,7 @@
 package graft.queries
 
 import graft.Tables._
-import graft.ops.{Sampling, Text}
+import graft.ops.{Checkpoints, Sampling, Text}
 import org.apache.spark.sql.functions._
 
 /** Round-7 eighth batch: the hashing-trick feature lane (model-free
@@ -131,7 +131,7 @@ object QueriesRound7h {
     // 5×5 count frame; the oracle replays every round as chained CTEs
     // (the q145/q242 discipline).
     QueryDef("q317_markov_stationary",
-      (s, d) => {
+      (s, d) => Checkpoints.scoped { pin =>
         val wu = org.apache.spark.sql.expressions.Window
           .partitionBy(col("user_id"))
           .orderBy(col("__ts"), col("event_id"))
@@ -144,7 +144,7 @@ object QueriesRound7h {
           .groupBy(col("__a").as("src"), col("__b").as("dst"))
           .agg(count(lit(1)).as("c"))
         val out = pairs.groupBy("src").agg(sum("c").as("outc"))
-        val trans = pairs.join(out, Seq("src")).localCheckpoint()
+        val trans = pin(pairs.join(out, Seq("src")))
         var v = trans.select(col("src").as("state")).distinct()
           .union(trans.select(col("dst").as("state")).distinct())
           .distinct()

@@ -1,7 +1,7 @@
 package graft.queries
 
 import graft.Tables._
-import graft.ops.{Events, Graph}
+import graft.ops.{Checkpoints, Events, Graph}
 import org.apache.spark.sql.functions._
 
 /** Round-7 ninth batch: landmark harmonic centrality (seed-keyed
@@ -33,13 +33,13 @@ object QueriesRound7i {
     // seed pick itself is a TakeOrderedAndProject (per-partition
     // heads, never a global sort).
     QueryDef("q319_harmonic_centrality",
-      (s, d) => {
+      (s, d) => Checkpoints.scoped { pin =>
         val li = lineitem(s, d).select("l_orderkey", "l_partkey")
-        val e = Graph.layoutEdges(
+        val e = pin.keep(Graph.layoutEdges(
           li.withColumnRenamed("l_partkey", "src")
             .join(li.withColumnRenamed("l_partkey", "dst"), "l_orderkey")
             .where(col("src") =!= col("dst")),
-          "src", "dst", layoutKey = "src")
+          "src", "dst", layoutKey = "src"))
         // Graph.seededBfsBitmask owns the loop — the MS-BFS form (Then
         // et al., VLDB'15): the 64 landmarks ride ONE 64-bit mask per
         // node, so each round moves O(|V|) longs instead of the
@@ -58,7 +58,7 @@ object QueriesRound7i {
         val reach = Graph.seededBfsBitmask(e, "src", "dst", seeds,
           hops = 3, assumeLaidOut = true)
         val bits = s.range(64).select(col("id").cast("int").as("bit"))
-        val out = reach.where(col("round") > 0)
+        reach.where(col("round") > 0)
           .join(broadcast(bits),
             expr("((new_mask >> bit) & 1) = 1"))
           .join(broadcast(seeds.select(col("id").as("seed"), col("bit"))),
@@ -67,8 +67,6 @@ object QueriesRound7i {
           .agg(count(lit(1)).as("n_reached"),
             sum(expr("1000000 div round")).as("harmonic_micro"))
           .orderBy("seed")
-        graft.ops.Checkpoints.free(e)
-        out
       },
       Some {
         def round_(prev: String, curr: String) =

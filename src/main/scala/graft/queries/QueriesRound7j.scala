@@ -1,7 +1,7 @@
 package graft.queries
 
 import graft.Tables._
-import graft.ops.Graph
+import graft.ops.{Checkpoints, Graph}
 import org.apache.spark.sql.functions._
 
 /** Round-7 tenth batch: time-respecting reachability (the temporal
@@ -26,7 +26,7 @@ object QueriesRound7j {
     // one predicate, every value min-fold deterministic, rounds
     // replayed as chained CTEs.
     QueryDef("q323_temporal_reachability",
-      (s, d) => {
+      (s, d) => Checkpoints.scoped { pin =>
         val li = lineitem(s, d)
           .join(orders(s, d), col("l_orderkey") === col("o_orderkey"))
           .select(col("o_custkey").as("c"),
@@ -40,20 +40,19 @@ object QueriesRound7j {
         // layoutEdges drops payload columns, so lay out inline: one
         // src-keyed shuffle + in-partition sort, persisted across the
         // three rounds and released once they are done
-        val eL = e.repartition(col("src")).sortWithinPartitions("src")
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        val (seeds, seedRows) = graft.ops.Checkpoints.ckptCount(
+        val eL = pin.keep(e.repartition(col("src")).sortWithinPartitions("src")
+          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+        val (seeds, seedRows) = Checkpoints.ckptCount(
           eL.select(col("src").as("id")).distinct()
             .where(col("id") < 1000000L && col("id") % 97 === 0)
             .withColumn("arr", lit(0L)))
-        val (arr, _) = graft.ops.Checkpoints.iterate(seeds, seedRows, 3) {
+        val (arr, _) = Checkpoints.iterate(seeds, seedRows, 3) {
           (arr, _) =>
             val next = eL.join(arr.withColumnRenamed("id", "src"), "src")
               .where(col("t") >= col("arr"))
               .select(col("dst").as("id"), col("t").as("arr"))
             arr.union(next).groupBy("id").agg(min("arr").as("arr"))
         }
-        eL.unpersist(false)
         arr.select(col("id"), col("arr")).orderBy("id")
       },
       Some {

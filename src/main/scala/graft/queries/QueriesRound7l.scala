@@ -223,7 +223,6 @@ object QueriesRound7l {
           .withColumn("__one", lit(1))
         graft.streaming.Sessions.runStreamToBatch(s, d, batch.schema,
             globFilter = Some("documents.parquet"),
-            shufflePartitions = Some(4),
             transform = st => st
               .select(col("doc_id"), explode(Text.tokens(col("text")))
                 .as("tok"))

@@ -1,7 +1,7 @@
 package graft.queries
 
 import graft.Tables._
-import graft.ops.{Graph, Sampling}
+import graft.ops.{Checkpoints, Graph, Sampling}
 import org.apache.spark.sql.functions._
 
 /** Round-7 thirteenth batch: multi-touch attribution with
@@ -95,14 +95,14 @@ object QueriesRound7m {
     // laid-out edges, chained-CTE oracle); the argmax hand-off is a
     // one-row broadcast.
     QueryDef("q339_diameter_2sweep",
-      (s, d) => {
+      (s, d) => Checkpoints.scoped { pin =>
         val li = lineitem(s, d).where(col("l_orderkey") % 5 === 0)
           .select("l_orderkey", "l_partkey")
-        val e = Graph.layoutEdges(
+        val e = pin.keep(Graph.layoutEdges(
           li.withColumnRenamed("l_partkey", "src")
             .join(li.withColumnRenamed("l_partkey", "dst"), "l_orderkey")
             .where(col("src") =!= col("dst")),
-          "src", "dst")
+          "src", "dst"))
         def bfs(seed: org.apache.spark.sql.DataFrame) =
           Graph.boundedBfs(e, "src", "dst", seed, 4, assumeLaidOut = true)
         val s0 = e.agg(min("src").as("id"))
@@ -112,7 +112,6 @@ object QueriesRound7m {
           max(struct(col("dist"), (-col("id")).as("__ni"))).as("__f"))
           .select((-col("__f.__ni")).as("id"))
         val d2 = bfs(far)
-        graft.ops.Checkpoints.free(e)
         d2.agg(max(struct(col("dist"), (-col("id")).as("__ni"))).as("__f"))
           .crossJoin(broadcast(far.select(col("id").as("sweep2_root"))))
           .select(col("sweep2_root"),

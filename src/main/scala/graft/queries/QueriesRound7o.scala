@@ -1,7 +1,7 @@
 package graft.queries
 
 import graft.Tables._
-import graft.ops.{Relational, Sampling}
+import graft.ops.{Checkpoints, Relational, Sampling}
 import org.apache.spark.sql.functions._
 
 /** Round-7 fifteenth batch: the sampler calibration curve (64
@@ -189,11 +189,11 @@ object QueriesRound7o {
     // tie-break; sel_dist records the coverage radius as it shrinks.
     // The oracle replays all 7 rounds as MATERIALIZED chained CTEs.
     QueryDef("q349_kcenter_coreset",
-      (s, d) => {
-        val emb = embeddings(s, d).select(col("vec_id"),
+      (s, d) => Checkpoints.scoped { pin =>
+        // quantize ONCE, scanned by all 7 rounds
+        val emb = pin(embeddings(s, d).select(col("vec_id"),
           expr("transform(embedding, x ->" +
-            " cast(round(x * 1000, 0) as bigint))").as("__q"))
-          .localCheckpoint() // quantize ONCE, scanned by all 7 rounds
+            " cast(round(x * 1000, 0) as bigint))").as("__q")))
         // Incremental farthest-point over ONE row per vector: `pick` is
         // the round a vector was chosen in (null while unchosen) and
         // `__mind` its distance to the nearest chosen center — carried
@@ -203,13 +203,13 @@ object QueriesRound7o {
         // full recompute the oracle replays. A chosen row keeps the
         // `__mind` it was picked at: its sel_dist.
         val first = emb.agg(min("vec_id").as("__first"))
-        val (start, n) = graft.ops.Checkpoints.ckptCount(emb
+        val (start, n) = Checkpoints.ckptCount(emb
           .crossJoin(broadcast(first))
           .select(col("vec_id"),
             when(col("vec_id") === col("__first"), lit(0L)).as("pick"),
             lit(null).cast("long").as("__mind")))
         var r = 0L
-        val (picked, _) = graft.ops.Checkpoints.iterate(start, n, 7) {
+        val (picked, _) = Checkpoints.iterate(start, n, 7) {
           (st, _) =>
           r += 1
           val newest = broadcast(emb
@@ -233,7 +233,6 @@ object QueriesRound7o {
               when(col("vec_id") === col("__far"), lit(r)).as("pick"),
               col("__mind")))
         }
-        graft.ops.Checkpoints.free(emb)
         picked.where(col("pick").isNotNull)
           .select(col("vec_id"), col("pick"), col("__mind").as("sel_dist"))
           .orderBy("pick")

@@ -82,7 +82,6 @@ object QueriesRound7t {
         val batch = documents(s, d)
         graft.streaming.Sessions.runStreamToBatch(s, d, batch.schema,
             globFilter = Some("documents.parquet"),
-            shufflePartitions = Some(4),
             transform = st => st
               .select(Sampling.hashLong(concat_ws("|",
                   col("doc_id").cast("string"),

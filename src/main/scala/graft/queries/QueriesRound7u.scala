@@ -1,7 +1,7 @@
 package graft.queries
 
 import graft.Tables._
-import graft.ops.Sampling
+import graft.ops.{Checkpoints, Sampling}
 import org.apache.spark.sql.functions._
 
 /** Round-7 twenty-first batch: the pass@k eval estimator, a
@@ -71,7 +71,7 @@ object QueriesRound7u {
     // O(sources²) count frame; the oracle replays all three rounds as
     // chained CTEs (the q145/q317 discipline).
     QueryDef("q368_bradley_terry",
-      (s, d) => {
+      (s, d) => Checkpoints.scoped { pin =>
         val base = documents(s, d).select(col("doc_id"), col("source"),
           col("n_chars"))
         val m = base.select(col("doc_id").as("__ida"),
@@ -87,13 +87,12 @@ object QueriesRound7u {
         val pn = m.select(least(col("win"), col("lose")).as("x"),
             greatest(col("win"), col("lose")).as("y"))
           .groupBy("x", "y").agg(count(lit(1)).as("n"))
-        val e = pn.select(col("x").as("i"), col("y").as("j"), col("n"))
-          .union(pn.select(col("y").as("i"), col("x").as("j"), col("n")))
-          .localCheckpoint()
+        val e = pin(pn.select(col("x").as("i"), col("y").as("j"), col("n"))
+          .union(pn.select(col("y").as("i"), col("x").as("j"), col("n"))))
         val wc = m.groupBy(col("win").as("src")).agg(count(lit(1)).as("w"))
-        val wins = e.select(col("i").as("src")).distinct()
+        val wins = pin(e.select(col("i").as("src")).distinct()
           .join(wc, Seq("src"), "left")
-          .na.fill(0L, Seq("w")).localCheckpoint()
+          .na.fill(0L, Seq("w")))
         var sF = wins.select(col("src"), lit(1000000L).as("s"))
         for (_ <- 1 to 3) {
           val d2 = e
@@ -262,11 +261,11 @@ object QueriesRound7u {
     // per-terminal chain size and span.
     QueryDef("q370_pointer_doubling",
       (s, d) => {
-        val (p0, n) = graft.ops.Checkpoints.ckptCount(
+        val (p0, n) = Checkpoints.ckptCount(
           documents(s, d).select(col("doc_id").as("id"),
             when(col("doc_id") % 16 === 0, col("doc_id"))
               .otherwise(col("doc_id") - 1).as("p")))
-        val (p, _) = graft.ops.Checkpoints.iterate(p0, n, 4) { (p, _) =>
+        val (p, _) = Checkpoints.iterate(p0, n, 4) { (p, _) =>
           p.join(p.select(col("id").as("__pid"), col("p").as("__pp")),
               col("p") === col("__pid"))
             .select(col("id"), col("__pp").as("p"))

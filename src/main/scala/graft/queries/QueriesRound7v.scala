@@ -1,7 +1,7 @@
 package graft.queries
 
 import graft.Tables._
-import graft.ops.{Sampling, Text}
+import graft.ops.{Checkpoints, Sampling, Text}
 import org.apache.spark.sql.functions._
 
 /** Round-7 twenty-second batch: DSIR-style importance weighting, the
@@ -215,12 +215,11 @@ object QueriesRound7v {
     // is an equi-join on the epoch-hour key (never a window over the
     // corpus); the hourly frame is O(types × hours).
     QueryDef("q373_mase_forecast",
-      (s, d) => {
-        val hc = events(s, d)
+      (s, d) => Checkpoints.scoped { pin =>
+        val hc = pin(events(s, d)
           .select(col("event_type"),
             expr("unix_micros(ts) div 3600000000").as("h"))
-          .groupBy("event_type", "h").agg(count(lit(1)).as("c"))
-          .localCheckpoint()
+          .groupBy("event_type", "h").agg(count(lit(1)).as("c")))
         def lagAbs(lag: Int, nCol: String, sCol: String) =
           hc.select(col("event_type"), col("h"), col("c").as("__ca"))
             .join(hc.select(col("event_type"), (col("h") + lag).as("h"),

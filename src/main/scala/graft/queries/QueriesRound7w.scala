@@ -1,7 +1,7 @@
 package graft.queries
 
 import graft.Tables._
-import graft.ops.{Relational, Sampling, Text}
+import graft.ops.{Checkpoints, Relational, Sampling, Text}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -55,7 +55,7 @@ object QueriesRound7w {
     // count, converged match posterior, and λ. An independent float EM
     // replay tracks the integer fixed point in Round7wSpec.
     QueryDef("q375_fellegi_sunter",
-      (s, d) => {
+      (s, d) => Checkpoints.scoped { pin =>
         def h(sfx: String) = Sampling.hashLong(
           concat(col("id").cast("string"), lit(sfx)))
         val a = customer(s, d).select(
@@ -69,13 +69,13 @@ object QueriesRound7w {
             .otherwise(col("nat")).as("b_nat"),
           when(h("#fs") % 10 < 4, concat(col("seg"), lit("~")))
             .otherwise(col("seg")).as("b_seg"))
-        val pat = a.withColumn("blk", expr("id div 8"))
+        // the O(8) frame feeds three E-steps
+        val pat = pin(a.withColumn("blk", expr("id div 8"))
           .join(b.withColumn("blk", expr("b_id div 8")), Seq("blk"))
           .select((col("name") === col("b_name")).cast("long").as("g_name"),
             (col("nat") === col("b_nat")).cast("long").as("g_nat"),
             (col("seg") === col("b_seg")).cast("long").as("g_seg"))
-          .groupBy("g_name", "g_nat", "g_seg").agg(count(lit(1)).as("n"))
-          .localCheckpoint() // the O(8) frame feeds three E-steps
+          .groupBy("g_name", "g_nat", "g_seg").agg(count(lit(1)).as("n")))
         val p0 = s.range(1).select(lit(500L).as("lam"),
           lit(900L).as("mn"), lit(900L).as("mt"), lit(900L).as("ms"),
           lit(100L).as("un"), lit(100L).as("ut"), lit(100L).as("us"))
@@ -244,17 +244,17 @@ object QueriesRound7w {
     // EXACTLY 10⁶. Everything past the one token shuffle runs on the
     // O(sources) frame.
     QueryDef("q378_doremi_weights",
-      (s, d) => {
+      (s, d) => Checkpoints.scoped { pin =>
         val toks = documents(s, d).select(col("source"),
           explode(Text.tokens(col("text"))).as("tok"))
         val vocab = toks.groupBy("tok").agg(count(lit(1)).as("c"))
         val tot = broadcast(vocab.agg(sum("c").as("N")))
-        val perSrc = toks.join(vocab, Seq("tok")).crossJoin(tot)
+        // O(sources); feeds the mean and the readout
+        val perSrc = pin(toks.join(vocab, Seq("tok")).crossJoin(tot)
           .select(col("source"),
             (length(bin(expr("N div c"))) - 1).cast("long").as("bits"))
           .groupBy("source")
-          .agg(count(lit(1)).as("n_tokens"), sum("bits").as("sb"))
-          .localCheckpoint() // O(sources); feeds the mean and the readout
+          .agg(count(lit(1)).as("n_tokens"), sum("bits").as("sb")))
         val overall = broadcast(perSrc.agg(
           expr("(sum(sb) * 1000) div sum(n_tokens)").as("mb_all")))
         val scored = perSrc.crossJoin(overall)

@@ -1,7 +1,7 @@
 package graft.queries
 
 import graft.Tables._
-import graft.ops.{Dedup, Graph, Relational, Sampling, Text}
+import graft.ops.{Checkpoints, Dedup, Graph, Relational, Sampling, Text}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -26,7 +26,7 @@ object QueriesRound7x {
     // frame past the two histogram scans is O(bins) or O(bins²); a
     // float Sinkhorn replay tracks the integer plan in Round7xSpec.
     QueryDef("q379_sinkhorn_coupling",
-      (s, d) => {
+      (s, d) => Checkpoints.scoped { pin =>
         def bins(f: DataFrame, key: String) = Sampling.allocateBudget(
           f.select(least(expr("n_chars div 250"), lit(7L)).as(key))
             .groupBy(key).agg(count(lit(1)).as("cnt")),
@@ -35,10 +35,10 @@ object QueriesRound7x {
           .select(col("i"), col("quota").as("r"))
         val c = bins(documents(s, d).where(col("lang") =!= "en"), "j")
           .select(col("j"), col("quota").as("c"))
-        val e = r.crossJoin(c)
+        // O(64); feeds all six half-steps
+        val e = pin(r.crossJoin(c)
           .withColumn("k", expr("shiftleft(CAST(1 AS BIGINT)," +
-            " CAST(7 - abs(i - j) AS INT))"))
-          .localCheckpoint() // O(64); feeds all six half-steps
+            " CAST(7 - abs(i - j) AS INT))")))
         var v = c.select(col("j"), lit(1000L).as("v"))
         var u: DataFrame = null
         for (_ <- 1 to 3) {

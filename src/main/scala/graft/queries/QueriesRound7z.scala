@@ -192,7 +192,6 @@ object QueriesRound7z {
           .agg(min("sc").as("qhat")).withColumn("__one", lit(1))
         graft.streaming.Sessions.runStreamToBatch(s, d, batch.schema,
             globFilter = Some("documents.parquet"),
-            shufflePartitions = Some(4),
             transform = st => st
               .where(Sampling.hashLong(col("doc_id")) % 100 >= 50)
               .select(col("lang"),

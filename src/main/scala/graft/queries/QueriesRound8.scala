@@ -78,8 +78,7 @@ object QueriesRound8 {
                 sum(col("seq") * col("seq")).as("ck"),
                 min("us").as("first_us"), max("us").as("last_us"),
                 sum(when(col("valid"), 0L).otherwise(1L)).as("n_invalid"))
-          },
-          shufflePartitions = Some(4))
+          })
         .orderBy("device_id"),
       Some("""SELECT 'dev-' || CAST(d AS VARCHAR) AS device_id,
         |  CAST(count(*) AS BIGINT) AS n_chunks,

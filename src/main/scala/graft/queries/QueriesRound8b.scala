@@ -1,7 +1,7 @@
 package graft.queries
 
 import graft.Tables._
-import graft.ops.{FixedPoint, Text}
+import graft.ops.{Checkpoints, FixedPoint, Text}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -83,11 +83,11 @@ object QueriesRound8b {
     // N_s·C_t·2²⁰ < 2⁶³ (≈ 10¹² token-pair mass per readout — shard
     // sources beyond).
     QueryDef("q428_kl_divergence",
-      (s, d) => {
-        val tf = documents(s, d)
+      (s, d) => Checkpoints.scoped { pin =>
+        // three consumers below
+        val tf = pin(documents(s, d)
           .select(col("source"), explode(Text.tokens(col("text"))).as("tok"))
-          .groupBy("source", "tok").agg(count(lit(1)).as("cst"))
-          .localCheckpoint() // three consumers below
+          .groupBy("source", "tok").agg(count(lit(1)).as("cst")))
         val ns = tf.groupBy("source").agg(sum("cst").as("ns"))
         val ct = tf.groupBy("tok").agg(sum("cst").as("ct"))
         val tot = broadcast(tf.agg(sum("cst").as("nn")))
@@ -218,13 +218,14 @@ object QueriesRound8b {
     // deterministic integer — sketches, estimates, and errors all
     // hash-verify.
     QueryDef("q430_kmv_set_algebra",
-      (s, d) => {
+      (s, d) => Checkpoints.scoped { pin =>
         val k = 128
         // tokenize ONCE behind an exchange barrier (the shingleRows
         // discipline): without it CollapseProject inlines the regexp
         // tokenization into every shingle-slice lambda position —
         // measured 12 s vs 0.6 s for this explode at sf0.1.
-        val dt = documents(s, d)
+        // sketches + exact counts + exact inters
+        val dt = pin(documents(s, d)
           .select(col("source"), col("doc_id"),
             Text.tokens(col("text")).as("__toks"))
           .repartition(col("doc_id"))
@@ -232,13 +233,12 @@ object QueriesRound8b {
             explode(graft.ops.Dedup.wordShingles(col("__toks"), 3)).as("tok"))
           .distinct()
           .select(col("source"), col("tok"),
-            graft.ops.Sampling.hashLong(col("tok")).as("h"))
-          .localCheckpoint() // sketches + exact counts + exact inters
-        val sk = dt.select(col("source"), col("h")).distinct()
+            graft.ops.Sampling.hashLong(col("tok")).as("h")))
+        // both sides of the pair merge
+        val sk = pin(dt.select(col("source"), col("h")).distinct()
           .withColumn("rn", row_number().over(
             Window.partitionBy("source").orderBy("h")))
-          .where(col("rn") <= k)
-          .localCheckpoint() // both sides of the pair merge
+          .where(col("rn") <= k))
         val cnt = dt.groupBy("source")
           .agg(countDistinct("tok").as("exact_n"))
         val pairs = cnt.select(col("source").as("src_a"),

@@ -1,7 +1,7 @@
 package graft.queries
 
 import graft.Tables._
-import graft.ops.{FixedPoint, Text}
+import graft.ops.{Checkpoints, FixedPoint, Text}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -28,7 +28,6 @@ object QueriesRound8c {
         graft.streaming.Sessions.runStreamToBatch(s, d, sch,
             globFilter = Some("events.parquet"),
             outputMode = "append",
-            shufflePartitions = Some(4),
             transform = st => graft.streaming.Sessions.streamingAdaptiveThin(
               normalizeEventTs(st)
                 .where(col("user_id").isNotNull && col("ts").isNotNull)
@@ -127,10 +126,10 @@ object QueriesRound8c {
     // per shard at c ≈ 10³ — shard beyond). Two aggregations + one
     // broadcast join; top-5 windows partition by term (20 partitions).
     QueryDef("q433_bm25_topk",
-      (s, d) => {
-        val tk = documents(s, d)
-          .select(col("doc_id"), explode(Text.tokens(col("text"))).as("tok"))
-          .localCheckpoint() // tf, dl, df, and the query-term pick
+      (s, d) => Checkpoints.scoped { pin =>
+        // tf, dl, df, and the query-term pick
+        val tk = pin(documents(s, d)
+          .select(col("doc_id"), explode(Text.tokens(col("text"))).as("tok")))
         val tf = tk.groupBy("doc_id", "tok").agg(count(lit(1)).as("c"))
         val dl = tk.groupBy("doc_id").agg(count(lit(1)).as("dl"))
         val df_ = tf.groupBy("tok").agg(count(lit(1)).as("df"),

@@ -1,7 +1,7 @@
 package graft.queries
 
 import graft.Tables._
-import graft.ops.{Relational, Sampling, Text}
+import graft.ops.{Checkpoints, Relational, Sampling, Text}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -122,12 +122,12 @@ object QueriesRound8d {
     // the draw is two equi-joins against the ranked frame — never a
     // per-anchor scan.
     QueryDef("q436_negative_sampling",
-      (s, d) => {
-        val ranked = documents(s, d)
+      (s, d) => Checkpoints.scoped { pin =>
+        // counts + two draw joins
+        val ranked = pin(documents(s, d)
           .select(col("doc_id"), col("lang"))
           .withColumn("r", row_number().over(
-            Window.partitionBy("lang").orderBy("doc_id")).cast("long"))
-          .localCheckpoint() // counts + two draw joins
+            Window.partitionBy("lang").orderBy("doc_id")).cast("long")))
         val nl = ranked.groupBy("lang").agg(count(lit(1)).as("n"))
         val draws = ranked.where(col("doc_id") % 10 === 0)
           .select(col("doc_id").as("anchor_id"), col("lang"))

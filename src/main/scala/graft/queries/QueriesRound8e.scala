@@ -1,7 +1,7 @@
 package graft.queries
 
 import graft.Tables._
-import graft.ops.{Graph, Text}
+import graft.ops.{Checkpoints, Graph, Text}
 import org.apache.spark.sql.functions._
 
 /** Round-8 fifth batch: stitched-document reassembly (the q416
@@ -24,7 +24,7 @@ object QueriesRound8e {
     // discipline). Output: (head_doc, position, doc) for every chain
     // of length ≥ 2, the order a downstream merge step consumes.
     QueryDef("q439_stitch_reassembly",
-      (s, d) => {
+      (s, d) => Checkpoints.scoped { pin =>
         val tk = documents(s, d)
           .select(col("doc_id"), Text.tokens(col("text")).as("t"))
           .where(size(col("t")) >= 2)
@@ -38,11 +38,11 @@ object QueriesRound8e {
         val okTail = tails.groupBy("boundary")
           .agg(count(lit(1)).as("__c")).where(col("__c") <= 64)
           .select("boundary")
-        val edges = tails.join(okTail, Seq("boundary"))
+        // heads anti-join + BFS layout
+        val edges = pin(tails.join(okTail, Seq("boundary"))
           .join(heads.join(okHead, Seq("boundary")), Seq("boundary"))
           .where(col("a_doc") =!= col("b_doc"))
-          .select(col("a_doc").as("src"), col("b_doc").as("dst"))
-          .localCheckpoint() // heads anti-join + BFS layout
+          .select(col("a_doc").as("src"), col("b_doc").as("dst")))
         val chainHeads = edges.select(col("src").as("id")).distinct()
           .join(edges.select(col("dst").as("id")).distinct(),
             Seq("id"), "left_anti")
@@ -98,20 +98,20 @@ object QueriesRound8e {
     // makes sketch maintenance incremental at 100 TB: a new ingest
     // slice never re-reads the corpus.
     QueryDef("q440_kmv_merge_law",
-      (s, d) => {
+      (s, d) => Checkpoints.scoped { pin =>
         val k = 128
         // tokenize ONCE behind an exchange barrier (the shingleRows
         // discipline — CollapseProject otherwise re-runs the regexp
         // per shingle-slice lambda; measured 12 s vs 0.6 s at sf0.1)
-        val dh = documents(s, d)
+        // half sketches + direct sketch
+        val dh = pin(documents(s, d)
           .select(col("doc_id"), Text.tokens(col("text")).as("__toks"))
           .repartition(col("doc_id"))
           .select(explode(graft.ops.Dedup.wordShingles(col("__toks"), 3))
               .as("tok"),
             (graft.ops.Sampling.hashLong(concat(col("doc_id").cast("string"),
               lit("#half"))) % 2).as("half"))
-          .select(col("half"), graft.ops.Sampling.hashLong(col("tok")).as("h"))
-          .localCheckpoint() // half sketches + direct sketch
+          .select(col("half"), graft.ops.Sampling.hashLong(col("tok")).as("h")))
         def sketch(df: org.apache.spark.sql.DataFrame) = df
           .select("h").distinct()
           .orderBy("h").limit(k)

@@ -1,7 +1,7 @@
 package graft.queries
 
 import graft.Tables._
-import graft.ops.FixedPoint
+import graft.ops.{Checkpoints, FixedPoint}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -86,12 +86,11 @@ object QueriesRound8f {
     // rank last); label: lang. One aggregation per feature, O(cells)
     // frames after it.
     QueryDef("q442_mutual_information",
-      (s, d) => {
-        val docs = documents(s, d)
+      (s, d) => Checkpoints.scoped { pin =>
+        val docs = pin(documents(s, d)
           .select(col("lang").as("y"), col("source").as("f_source"),
             expr("(n_chars div 200) * 200").cast("string").as("f_lenb"),
-            (col("doc_id") % 2).cast("string").as("f_parity"))
-          .localCheckpoint()
+            (col("doc_id") % 2).cast("string").as("f_parity")))
         val tot = broadcast(docs.agg(count(lit(1)).as("nn")))
         val hy = broadcast(docs.groupBy("y").agg(count(lit(1)).as("cl"))
           .crossJoin(tot)

@@ -1,7 +1,7 @@
 package graft.queries
 
 import graft.Tables._
-import graft.ops.{Classify, Sampling, Text}
+import graft.ops.{Checkpoints, Classify, Sampling, Text}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
@@ -115,15 +115,18 @@ object QueriesRound8i {
     // gate. Prediction is the margin sign; per-doc correctness rides
     // along.
     QueryDef("q451_streaming_inference",
-      (s, d) => {
+      (s, d) => Checkpoints.scoped { pin =>
         val batch = documents(s, d)
         val y = when(col("lang") === "en", 1L).otherwise(-1L)
         val docsY = batch.select(col("doc_id"), y.as("y"))
         val feats = Classify.hashedFeatures(batch, "doc_id", "text", y)
-        val w = Classify.perceptronFit(feats, docsY, rounds = 3)._1.last
+        // the stream reads only the last weights; every fit frame is
+        // freed once it has run
+        val (ws, ms) = Classify.perceptronFit(feats, docsY, rounds = 3)
+        (ws ++ ms).foreach(pin.keep)
+        val w = ws.last
         val scored = graft.streaming.Sessions.runStreamToBatch(s, d,
           batch.schema, globFilter = Some("documents.parquet"),
-          shufflePartitions = Some(4),
           transform = st => st
             .select(col("doc_id"),
               explode(Text.tokens(col("text"))).as("__t"))
@@ -168,14 +171,14 @@ object QueriesRound8i {
     // 128. The oracle replays all 7 rounds as chained CTEs, so the
     // hash equality is the binary search itself.
     QueryDef("q452_longest_dup_ngram",
-      (s, d) => {
-        val toks = documents(s, d)
+      (s, d) => Checkpoints.scoped { pin =>
+        val toks = pin.keep(documents(s, d)
           .select(Text.tokens(col("text")).as("toks"))
           .where(size(col("toks")) > 0)
-          .persist()
-        val (bounds0, one) = graft.ops.Checkpoints.ckptCount(s.range(1)
+          .persist())
+        val (bounds0, one) = Checkpoints.ckptCount(s.range(1)
           .select(lit(1).as("lo"), lit(128).as("hi")))
-        val (bounds, _) = graft.ops.Checkpoints.iterate(bounds0, one, 7) {
+        val (bounds, _) = Checkpoints.iterate(bounds0, one, 7) {
           (bounds, _) =>
           val m = bounds.select(col("lo"), col("hi"),
             expr("(lo + hi) div 2").as("mid"))
@@ -193,12 +196,12 @@ object QueriesRound8i {
               when(col("mx") >= 2, col("hi")).otherwise(col("mid"))
                 .as("hi"))
         }
-        val fin = broadcast(bounds.select(col("lo").as("ll")))
+        val fin = broadcast(pin.keep(bounds).select(col("lo").as("ll")))
         // materialize the (tiny, one-group) final readout so the cached
-        // token frame and the last bounds frame can be freed NOW
-        // instead of lingering in executor storage for the rest of the
-        // suite
-        val out = toks.crossJoin(fin)
+        // token frame and the last bounds frame are freed when the
+        // query returns instead of lingering in executor storage for
+        // the rest of the suite
+        toks.crossJoin(fin)
           .select(col("ll"), explode(expr("IF(size(toks) >= ll, transform(" +
             "sequence(1, size(toks) - ll + 1), " +
             "i -> array_join(slice(toks, i, ll), ' ')), array())")).as("sh"))
@@ -210,9 +213,6 @@ object QueriesRound8i {
           .select(col("ll").cast("long").as("max_len"),
             col("n_repeated"), col("n_occurrences"), col("witness"))
           .localCheckpoint()
-        toks.unpersist()
-        graft.ops.Checkpoints.free(bounds)
-        out
       },
       Some {
         val rounds = (1 to 7).map { k =>

@@ -268,7 +268,6 @@ object QueriesRound8j {
         graft.streaming.Sessions.runStreamToBatch(s, d,
           documents(s, d).schema,
           globFilter = Some("documents.parquet"),
-          shufflePartitions = Some(4),
           transform = st => st
             .select(col("doc_id"),
               concat(col("source"), lit(".example.com")).as("host"),

@@ -199,7 +199,6 @@ object QueriesRound8k {
       (s, d) => graft.streaming.Sessions.runStreamToBatch(s, d,
         documents(s, d).schema,
         globFilter = Some("documents.parquet"),
-        shufflePartitions = Some(4),
         transform = st => st
           .select(col("doc_id"), col("source"),
             expr(QueriesRound8j.luhnPlantedTextSql).as("__t2"))

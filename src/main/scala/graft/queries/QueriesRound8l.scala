@@ -105,7 +105,6 @@ object QueriesRound8l {
         val regs = graft.streaming.Sessions.runStreamToBatch(s, d,
           documents(s, d).schema,
           globFilter = Some("documents.parquet"),
-          shufflePartitions = Some(4),
           transform = st => st
             .select(col("source"), explode(Text.tokens(col("text")))
               .as("__t"))

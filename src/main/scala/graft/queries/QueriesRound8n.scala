@@ -180,7 +180,6 @@ object QueriesRound8n {
         graft.streaming.Sessions.runStreamToBatch(s, d,
           embeddings(s, d).schema,
           globFilter = Some("embeddings.parquet"),
-          shufflePartitions = Some(4),
           transform = st => st
             .select(col("label"), transform(col("embedding"),
               x => round(x.cast("double") * 1000, 0).cast("long")).as("v"))

@@ -1,7 +1,7 @@
 package graft.queries
 
 import graft.Tables._
-import graft.ops.{Dedup, FixedPoint, Sampling, Text}
+import graft.ops.{Checkpoints, Dedup, FixedPoint, Sampling, Text}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -33,14 +33,14 @@ object QueriesRound9 {
     // (matching slots / 16) NEXT TO the exact shingle Jaccard —
     // the estimator-error readout, entirely hash-verified.
     QueryDef("q491_oph_minhash",
-      (s, d) => {
-        val toks = documents(s, d)
+      (s, d) => Checkpoints.scoped { pin =>
+        // two consumers: signature + exact verify
+        val toks = pin(documents(s, d)
           .select(col("doc_id"), Text.tokens(col("text")).as("__toks"))
           .repartition(col("doc_id")) // tokenize once (q150 discipline)
           .select(col("doc_id"),
             explode(array_distinct(Dedup.wordShingles(col("__toks"), 3)))
-              .as("sh"))
-          .localCheckpoint() // two consumers: signature + exact verify
+              .as("sh")))
         val hv = toks.select(col("doc_id"), Sampling.hashLong(col("sh")).as("h"))
         val bins = hv.groupBy("doc_id").agg(
           min(when(col("h") % K === 0, col("h"))).as("b0"),
@@ -50,30 +50,28 @@ object QueriesRound9 {
           coalesce((0 until K).map(t =>
             col(s"b${(j + t) % K}") + lit(t.toLong * BorrowC)): _*).as(s"d$j")
         }
-        val sig = bins.select((col("doc_id") +: densCols): _*)
+        val sig = pin(bins.select((col("doc_id") +: densCols): _*)
           .withColumn("dens", array((0 until K).map(j => col(s"d$j")): _*))
           .withColumn("band",
             md5(concat_ws(",", (0 until 4).map(j => col(s"d$j")): _*)))
-          .select("doc_id", "dens", "band")
-          .localCheckpoint()
+          .select("doc_id", "dens", "band"))
         val okBands = sig.groupBy("band").agg(count(lit(1)).as("__c"))
           .where(col("__c") <= 32).select("band")
         val sg = sig.join(broadcast(okBands), Seq("band"), "left_semi")
-        val pairs = sg.as("a").join(sg.as("b"),
+        val pairs = pin(sg.as("a").join(sg.as("b"),
             col("a.band") === col("b.band") &&
               col("a.doc_id") < col("b.doc_id"))
           .select(col("a.doc_id").as("id_a"), col("b.doc_id").as("id_b"),
             aggregate(zip_with(col("a.dens"), col("b.dens"),
               (x, y) => when(x === y, 1L).otherwise(0L)),
-              lit(0L), (acc, x) => acc + x).as("n_match"))
-          .localCheckpoint()
+              lit(0L), (acc, x) => acc + x).as("n_match")))
         val sz = toks.groupBy("doc_id").agg(count(lit(1)).as("n"))
         val inter = pairs.select("id_a", "id_b")
           .join(toks.select(col("doc_id").as("id_a"), col("sh")), "id_a")
           .join(toks.select(col("doc_id").as("id_b"), col("sh")),
             Seq("id_b", "sh"))
           .groupBy("id_a", "id_b").agg(count(lit(1)).as("n_inter"))
-        val out = pairs
+        pairs
           .join(sz.withColumnRenamed("doc_id", "id_a")
             .withColumnRenamed("n", "n_a"), "id_a")
           .join(sz.withColumnRenamed("doc_id", "id_b")
@@ -86,10 +84,6 @@ object QueriesRound9 {
               + " div (n_a + n_b - coalesce(n_inter, 0L))").as("exact_ppm"))
           .orderBy("id_a", "id_b")
           .localCheckpoint()
-        graft.ops.Checkpoints.free(pairs)
-        graft.ops.Checkpoints.free(sig)
-        graft.ops.Checkpoints.free(toks)
-        out
       },
       Some {
         val h = DuckSql.hexLong("md5(sh)")
@@ -151,13 +145,13 @@ object QueriesRound9 {
     // uses the TRUE degree. Existing edges anti-join out (prediction,
     // not description); top-20 by score.
     QueryDef("q492_adamic_adar",
-      (s, d) => {
+      (s, d) => Checkpoints.scoped { pin =>
         val li = lineitem(s, d).select("l_orderkey", "l_partkey")
-        val e = li.withColumnRenamed("l_partkey", "src")
+        // consumers: deg, capped adj, anti-join
+        val e = pin(li.withColumnRenamed("l_partkey", "src")
           .join(li.withColumnRenamed("l_partkey", "dst"), "l_orderkey")
           .where(col("src") =!= col("dst"))
-          .select("src", "dst").distinct()
-          .localCheckpoint() // consumers: deg, capped adj, anti-join
+          .select("src", "dst").distinct())
         val deg = e.groupBy("src").agg(count(lit(1)).as("deg"))
         // the middle's 1/ln(deg) weight rides IN the capped adjacency
         // (one 33·V-row join) so the O(V·33²) wedge frame never joins
@@ -182,7 +176,7 @@ object QueriesRound9 {
         // filtered frame, which is the same sum per surviving group.
         val scored = wedges.groupBy("x", "z")
           .agg(count(lit(1)).as("n_common"), sum("w").as("aa_micro"))
-        val out = scored.join(
+        scored.join(
           e.select(col("src").as("x"), col("dst").as("z")),
           Seq("x", "z"), "left_anti")
           .orderBy(col("aa_micro").desc, col("x"), col("z"))
@@ -190,8 +184,6 @@ object QueriesRound9 {
           .select(col("x").as("part_a"), col("z").as("part_b"),
             col("n_common"), col("aa_micro"))
           .localCheckpoint()
-        graft.ops.Checkpoints.free(e)
-        out
       },
       Some {
         val w = FixedPoint.duckLnMicroFp20("(deg * 1048576)")

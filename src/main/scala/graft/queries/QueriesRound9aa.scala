@@ -1,6 +1,7 @@
 package graft.queries
 
 import graft.Tables._
+import graft.ops.Checkpoints
 import org.apache.spark.sql.functions._
 
 /** Round-9 twenty-seventh batch: Markov removal-effect attribution. */
@@ -24,7 +25,7 @@ object QueriesRound9aa {
     // denominator under removal (mass through the removed state is
     // lost, which IS the semantics).
     QueryDef("q536_markov_attribution",
-      (s, d) => {
+      (s, d) => Checkpoints.scoped { pin =>
         import s.implicits._
         val w = org.apache.spark.sql.expressions.Window
           .partitionBy("user_id").orderBy("ts", "event_id")
@@ -43,18 +44,18 @@ object QueriesRound9aa {
             .select(col("event_type").as("src"), lit("END").as("dst")))
           .groupBy("src", "dst").agg(count(lit(1)).as("cnt"))
         val outDeg = trans.groupBy("src").agg(sum("cnt").as("out"))
-        val tm = trans.join(outDeg, Seq("src")).localCheckpoint()
+        val tm = pin(trans.join(outDeg, Seq("src")))
         val channels = Seq("view", "click", "signup", "error")
         val variants = ("base" +: channels).toDF("variant")
         val states = tm.select(col("src").as("state"))
           .unionByName(tm.select(col("dst").as("state"))).distinct()
         // v0: purchase = 1e6, everything else 0
-        val (v0, n) = graft.ops.Checkpoints.ckptCount(
+        val (v0, n) = Checkpoints.ckptCount(
           variants.crossJoin(states)
             .select(col("variant"), col("state"),
               when(col("state") === "purchase", 1000000L).otherwise(0L)
                 .as("v")))
-        val (v, _) = graft.ops.Checkpoints.iterate(v0, n, 8) { (v, _) =>
+        val (v, _) = Checkpoints.iterate(v0, n, 8) { (v, _) =>
           val stepped = tm
             .join(v.select(col("variant"), col("state").as("dst"),
               col("v").as("vd")), Seq("dst"))
@@ -68,11 +69,11 @@ object QueriesRound9aa {
                 .when(col("state") === "END", 0L)
                 .otherwise(coalesce(col("nv"), lit(0L))).as("v"))
         }
-        val conv = v.where(col("state") === "START")
+        val conv = pin.keep(v).where(col("state") === "START")
           .select(col("variant"), col("v").as("conv_micro"))
         val base = conv.where(col("variant") === "base")
           .select(col("conv_micro").as("base_micro"))
-        val out = conv.crossJoin(broadcast(base))
+        conv.crossJoin(broadcast(base))
           .select(col("variant"), col("conv_micro"), col("base_micro"),
             // signum × positive-div: removal can INCREASE conversion
             // (dropping a dead-end channel), and Spark div truncates
@@ -84,9 +85,6 @@ object QueriesRound9aa {
                   " div greatest(base_micro, 1L))")).as("removal_ppm"))
           .orderBy("variant")
           .localCheckpoint()
-        graft.ops.Checkpoints.free(v)
-        graft.ops.Checkpoints.free(tm)
-        out
       },
       Some {
         def round(prev: String, curr: String) =

@@ -1,7 +1,7 @@
 package graft.queries
 
 import graft.Tables._
-import graft.ops.{FixedPoint, Text}
+import graft.ops.{Checkpoints, FixedPoint, Text}
 import org.apache.spark.sql.functions._
 
 /** Round-9 second batch: anchor-blocked bitext mining (parallel-corpus
@@ -103,14 +103,13 @@ object QueriesRound9b {
     // bitext-mining blocking pass run before any expensive
     // cross-lingual scorer.
     QueryDef("q494_bitext_mining",
-      (s, d) => {
-        val docs = documents(s, d)
+      (s, d) => Checkpoints.scoped { pin =>
+        val docs = pin(documents(s, d) // consumers: anchors + lengths
           .select(col("doc_id"), col("lang"),
             Text.tokens(plantedSpark).as("toks"))
           .repartition(col("doc_id"))
           .select(col("doc_id"), col("lang"), col("toks"),
-            size(col("toks")).cast("long").as("len"))
-          .localCheckpoint() // consumers: anchors + lengths
+            size(col("toks")).cast("long").as("len")))
         val anchors = docs
           .select(col("doc_id"), col("lang"), col("len"),
             explode(array_distinct(col("toks"))).as("tok"))
@@ -120,7 +119,7 @@ object QueriesRound9b {
           .select("tok")
         val blocked = anchors.join(broadcast(okAnchors), Seq("tok"),
           "left_semi")
-        val out = blocked.as("a").join(blocked.as("b"),
+        blocked.as("a").join(blocked.as("b"),
             col("a.tok") === col("b.tok") &&
               col("a.lang") < col("b.lang"))
           .groupBy(col("a.doc_id").as("id_a"), col("b.doc_id").as("id_b"),
@@ -134,8 +133,6 @@ object QueriesRound9b {
             "n_anchors")
           .orderBy("id_a", "id_b")
           .localCheckpoint()
-        graft.ops.Checkpoints.free(docs)
-        out
       },
       Some(s"""WITH t AS (SELECT doc_id, lang,
         |    ${DuckSql.toks(s"($plantedDuck)")} AS toks FROM documents),
@@ -270,7 +267,6 @@ object QueriesRound9b {
         val cnt = graft.streaming.Sessions.runStreamToBatch(s, d,
           eventsStreamSchema(s, d),
           globFilter = Some("events.parquet"),
-          shufflePartitions = Some(4),
           transform = st => st
             .select((col("user_id") % 2).as("g"),
               expr("least(greatest(CAST(CAST(value AS DECIMAL(18,2)) * 100"

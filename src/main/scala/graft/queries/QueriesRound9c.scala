@@ -1,6 +1,7 @@
 package graft.queries
 
 import graft.Tables._
+import graft.ops.Checkpoints
 import org.apache.spark.sql.functions._
 
 /** Round-9 third batch: cross-signal lag analysis and the streaming
@@ -23,7 +24,7 @@ object QueriesRound9c {
     // one daily count aggregation. best flags the argmax row
     // (ties to the smaller lag).
     QueryDef("q498_lagged_comovement",
-      (s, d) => {
+      (s, d) => Checkpoints.scoped { pin =>
         val daily = events(s, d)
           .where(col("event_type").isin("click", "purchase"))
           .select(expr("CAST(date_diff(DAY, TIMESTAMP '2024-01-01', ts)"
@@ -34,10 +35,10 @@ object QueriesRound9c {
             sum(when(col("event_type") === "purchase", 1L).otherwise(0L))
               .as("y"))
         val dom = s.range(30).select(col("id").as("day"))
-        val filled = dom.join(daily, Seq("day"), "left")
+        // joined once per lag side below
+        val filled = pin(dom.join(daily, Seq("day"), "left")
           .select(col("day"), coalesce(col("x"), lit(0L)).as("x"),
-            coalesce(col("y"), lit(0L)).as("y"))
-          .localCheckpoint() // joined once per lag side below
+            coalesce(col("y"), lit(0L)).as("y")))
         val lags = s.range(8).select(col("id").as("lag"))
         val pairs = lags
           .join(filled.select(col("day"), col("x")), col("day") <= lit(29) - col("lag"))
@@ -109,7 +110,6 @@ object QueriesRound9c {
         val mins = graft.streaming.Sessions.runStreamToBatch(s, d,
           eventsStreamSchema(s, d),
           globFilter = Some("events.parquet"),
-          shufflePartitions = Some(4),
           transform = st => normalizeEventTs(st)
             .where(col("event_type").isin("signup", "click", "purchase"))
             .groupBy("user_id")

@@ -1,7 +1,7 @@
 package graft.queries
 
 import graft.Tables._
-import graft.ops.{Dedup, Text}
+import graft.ops.{Checkpoints, Dedup, Text}
 import org.apache.spark.sql.functions._
 
 /** Round-9 fourth batch: exact Shapley data valuation over source
@@ -28,7 +28,7 @@ object QueriesRound9d {
     // no rational arithmetic). Efficiency axiom Σ shapley_x120 =
     // 120·v(full) rides as a per-row check column.
     QueryDef("q500_source_shapley",
-      (s, d) => {
+      (s, d) => Checkpoints.scoped { pin =>
         val n = 5
         val sh = documents(s, d)
           .select((expr("CAST(substring(source, 4, 8) AS INT)") % n)
@@ -38,16 +38,15 @@ object QueriesRound9d {
           .select(col("grp"),
             explode(array_distinct(Dedup.wordShingles(col("__toks"), 3)))
               .as("sh"))
-        val hist = sh.distinct()
+        // ≤ 31 rows; read by every v(S) fold
+        val hist = pin(sh.distinct()
           .groupBy("sh")
           .agg(expr("bit_or(shiftleft(1, grp))").cast("long").as("mask"))
-          .groupBy("mask").agg(count(lit(1)).as("cnt"))
-          .localCheckpoint() // ≤ 31 rows; read by every v(S) fold
+          .groupBy("mask").agg(count(lit(1)).as("cnt")))
         val subs = s.range(1 << n).select(col("id").cast("long").as("ss"))
-        val v = subs.join(hist,
+        val v = pin(subs.join(hist, // 32 rows
             expr("(ss & mask) != 0"), "left")
-          .groupBy("ss").agg(coalesce(sum("cnt"), lit(0L)).as("v"))
-          .localCheckpoint() // 32 rows
+          .groupBy("ss").agg(coalesce(sum("cnt"), lit(0L)).as("v")))
         val srcs = s.range(n).select(col("id").cast("long").as("grp"))
         val terms = srcs.join(v.select(col("ss"), col("v").as("v_s")),
             expr("(ss & shiftleft(1, grp)) = 0"))
@@ -60,7 +59,7 @@ object QueriesRound9d {
           .select(col("v").as("v_full"))
         val vSolo = srcs.join(v, expr("ss = shiftleft(1, grp)"))
           .select(col("grp"), col("v").as("v_solo"))
-        val out = terms.groupBy("grp")
+        terms.groupBy("grp")
           .agg(sum("term").cast("long").as("shapley_x120"))
           .join(vSolo, "grp")
           .crossJoin(broadcast(vFull))
@@ -71,9 +70,6 @@ object QueriesRound9d {
               .as("efficiency_ok"))
           .orderBy("grp")
           .localCheckpoint()
-        graft.ops.Checkpoints.free(v)
-        graft.ops.Checkpoints.free(hist)
-        out
       },
       Some("""WITH sh0 AS (SELECT CAST(substr(source, 4) AS INT) % 5 AS grp,
         |    unnest(list_distinct(list_transform(
@@ -128,16 +124,14 @@ object QueriesRound9d {
     // same shingle join. Output: edge/wedge/closure counts and
     // transitivity ppm.
     QueryDef("q501_dedup_transitivity",
-      (s, d) => {
-        val toks = documents(s, d)
+      (s, d) => Checkpoints.scoped { pin =>
+        val toks = pin(documents(s, d)
           .select(col("doc_id"), Text.tokens(col("text")).as("__toks"))
           .repartition(col("doc_id"))
           .select(col("doc_id"),
             explode(array_distinct(Dedup.wordShingles(col("__toks"), 3)))
-              .as("sh"))
-          .localCheckpoint()
-        val sz = toks.groupBy("doc_id").agg(count(lit(1)).as("n"))
-          .localCheckpoint()
+              .as("sh")))
+        val sz = pin(toks.groupBy("doc_id").agg(count(lit(1)).as("n")))
         def jaccard(pairs: org.apache.spark.sql.DataFrame) = pairs
           .join(toks.select(col("doc_id").as("id_a"), col("sh")), "id_a")
           .join(toks.select(col("doc_id").as("id_b"), col("sh")),
@@ -173,34 +167,28 @@ object QueriesRound9d {
               col("a.doc_id") < col("b.doc_id"))
           .select(col("a.doc_id").as("id_a"), col("b.doc_id").as("id_b"))
           .distinct()
-        val edges = jaccard(cand).where(col("j_ppm") >= 500000)
-          .select("id_a", "id_b").localCheckpoint()
+        val edges = pin(jaccard(cand).where(col("j_ppm") >= 500000)
+          .select("id_a", "id_b"))
         // wedges a—b—c (b the shared endpoint, either role), closing
         // pair canonicalized a < c
         val both = edges.select(col("id_a").as("u"), col("id_b").as("w"))
           .union(edges.select(col("id_b").as("u"), col("id_a").as("w")))
-        val wedges = both.as("p").join(both.as("q"),
+        val wedges = pin(both.as("p").join(both.as("q"),
             col("p.u") === col("q.u") && col("p.w") < col("q.w"))
           .select(col("p.w").as("id_a"), col("q.w").as("id_b"))
-          .distinct()
-          .localCheckpoint()
+          .distinct())
         val closedJ = jaccard(wedges)
         val audit = wedges
           .join(closedJ, Seq("id_a", "id_b"), "left")
           .select(col("id_a"), col("id_b"),
             (coalesce(col("j_ppm"), lit(0L)) >= 500000).as("closed"))
-        val out = audit.agg(count(lit(1)).as("n_wedge_pairs"),
+        audit.agg(count(lit(1)).as("n_wedge_pairs"),
             sum(when(col("closed"), 1L).otherwise(0L)).as("n_closed"))
           .crossJoin(broadcast(edges.agg(count(lit(1)).as("n_edges"))))
           .select(col("n_edges"), col("n_wedge_pairs"), col("n_closed"),
             expr("(n_closed * 1000000) div greatest(n_wedge_pairs, 1L)")
               .as("transitivity_ppm"))
           .localCheckpoint()
-        graft.ops.Checkpoints.free(wedges)
-        graft.ops.Checkpoints.free(edges)
-        graft.ops.Checkpoints.free(sz)
-        graft.ops.Checkpoints.free(toks)
-        out
       },
       Some {
         val h = DuckSql.hexLong("md5(sh)")

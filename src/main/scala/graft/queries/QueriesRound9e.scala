@@ -2,7 +2,7 @@ package graft.queries
 
 import graft.Tables._
 import graft.functions.GraftFunctions
-import graft.ops.Graph
+import graft.ops.{Checkpoints, Graph}
 import org.apache.spark.sql.functions._
 
 /** Round-9 fifth batch: the bounded top-k aggregate (the rank-window
@@ -55,33 +55,32 @@ object QueriesRound9e {
     // the oracle replays 3 cold rounds + 1 warm round as chained
     // CTEs and the hash covers the whole refresh.
     QueryDef("q503_warmstart_pagerank",
-      (s, d) => {
+      (s, d) => Checkpoints.scoped { pin =>
         val li = lineitem(s, d).select("l_orderkey", "l_partkey")
         // ONE pair self-join builds BOTH graphs (was: two self-joins +
         // two distincts): each distinct (src, dst) carries whether any
         // supporting order is in the old 90% — eOld/eFull are then
         // projections of the same checkpointed frame. Same distinct
         // pair sets as the oracle's two DISTINCT CTEs by construction.
-        val flags = li.withColumnRenamed("l_partkey", "src")
+        val flags = pin(li.withColumnRenamed("l_partkey", "src")
           .join(li.withColumnRenamed("l_partkey", "dst"), "l_orderkey")
           .where(col("src") =!= col("dst"))
           .select(col("src"), col("dst"),
             (col("l_orderkey") % 10 =!= 0).cast("int").as("__old"))
-          .groupBy("src", "dst").agg(max("__old").as("__old"))
-          .localCheckpoint()
+          .groupBy("src", "dst").agg(max("__old").as("__old")))
         val eOld = flags.where(col("__old") === 1).select("src", "dst")
         val r0 = Graph.pageRank(eOld, "src", "dst", iters = 3)
           .select(col("id"), col("rank_micro").as("r_old"))
         val eFull = flags.select("src", "dst")
-        val degF = eFull.groupBy("src").agg(count(lit(1)).as("d"))
-          .localCheckpoint()
+        val degF = pin(eFull.groupBy("src").agg(count(lit(1)).as("d")))
         // every src key survives the degree agg, so the node set reads
         // off degF instead of a second distinct pass over the pairs
         val nodesF = degF.select(col("src").as("id"))
+        // lazy: the result reads r0's rank frame through it, so the
+        // frame passes to the caller with the result
         val seed = nodesF.join(r0, Seq("id"), "left")
           .select(col("id"), coalesce(col("r_old"), lit(1000000L))
             .as("r_seed"))
-          .localCheckpoint()
         val perSrc = seed.join(degF.withColumnRenamed("src", "id"), "id")
           .select(col("id").as("src"), expr("r_seed div d").as("__c"))
         val sums = eFull.join(broadcast(perSrc), "src")
@@ -89,7 +88,7 @@ object QueriesRound9e {
         val warm = seed.join(sums, Seq("id"), "left")
           .select(col("id"), col("r_seed"),
             expr("150000 + (85 * coalesce(__s, 0L)) div 100").as("r_warm"))
-        val out = warm
+        warm
           .select(col("id"), (col("r_warm") - col("r_seed")).as("delta"))
           .selectExpr("CASE WHEN delta = 0 THEN 0" +
             " ELSE length(bin(abs(delta))) END AS octave",
@@ -99,11 +98,6 @@ object QueriesRound9e {
           .select(col("octave").cast("long").as("octave"), col("n_nodes"),
             col("sum_abs_delta"))
           .orderBy("octave")
-          .localCheckpoint()
-        graft.ops.Checkpoints.free(seed)
-        graft.ops.Checkpoints.free(degF)
-        graft.ops.Checkpoints.free(flags)
-        out
       },
       Some {
         def iter(prev: String, curr: String) =

@@ -25,7 +25,6 @@ object QueriesRound9f {
         val batch = documents(s, d)
         graft.streaming.Sessions.runStreamToBatch(s, d, batch.schema,
             globFilter = Some("documents.parquet"),
-            shufflePartitions = Some(4),
             transform = st => st
               .groupBy("source")
               .agg(GraftFunctions.topK(col("n_chars"), col("doc_id"), 5)

@@ -1,7 +1,7 @@
 package graft.queries
 
 import graft.Tables._
-import graft.ops.{Multimodal, Relational, Text}
+import graft.ops.{Checkpoints, Multimodal, Relational, Text}
 import org.apache.spark.sql.functions._
 
 /** Round-9 seventh batch: RFM behavioral segmentation on the
@@ -25,21 +25,20 @@ object QueriesRound9g {
     // deterministic (user_id tiebreak), oracle-replayed by plain
     // row_number(). Output: the ≤ 125 RFM cells with counts.
     QueryDef("q505_rfm_segments",
-      (s, d) => {
+      (s, d) => Checkpoints.scoped { pin =>
         // recency in whole HOURS by pure epoch-micros arithmetic —
         // date_diff(DAY, ts, ref) counts complete 24 h units in Spark
         // but calendar-boundary crossings in DuckDB (a uniform +1
         // shift for non-midnight ts that rank-coding happens to
         // absorb, until one timestamp lands exactly on midnight);
         // integer division of the micros span is engine-identical
-        val u = events(s, d)
+        val u = pin(events(s, d)
           .groupBy("user_id")
           .agg(expr("(unix_micros(TIMESTAMP '2024-01-31 00:00:00') - " +
             "unix_micros(max(ts))) div 3600000000").as("rec"),
             count(lit(1)).as("freq"),
             sum(expr("CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT)"))
-              .as("mon"))
-          .localCheckpoint() // three rank passes below
+              .as("mon"))) // three rank passes below
         val n = u.agg(count(lit(1)).as("n"))
         def quint(metric: String, out: String) = {
           // ascending rank = descending rank of the negated metric
@@ -50,15 +49,13 @@ object QueriesRound9g {
             .select(col("user_id"),
               expr("((__r - 1) * 5) div n + 1").as(out))
         }
-        val out = quint("rec", "r_code")
+        // lazy: the result reads each rank's persisted input
+        quint("rec", "r_code")
           .join(quint("freq", "f_code"), "user_id")
           .join(quint("mon", "m_code"), "user_id")
           .groupBy("r_code", "f_code", "m_code")
           .agg(count(lit(1)).as("n_users"))
           .orderBy("r_code", "f_code", "m_code")
-          .localCheckpoint()
-        graft.ops.Checkpoints.free(u)
-        out
       },
       Some("""WITH u AS (SELECT user_id,
         |    CAST((epoch_us(TIMESTAMP '2024-01-31 00:00:00')
@@ -94,15 +91,14 @@ object QueriesRound9g {
     // split (assign each user by FIRST event) would give instead.
     // Pure aggregations + one semi-join-shaped intersection.
     QueryDef("q506_temporal_split_audit",
-      (s, d) => {
-        val ev = events(s, d).select(col("user_id"), col("ts"))
+      (s, d) => Checkpoints.scoped { pin =>
+        val ev = pin(events(s, d).select(col("user_id"), col("ts"))
           .withColumn("part", when(
             col("ts") < lit("2024-01-20 00:00:00").cast("timestamp"),
             "train")
             .when(col("ts") >= lit("2024-01-23 00:00:00").cast("timestamp"),
               "test")
-            .otherwise("embargo"))
-          .localCheckpoint()
+            .otherwise("embargo")))
         val rows = ev.groupBy("part").agg(count(lit(1)).as("n_rows"),
           countDistinct("user_id").as("n_users"))
         val trU = ev.where(col("part") === "train").select("user_id")
@@ -122,7 +118,7 @@ object QueriesRound9g {
               "test")
             .otherwise("embargo"))
           .groupBy("part").agg(count(lit(1)).as("n_safe_users"))
-        val out = rows.join(safe, Seq("part"), "left")
+        rows.join(safe, Seq("part"), "left")
           .crossJoin(broadcast(overlap))
           .crossJoin(broadcast(teN))
           .select(col("part"), col("n_rows"), col("n_users"),
@@ -132,8 +128,6 @@ object QueriesRound9g {
               .as("user_leak_ppm"))
           .orderBy("part")
           .localCheckpoint()
-        graft.ops.Checkpoints.free(ev)
-        out
       },
       Some("""WITH ev AS (SELECT user_id, ts,
         |    CASE WHEN ts < TIMESTAMP '2024-01-20 00:00:00' THEN 'train'

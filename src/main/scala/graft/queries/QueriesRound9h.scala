@@ -1,7 +1,7 @@
 package graft.queries
 
 import graft.Tables._
-import graft.ops.{Dedup, Text}
+import graft.ops.{Checkpoints, Dedup, Text}
 import org.apache.spark.sql.functions._
 
 /** Round-9 eighth batch: greedy source set-cover — the acquisition
@@ -24,9 +24,10 @@ object QueriesRound9h {
     // greedy schedule. Read next to q500: greedy ORDER vs Shapley
     // FAIRNESS — acquisition planning vs payment splitting.
     QueryDef("q508_greedy_source_cover",
-      (s, d) => {
+      (s, d) => Checkpoints.scoped { pin =>
         val n = 5
-        val hist = documents(s, d)
+        // ≤ 31 rows; every round folds over it
+        val hist = pin(documents(s, d)
           .select((expr("CAST(substring(source, 4, 8) AS INT)") % n)
             .cast("int").as("grp"),
             Text.tokens(col("text")).as("__toks"))
@@ -37,18 +38,17 @@ object QueriesRound9h {
           .distinct()
           .groupBy("sh")
           .agg(expr("bit_or(shiftleft(1, grp))").cast("long").as("mask"))
-          .groupBy("mask").agg(count(lit(1)).as("cnt"))
-          .localCheckpoint() // ≤ 31 rows; every round folds over it
-        val vFull = hist.agg(sum("cnt").as("v_full")).localCheckpoint()
+          .groupBy("mask").agg(count(lit(1)).as("cnt")))
+        val vFull = hist.agg(sum("cnt").as("v_full"))
         val srcs = s.range(n).select(col("id").cast("long").as("grp"))
         // the round frame is every pick so far, one row per round; the
         // round-0 row is the empty cover. A round reads its state off
         // the last row, so the frame's row count is the next round.
         val none = lit(null).cast("long")
-        val (start, one) = graft.ops.Checkpoints.ckptCount(s.range(1)
+        val (start, one) = Checkpoints.ckptCount(s.range(1)
           .select(lit(0L).as("round"), none.as("grp"), none.as("gain"),
             lit(0L).as("covered_after"), lit(0L).as("smask")))
-        val (picks, _) = graft.ops.Checkpoints.iterate(start, one, n) {
+        val (picks, _) = Checkpoints.iterate(start, one, n) {
           (picks, r) =>
           val state = picks.where(col("round") === r - 1)
             .select(col("smask"), col("covered_after").as("covered"))
@@ -69,7 +69,7 @@ object QueriesRound9h {
               col("v_next").as("covered_after"),
               expr("smask | shiftleft(1, grp)").as("smask")))
         }
-        val out = picks.where(col("round") > 0)
+        pin.keep(picks).where(col("round") > 0)
           .crossJoin(broadcast(vFull))
           .select(col("round"), col("grp").as("grp_chosen"), col("gain"),
             col("covered_after"),
@@ -77,10 +77,6 @@ object QueriesRound9h {
               .as("coverage_ppm"))
           .orderBy("round")
           .localCheckpoint()
-        graft.ops.Checkpoints.free(picks)
-        graft.ops.Checkpoints.free(vFull)
-        graft.ops.Checkpoints.free(hist)
-        out
       },
       Some {
         val roundCtes = (1 to 5).map { r =>

@@ -1,7 +1,7 @@
 package graft.queries
 
 import graft.Tables._
-import graft.ops.Dedup
+import graft.ops.{Checkpoints, Dedup}
 import org.apache.spark.sql.functions._
 
 /** Round-9 ninth batch: incremental connected components — cluster
@@ -27,22 +27,22 @@ object QueriesRound9i {
     // (i→i+3 on i%7, i→i+30 on i%11) so components merge across the
     // old/new doc boundary (new docs = doc_id % 5 == 0).
     QueryDef("q509_incremental_cc",
-      (s, d) => {
+      (s, d) => Checkpoints.scoped { pin =>
         val ids = documents(s, d).select(col("doc_id"))
-        val eAll = ids.as("a").join(ids.as("b"),
+        val eAll = pin(ids.as("a").join(ids.as("b"),
             col("b.doc_id") === col("a.doc_id") + 3 &&
               col("a.doc_id") % 7 === 0)
           .select(col("a.doc_id").as("id_a"), col("b.doc_id").as("id_b"))
           .unionByName(ids.as("a").join(ids.as("b"),
               col("b.doc_id") === col("a.doc_id") + 30 &&
                 col("a.doc_id") % 11 === 0)
-            .select(col("a.doc_id").as("id_a"), col("b.doc_id").as("id_b")))
-          .localCheckpoint()
+            .select(col("a.doc_id").as("id_a"), col("b.doc_id").as("id_b"))))
         val isNew = (c: org.apache.spark.sql.Column) => c % 5 === 0
         val eOld = eAll.where(!isNew(col("id_a")) && !isNew(col("id_b")))
         val eNew = eAll.where(isNew(col("id_a")) || isNew(col("id_b")))
         // step 1: CC over the old edges only
-        val lab1 = Dedup.duplicateGroups(eOld).localCheckpoint()
+        // both labelings are materialized, and the result reads them
+        val lab1 = Dedup.duplicateGroups(eOld)
         // step 2: quotient — new edges through old representatives
         // (endpoints outside the old labeling represent themselves)
         def rep(side: String) = eNew
@@ -54,7 +54,7 @@ object QueriesRound9i {
           .select(coalesce(col("__rid_a"), col("id_a")).as("id_a"),
             coalesce(col("__rid_b"), col("id_b")).as("id_b"))
           .where(col("id_a") =!= col("id_b"))
-        val lab2 = Dedup.duplicateGroups(quotient).localCheckpoint()
+        val lab2 = Dedup.duplicateGroups(quotient)
         // step 3: compose — old members re-map via their rep's new
         // label; quotient nodes (reps + raw new ids) take lab2
         val composed = lab1
@@ -64,13 +64,8 @@ object QueriesRound9i {
             .as("group_id"))
         val newNodes = lab2.select(col("id"), col("group_id"))
           .join(lab1.select(col("id")), Seq("id"), "left_anti")
-        val out = composed.unionByName(newNodes)
+        composed.unionByName(newNodes)
           .orderBy("id")
-          .localCheckpoint()
-        graft.ops.Checkpoints.free(lab2)
-        graft.ops.Checkpoints.free(lab1)
-        graft.ops.Checkpoints.free(eAll)
-        out
       },
       Some(s"""WITH RECURSIVE ids AS (SELECT doc_id FROM documents),
         |cand AS (

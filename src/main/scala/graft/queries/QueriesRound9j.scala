@@ -1,7 +1,7 @@
 package graft.queries
 
 import graft.Tables._
-import graft.ops.{Multimodal, Text}
+import graft.ops.{Checkpoints, Multimodal, Text}
 import org.apache.spark.sql.functions._
 
 /** Round-9 tenth batch: prefix-cache scheduling (the inference-serving
@@ -23,13 +23,13 @@ object QueriesRound9j {
     // both schedules, plus the sorting uplift. Exact integers; the
     // oracle replays both schedules' lag windows.
     QueryDef("q510_prefix_cache_plan",
-      (s, d) => {
-        val tk = documents(s, d)
+      (s, d) => Checkpoints.scoped { pin =>
+        // two schedule windows below
+        val tk = pin(documents(s, d)
           .select(col("doc_id"), Text.tokens(col("text")).as("t"))
           .repartition(col("doc_id"))
           .withColumn("batch", expr("doc_id div 64"))
-          .withColumn("key", concat_ws(" ", col("t")))
-          .localCheckpoint() // two schedule windows below
+          .withColumn("key", concat_ws(" ", col("t"))))
         def lcpWith(prevCol: String): org.apache.spark.sql.Column =
           expr(s"""CASE WHEN $prevCol IS NULL THEN 0 ELSE
             coalesce(array_min(filter(transform(

@@ -49,7 +49,6 @@ object QueriesRound9l {
           eventsStreamSchema(s, d),
           globFilter = Some("events.parquet"),
           outputMode = "append",
-          shufflePartitions = Some(4),
           transform = st => {
             val sess = st.sparkSession
             import sess.implicits._

@@ -25,7 +25,6 @@ object QueriesRound9s {
           eventsStreamSchema(s, d),
           globFilter = Some("events.parquet"),
           outputMode = "update",
-          shufflePartitions = Some(4),
           transform = st => {
             val sess = st.sparkSession
             import sess.implicits._

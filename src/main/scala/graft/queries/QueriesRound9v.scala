@@ -1,7 +1,7 @@
 package graft.queries
 
 import graft.Tables._
-import graft.ops.{Graph, Sampling}
+import graft.ops.{Checkpoints, Graph, Sampling}
 import org.apache.spark.sql.functions._
 
 /** Round-9 twenty-second batch: data-placement (consistent hashing)
@@ -112,16 +112,16 @@ object QueriesRound9v {
     // SAME Graph.labelPropagation call q229 pins, so the two lanes
     // stay in lockstep by construction.
     QueryDef("q529_lpa_modularity",
-      (s, d) => {
+      (s, d) => Checkpoints.scoped { pin =>
         val li = lineitem(s, d).where(col("l_orderkey") % 7 === 0)
           .select("l_orderkey", "l_partkey")
         // the distinct pair frame is computed ONCE and checkpointed:
         // LPA's internal layout and the modularity readout both read
         // cached blocks instead of each re-running the self-join
-        val e = li.withColumnRenamed("l_partkey", "src")
+        val e = pin(li.withColumnRenamed("l_partkey", "src")
           .join(li.withColumnRenamed("l_partkey", "dst"), "l_orderkey")
           .where(col("src") < col("dst"))
-          .select("src", "dst").distinct().localCheckpoint()
+          .select("src", "dst").distinct())
         val labels = Graph.labelPropagation(e, "src", "dst", rounds = 2)
         val ed = e
         // the O(V) label frame is a stats-less checkpoint the planner

@@ -1,7 +1,7 @@
 package graft.queries
 
 import graft.Tables._
-import graft.ops.Dedup
+import graft.ops.{Checkpoints, Dedup}
 import org.apache.spark.sql.functions._
 
 /** Round-9 twenty-third batch: dedup-knob sensitivity — cluster
@@ -23,9 +23,9 @@ object QueriesRound9w {
     // the same curve at 100 TB tells you the radius at which
     // boilerplate chains start welding unrelated docs together.
     QueryDef("q530_radius_cluster_curve",
-      (s, d) => {
-        val pairs = Dedup.simhashNearDupPairs(documents(s, d),
-          "doc_id", "text", 3).localCheckpoint()
+      (s, d) => Checkpoints.scoped { pin =>
+        val pairs = pin(pin.adopt(Dedup.simhashNearDupPairs(documents(s, d),
+          "doc_id", "text", 3)))
         val rows = (1 to 3).map { r =>
           val e = pairs.where(col("hamming") <= r)
             .select("id_a", "id_b")
@@ -39,10 +39,8 @@ object QueriesRound9w {
             .select(lit(r.toLong).as("radius"), col("n_edges"),
               col("n_docs"), col("n_components"), col("max_cluster"))
         }
-        val out = rows.reduce(_.unionByName(_)).orderBy("radius")
-          .localCheckpoint()
-        graft.ops.Checkpoints.free(pairs)
-        out
+        // lazy: the result reads the three labelings' round frames
+        rows.reduce(_.unionByName(_)).orderBy("radius")
       },
       Some {
         val ham = "CAST(list_sum(list_transform(generate_series(0, 63), " +

@@ -1,7 +1,7 @@
 package graft.queries
 
 import graft.Tables._
-import graft.ops.Graph
+import graft.ops.{Checkpoints, Graph}
 import org.apache.spark.sql.functions._
 
 /** Round-9 twenty-fifth batch: graph diameter estimation by double
@@ -24,31 +24,30 @@ object QueriesRound9y {
     // in the output, and the oracle replays both sweeps as chained
     // min-fold CTEs.
     QueryDef("q532_double_sweep_diameter",
-      (s, d) => {
+      (s, d) => Checkpoints.scoped { pin =>
         val li = lineitem(s, d).where(col("l_orderkey") % 7 === 0)
           .select("l_orderkey", "l_partkey")
-        val e = Graph.layoutEdges(
+        val e = pin.keep(Graph.layoutEdges(
           li.withColumnRenamed("l_partkey", "src")
             .join(li.withColumnRenamed("l_partkey", "dst"), "l_orderkey")
             .where(col("src") =!= col("dst")),
-          "src", "dst", layoutKey = "dst")
+          "src", "dst", layoutKey = "dst"))
         val seed = e.agg(min("src").as("id"))
-        val b1 = Graph.boundedBfs(e, "src", "dst", seed, hops = 8,
-          assumeLaidOut = true).localCheckpoint()
+        // each sweep's result is its last round frame, already
+        // materialized
+        val b1 = pin.keep(Graph.boundedBfs(e, "src", "dst", seed, hops = 8,
+          assumeLaidOut = true))
         val far = b1.orderBy(desc("dist"), asc("id")).limit(1)
           .select(col("id"))
-        val b2 = Graph.boundedBfs(e, "src", "dst", far, hops = 8,
-          assumeLaidOut = true).localCheckpoint()
-        val out = seed.select(col("id").as("seed_id"))
+        val b2 = pin.keep(Graph.boundedBfs(e, "src", "dst", far, hops = 8,
+          assumeLaidOut = true))
+        seed.select(col("id").as("seed_id"))
           .crossJoin(broadcast(b1.agg(max("dist").as("ecc_seed"),
             count(lit(1)).as("n_reach_seed"))))
           .crossJoin(broadcast(far.select(col("id").as("far_id"))))
           .crossJoin(broadcast(b2.agg(max("dist").as("diameter_lb"),
             count(lit(1)).as("n_reach_far"))))
           .localCheckpoint()
-        graft.ops.Checkpoints.free(b2)
-        graft.ops.Checkpoints.free(b1)
-        out
       },
       Some {
         // MATERIALIZED per round: each round references its

@@ -1,7 +1,7 @@
 package graft.queries
 
 import graft.Tables._
-import graft.ops.{Dedup, Graph, Text}
+import graft.ops.{Checkpoints, Dedup, Graph, Text}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -49,17 +49,17 @@ object QueriesScaleExt {
     // so the oracle replays every round as a chained CTE and the hash
     // check covers the whole traversal.
     QueryDef("q149_bfs_distance",
-      (s, d) => {
+      (s, d) => Checkpoints.scoped { pin =>
         val li = lineitem(s, d).select("l_orderkey", "l_partkey")
         // lay the edge frame out ONCE (Graph.layoutEdges) — seeds and
         // the BFS rounds all read the same checkpointed layout; passing
         // it back through boundedBfs without assumeLaidOut would
         // materialize the O(|E|) frame twice
-        val e = Graph.layoutEdges(
+        val e = pin.keep(Graph.layoutEdges(
           li.withColumnRenamed("l_partkey", "src")
             .join(li.withColumnRenamed("l_partkey", "dst"), "l_orderkey")
             .where(col("src") =!= col("dst")),
-          "src", "dst", layoutKey = "dst")
+          "src", "dst", layoutKey = "dst"))
         val seeds = e.select(col("src").as("id")).where(col("id") % 97 === 0)
         Graph.boundedBfs(e, "src", "dst", seeds, hops = 3, assumeLaidOut = true)
           .select(col("id").as("part_id"), col("dist"))

@@ -108,10 +108,7 @@ object QueriesStats {
         |FROM orders
         |GROUP BY GROUPING SETS ((o_orderpriority), (o_orderstatus), ())
         |ORDER BY 1, 2""".stripMargin
-      (s, d) => {
-        Tables.table(s, d, "orders").createOrReplaceTempView("orders")
-        s.sql(sql)
-      }
+      (s, d) => Tables.sqlOver(s, d, "orders")(sql)
     },
       Some("""SELECT coalesce(o_orderpriority, 'ALL') AS priority,
         |  coalesce(o_orderstatus, 'ALL') AS status,

@@ -104,26 +104,29 @@ object Sessions {
         col("session_window.end").as("window_end"),
         col("utterance_start"), col("utterance_end"), col("n_words"), col("text"))
 
-  /** Shared lifecycle for every run-to-batch variant below: memory
-    * sink under a fresh name, AvailableNow trigger, await, return the
-    * sink table as a batch frame.
-    * Stateful-operator cost is dominated by per-STATE-STORE overhead
+  /** Stateful-operator cost is dominated by per-STATE-STORE overhead
     * (one store per shuffle partition per stateful operator side, each
     * with snapshot/commit bookkeeping per micro-batch), not by rows —
     * measured 8.3 s -> 2.9 s on the stream-stream join by going
-    * 32 -> 4 stores. The partition count is fixed into the query at
-    * start, so it is set around start() and restored after; on a real
-    * cluster size it to rate x interval state volume instead. */
+    * 32 -> 4 stores. On a real cluster size it to rate x interval
+    * state volume instead. */
+  private val StateStores = 4
+
+  /** Shared lifecycle for every run-to-batch variant below: memory
+    * sink under a fresh name, AvailableNow trigger, await, return the
+    * sink table as a batch frame. The partition count is fixed into
+    * the query at start, so [[StateStores]] is set around start() and
+    * the session's count restored after. The sink's temp view is
+    * dropped once the returned frame is analyzed — the frame holds the
+    * sink itself, so it still reads back. */
   private def runToBatch(spark: org.apache.spark.sql.SparkSession,
                          reader: org.apache.spark.sql.SparkSession => DataFrame,
                          transform: DataFrame => DataFrame,
-                         outputMode: String,
-                         shufflePartitions: Option[Int]): DataFrame = {
+                         outputMode: String): DataFrame = {
     val name = "graft_stream_" + java.util.UUID.randomUUID().toString.replace("-", "")
     val prevParts = spark.conf.get("spark.sql.shuffle.partitions")
     val q = try {
-      shufflePartitions.foreach(p =>
-        spark.conf.set("spark.sql.shuffle.partitions", p.toString))
+      spark.conf.set("spark.sql.shuffle.partitions", StateStores.toString)
       transform(reader(spark)).writeStream
         .format("memory")
         .queryName(name)
@@ -133,7 +136,8 @@ object Sessions {
     } finally spark.conf.set("spark.sql.shuffle.partitions", prevParts)
     try q.awaitTermination()
     finally q.stop()
-    spark.table(name)
+    try spark.table(name)
+    finally spark.catalog.dropTempView(name)
   }
 
   /** Run a streaming aggregation over a bounded file source to
@@ -150,13 +154,12 @@ object Sessions {
                        schema: org.apache.spark.sql.types.StructType,
                        transform: DataFrame => DataFrame,
                        globFilter: Option[String] = None,
-                       outputMode: String = "complete",
-                       shufflePartitions: Option[Int] = None): DataFrame =
+                       outputMode: String = "complete"): DataFrame =
     runToBatch(spark, { sp =>
       val reader = sp.readStream.schema(schema)
       globFilter.foreach(g => reader.option("pathGlobFilter", g))
       reader.parquet(sourceDir)
-    }, transform, outputMode, shufflePartitions)
+    }, transform, outputMode)
 
   /** [[runStreamToBatch]] over a TEXT file stream (the commit-log
     * tailing runner behind q578: a lakehouse manifest is a directory
@@ -167,13 +170,12 @@ object Sessions {
                            sourceDir: String,
                            transform: DataFrame => DataFrame,
                            globFilter: Option[String] = None,
-                           outputMode: String = "append",
-                           shufflePartitions: Option[Int] = None): DataFrame =
+                           outputMode: String = "append"): DataFrame =
     runToBatch(spark, { sp =>
       val reader = sp.readStream
       globFilter.foreach(g => reader.option("pathGlobFilter", g))
       reader.text(sourceDir)
-    }, transform, outputMode, shufflePartitions)
+    }, transform, outputMode)
 
   /** STREAMING change-data-feed (lane #36) — the consumer-facing twin
     * of the q578 manifest tail: instead of the live-set FOLD, emit the
@@ -252,11 +254,10 @@ object Sessions {
                              format: String,
                              options: Map[String, String],
                              transform: DataFrame => DataFrame,
-                             outputMode: String = "complete",
-                             shufflePartitions: Option[Int] = None): DataFrame =
+                             outputMode: String = "complete"): DataFrame =
     runToBatch(spark,
       _.readStream.format(format).options(options).load(),
-      transform, outputMode, shufflePartitions)
+      transform, outputMode)
 
   def windowedCounts(events: DataFrame, tsCol: String, valueCol: String,
                      window: String = "10 minutes",

@@ -2,14 +2,13 @@ package graft
 
 import graft.ops.{Dedup, Graph, Similarity}
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.execution.LogicalRDD
 import org.scalacheck.{Gen, rng}
 
 /** The operators and queries whose rounds run under
   * `Checkpoints.iterate`:
-  *  - every call leaves pinned only the blocks its result reads (the
-  *    RDDs of the LogicalRDD leaves of its analyzed plan), and the
-  *    result still reads back after the call;
+  *  - every call leaves pinned only the blocks its result reads
+  *    (`Leaks.resultRdds`), and the result still reads back after the
+  *    call;
   *  - on a fixed small graph each runs at most the Spark jobs it ran
   *    with per-loop hand-kept checkpoint bookkeeping (`parentJobs`,
   *    counted for the call plus one collect of its result);
@@ -38,24 +37,6 @@ class IterateSpec extends SparkSpec {
     .map { case (a, b) => (math.min(a, b), math.max(a, b)) }.distinct
     .filter { case (a, b) => a != b }
     .map { case (a, b) => (a, b, ((a * 31 + b * 17) % 7) * 1000000L + a * 1000 + b) }
-
-  private def leafRdds(df: DataFrame): Set[Int] =
-    df.queryExecution.analyzed.collect { case lr: LogicalRDD => lr.rdd.id }.toSet
-
-  /** Runs `body` and one collect of its result. Returns the jobs the
-    * two ran and the RDDs the call left persisted beyond its result's
-    * leaves, after checking that the result still reads back. */
-  private def jobsAndLeaks(body: => DataFrame): (Int, Set[Int]) = {
-    val sc = spark.sparkContext
-    val before = sc.getPersistentRDDs.keySet
-    val (res, jobs) = JobCount.of(spark) { val r = body; r.collect(); r }
-    val leaves = leafRdds(res)
-    val leaked = (sc.getPersistentRDDs.keySet -- before -- leaves).toSet
-    res.collect() // none of the result's blocks was freed under it
-    (leaves ++ leaked).foreach(id =>
-      sc.getPersistentRDDs.get(id).foreach(_.unpersist(true)))
-    (jobs, leaked)
-  }
 
   private val fixedCases: Seq[(String, () => DataFrame)] = Seq(
     "pageRank" -> (() => Graph.pageRank(edges, "src", "dst")),
@@ -99,24 +80,27 @@ class IterateSpec extends SparkSpec {
     .map(q => q -> (() => SparkEntry.queries(q)(spark, sf)))
 
   /** Jobs per call (plus one collect) on the fixed inputs above, with
-    * each loop keeping its checkpoints by hand. */
+    * each loop keeping its checkpoints by hand; lowered where a later
+    * change dropped a job (pageRankRedistributed's node count rides as
+    * a literal, duplicateGroups builds its symmetric edges in one
+    * pass, q508 reads its total lazily). */
   private val parentJobs: Map[String, Int] = Map(
-    "pageRank" -> 17, "pageRankRedistributed" -> 28,
+    "pageRank" -> 17, "pageRankRedistributed" -> 22,
     "personalizedPageRank" -> 20, "kCore" -> 19, "coreDecomposition" -> 25,
     "labelPropagation" -> 18, "boundedBfs" -> 40,
     "boundedBfs frontierOnly" -> 53, "seededBfs" -> 61,
     "seededBfsBitmask" -> 49, "weightedSssp" -> 23, "hits" -> 39,
     "kTrussEdges" -> 26, "topoLayers" -> 23, "boruvkaMsf" -> 38,
-    "duplicateGroups" -> 58, "duplicateGroupsStar" -> 53,
+    "duplicateGroups" -> 57, "duplicateGroupsStar" -> 53,
     "suffixArrayRanks" -> 31, "gramPowerIteration" -> 16,
     "q323_temporal_reachability" -> 19, "q339_diameter_2sweep" -> 38,
     "q349_kcenter_coreset" -> 61, "q370_pointer_doubling" -> 20,
-    "q452_longest_dup_ngram" -> 43, "q508_greedy_source_cover" -> 43,
+    "q452_longest_dup_ngram" -> 43, "q508_greedy_source_cover" -> 37,
     "q536_markov_attribution" -> 54, "q568_graph_ann_beam" -> 96)
 
   fixedCases.foreach { case (name, call) =>
     test(s"$name: leaves only its result's blocks and runs no more jobs") {
-      val (jobs, leaked) = jobsAndLeaks(call())
+      val (jobs, leaked) = Leaks.jobsAndLeaks(spark)(call())
       info(s"$name: $jobs jobs")
       assert(leaked.isEmpty, s"$name left RDDs $leaked persisted beyond its result")
       parentJobs.get(name).foreach { n =>

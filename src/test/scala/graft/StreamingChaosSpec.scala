@@ -47,7 +47,6 @@ class StreamingChaosSpec extends SparkSpec {
     val out = graft.streaming.Sessions.runStreamToBatch(spark, sf,
       Tables.documents(spark, sf).schema,
       globFilter = Some("documents.parquet"),
-      shufflePartitions = Some(4),
       transform = st => {
         val regs = registers(st)
         // the kill lands AFTER the state-store max-fold, in the same

@@ -304,7 +304,11 @@ class TxnProtocolSpec extends SparkSpec {
     assert(TxnLog.tryCommit(spark, t, 2L, "w", Seq(Action("add", b))))
     assert(TxnLog.deleteWhereMoR(spark, t, "mor", col("id") === 14L)
       .exists(_.version == 3L))
+    val persisted = spark.sparkContext.getPersistentRDDs.keySet
     TxnLog.clusterBin(spark, t, "opt", Seq(a, b), s"$t/cl", "id", 2)
+    // the checkpointed bin is freed once the commit lands
+    assert(spark.sparkContext.getPersistentRDDs.keySet == persisted,
+      "clusterBin left its bin checkpoint persisted")
     // lo=1 hi=13 span=13 → range0 [1,7): {1,2,5,6}, range1 [7,14): {9,10,13}
     val live = TxnLog.liveActions(TxnLog.commits(spark, t))
     assert(live.size == 2)
@@ -323,6 +327,15 @@ class TxnProtocolSpec extends SparkSpec {
     val live2 = TxnLog.liveActions(TxnLog.commits(spark, t2))
     assert(live2.size == 1 && live2.head.stats("id") == ((7L, 7L)))
     assert(ids(TxnLog.snapshot(spark, t2)._1) == Seq(7L, 7L, 7L))
+    // a clustering that fails after the bin is checkpointed frees it
+    // too
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    intercept[org.apache.spark.sql.AnalysisException] {
+      TxnLog.clusterBin(spark, t2, "opt", live2.map(_.path), s"$t2/cl2",
+        "no_such_col", 4)
+    }
+    assert(spark.sparkContext.getPersistentRDDs.keySet == before,
+      "clusterBin left its bin checkpoint persisted after failing")
   }
 
   // ---- identity columns -----------------------------------------------------
