@@ -97,16 +97,13 @@ object Harness {
     failed
   }
 
-  /** Blocking sweep between queries: a query's result may read the
-    * frames its operators pinned (`Checkpoints.scoped` hands those to
-    * the caller with the result), and they stay in the block manager
-    * for as long as the DataFrames are reachable; across hundreds of
-    * queries such blocks tax every later one (r5's suite-wide 8-26x
-    * regression on unchanged queries). Every other pin is freed by the
-    * query itself — QueryBlocksSpec fails on any block a result does
-    * not read — so this frees results only. Blocking, so executor
-    * block removal does not land inside the next query's timed
-    * window. */
+  /** Blocking sweep between queries. It frees what a result reads (the
+    * pins `Checkpoints.scoped` hands on with it), which across hundreds
+    * of queries would tax every later one (r5's suite-wide 8-26x
+    * regression on unchanged queries); a query frees every other pin
+    * itself, and QueryBlocksSpec fails if one does not. Blocking, so
+    * executor block removal does not land inside the next query's
+    * timed window. */
   def clearBlocks(spark: SparkSession): Unit = {
     graft.ops.Checkpoints.muteWarnings()
     spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(true))

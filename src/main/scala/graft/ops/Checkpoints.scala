@@ -5,8 +5,9 @@ import scala.collection.mutable.ArrayBuffer
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
-import org.apache.spark.sql.execution.LogicalRDD
-import org.apache.spark.sql.execution.columnar.InMemoryRelation
+import org.apache.spark.sql.execution.{LogicalRDD, RDDScanExec, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import org.apache.spark.sql.execution.columnar.{InMemoryRelation, InMemoryTableScanExec}
 
 /** Block hygiene: who frees what an operator or a query pins.
   *
@@ -22,10 +23,10 @@ import org.apache.spark.sql.execution.columnar.InMemoryRelation
   * unpersisted immediately — [[iterate]] is the one loop that does so.
   *
   * Every other pin — a frame a call materializes because it reads it
-  * more than once — belongs to a [[scoped]] block, which frees it when
-  * the block ends unless the block's result still reads it; a pin the
-  * result reads passes to the caller with the result. No caller frees
-  * by hand.
+  * more than once — belongs to the innermost [[scoped]] block, which
+  * frees it when the block ends unless the block's result still reads
+  * it; a pin the result reads passes with the result to the enclosing
+  * block, which decides the same way. No caller frees by hand.
   */
 private[graft] object Checkpoints {
 
@@ -97,8 +98,8 @@ private[graft] object Checkpoints {
     *    frontier that emptied.
     *
     * Returns the last frame and its measure — the only round frame
-    * still materialized (`init` itself when `maxRounds` is 0). The
-    * caller owns it. */
+    * still materialized (`init` itself when `maxRounds` is 0). Inside
+    * a [[scoped]] block the block owns it; outside one, the caller. */
   def iterate(init: DataFrame, initMeasure: Long, maxRounds: Int,
               measure: DataFrame => Long = rows,
               exitWhen: (Long, Long) => Boolean = (_, _) => false)
@@ -114,13 +115,13 @@ private[graft] object Checkpoints {
       m = n
       round += 1
     }
+    Option(open.get).filter(_ => blocksOf(cur).nonEmpty).foreach(_.frames += cur)
     (cur, m)
   }
 
   /** The frames one [[scoped]] block pins. */
   final class Pins private[Checkpoints] () {
     private[Checkpoints] val frames = ArrayBuffer.empty[DataFrame]
-    private[Checkpoints] val adopted = ArrayBuffer.empty[DataFrame]
 
     /** `df` materialized by an eager local checkpoint. */
     def apply(df: DataFrame): DataFrame = keep(df.localCheckpoint())
@@ -132,42 +133,49 @@ private[graft] object Checkpoints {
       (keep(c), n)
     }
 
-    /** A frame the block materialized itself — a `persist()`ed layout,
-      * an [[iterate]] result — handed to the scope to free. */
-    def keep(df: DataFrame): DataFrame = { frames += df; df }
+    /** A checkpoint or cached frame the block materialized itself — a
+      * `persist()`ed layout. A projection of one, which has no blocks
+      * to free, is refused. */
+    def keep(df: DataFrame): DataFrame = {
+      require(blocksOf(df).nonEmpty, "Pins.keep takes a checkpoint or a cached frame")
+      frames += df
+      df
+    }
 
-    /** The scope takes over every checkpoint and cache entry `df`
-      * reads: for the lazy result of an operator that persists inside,
-      * which the block materializes and then drops. Only for a frame
-      * the block built from tables — adopting a frame that reads a
-      * caller's pins would free them. */
-    def adopt(df: DataFrame): DataFrame = { adopted += df; df }
+    /** `next`, built from the pinned `prev`, supersedes it: `next` is
+      * kept and `prev` freed now, as [[iterate]] frees a round. */
+    def replace(prev: DataFrame, next: DataFrame): DataFrame = {
+      val i = frames.indexWhere(_ eq prev)
+      require(i >= 0, "Pins.replace: the frame it supersedes is not pinned here")
+      free(frames.remove(i))
+      keep(next)
+    }
   }
+
+  // This thread's innermost open scope; not inherited, since a pool
+  // thread would keep a scope that has ended.
+  private val open = new ThreadLocal[Pins]
 
   /** Runs `body` with a [[Pins]] that owns every frame it pins. When
     * the body returns, the pins its result still reads (a frame, or
-    * the frames of a tuple or collection) pass to the caller with the
-    * result, and the rest are freed; when it throws, all are freed.
-    * Only frames pinned through this scope are freed — never the
-    * session's other persisted RDDs, and never an ancestor of a pinned
-    * frame, since [[free]] drops a frame's own blocks only. The one
-    * exception is asked for by name: what an [[Pins.adopt]]ed frame
-    * reads is freed too, unless the result reads it. */
+    * the frames of a tuple or collection) pass with it to the
+    * enclosing scope, or to the caller outside any; the rest are freed,
+    * newest first. When it throws, all are freed. Only frames pinned
+    * through a scope are freed — never the session's other persisted
+    * RDDs, nor an ancestor of a pin: [[free]] drops a frame's own
+    * blocks only. */
   def scoped[A](body: Pins => A): A = {
+    val outer = open.get
     val pins = new Pins
+    open.set(pins)
     var out: Option[A] = None
     try { out = Some(body(pins)); out.get }
     finally {
+      open.set(outer)
       val read = out.iterator.flatMap(framesOf).flatMap(reads).toSet
-      pins.frames.filterNot(f => blocksOf(f).exists(read)).foreach(free)
-      pins.adopted.foreach { df =>
-        muteUnpersistWarn
-        val sc = df.sparkSession.sparkContext
-        (reads(df) -- read).foreach {
-          case id: Int => sc.getPersistentRDDs.get(id).foreach(_.unpersist(false))
-          case e: Entry => e.m.cacheBuilder.clearCache(false)
-        }
-      }
+      val (held, done) = pins.frames.partition(f => blocksOf(f).exists(read))
+      done.reverseIterator.foreach(free)
+      Option(outer).foreach(_.frames ++= held)
     }
   }
 
@@ -206,18 +214,27 @@ private[graft] object Checkpoints {
     else Set(new Entry(m))
   }
 
-  /** The blocks a frame still needs to run: its checkpoint leaves (with
-    * the lineage of one not yet materialized) and its cache entries
-    * (with the lineage of their blocks, or the plan of a cache not yet
-    * built). */
+  /** The blocks a frame still needs to run: its checkpoint leaves and
+    * cache entries, and what one not yet materialized will read. */
   private def reads(df: DataFrame): Set[Any] = planReads(df.queryExecution.withCachedData)
 
   private def planReads(p: LogicalPlan): Set[Any] = p.collectWithSubqueries {
     case lr: LogicalRDD => lineage(lr.rdd)
-    case m: InMemoryRelation =>
-      val b = m.cacheBuilder
-      cached(m) ++ (if (b.isCachedColumnBuffersLoaded) lineage(b.cachedColumnBuffers)
-                    else planReads(b.logicalPlan))
+    case m: InMemoryRelation => cacheReads(m)
+  }.flatten.toSet
+
+  // an unbuilt cache's logical plan names tables, not the caches its
+  // physical plan scans
+  private def cacheReads(m: InMemoryRelation): Set[Any] = {
+    val b = m.cacheBuilder
+    cached(m) ++ (if (b.isCachedColumnBuffersLoaded) lineage(b.cachedColumnBuffers)
+                  else execReads(b.cachedPlan))
+  }
+
+  private def execReads(p: SparkPlan): Set[Any] = p.collectWithSubqueries {
+    case s: InMemoryTableScanExec => cacheReads(s.relation)
+    case r: RDDScanExec => lineage(r.rdd)
+    case a: AdaptiveSparkPlanExec => execReads(a.inputPlan)
   }.flatten.toSet
 
   private def lineage(r: RDD[_]): Set[Any] = {

@@ -139,18 +139,16 @@ object Classify {
     def step(w: DataFrame, m: DataFrame): DataFrame = {
       val upd = f.join(m, "doc_id")
         .groupBy("dim").agg(sum(col("y") * col("f")).as("__u"))
-      w.join(upd, Seq("dim"), "full")
+      pin(w.join(upd, Seq("dim"), "full")
         .select(col("dim"),
           (coalesce(col("w"), lit(0L)) + coalesce(col("__u"), lit(0L)))
-            .as("w"))
-        .localCheckpoint()
+            .as("w")))
     }
-    val w1 = f.groupBy("dim").agg(sum(col("y") * col("f")).as("w"))
-      .localCheckpoint()
+    val w1 = pin(f.groupBy("dim").agg(sum(col("y") * col("f")).as("w")))
     var ws = Seq(w1)
     var ms = Seq(docs.select("doc_id"))
     for (_ <- 2 to rounds) {
-      val m = perceptronMiscl(f, docs, ws.last).localCheckpoint()
+      val m = pin(perceptronMiscl(f, docs, ws.last))
       ws = ws :+ step(ws.last, m)
       ms = ms :+ m
     }

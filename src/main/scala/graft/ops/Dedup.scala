@@ -124,13 +124,13 @@ object Dedup {
     * maxBucket <= 0. */
   def lshCandidatePairs(df: DataFrame, idCol: String, textCol: String,
                         shingleN: Int, k: Int, bands: Int,
-                        maxBucket: Int = 100000): DataFrame = {
+                        maxBucket: Int = 100000): DataFrame = Checkpoints.scoped { pin =>
     // persisted: both sides of the self-join consume this frame and
     // exchange reuse does not fire across the differently-aliased
     // branches. The frame is O(docs * bands) short rows — the dedup
     // working set — and spills to disk if it outgrows memory.
-    val bandedAll = bandIndex(df, idCol, textCol, shingleN, k, bands)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val bandedAll = pin.keep(bandIndex(df, idCol, textCol, shingleN, k, bands)
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
     val banded =
       if (maxBucket <= 0) bandedAll
       else {
@@ -142,8 +142,8 @@ object Dedup {
           .select("band")
         // persisted too: a and b below each consume the capped frame,
         // and without this the count-agg + anti-join would run twice
-        bandedAll.join(broadcast(big), Seq("band"), "left_anti")
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        pin.keep(bandedAll.join(broadcast(big), Seq("band"), "left_anti")
+          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
       }
     val a = banded.select(col("band"), col(idCol).as("id_a"))
     val b = banded.select(col("band"), col(idCol).as("id_b"))
@@ -198,11 +198,12 @@ object Dedup {
     * banding is per-document, so candidates decompose exactly.
     * Output: (id_a, id_b), id_a < id_b, distinct. */
   def incrementalCandidatePairs(newBanded: DataFrame, storedBanded: DataFrame,
-                                idCol: String, maxBucket: Int = 100000): DataFrame = {
+                                idCol: String, maxBucket: Int = 100000): DataFrame =
+      Checkpoints.scoped { pin =>
     // persist: the new-batch banding is consumed three times (cross
     // join + both sides of the within-batch self-join) and exchange
     // reuse does not fire across the aliased branches
-    val nb = newBanded.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val nb = pin.keep(newBanded.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
     // the blowup guard counts COMBINED bucket size (stored + new):
     // that is the m whose m² the join would materialize
     val capped =
@@ -211,8 +212,8 @@ object Dedup {
         val big = nb.select(col("band")).union(storedBanded.select(col("band")))
           .groupBy("band").agg(count(lit(1)).as("__m"))
           .where(col("__m") > maxBucket).select("band")
-        nb.join(broadcast(big), Seq("band"), "left_anti")
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        pin.keep(nb.join(broadcast(big), Seq("band"), "left_anti")
+          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
       }
     val n = capped.select(col("band"), col(idCol).as("__nid"))
     val s = storedBanded.select(col("band"), col(idCol).as("__sid"))
@@ -229,11 +230,11 @@ object Dedup {
   /** Exact n-gram Jaccard over candidate pairs: |A ∩ B| via a double
     * equi-join on (id, shingle) rows — never materializes A × B. */
   def jaccard(pairs: DataFrame, df: DataFrame, idCol: String,
-              textCol: String, shingleN: Int): DataFrame = {
+              textCol: String, shingleN: Int): DataFrame = Checkpoints.scoped { pin =>
     // consumed three times (two intersection joins + sizes) — persist
-    val sh = shingleRows(df, idCol, textCol, shingleN)
+    val sh = pin.keep(shingleRows(df, idCol, textCol, shingleN)
       .withColumnRenamed(idCol, "sid")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
     val sizes = sh.groupBy("sid").agg(count(lit(1)).as("sz"))
     val inter = pairs
       .join(sh.select(col("sid").as("id_a"), col("shingle")), Seq("id_a"))
@@ -274,18 +275,19 @@ object Dedup {
     * the fingerprint key scales with it, and AQE demotes to broadcast
     * on its own whenever the set is actually small. */
   def sharedShinglePairs(df: DataFrame, idCol: String, textCol: String,
-                         n: Int, maxDocsPerShingle: Int = 10000): DataFrame = {
-    val fps = shingleRows(df, idCol, textCol, n)
+                         n: Int, maxDocsPerShingle: Int = 10000): DataFrame =
+      Checkpoints.scoped { pin =>
+    val fps = pin.keep(shingleRows(df, idCol, textCol, n)
       .select(col(idCol), md5(col("shingle")).as("fp"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
     val capped =
       if (maxDocsPerShingle <= 0) fps
       else {
         val big = fps.groupBy("fp")
           .agg(count(lit(1)).as("__m")).where(col("__m") > maxDocsPerShingle)
           .select("fp")
-        fps.join(big, Seq("fp"), "left_anti")
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        pin.keep(fps.join(big, Seq("fp"), "left_anti")
+          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
       }
     val a = capped.select(col("fp"), col(idCol).as("id_a"))
     val b = capped.select(col("fp"), col(idCol).as("id_b"))
@@ -337,10 +339,11 @@ object Dedup {
     * frame shapes as the operator itself: fingerprint counts are one
     * partial-combining hash-agg, never doc × doc. */
   def sharedShingleCapAudit(df: DataFrame, idCol: String, textCol: String,
-                            n: Int, maxDocsPerShingle: Int): DataFrame = {
-    val fps = shingleRows(df, idCol, textCol, n)
+                            n: Int, maxDocsPerShingle: Int): DataFrame =
+      Checkpoints.scoped { pin =>
+    val fps = pin.keep(shingleRows(df, idCol, textCol, n)
       .select(col(idCol), md5(col("shingle")).as("fp"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
     val counts = fps.groupBy("fp").agg(count(lit(1)).as("__m"))
     val big = counts.where(col("__m") > maxDocsPerShingle)
     val docsHit = fps.join(broadcast(big.select("fp")), Seq("fp"), "left_semi")
@@ -754,10 +757,9 @@ object Dedup {
     if (edgeCount <= smallGraph) {
       // labels are unique per id; nodes absent from the canonical edge
       // set (self-loop-only inputs) label themselves via the coalesce
-      nodes
+      pin(nodes
         .join(singleTaskComponents(edges0), Seq("id"), "left")
-        .select(col("id"), coalesce(col("label"), col("id")).as("group_id"))
-        .localCheckpoint()
+        .select(col("id"), coalesce(col("label"), col("id")).as("group_id")))
     } else {
       // The round frame is the new canonical edge set OUTER-joined with
       // the previous one, a flag per side: its measure — edges on one
@@ -804,13 +806,11 @@ object Dedup {
         smallEdges.withColumn("__new", lit(true))
           .join(edges.withColumn("__old", lit(true)), Seq("a", "b"), "full_outer")
       }
-      pin.keep(edges)
       // star forest: child -> center (component min); centers and any
       // node not appearing as a child label themselves
-      nodes.join(edges.where(col("__new"))
+      pin(nodes.join(edges.where(col("__new"))
           .select(col("a").as("id"), col("b").as("label")), Seq("id"), "left")
-        .groupBy("id").agg(min(coalesce(col("label"), col("id"))).as("group_id"))
-        .localCheckpoint()
+        .groupBy("id").agg(min(coalesce(col("label"), col("id"))).as("group_id")))
     }
   }
 
@@ -881,11 +881,11 @@ object Dedup {
     * Candidates sharing several bands dedup via distinct. */
   def simhashNearDupPairs(df: DataFrame, idCol: String, textCol: String,
                           maxHamming: Int = 3,
-                          maxBlock: Int = 100000): DataFrame = {
+                          maxBlock: Int = 100000): DataFrame = Checkpoints.scoped { pin =>
     require(maxHamming <= 3,
       s"4-band blocking is exact only for maxHamming <= 3, got $maxHamming")
-    val fp = simhash(df, idCol, textCol, nBits = 64)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val fp = pin.keep(simhash(df, idCol, textCol, nBits = 64)
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
     val bandedAll = fp.select(col(idCol), col("simhash"),
       explode(array((0 until 4).map(b =>
         struct(lit(b).as("band"),
@@ -1198,7 +1198,7 @@ object Dedup {
       .join(tokC.select(col("id").as("id_a"), col("t")), Seq("id_a"))
       .join(tokC.select(col("id").as("id_b"), col("t")), Seq("id_b", "t"))
       .groupBy("id_a", "id_b").agg(count(lit(1)).as("n_inter"))
-    inter
+    pin(inter
       .join(sz.select(col("id").as("id_a"), col("sz").as("sz_a")), "id_a")
       .join(sz.select(col("id").as("id_b"), col("sz").as("sz_b")), "id_b")
       .where(lit(den.toLong) * col("n_inter") >=
@@ -1206,8 +1206,7 @@ object Dedup {
       .select(col("id_a"), col("id_b"), col("n_inter"),
         col("sz_a"), col("sz_b"),
         round(col("n_inter").cast("double") /
-          (col("sz_a") + col("sz_b") - col("n_inter")), 6).as("jaccard"))
-      .localCheckpoint()
+          (col("sz_a") + col("sz_b") - col("n_inter")), 6).as("jaccard")))
   }
 
   /** Two-level GLOBAL DENSE RANK over a BIGINT key, computed DIRECTLY
@@ -1323,7 +1322,7 @@ object Dedup {
     * encoding-agnostic). */
   def suffixArrayRanks(df: DataFrame, idCol: String, textCol: String,
                        maxLen: Int, forceComposite: Boolean = false)
-      : DataFrame = {
+      : DataFrame = Checkpoints.scoped { _ =>
     // empty texts contribute no suffixes — and MUST be filtered before
     // the explode: Spark's sequence(1, 0) is [1, 0] (step defaults to
     // -1 when start > stop), which would fabricate two phantom
@@ -1516,7 +1515,7 @@ object Dedup {
     val docs = pin(df.select(col(idCol).as("doc_id"), // exploded three ways below
         substring(col(textCol), 1, maxLen).as("__t"))
       .where(length(col("__t")) > 0)) // sequence(1,0)=[1,0] hazard
-    val ranks = pin.keep(suffixArrayRanks(df, idCol, textCol, maxLen))
+    val ranks = suffixArrayRanks(df, idCol, textCol, maxLen)
     val sfx = docs
       .select(col("doc_id"),
         explode(expr("sequence(1, length(__t))")).as("p"), col("__t"))

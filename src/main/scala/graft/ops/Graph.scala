@@ -117,11 +117,12 @@ object Graph {
   /** The PageRank family's per-round edge frame. In the fallback
     * regime per-round joins are src-keyed shuffle joins, so the edges
     * are re-laid on src ONCE (amortized) instead of paying an O(|E|)
-    * exchange every round; a caller-laid frame is kept as it is. */
+    * exchange every round, and the dst layout is freed as soon as the
+    * src one exists; a caller-laid frame is kept as it is. */
   private def rankEdges(pin: Checkpoints.Pins, e0: DataFrame,
                         useBroadcast: Boolean, assumeLaidOut: Boolean): DataFrame =
     if (useBroadcast || assumeLaidOut) e0
-    else pin.keep(layoutEdges(e0, "src", "dst", layoutKey = "src"))
+    else pin.replace(e0, layoutEdges(e0, "src", "dst", layoutKey = "src"))
 
   /** One PageRank-family round's contribution sums: every source's
     * rank div out-degree, summed per destination (`__s`). */
@@ -383,17 +384,15 @@ object Graph {
       inducedDegrees(e, alive, n, broadcastAliveRows)
         .where(col("__deg") >= k).select(col("src").as("id"))
     }
-    pin.keep(alive)
     // final degree within the survivor-induced subgraph; the left join
     // keeps survivors whose last peel removed every neighbor (degree 0)
     // — the output is "the survivors", not "the survivors that still
     // have an edge". Checkpointed so the O(|E|) scaffolding is freed
     // when the call returns (the result is O(survivors) small).
     val deg = inducedDegrees(e, alive, aliveRows, broadcastAliveRows)
-    alive
+    pin(alive
       .join(deg.select(col("src").as("id"), col("__deg")), Seq("id"), "left")
-      .select(col("id"), coalesce(col("__deg"), lit(0L)).as("degree"))
-      .localCheckpoint()
+      .select(col("id"), coalesce(col("__deg"), lit(0L)).as("degree")))
   }
 
   /** Full core DECOMPOSITION (every node's shell index), extending the
@@ -884,10 +883,8 @@ object Graph {
         .where(col("support") >= k - 2)
         .select("id_a", "id_b")
     }
-    pin.keep(e)
-    e.join(support(e), Seq("id_a", "id_b"))
-      .select(col("id_a"), col("id_b"), col("support"))
-      .localCheckpoint()
+    pin(e.join(support(e), Seq("id_a", "id_b"))
+      .select(col("id_a"), col("id_b"), col("support")))
   }
 
   /** Bounded topological layering of a DAG (Kahn's algorithm as a
@@ -973,13 +970,12 @@ object Graph {
     val deg = e.select(col("id_a").as("id"))
       .union(e.select(col("id_b").as("id")))
       .groupBy("id").agg(count(lit(1)).as("degree"))
-    deg.join(triPerNode, Seq("id"), "left")
+    pin(deg.join(triPerNode, Seq("id"), "left")
       .select(col("id"), col("degree"),
         coalesce(col("n_tri"), lit(0L)).as("n_tri"))
       .withColumn("cc_ppm", when(col("degree") >= 2,
         expr("(n_tri * 2000000) div (degree * (degree - 1))"))
-        .otherwise(lit(0L)))
-      .localCheckpoint()
+        .otherwise(lit(0L))))
   }
 
   /** Exactly `iters` synchronous min-label iterations over a (both-
@@ -1145,8 +1141,6 @@ object Graph {
               none.as("__ca"), none.as("__cb")))
       }
     }
-    pin.keep(forest)
-    Checkpoints.ckptCount(
-      forest.where(col("key").isNotNull).select("key").distinct())._1
+    pin.counted(forest.where(col("key").isNotNull).select("key").distinct())._1
   }
 }

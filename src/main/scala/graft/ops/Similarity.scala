@@ -258,16 +258,13 @@ object Similarity {
     * as a broadcast dim table. */
   def ivfTopK(corpus: DataFrame, queries: DataFrame, k: Int,
               nCells: Int = 16, nProbe: Int = 4,
-              idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
+              idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame =
+      Checkpoints.scoped { pin =>
     // consumed by count, seed pick, Lloyd step and final assignment —
     // persist once instead of recomputing the scan lineage each time.
-    // CALLER CONTRACT: the returned plan reads this persisted frame
-    // (so it cannot be released here); after materializing the result,
-    // drop it with sparkContext.getPersistentRDDs/unpersist or
-    // catalog.clearCache (every IVF query does; Round10Spec pins that
-    // no blocks linger after the q54 lane + block sweep).
-    val corp = corpus.select(col(idCol), col(vecCol))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    // The returned plan reads it, so it passes to the caller's scope.
+    val corp = pin.keep(corpus.select(col(idCol), col(vecCol))
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
     ivfTopKWith(corp, queries, k, trainCentroids(corp, nCells, idCol, vecCol),
       nProbe, idCol, vecCol)
   }

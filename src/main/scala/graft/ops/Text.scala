@@ -53,7 +53,8 @@ object Text {
     * smoothed-idf variant. Two hash-aggs + one equi-join on the term;
     * `nDocs` is supplied by the caller (a count the caller usually
     * already has) so the operator itself stays a pure transform. */
-  def tfidf(df: DataFrame, idCol: String, textCol: String, nDocs: Long): DataFrame = {
+  def tfidf(df: DataFrame, idCol: String, textCol: String, nDocs: Long): DataFrame =
+      Checkpoints.scoped { pin =>
     // Single corpus scan: tf already has one row per (doc, term), so
     // df(term) = count of tf rows per term — no second tokenize pass,
     // no distinct. tf is persisted (it feeds both the df aggregate and
@@ -65,8 +66,8 @@ object Text {
     // (see Dedup.shingleRows).
     val termRows = df.select(col(idCol), col(textCol)).repartition(col(idCol))
       .select(col(idCol), explode(tokens(col(textCol))).as("term"))
-    val tf = termRows.groupBy(col(idCol), col("term")).agg(count(lit(1)).as("tf"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val tf = pin.keep(termRows.groupBy(col(idCol), col("term")).agg(count(lit(1)).as("tf"))
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
     val dfreq = tf.groupBy("term").agg(count(lit(1)).as("df"))
     tf.join(dfreq, Seq("term"))
       .withColumn("tfidf", round(col("tf") *
@@ -342,12 +343,12 @@ object Text {
     * corpus-sized work is the candidate-term distinct. Returns (term,
     * est, cnt) with the exact count for calibration. */
   def cmsHeavyHitters(df: DataFrame, textCol: String, d: Int, w: Int,
-                      minCount: Long): DataFrame = {
+                      minCount: Long): DataFrame = Checkpoints.scoped { pin =>
     // persisted: each of the d broadcast joins below consumes the
     // sketch, and without this the corpus-sized explode+agg would run
     // d times (the frame itself is only d×w counter rows)
-    val sketch = countMinSketch(df, textCol, d, w)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val sketch = pin.keep(countMinSketch(df, textCol, d, w)
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
     val exact = df
       .select(col(textCol)).repartition(col(textCol))
       .select(explode(tokens(col(textCol))).as("term"))

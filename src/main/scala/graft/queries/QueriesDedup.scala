@@ -94,9 +94,9 @@ object QueriesDedup {
 
     // ---- q45: duplicate groups (connected components over LSH pairs)
     QueryDef("q45_duplicate_groups",
-      (s, d) => Checkpoints.scoped { pin =>
-        Dedup.duplicateGroupsStar(pin.adopt(
-            Dedup.lshCandidatePairs(documents(s, d), "doc_id", "text", ShingleN, K, Bands)),
+      (s, d) => Checkpoints.scoped { _ =>
+        Dedup.duplicateGroupsStar(
+            Dedup.lshCandidatePairs(documents(s, d), "doc_id", "text", ShingleN, K, Bands),
             maxIter = 20)
           .orderBy("id")
       },
@@ -106,10 +106,10 @@ object QueriesDedup {
 
     // ---- q46: the end-to-end near-dedup operator: survivors only ----
     QueryDef("q46_dedup_survivors",
-      (s, d) => Checkpoints.scoped { pin =>
+      (s, d) => Checkpoints.scoped { _ =>
         val docs = documents(s, d)
-        val groups = Dedup.duplicateGroupsStar(pin.adopt(
-          Dedup.lshCandidatePairs(docs, "doc_id", "text", ShingleN, K, Bands)),
+        val groups = Dedup.duplicateGroupsStar(
+          Dedup.lshCandidatePairs(docs, "doc_id", "text", ShingleN, K, Bands),
           maxIter = 20)
         Dedup.dedupSurvivors(docs, "doc_id", groups)
           .select("doc_id", "lang", "n_chars")
@@ -133,12 +133,12 @@ object QueriesDedup {
     // -> deterministic train/val/test split. Every stage is an
     // already-verified operator; this pins their composition.
     QueryDef("q91_training_prep",
-      (s, d) => Checkpoints.scoped { pin =>
+      (s, d) => Checkpoints.scoped { _ =>
         val base = documents(s, d)
           .where(col("lang").isin("en", "de") &&
             size(Text.tokens(col("text"))) >= 20)
-        val groups = Dedup.duplicateGroupsStar(pin.adopt(
-          Dedup.lshCandidatePairs(base, "doc_id", "text", ShingleN, K, Bands)),
+        val groups = Dedup.duplicateGroupsStar(
+          Dedup.lshCandidatePairs(base, "doc_id", "text", ShingleN, K, Bands),
           maxIter = 20)
         Sampling.hashSplit(Dedup.dedupSurvivors(base, "doc_id", groups),
             "doc_id", 80, 10)

@@ -45,9 +45,9 @@ object QueriesRound6 {
     // q46/q91 the engine now runs BOTH dedup families end-to-end —
     // MinHash-probabilistic and exact-substring (Lee et al. 2022).
     QueryDef("q172_exact_substring_dedup",
-      (s, d) => Checkpoints.scoped { pin =>
+      (s, d) => Checkpoints.scoped { _ =>
         val docs = documents(s, d)
-        val pairs = pin.adopt(Dedup.sharedShinglePairs(docs, "doc_id", "text", n = 5))
+        val pairs = Dedup.sharedShinglePairs(docs, "doc_id", "text", n = 5)
           .select("id_a", "id_b")
         val groups = Dedup.duplicateGroupsStar(pairs, maxIter = 20)
         Dedup.dedupSurvivors(docs, "doc_id", groups)
@@ -200,10 +200,10 @@ object QueriesRound6 {
     // exact-substring pipeline's min-id form; this query's subject is
     // the POLICY, so it rides the cheaper scale-path relation.)
     QueryDef("q177_quality_survivors",
-      (s, d) => Checkpoints.scoped { pin =>
+      (s, d) => Checkpoints.scoped { _ =>
         val docs = documents(s, d)
-        val pairs = pin.adopt(Dedup.lshCandidatePairs(docs, "doc_id", "text",
-            QueriesDedup.ShingleN, QueriesDedup.K, QueriesDedup.Bands))
+        val pairs = Dedup.lshCandidatePairs(docs, "doc_id", "text",
+            QueriesDedup.ShingleN, QueriesDedup.K, QueriesDedup.Bands)
           .select("id_a", "id_b")
         val groups = Dedup.duplicateGroupsStar(pairs, maxIter = 20)
         Dedup.dedupSurvivorsBy(docs, "doc_id", groups, "n_chars")

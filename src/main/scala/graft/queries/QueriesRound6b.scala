@@ -69,10 +69,10 @@ object QueriesRound6b {
     // are O(clusters) rows, and a sudden mega-cluster (boilerplate
     // explosion) shows up as a new tail row.
     QueryDef("q194_dup_cluster_audit",
-      (s, d) => Checkpoints.scoped { pin =>
+      (s, d) => Checkpoints.scoped { _ =>
         val docs = documents(s, d)
-        val pairs = pin.adopt(Dedup.lshCandidatePairs(docs, "doc_id", "text",
-            QueriesDedup.ShingleN, QueriesDedup.K, QueriesDedup.Bands))
+        val pairs = Dedup.lshCandidatePairs(docs, "doc_id", "text",
+            QueriesDedup.ShingleN, QueriesDedup.K, QueriesDedup.Bands)
           .select("id_a", "id_b")
         val groups = Dedup.duplicateGroupsStar(pairs, maxIter = 20)
         val sizes = groups.groupBy("group_id")

@@ -25,10 +25,10 @@ object QueriesRound6v {
     // blow-up (the LSH bucket-cap discipline); sizes over the cap are
     // excluded and would be reported by q194's size audit instead.
     QueryDef("q289_cluster_purity",
-      (s, d) => Checkpoints.scoped { pin =>
+      (s, d) => Checkpoints.scoped { _ =>
         val docs = documents(s, d)
-        val cand = pin.adopt(Dedup.lshCandidatePairs(docs, "doc_id", "text",
-          QueriesDedup.ShingleN, QueriesDedup.K, QueriesDedup.Bands))
+        val cand = Dedup.lshCandidatePairs(docs, "doc_id", "text",
+          QueriesDedup.ShingleN, QueriesDedup.K, QueriesDedup.Bands)
           .select("id_a", "id_b")
         val grp = Dedup.duplicateGroupsStar(cand, maxIter = 20)
         val sizes = grp.groupBy("group_id").agg(count(lit(1)).as("size"))

@@ -26,9 +26,9 @@ object QueriesRound7ai {
         val keys = orders(s, d).select(col("o_orderkey").as("k"))
         val ext = broadcast(keys.agg(min("k").as("lo"), max("k").as("hi")))
         // the fit pass and the error pass
-        val ranked = pin(pin.adopt(Relational.twoLevelRankDesc(
+        val ranked = pin(Relational.twoLevelRankDesc(
             keys.withColumn("__s", -col("k")), "__s", "k",
-            idWidth = 4096L, outCol = "pos"))
+            idWidth = 4096L, outCol = "pos")
           .crossJoin(ext)
           .select(col("k"), col("pos"),
             expr("((k - lo) * 16) div (hi - lo + 1)").as("seg")))

@@ -115,15 +115,14 @@ object QueriesRound8i {
     // gate. Prediction is the margin sign; per-doc correctness rides
     // along.
     QueryDef("q451_streaming_inference",
-      (s, d) => Checkpoints.scoped { pin =>
+      (s, d) => Checkpoints.scoped { _ =>
         val batch = documents(s, d)
         val y = when(col("lang") === "en", 1L).otherwise(-1L)
         val docsY = batch.select(col("doc_id"), y.as("y"))
         val feats = Classify.hashedFeatures(batch, "doc_id", "text", y)
         // the stream reads only the last weights; every fit frame is
         // freed once it has run
-        val (ws, ms) = Classify.perceptronFit(feats, docsY, rounds = 3)
-        (ws ++ ms).foreach(pin.keep)
+        val (ws, _) = Classify.perceptronFit(feats, docsY, rounds = 3)
         val w = ws.last
         val scored = graft.streaming.Sessions.runStreamToBatch(s, d,
           batch.schema, globFilter = Some("documents.parquet"),
@@ -196,7 +195,7 @@ object QueriesRound8i {
               when(col("mx") >= 2, col("hi")).otherwise(col("mid"))
                 .as("hi"))
         }
-        val fin = broadcast(pin.keep(bounds).select(col("lo").as("ll")))
+        val fin = broadcast(bounds.select(col("lo").as("ll")))
         // materialize the (tiny, one-group) final readout so the cached
         // token frame and the last bounds frame are freed when the
         // query returns instead of lingering in executor storage for

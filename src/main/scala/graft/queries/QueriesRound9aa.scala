@@ -69,7 +69,7 @@ object QueriesRound9aa {
                 .when(col("state") === "END", 0L)
                 .otherwise(coalesce(col("nv"), lit(0L))).as("v"))
         }
-        val conv = pin.keep(v).where(col("state") === "START")
+        val conv = v.where(col("state") === "START")
           .select(col("variant"), col("v").as("conv_micro"))
         val base = conv.where(col("variant") === "base")
           .select(col("conv_micro").as("base_micro"))

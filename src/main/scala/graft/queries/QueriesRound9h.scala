@@ -69,7 +69,7 @@ object QueriesRound9h {
               col("v_next").as("covered_after"),
               expr("smask | shiftleft(1, grp)").as("smask")))
         }
-        pin.keep(picks).where(col("round") > 0)
+        picks.where(col("round") > 0)
           .crossJoin(broadcast(vFull))
           .select(col("round"), col("grp").as("grp_chosen"), col("gain"),
             col("covered_after"),

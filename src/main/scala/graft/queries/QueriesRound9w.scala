@@ -24,8 +24,8 @@ object QueriesRound9w {
     // boilerplate chains start welding unrelated docs together.
     QueryDef("q530_radius_cluster_curve",
       (s, d) => Checkpoints.scoped { pin =>
-        val pairs = pin(pin.adopt(Dedup.simhashNearDupPairs(documents(s, d),
-          "doc_id", "text", 3)))
+        val pairs = pin(Dedup.simhashNearDupPairs(documents(s, d),
+          "doc_id", "text", 3))
         val rows = (1 to 3).map { r =>
           val e = pairs.where(col("hamming") <= r)
             .select("id_a", "id_b")

@@ -35,12 +35,12 @@ object QueriesRound9y {
         val seed = e.agg(min("src").as("id"))
         // each sweep's result is its last round frame, already
         // materialized
-        val b1 = pin.keep(Graph.boundedBfs(e, "src", "dst", seed, hops = 8,
-          assumeLaidOut = true))
+        val b1 = Graph.boundedBfs(e, "src", "dst", seed, hops = 8,
+          assumeLaidOut = true)
         val far = b1.orderBy(desc("dist"), asc("id")).limit(1)
           .select(col("id"))
-        val b2 = pin.keep(Graph.boundedBfs(e, "src", "dst", far, hops = 8,
-          assumeLaidOut = true))
+        val b2 = Graph.boundedBfs(e, "src", "dst", far, hops = 8,
+          assumeLaidOut = true)
         seed.select(col("id").as("seed_id"))
           .crossJoin(broadcast(b1.agg(max("dist").as("ecc_seed"),
             count(lit(1)).as("n_reach_seed"))))

@@ -100,9 +100,10 @@ class IterateSpec extends SparkSpec {
 
   fixedCases.foreach { case (name, call) =>
     test(s"$name: leaves only its result's blocks and runs no more jobs") {
-      val (jobs, leaked) = Leaks.jobsAndLeaks(spark)(call())
+      val (jobs, leaked, entries) = Leaks.jobsAndLeaks(spark)(call())
       info(s"$name: $jobs jobs")
       assert(leaked.isEmpty, s"$name left RDDs $leaked persisted beyond its result")
+      assert(entries == 0, s"$name left $entries cache entries beyond its result")
       parentJobs.get(name).foreach { n =>
         assert(jobs <= n, s"$name ran $jobs jobs, $n before")
       }

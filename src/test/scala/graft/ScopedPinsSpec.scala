@@ -1,16 +1,19 @@
 package graft
 
-import graft.ops.{Checkpoints, Relational}
-import org.apache.spark.sql.DataFrame
+import graft.ops.{Checkpoints, Dedup, Relational}
+import org.apache.spark.sql.{DataFrame, TestCacheEntries}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
-/** `Checkpoints.scoped`: the pins its result reads pass to the caller,
-  * every other pin is freed, and nothing it did not pin is touched. */
+/** `Checkpoints.scoped`: the pins its result reads pass to the
+  * enclosing scope or the caller, every other pin is freed, and nothing
+  * it did not pin is touched. */
 class ScopedPinsSpec extends SparkSpec {
   import spark.implicits._
 
   private def persisted: Set[Int] = spark.sparkContext.getPersistentRDDs.keySet.toSet
+
+  private def entries: Int = TestCacheEntries.count(spark)
 
   private def frame: DataFrame = (1 to 20).map(i => (i.toLong, i % 3)).toDF("id", "k")
 
@@ -73,13 +76,13 @@ class ScopedPinsSpec extends SparkSpec {
     release(before)
   }
 
-  test("pinning a projection never frees its ancestor") {
+  test("pinning a projection never frees its ancestor; keep refuses one") {
     val base = frame.localCheckpoint()
     val before = persisted
     Checkpoints.scoped { pin =>
       pin(base.select("id"))
       pin.counted(base.where(col("k") === 1))
-      pin.keep(base.select("k"))
+      intercept[IllegalArgumentException](pin.keep(base.select("k")))
       0L
     }
     assert(persisted == before)
@@ -87,15 +90,56 @@ class ScopedPinsSpec extends SparkSpec {
     Checkpoints.free(base)
   }
 
-  test("adopt frees what an operator's lazy result holds") {
+  test("an operator's lazy result hands its persists to the enclosing scope") {
     val before = persisted
+    val entriesBefore = entries
     val out = Checkpoints.scoped { pin =>
-      val ranked = pin.adopt(Relational.twoLevelRankDesc(
-        frame.withColumn("__s", -col("id")), "__s", "id", 8L, "pos"))
+      val ranked = Relational.twoLevelRankDesc(
+        frame.withColumn("__s", -col("id")), "__s", "id", 8L, "pos")
+      assert(entries == entriesBefore + 1) // the operator's persist, owned here
       pin(ranked)
     }
     assert((persisted -- before) == Leaks.resultRdds(out))
+    assert(entries == entriesBefore, "a cache entry outlived the scope that owned it")
     assert(out.select("pos").as[Long].collect().sorted.toSeq == (1L to 20L))
     release(before)
+  }
+
+  test("an enclosing scope passes on what its own result still reads") {
+    val before = persisted
+    val entriesBefore = entries
+    val out = Checkpoints.scoped { _ =>
+      Dedup.lshCandidatePairs(frame.select(col("id"),
+        concat_ws(" ", lit("a b c d e f"), col("k").cast("string")).as("text")),
+        "id", "text", shingleN = 3, k = 8, bands = 4)
+    }
+    assert(entries == entriesBefore + 2)
+    assert(out.count() >= 15 + 21 + 21) // every pair of equal texts
+    val cached = persisted -- before
+    assert(cached.size == 2 && cached.subsetOf(Leaks.resultRdds(out)))
+    spark.catalog.clearCache()
+    release(before)
+  }
+
+  test("iterate's last frame belongs to the open scope") {
+    val before = persisted
+    Checkpoints.scoped { _ =>
+      val (init, n) = Checkpoints.ckptCount(frame)
+      val (last, _) = Checkpoints.iterate(init, n, 2)((d, _) => d.where(col("id") > 1))
+      last.count()
+    }
+    assert(persisted == before)
+  }
+
+  test("replace frees the superseded pin at once") {
+    val before = persisted
+    Checkpoints.scoped { pin =>
+      val a = pin(frame)
+      val b = pin.replace(a, frame.where(col("k") === 0).localCheckpoint())
+      assert((persisted -- before) == Leaks.resultRdds(b))
+      intercept[IllegalArgumentException](pin.replace(a, b))
+      b.count()
+    }
+    assert(persisted == before)
   }
 }
